@@ -20,9 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * BIT-IDENTICAL to `size(array_intersect(a, b))` ONLY under the
   * callers' invariant (both inputs ascending and duplicate-free, no
   * null elements — true of every `array_sort(array_distinct(hash))`
-  * fingerprint relation); the invariant is the caller's to uphold, it
-  * is not checked. Null input propagates to SQL NULL exactly like the
-  * size(array_intersect) form with default (non-legacy) sizeOfNull.
+  * fingerprint relation); order and uniqueness are the caller's to
+  * uphold, they are not checked. Arrays whose type admits null elements
+  * are rejected at analysis. Null input propagates to SQL NULL exactly
+  * like the size(array_intersect) form with default (non-legacy)
+  * sizeOfNull.
   *
   * Registered as `graft_sorted_overlap(a, b)` by [[Hash64.register]].
   */
@@ -33,10 +35,9 @@ final case class SortedOverlap(left: Expression, right: Expression)
   override def prettyName: String = "graft_sorted_overlap"
 
   private val wantType = ArrayType(LongType, containsNull = false)
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _                      => false
-  }
+  // element nulls would read as 0 in the merge walk: only arrays that
+  // cannot hold them are accepted
+  private def ok(t: DataType): Boolean = t == wantType
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (ok(left.dataType) && ok(right.dataType))

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{monotonically_increasing_id,
+  shiftleft, spark_partition_id, typedLit}
+import org.apache.spark.sql.types.LongType
 
 /** Distributed dense rank 1..n in a total order — the scale-safe
   * replacement for `row_number() over (order by ...)`, which plans a
@@ -10,13 +12,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[PrefixSum]]):
   *
   *  1. range-partition by the order columns — globally sorted ACROSS
-  *     partitions — sort within, freeze the layout with an eager
+  *     partitions — sort within, freeze the layout with a
   *     localCheckpoint so both passes see identical partitions;
   *  2. count rows per partition (a partition-count-sized collect —
-  *     bytes, regardless of table size) and prefix-sum the counts into
-  *     per-partition start offsets on the driver;
-  *  3. second pass adds offset + local position — no shuffle, no
-  *     global sort task, every row touched exactly twice.
+  *     bytes, regardless of table size; this job also fills the
+  *     checkpoint) and prefix-sum the counts into per-partition start
+  *     offsets on the driver;
+  *  3. second pass adds offset + local position as a column
+  *     expression over the frozen rows — no shuffle, no global sort
+  *     task, every row touched exactly twice.
   *
   * The order must be TOTAL (tie-free) for the assignment to be
   * deterministic — same contract as the window form it replaces.
@@ -36,33 +40,25 @@ object DenseIds {
     require(order.nonEmpty, "withDenseRank: empty order")
     require(!df.columns.contains(outCol),
       s"withDenseRank: input already has a $outCol column")
-    val spark = df.sparkSession
     val base =
       if (numPartitions > 0) df.repartitionByRange(numPartitions, order: _*)
       else df.repartitionByRange(order: _*)
+    // freeze the layout so both passes see the same rows. Lazy: the
+    // sorted partitions materialize inside the counting job below
+    // instead of in a job of their own
     val ranged = base.sortWithinPartitions(order: _*)
-      .localCheckpoint() // freeze layout: both passes see the same rows
-    // phase 1: per-partition row counts -> start offsets
-    val counts = ranged.rdd
-      .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.size.toLong)))
-      .collect().toMap
-    val nParts = ranged.rdd.getNumPartitions
-    val offsets = new Array[Long](nParts)
-    var acc = 0L
-    var p = 0
-    while (p < nParts) {
-      offsets(p) = acc
-      acc += counts.getOrElse(p, 0L)
-      p += 1
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    // phase 2: offset + local position, partition-local
-    val outSchema = StructType(ranged.schema.fields :+
-      StructField(outCol, LongType, nullable = false))
-    val rdd = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = bc.value(pid)
-      it.map { r => i += 1; Row.fromSeq(r.toSeq :+ i) }
-    }
-    spark.createDataFrame(rdd, outSchema)
+      .localCheckpoint(eager = false)
+    // phase 1: per-partition row counts -> start offsets, counted on the
+    // internal rows (no Row conversion)
+    val counts = ranged.queryExecution.toRdd
+      .mapPartitions(it => Iterator(it.size.toLong)).collect()
+    val offsets = counts.scanLeft(0L)(_ + _).init
+    // phase 2: offset + local position as one expression over the frozen
+    // rows — monotonically_increasing_id is (partition << 33) + the
+    // row's position in its partition
+    val pid = spark_partition_id()
+    ranged.withColumn(outCol,
+      typedLit(offsets).getItem(pid) + 1L + monotonically_increasing_id() -
+        shiftleft(pid.cast(LongType), 33))
   }
 }

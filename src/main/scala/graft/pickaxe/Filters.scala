@@ -1,6 +1,6 @@
 package graft.pickaxe
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.chem.{Formula, Smiles}
@@ -359,6 +359,36 @@ final case class MetabolomicsFilter(
     }
 }
 
+/** Every reaction member as one row — `_id`, `side` ('r' or 'p'),
+  * `stoich`, the member's `SMILES`, and `genC`: the member is a
+  * current-generation compound that is neither a coreactant nor a
+  * target. The reaction filters score a reaction only when one of its
+  * products is such a compound; `checked` selects those reactions
+  * inside the same regroup that collects the members, so no separate
+  * selection pass and semi-join runs.
+  */
+private[pickaxe] object ReactionMembers {
+  def apply(state: NetworkState): DataFrame = {
+    val g = state.generation
+    val compounds = state.compounds.select(col("_id").as("c_id"),
+      col("SMILES"),
+      (col("Generation") === g &&
+        !col("Type").isin("Coreactant", "Target Compound")).as("genC"))
+    state.reactions
+      .select(col("_id"), explode(concat(
+        expr("transform(Reactants, m -> struct('r' as side, m.stoich as stoich, m.c_id as c_id))"),
+        expr("transform(Products, m -> struct('p' as side, m.stoich as stoich, m.c_id as c_id))")
+      )).as("m"))
+      .join(compounds, col("m.c_id") === col("c_id"))
+      .select(col("_id"), col("m.side").as("side"),
+        col("m.stoich").as("stoich"), col("SMILES"), col("genC"))
+  }
+
+  /** Aggregate: does the reaction produce a `genC` compound? */
+  val checked: Column =
+    max(col("side") === "p" && col("genC")).as("checked")
+}
+
 /** Thermodynamic filter (filters/thermodynamics.py:17-160): reactions
   * producing a current-generation compound whose ΔGr >= `dgMax` kJ/mol
   * are DELETED (with the orphan cascade). The reference computes ΔG via
@@ -392,18 +422,6 @@ final case class ThermoFilter(
     if ((lastGenerationOnly && g != totalGenerations) ||
       (generationList.nonEmpty && !generationList.contains(g - 1)))
       return state.reactions.select("_id").limit(0)
-    // reactions producing a current-generation non-coreactant compound
-    val genC = state.compounds
-      .where(col("Generation") === g &&
-        !col("Type").isin("Coreactant", "Target Compound"))
-      .select(col("_id").as("c_id"))
-    val toCheck = state.reactions
-      .select(col("_id"), explode(col("Products")).as("m"))
-      .select(col("_id"), col("m.c_id").as("c_id"))
-      .join(genC, Seq("c_id"), "left_semi")
-      .select("_id").distinct()
-    val smilesOf = state.compounds.select(col("_id").as("c_id"),
-      col("SMILES"))
     val mdl = model
     val dgUdf = udf { (reac: Seq[org.apache.spark.sql.Row],
         prod: Seq[org.apache.spark.sql.Row]) =>
@@ -411,22 +429,15 @@ final case class ThermoFilter(
         rows.map(r => r.getInt(0) -> graft.chem.Smiles.parse(r.getString(1)))
       Thermo.deltaG(side(reac), side(prod), mdl)
     }
-    // ONE explode+join+regroup over both sides (side-tagged members)
-    // instead of two — halves the shuffles per generation
-    val tagged = state.reactions
-      .join(toCheck, Seq("_id"), "left_semi")
-      .select(col("_id"), explode(concat(
-        expr("transform(Reactants, m -> struct('r' as side, m.stoich as stoich, m.c_id as c_id))"),
-        expr("transform(Products, m -> struct('p' as side, m.stoich as stoich, m.c_id as c_id))")
-      )).as("m"))
-      .join(smilesOf, col("m.c_id") === col("c_id"))
+    ReactionMembers(state)
       .groupBy("_id")
       .agg(
-        collect_list(when(col("m.side") === "r",
-          struct(col("m.stoich"), col("SMILES")))).as("Reactants"),
-        collect_list(when(col("m.side") === "p",
-          struct(col("m.stoich"), col("SMILES")))).as("Products"))
-    tagged
+        collect_list(when(col("side") === "r",
+          struct(col("stoich"), col("SMILES")))).as("Reactants"),
+        collect_list(when(col("side") === "p",
+          struct(col("stoich"), col("SMILES")))).as("Products"),
+        ReactionMembers.checked)
+      .where(col("checked"))
       .withColumn("dg", dgUdf(col("Reactants"), col("Products")))
       .where(col("dg") >= dgMax) // thermodynamics.py:157-159
       .select("_id")
@@ -494,35 +505,20 @@ final case class FeasibilityFilter(
     if ((lastGenerationOnly && g != totalGenerations) ||
       (generationList.nonEmpty && !generationList.contains(g - 1)))
       return state.reactions.select("_id").limit(0)
-    val genC = state.compounds
-      .where(col("Generation") === g &&
-        !col("Type").isin("Coreactant", "Target Compound"))
-      .select(col("_id").as("c_id"))
-    val toCheck = state.reactions
-      .select(col("_id"), explode(col("Products")).as("m"))
-      .select(col("_id"), col("m.c_id").as("c_id"))
-      .join(genC, Seq("c_id"), "left_semi")
-      .select("_id").distinct()
-    val smilesOf = state.compounds.select(col("_id").as("c_id"), col("SMILES"))
     val sc = scorer
     val thr = threshold
     val scoreUdf = udf { (reac: Seq[String], prod: Seq[String]) =>
       sc(reac, prod)
     }
-    // one side-tagged explode+join+regroup, like ThermoFilter
-    state.reactions
-      .join(toCheck, Seq("_id"), "left_semi")
-      .select(col("_id"), explode(concat(
-        expr("transform(Reactants, m -> struct('r' as side, m.c_id as c_id))"),
-        expr("transform(Products, m -> struct('p' as side, m.c_id as c_id))")
-      )).as("m"))
-      .join(smilesOf, col("m.c_id") === col("c_id"))
+    ReactionMembers(state)
       .groupBy("_id")
       .agg(
-        array_sort(collect_list(when(col("m.side") === "r", col("SMILES"))))
+        array_sort(collect_list(when(col("side") === "r", col("SMILES"))))
           .as("Reactants"),
-        array_sort(collect_list(when(col("m.side") === "p", col("SMILES"))))
-          .as("Products"))
+        array_sort(collect_list(when(col("side") === "p", col("SMILES"))))
+          .as("Products"),
+        ReactionMembers.checked)
+      .where(col("checked"))
       .withColumn("score", scoreUdf(col("Reactants"), col("Products")))
       .where(col("score") < thr)
       .select("_id")

@@ -55,18 +55,21 @@ object MassSearch {
         * ppm searches over wide mass ranges should pass ~1.0.
         */
       bucketWidth: Double = 0.01): DataFrame = {
-    import spark.implicits._
     // potential mass per (peak, adduct): (mz - ion) / mult ± tol
-    // (metabolomics.py:211-217); charge polarity must match the adduct's
-    val adductDf = adducts.toDF()
-      .select(col("name").as("adduct"), col("mult"), col("ionMass"))
-    val ranges = peaks.crossJoin(broadcast(adductDf))
-      .where((col("charge") === "+" && col("ionMass") > 0) ||
-        (col("charge") === "-" && col("ionMass") < 0))
-      .withColumn("potential_mass", (col("mz") - col("ionMass")) / col("mult"))
+    // (metabolomics.py:211-217); charge polarity must match the adduct's.
+    // The adducts expand each peak row in place (explode of a literal
+    // array) instead of a cross join, which plans a nested-loop join;
+    // typedLit keeps the element type when the list is empty
+    val ranges = peaks
+      .select(col("name"), col("mz"), col("charge"),
+        explode(typedLit(adducts)).as("a"))
+      .where((col("charge") === "+" && col("a.ionMass") > 0) ||
+        (col("charge") === "-" && col("a.ionMass") < 0))
+      .withColumn("potential_mass",
+        (col("mz") - col("a.ionMass")) / col("a.mult"))
       .withColumn("tol_da",
         if (ppm) col("potential_mass") * tol / 1e6 else lit(tol))
-      .select(col("name").as("peak"), col("adduct"),
+      .select(col("name").as("peak"), col("a.name").as("adduct"),
         (col("potential_mass") - col("tol_da")).as("lo"),
         (col("potential_mass") + col("tol_da")).as("hi"))
     // Project `logP` through when the input table carries it (e.g. the
@@ -103,13 +106,15 @@ object MassSearch {
   }
 
   /** A6: per-peak hit statistics (total_hits, distinct formulas —
-    * metabolomics.py:245-252,391-394).
+    * metabolomics.py:245-252,391-394). The distinct counts are set sizes
+    * in the one aggregation: two countDistinct calls would plan an
+    * Expand and a second aggregation.
     */
   def peakStats(hits: DataFrame): DataFrame =
     hits.groupBy("peak")
       .agg(count(lit(1)).as("total_hits"),
-        countDistinct("Formula").as("n_formulas"),
-        countDistinct("_id").as("n_compounds"))
+        size(collect_set("Formula")).cast("bigint").as("n_formulas"),
+        size(collect_set("_id")).cast("bigint").as("n_compounds"))
 
   /** A11/J10: spectral similarity between two (mz, intensity) lists with
     * ±tol both-advance merge — the reference's _approximate_matches +

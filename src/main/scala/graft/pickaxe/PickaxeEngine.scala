@@ -56,11 +56,12 @@ trait NetworkFilter {
   * Dataflow per generation (SURVEY.md §2.3):
   *   frontier select (P1) -> flatMap over broadcast rules (E2/E3/J1/J2)
   *   -> reaction groupBy-merge with operator set-union (A1/D2)
-  *   -> compound anti-join dedup, first-generation-wins (D1/E6)
-  * with persist + localCheckpoint per generation for flat lineage.
+  *   -> compound regroup-merge dedup, first-generation-wins (D1/E6)
+  * with one localCheckpoint per state table per generation for flat
+  * lineage.
   *
-  * Scale design: the only shuffles are the two groupBy/anti-join merges
-  * per generation, both hash-partitioned on content ids; rules and
+  * Scale design: the only shuffles are the two regroup merges per
+  * generation, both hash-partitioned on content ids; rules and
   * coreactants are broadcast (they are small dimension tables); the
   * chemistry runs inside one flatMap (per-partition imperative kernel,
   * the documented exception to expression-only plans).
@@ -95,8 +96,9 @@ final class PickaxeEngine(
     val start = loadStarting(startingSmiles)
     val core = coreactants.map(c =>
       mkCompound(c._id, c.smiles, "Coreactant", 0, expand = false))
-    val compounds = (start ++ core).toDF()
-      .dropDuplicates("_id")
+    // dedup on the driver: a dropDuplicates over the local rows would
+    // plan an aggregate and a shuffle into every generation-1 job
+    val compounds = (start ++ core).distinctBy(_._id).toDF()
     NetworkState(compounds, spark.emptyDataset[ReactionRow].toDF(), 0)
   }
 
@@ -195,51 +197,59 @@ final class PickaxeEngine(
     // every shuffle above it out of AQE re-partitioning, so the
     // reaction-merge groupBy materialized 32-wide for a handful of rows
     // (profiled 1.2-1.6 s task time on every pickaxe query's first
-    // generation). The lazy form keeps persist's schedule (the kernel
-    // materializes inside the first consumer job, overlapped with the
-    // two concurrent state checkpoints, BlockManager partition locks
-    // guaranteeing single compute) while caching the AQE-final RDD —
-    // the eager form was measured to add one sequential job per
-    // generation (q_pickaxe_skeleton +0.4 s).
+    // generation). Lazy does not defer everything: with AQE on, the
+    // query stages below the checkpoint still run when it is created;
+    // only the final stage (the kernel flatMap here) waits for its
+    // first consumer, which saves at most one job over the eager form
+    // (measured: eager added one sequential job per generation,
+    // q_pickaxe_skeleton +0.4 s). The two concurrent state checkpoints
+    // below both read it; the kernel computes once only because local
+    // mode has a single BlockManager whose partition locks serialize
+    // the two jobs' first reads. On a multi-executor cluster the two
+    // jobs can compute and cache the same partition on different
+    // executors, running the chemistry twice.
     val predicted = frontier.flatMap { case (id, smi) =>
       RuleKernel.applyAll(id, smi, rulesB.value, coreB.value, explicitH = eh)
     }.toDF().localCheckpoint(eager = false)
 
-    // D2/A1: reaction merge with operator set-union
-    val newRxns = predicted
-      .groupBy(col("rxnId").as("_id"))
+    // D2/A1: reaction merge with operator set-union — this generation's
+    // predictions and the existing reactions regroup in ONE aggregation,
+    // one shuffle instead of a regroup followed by a full-outer join. An
+    // existing reaction keeps its ID; the SMILES and stoichiometry are
+    // functions of the content-hash id, so any row's copy is the
+    // reaction's
+    val newRxns = predicted.select(col("rxnId").as("_id"), lit("").as("ID"),
+      col("reactants").as("Reactants"), col("products").as("Products"),
+      array(col("operator")).as("Operators"),
+      col("smilesRxn").as("SMILES_rxn"))
+    val mergedRxns = filteredState.reactions
+      .select(newRxns.columns.map(col).toSeq: _*)
+      .union(newRxns)
+      .groupBy("_id")
       .agg(
-        first("smilesRxn").as("SMILES_rxn"),
-        first("reactants").as("Reactants"),
-        first("products").as("Products"),
-        array_sort(collect_set("operator")).as("Operators"))
-    val mergedRxns =
-      // generation 0 starts with a typed empty reactions table; the
-      // full_outer merge also handles an empty old side correctly, so
-      // this branch is a plan-size optimization, not a correctness one —
-      // and the generation check costs no Spark action
-      if (state.generation == 0) newRxns
-        .select(col("_id"), lit("").as("ID"), col("Reactants"),
-          col("Products"), col("Operators"), col("SMILES_rxn"))
-      else filteredState.reactions.as("old")
-        .join(newRxns.as("new"), Seq("_id"), "full_outer")
-        .select(
-          col("_id"),
-          coalesce(col("old.ID"), lit("")).as("ID"),
-          coalesce(col("old.Reactants"), col("new.Reactants")).as("Reactants"),
-          coalesce(col("old.Products"), col("new.Products")).as("Products"),
-          array_sort(array_distinct(concat(
-            coalesce(col("old.Operators"), array()),
-            coalesce(col("new.Operators"), array())))).as("Operators"),
-          coalesce(col("old.SMILES_rxn"), col("new.SMILES_rxn"))
-            .as("SMILES_rxn"))
+        max("ID").as("ID"),
+        first("Reactants").as("Reactants"),
+        first("Products").as("Products"),
+        array_sort(array_distinct(flatten(collect_list("Operators"))))
+          .as("Operators"),
+        first("SMILES_rxn").as("SMILES_rxn"))
 
-    // D1/E6: compound dedup, first-generation-wins via anti-join
+    // D1/E6: compound dedup, first-generation-wins: this generation's
+    // products and the known compounds regroup on (id, SMILES) in one
+    // shuffle, and only ids no known compound has stay. An id is the
+    // hash of its SMILES, so the pair groups as the id would, and the
+    // boolean aggregate keeps the HashAggregate codegen'd — no broadcast
+    // of the known ids, no SortAggregate over a string buffer
     val newCpds = predicted
       .select(explode(col("productSmiles")).as("p"))
-      .select(col("p._1").as("_id"), col("p._2").as("SMILES"))
-      .dropDuplicates("_id")
-      .join(afterFilters.select("_id"), Seq("_id"), "left_anti")
+      .select(col("p._1").as("_id"), col("p._2").as("SMILES"),
+        lit(false).as("known"))
+      .union(afterFilters.select(col("_id"), col("SMILES"),
+        lit(true).as("known")))
+      .groupBy("_id", "SMILES")
+      .agg(max("known").as("known"))
+      .where(!col("known"))
+      .select("_id", "SMILES")
       .as[(String, String)]
       .map { t => PickaxeEngine.mkCompound(t._1, t._2, "Predicted", g + 1,
         expand = true) }
@@ -487,13 +497,16 @@ final class PickaxeEngine(
     */
   def assignIds(state: NetworkState): NetworkState = {
     import graft.operators.DenseIds
-    val cpds = DenseIds.withDenseRank(state.compounds,
-        Seq(col("Generation"), col("_id")))
-      .withColumn("ID", format_string("pkc%07d", col("__rank")))
-      .drop("__rank")
-    val rxns = DenseIds.withDenseRank(state.reactions, Seq(col("_id")))
-      .withColumn("ID", format_string("pkr%07d", col("__rank")))
-      .drop("__rank")
+    def ided(df: DataFrame, order: Seq[String], fmt: String) =
+      DenseIds.withDenseRank(df, order.map(col))
+        .withColumn("ID", format_string(fmt, col("__rank")))
+        .drop("__rank")
+    // each rank runs its own short chain of driver jobs (range
+    // sampling, shuffle, partition counts); the two tables are
+    // independent, so overlap them like expandOnce's state pair
+    val (cpds, rxns) = PickaxeEngine.concurrently(
+      ided(state.compounds, Seq("Generation", "_id"), "pkc%07d"),
+      ided(state.reactions, Seq("_id"), "pkr%07d"))
     NetworkState(cpds, rxns, state.generation)
   }
 

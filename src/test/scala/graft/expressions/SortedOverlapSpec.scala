@@ -1,6 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{expr, lit}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft_sorted_overlap must count exactly what
@@ -49,9 +51,26 @@ class SortedOverlapSpec extends AnyFunSuite {
 
   test("null input propagates to SQL NULL like size(array_intersect)") {
     val s = spark
-    val r = s.sql(
-      "select graft_sorted_overlap(cast(null as array<bigint>), " +
-        "array(1L, 2L)) as x").head()
+    // a null of the accepted type: array<bigint> without null elements
+    val noNulls = ArrayType(LongType, containsNull = false)
+    val r = s.range(1)
+      .select(lit(null).cast(noNulls).as("a"), expr("array(1L, 2L)").as("b"))
+      .selectExpr("graft_sorted_overlap(a, b) as x").head()
     assert(r.isNullAt(0))
+  }
+
+  test("arrays that may hold null elements are rejected") {
+    val s = spark
+    // array(1L, null) has type array<bigint> with containsNull = true;
+    // the merge walk would read the null as 0
+    val boom = intercept[org.apache.spark.sql.AnalysisException] {
+      s.sql("select graft_sorted_overlap(array(1L, null), array(0L, 1L))")
+        .collect()
+    }
+    assert(boom.getMessage.contains("graft_sorted_overlap"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      s.sql("select graft_sorted_overlap(array(0L, 1L), " +
+        "cast(null as array<bigint>))").collect()
+    }
   }
 }

@@ -78,10 +78,40 @@ class CascadeAndIOSpec extends SparkSuite {
       Set("R1", "R3")) // only R2 (sole product CP3) dies
   }
 
+  /** Ring glucose as a V2000 MOL block (heavy atoms only, no stereo). */
+  private val glucoseMol =
+    """glucose
+      |  hand-written
+      |
+      | 12 12  0  0  0  0  0  0  0  0999 V2000
+      |    1.0000    0.0000    0.0000 C   0  0  0  0  0  0  0  0  0  0  0  0
+      |    0.5000   -0.8700    0.0000 C   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -0.5000   -0.8700    0.0000 C   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -1.0000    0.0000    0.0000 C   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -0.5000    0.8700    0.0000 C   0  0  0  0  0  0  0  0  0  0  0  0
+      |    0.5000    0.8700    0.0000 O   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -1.0000    1.7300    0.0000 C   0  0  0  0  0  0  0  0  0  0  0  0
+      |    2.0000    0.0000    0.0000 O   0  0  0  0  0  0  0  0  0  0  0  0
+      |    1.0000   -1.7300    0.0000 O   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -1.0000   -1.7300    0.0000 O   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -2.0000    0.0000    0.0000 O   0  0  0  0  0  0  0  0  0  0  0  0
+      |   -2.0000    1.7300    0.0000 O   0  0  0  0  0  0  0  0  0  0  0  0
+      |  1  2  1  0
+      |  2  3  1  0
+      |  3  4  1  0
+      |  4  5  1  0
+      |  5  6  1  0
+      |  6  1  1  0
+      |  5  7  1  0
+      |  1  8  1  0
+      |  2  9  1  0
+      |  3 10  1  0
+      |  4 11  1  0
+      |  7 12  1  0
+      |M  END""".stripMargin
+
   test("SDF multi-line data fields are captured fully") {
-    val mol = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/data/glucose.mol")))
-    val sdf = mol + "\n> <comment>\nline one\nline two\n\n$$$$\n"
+    val sdf = glucoseMol + "\n> <comment>\nline one\nline two\n\n$$$$\n"
     val recs = MolFile.parseSdf(sdf)
     assert(recs.head._2("comment") === "line one\nline two")
   }
@@ -105,13 +135,13 @@ class CascadeAndIOSpec extends SparkSuite {
   }
 
   test("SDF parsing with data fields") {
-    val mol = new String(Files.readAllBytes(
-      Paths.get("/root/reference/tests/data/glucose.mol")))
+    val mol = glucoseMol
     val sdf = mol + "\n> <ID>\nglucose-1\n\n$$$$\n" + mol + "\n> <ID>\ng2\n\n$$$$\n"
     val recs = MolFile.parseSdf(sdf)
     assert(recs.length === 2)
     assert(recs.head._2("ID") === "glucose-1")
     assert(recs.map(_._1).distinct.length === 1)
+    assert(recs.head._1 === Smiles.canonical("OCC1OC(O)C(O)C(O)C1O"))
   }
 
   test("compound file loading: structure column detection + dedup") {

@@ -88,10 +88,19 @@ class FiltersAndSearchSpec extends SparkSuite {
     val peaks = Seq(("hit", phosphoMass + 1.007276, "+"),
       ("miss", 99.0, "+")).toDF("name", "mz", "charge")
     val hits = MassSearch.adductSearch(spark, st.compounds, peaks, tol = 0.001)
-    val stats = MassSearch.peakStats(hits).collect()
+    val statsDf = MassSearch.peakStats(hits)
+    val stats = statsDf.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(stats.contains("hit"))
     assert(!stats.contains("miss"))
+    // every count column is a bigint
+    assert(statsDf.schema.fields.drop(1).map(_.dataType).toSeq ===
+      Seq.fill(3)(org.apache.spark.sql.types.LongType))
+    // no adducts: no hits, with the usual hit schema
+    val none = MassSearch.adductSearch(spark, st.compounds, peaks,
+      adducts = Nil, tol = 0.001)
+    assert(none.isEmpty)
+    assert(none.schema === hits.schema)
   }
 
   test("ppm tolerance narrows with mass") {

@@ -21,6 +21,13 @@ class PickaxeRunSpec extends SparkSuite {
     "C(O)COP(=O)(O)OP(=O)(O)OCC1OC(n3cnc4c(N)ncnc43)C(O)C1O)" +
     "c1nc(O)nc(O)c1N2"
 
+  private val atp = "Nc1ncnc2c1ncn2C1OC(COP(=O)(O)OP(=O)(O)OP(=O)(O)O)C(O)C1O"
+  private val adp = "Nc1ncnc2c1ncn2C1OC(COP(=O)(O)OP(=O)(O)O)C(O)C1O"
+  private val phosphorylation = "[#6;H2D4:8][#8;H0D2:7][#15;H0D4:6]" +
+    "[#8;H0D2:5][#15;H0D4:4][#8;H0D2:3][#15;H0D4:2][#8;H1D2R0:1]." +
+    "[#1;D1R0:11][#8;H1D2R0:10][#6:9]>>" +
+    "[*:1]-[*:2]-[*:10]-[*:9].[*:8]-[*:7]-[*:6]-[*:5]-[*:4]-[*:3]-[*:11]"
+
   private def tmpCsv(name: String, rows: Seq[(String, String)]): String = {
     val p = Files.createTempFile(name, ".csv")
     Files.writeString(p,
@@ -136,9 +143,17 @@ class PickaxeRunSpec extends SparkSuite {
     Files.writeString(p, sb.toString)
     val seed = PickaxeEngine.loadCompoundFile(spark, p.toString)
       .repartition(8)
+    // gen 0 runs no rule: one rule and its two coreactants, written as
+    // the TSV files the runner loads, suffice
+    val coreTsv = Files.createTempFile("core", ".tsv")
+    Files.writeString(coreTsv, "#ID\tName\tSMILES\n" +
+      s"ATP\tATP\t$atp\nADP\tADP\t$adp\n")
+    val rulesTsv = Files.createTempFile("rules", ".tsv")
+    Files.writeString(rulesTsv, "Name\tReactants\tSMARTS\tProducts\n" +
+      s"2.7.1.a\tATP;Any\t$phosphorylation\tAny;ADP\n")
     val (rules, core) = PickaxeRun.loadRules(spark, ExplicitTsv(
-      s"$refData/test_reaction_rules.tsv",
-      s"$refData/test_coreactants.tsv"))
+      rulesTsv.toString, coreTsv.toString))
+    assert(rules.length === 1 && core.length === 2)
     val engine = new PickaxeEngine(spark, rules, core)
     val st = engine.runFrom(engine.initialState(seed), generations = 0)
     import spark.implicits._
