@@ -49,9 +49,9 @@ object DenseIds {
     val ranged = base.sortWithinPartitions(order: _*)
       .localCheckpoint(eager = false)
     // phase 1: per-partition row counts -> start offsets, counted on the
-    // internal rows (no Row conversion)
-    val counts = ranged.queryExecution.toRdd
-      .mapPartitions(it => Iterator(it.size.toLong)).collect()
+    // checkpoint's internal rows (no scan stage, no Row conversion)
+    val counts = CheckpointRows.run(ranged, "DenseIds partition counts")(
+      _.mapPartitions(it => Iterator(it.size.toLong)).collect())
     val offsets = counts.scanLeft(0L)(_ + _).init
     // phase 2: offset + local position as one expression over the frozen
     // rows — monotonically_increasing_id is (partition << 33) + the

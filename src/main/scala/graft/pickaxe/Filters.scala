@@ -374,14 +374,17 @@ private[pickaxe] object ReactionMembers {
       col("SMILES"),
       (col("Generation") === g &&
         !col("Type").isin("Coreactant", "Target Compound")).as("genC"))
+    // the side follows from the member's position in Reactants ++
+    // Products; a `transform` lambda tagging each member would be an
+    // interpreted expression, which keeps the explode out of generated
+    // code and splits the plan into one more stage
     state.reactions
-      .select(col("_id"), explode(concat(
-        expr("transform(Reactants, m -> struct('r' as side, m.stoich as stoich, m.c_id as c_id))"),
-        expr("transform(Products, m -> struct('p' as side, m.stoich as stoich, m.c_id as c_id))")
-      )).as("m"))
-      .join(compounds, col("m.c_id") === col("c_id"))
-      .select(col("_id"), col("m.side").as("side"),
-        col("m.stoich").as("stoich"), col("SMILES"), col("genC"))
+      .select(col("_id"), size(col("Reactants")).as("nr"),
+        posexplode(concat(col("Reactants"), col("Products"))))
+      .join(compounds, col("col.c_id") === col("c_id"))
+      .select(col("_id"),
+        when(col("pos") < col("nr"), lit("r")).otherwise(lit("p")).as("side"),
+        col("col.stoich").as("stoich"), col("SMILES"), col("genC"))
   }
 
   /** Aggregate: does the reaction produce a `genC` compound? */
@@ -423,23 +426,17 @@ final case class ThermoFilter(
       (generationList.nonEmpty && !generationList.contains(g - 1)))
       return state.reactions.select("_id").limit(0)
     val mdl = model
-    val dgUdf = udf { (reac: Seq[org.apache.spark.sql.Row],
-        prod: Seq[org.apache.spark.sql.Row]) =>
-      def side(rows: Seq[org.apache.spark.sql.Row]) =
-        rows.map(r => r.getInt(0) -> graft.chem.Smiles.parse(r.getString(1)))
-      Thermo.deltaG(side(reac), side(prod), mdl)
-    }
+    val energy = udf { smiles: String => mdl(graft.chem.Smiles.parse(smiles)) }
+    // Thermo.deltaG is additive: Σ reactant ν·model − Σ product ν·model.
+    // Summing one term per member keeps the regroup a codegen'd hash
+    // aggregate; collecting the members into lists for a UDF would not
+    def sideSum(side: String) = coalesce(
+      sum(when(col("side") === side, col("stoich") * energy(col("SMILES")))),
+      lit(0.0))
     ReactionMembers(state)
       .groupBy("_id")
-      .agg(
-        collect_list(when(col("side") === "r",
-          struct(col("stoich"), col("SMILES")))).as("Reactants"),
-        collect_list(when(col("side") === "p",
-          struct(col("stoich"), col("SMILES")))).as("Products"),
-        ReactionMembers.checked)
-      .where(col("checked"))
-      .withColumn("dg", dgUdf(col("Reactants"), col("Products")))
-      .where(col("dg") >= dgMax) // thermodynamics.py:157-159
+      .agg((sideSum("r") - sideSum("p")).as("dg"), ReactionMembers.checked)
+      .where(col("checked") && col("dg") >= dgMax) // thermodynamics.py:157-159
       .select("_id")
   }
 }

@@ -9,7 +9,8 @@ import graft.operators.RangeJoin
   * mass/adduct search (3.2) and MS2 spectral scoring (3.3), Spark-first.
   *
   * The per-(peak,adduct) Mongo range `find` of the reference becomes ONE
-  * lazy plan: peaks x adducts (small, broadcast) -> bucketed interval
+  * lazy plan: each peak row expands into its polarity-matched adduct
+  * windows (an explode of the literal adduct list) -> bucketed interval
   * join (J6) against the compound Mass column -> hit statistics (A6).
   */
 object MassSearch {
@@ -105,16 +106,27 @@ object MassSearch {
       inclusive = true) // $gte/$lte like the reference
   }
 
-  /** A6: per-peak hit statistics (total_hits, distinct formulas —
-    * metabolomics.py:245-252,391-394). The distinct counts are set sizes
-    * in the one aggregation: two countDistinct calls would plan an
-    * Expand and a second aggregation.
+  /** A6: per-peak hit statistics (total_hits, distinct formulas and
+    * compounds, nulls not counted — metabolomics.py:245-252,391-394).
+    * One shuffle on the peak, then each partition counts its peaks'
+    * hits in one pass. As an aggregation the two distinct counts need
+    * either an Expand and a second aggregation (countDistinct) or an
+    * interpreted object aggregate (collect_set), both of which generate
+    * several times the classes of this plan.
     */
-  def peakStats(hits: DataFrame): DataFrame =
-    hits.groupBy("peak")
-      .agg(count(lit(1)).as("total_hits"),
-        size(collect_set("Formula")).cast("bigint").as("n_formulas"),
-        size(collect_set("_id")).cast("bigint").as("n_compounds"))
+  def peakStats(hits: DataFrame): DataFrame = {
+    import hits.sparkSession.implicits._
+    hits.select("peak", "Formula", "_id").as[(String, String, String)]
+      .repartition(col("peak"))
+      .mapPartitions { rows =>
+        rows.toSeq.groupBy(_._1).iterator.map { case (peak, hs) =>
+          (peak, hs.size.toLong,
+            hs.flatMap(h => Option(h._2)).distinct.size.toLong,
+            hs.flatMap(h => Option(h._3)).distinct.size.toLong)
+        }
+      }
+      .toDF("peak", "total_hits", "n_formulas", "n_compounds")
+  }
 
   /** A11/J10: spectral similarity between two (mz, intensity) lists with
     * ±tol both-advance merge — the reference's _approximate_matches +

@@ -1,10 +1,13 @@
 package graft.pickaxe
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.chem.{Formula, NPModel, NPScore, Smiles}
 import graft.expressions.BitTanimoto
+import graft.operators.Par
 
 /** The MINE storage layer (databases.py:263-602) re-expressed as parquet
   * tables: per-run `compounds`/`reactions` plus a cross-run enriched
@@ -146,10 +149,6 @@ object MineSink {
       mineName: String,
       npModelPath: Option[String] = None): Unit = {
     val st = state
-    st.compounds.write.mode("overwrite")
-      .parquet(s"$outDir/$mineName/compounds")
-    st.reactions.write.mode("overwrite")
-      .parquet(s"$outDir/$mineName/reactions")
     val incoming = coreCompounds(st, mineName, npModelPath)
     val corePath = s"$outDir/core_compounds"
     val hadoopPath = new org.apache.hadoop.fs.Path(corePath)
@@ -162,7 +161,18 @@ object MineSink {
     // parquet cannot overwrite its own input: stage, then swap via the
     // Hadoop FS API (checked — a failed rename must not lose the table)
     val tmp = new org.apache.hadoop.fs.Path(s"$corePath.tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
+    // the two per-run tables and the staged core table are independent
+    // writes: overlap them. Each write finishes before the first failure
+    // is rethrown as it was raised, so the swap below runs only after
+    // all three succeeded
+    val (cpds, (rxns, core)) = Par.concurrently(
+      Try(st.compounds.write.mode("overwrite")
+        .parquet(s"$outDir/$mineName/compounds")),
+      Par.concurrently(
+        Try(st.reactions.write.mode("overwrite")
+          .parquet(s"$outDir/$mineName/reactions")),
+        Try(merged.write.mode("overwrite").parquet(tmp.toString))))
+    Seq(cpds, rxns, core).foreach(_.get)
     val old = new org.apache.hadoop.fs.Path(s"$corePath.old")
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(hadoopPath) && !fs.rename(hadoopPath, old))

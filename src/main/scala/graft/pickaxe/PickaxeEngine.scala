@@ -1,9 +1,10 @@
 package graft.pickaxe
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.chem.{Chem, Formula, Smiles}
+import graft.operators.CheckpointRows
 
 /** The network state: the two core tables + generation counter. */
 final case class NetworkState(
@@ -54,7 +55,7 @@ trait NetworkFilter {
   * (reference driver loop transform_all, pickaxe.py:610-685).
   *
   * Dataflow per generation (SURVEY.md §2.3):
-  *   frontier select (P1) -> flatMap over broadcast rules (E2/E3/J1/J2)
+  *   frontier select (P1) -> kernel over broadcast rules (E2/E3/J1/J2)
   *   -> reaction groupBy-merge with operator set-union (A1/D2)
   *   -> compound regroup-merge dedup, first-generation-wins (D1/E6)
   * with one localCheckpoint per state table per generation for flat
@@ -63,8 +64,8 @@ trait NetworkFilter {
   * Scale design: the only shuffles are the two regroup merges per
   * generation, both hash-partitioned on content ids; rules and
   * coreactants are broadcast (they are small dimension tables); the
-  * chemistry runs inside one flatMap (per-partition imperative kernel,
-  * the documented exception to expression-only plans).
+  * chemistry runs inside one UDF (the imperative kernel, the documented
+  * exception to expression-only plans).
   */
 final class PickaxeEngine(
     spark: SparkSession,
@@ -99,8 +100,21 @@ final class PickaxeEngine(
     // dedup on the driver: a dropDuplicates over the local rows would
     // plan an aggregate and a shuffle into every generation-1 job
     val compounds = (start ++ core).distinctBy(_._id).toDF()
-    NetworkState(compounds, spark.emptyDataset[ReactionRow].toDF(), 0)
+    // every later generation reads checkpointed tables; a generation-0
+    // state over RDD leaves of the same schemas lets generation 1 plan
+    // exactly like the generations after it, so they share generated
+    // classes instead of compiling their own. Lazy: the first
+    // generation's jobs fill it
+    NetworkState(compounds.localCheckpoint(eager = false), noReactions, 0)
   }
+
+  /** No reactions yet: an RDD leaf typed as `expandOnce`'s merge writes
+    * its reactions.
+    */
+  private def noReactions: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      PickaxeEngine.mergeReactions(spark.emptyDataset[ReactionRow].toDF())
+        .schema)
 
   /** DataFrame-seed initial state: `starting` carries compound rows in
     * the [[CompoundRow]] schema — already standardized, organic-
@@ -114,11 +128,9 @@ final class PickaxeEngine(
     val core = coreactants.map(c =>
       mkCompound(c._id, c.smiles, "Coreactant", 0, expand = false)).toDF()
     NetworkState(
-      starting.unionByName(core).dropDuplicates("_id"),
-      spark.emptyDataset[ReactionRow].toDF(), 0)
+      starting.unionByName(core).dropDuplicates("_id"), noReactions, 0)
   }
 
-  /** One generation: filters -> frontier -> kernel -> merge (E1/E2/E6). */
   /** Apply the filter chain to the current frontier: clear Expand
     * flags, cascade-delete removed compounds/reactions. This is the
     * per-iteration filter pass of transform_all (pickaxe.py:628-629);
@@ -156,14 +168,22 @@ final class PickaxeEngine(
       else {
         // same one-shot materialization: the thermo/feasibility scoring
         // chain (explode + regroup + per-member parse) feeds both the
-        // isEmpty gate and deleteReactions
+        // emptiness gate and deleteReactions. The lazy checkpoint is
+        // filled by the gate's count, one job for both
         val badRxns = f.blockedReactions(afterCpds).select("_id").distinct()
-          .localCheckpoint()
-        if (badRxns.isEmpty) afterCpds
+          .localCheckpoint(eager = false)
+        if (CheckpointRows.run(badRxns, "blocked reactions")(_.count()) == 0)
+          afterCpds
         else Cascade.deleteReactions(afterCpds, badRxns)
       }
     }
 
+  /** One generation: filters -> frontier -> kernel -> merge (E1/E2/E6).
+    * The frontier is every compound of the state's generation with
+    * Expand set, coreactants and targets excepted; afterwards Expand is
+    * cleared on that generation and the new compounds enter the next
+    * one with Expand set.
+    */
   def expandOnce(
       state: NetworkState,
       filters: Seq[NetworkFilter] = Nil,
@@ -184,22 +204,32 @@ final class PickaxeEngine(
         pruneNetwork(filteredState0, white)
       } else filteredState0
     val afterFilters = filteredState.compounds
+    // the generation test is a UDF, not `col("Generation") === g`: Spark
+    // writes an int literal into the generated Java source, so every
+    // generation would compile its own copy of each stage; the UDF keeps
+    // `g` in the plan's references and the code identical across them
+    val ofGen = udf((gen: Int) => gen == g)
     // P1 frontier predicate (pickaxe.py:658-664)
     val frontier = afterFilters
-      .where(col("Generation") === g && col("Expand") &&
+      .where(ofGen(col("Generation")) && col("Expand") &&
         !col("Type").isin("Coreactant", "Target Compound"))
-      .select("_id", "SMILES").as[(String, String)]
 
     val rulesB = spark.sparkContext.broadcast(rules)
     val coreB = spark.sparkContext.broadcast(coreactantMap)
     val eh = explicitH
+    // the kernel as a UDF under explode: the frontier filter, the kernel
+    // call and the row output run in one generated stage, where a typed
+    // flatMap adds an object round trip and a serializer stage of its own
+    val kernel = udf { (id: String, smi: String) =>
+      RuleKernel.applyAll(id, smi, rulesB.value, coreB.value, explicitH = eh)
+    }
     // LAZY localCheckpoint, not persist: a persisted kernel output opts
     // every shuffle above it out of AQE re-partitioning, so the
     // reaction-merge groupBy materialized 32-wide for a handful of rows
     // (profiled 1.2-1.6 s task time on every pickaxe query's first
     // generation). Lazy does not defer everything: with AQE on, the
     // query stages below the checkpoint still run when it is created;
-    // only the final stage (the kernel flatMap here) waits for its
+    // only the final stage (the kernel call here) waits for its
     // first consumer, which saves at most one job over the eager form
     // (measured: eager added one sequential job per generation,
     // q_pickaxe_skeleton +0.4 s). The two concurrent state checkpoints
@@ -208,9 +238,10 @@ final class PickaxeEngine(
     // the two jobs' first reads. On a multi-executor cluster the two
     // jobs can compute and cache the same partition on different
     // executors, running the chemistry twice.
-    val predicted = frontier.flatMap { case (id, smi) =>
-      RuleKernel.applyAll(id, smi, rulesB.value, coreB.value, explicitH = eh)
-    }.toDF().localCheckpoint(eager = false)
+    val predicted = frontier
+      .select(explode(kernel(col("_id"), col("SMILES"))).as("p"))
+      .select("p.*")
+      .localCheckpoint(eager = false)
 
     // D2/A1: reaction merge with operator set-union — this generation's
     // predictions and the existing reactions regroup in ONE aggregation,
@@ -222,17 +253,9 @@ final class PickaxeEngine(
       col("reactants").as("Reactants"), col("products").as("Products"),
       array(col("operator")).as("Operators"),
       col("smilesRxn").as("SMILES_rxn"))
-    val mergedRxns = filteredState.reactions
+    val mergedRxns = PickaxeEngine.mergeReactions(filteredState.reactions
       .select(newRxns.columns.map(col).toSeq: _*)
-      .union(newRxns)
-      .groupBy("_id")
-      .agg(
-        max("ID").as("ID"),
-        first("Reactants").as("Reactants"),
-        first("Products").as("Products"),
-        array_sort(array_distinct(flatten(collect_list("Operators"))))
-          .as("Operators"),
-        first("SMILES_rxn").as("SMILES_rxn"))
+      .union(newRxns))
 
     // D1/E6: compound dedup, first-generation-wins: this generation's
     // products and the known compounds regroup on (id, SMILES) in one
@@ -259,7 +282,7 @@ final class PickaxeEngine(
       // expanded frontier is done (Expand=false), like the reference's
       // post-gen flag clear
       .withColumn("Expand",
-        when(col("Generation") === g, lit(false)).otherwise(col("Expand")))
+        when(ofGen(col("Generation")), lit(false)).otherwise(col("Expand")))
       .unionByName(newCpds)
 
     // localCheckpoint alone (NO Dataset-level persist): it is eager and
@@ -392,10 +415,18 @@ final class PickaxeEngine(
       whitelist: DataFrame,
       localRxnThreshold: Long = 200_000L,
       localSeedIds: Option[Seq[String]] = None): NetworkState = {
-    if (state.reactions.count() <= localRxnThreshold) {
+    // the gate and the local path's input in one bounded collect: at
+    // most threshold + 1 reactions cross to the driver, and a network
+    // with more than the threshold takes the distributed path below
+    val cap = math.max(0L, math.min(localRxnThreshold + 1, Int.MaxValue)).toInt
+    val members = state.reactions
+      .select(col("_id").as("rxn"), col("Reactants"), col("Products"))
+      .as[(String, Seq[Stoich], Seq[Stoich])]
+      .limit(cap).collect()
+    if (members.length <= localRxnThreshold) {
       val seedIds = localSeedIds.getOrElse(
         whitelist.select("_id").as[String].collect().toSeq)
-      return pruneToTargetsLocal(state, seedIds)
+      return pruneToTargetsLocal(state, members, seedIds)
     }
     val seeds = whitelist
       .select(col("_id").as("c_id")).distinct()
@@ -444,16 +475,13 @@ final class PickaxeEngine(
   }
 
   /** Driver-side twin of the distributed reverse BFS above — identical
-    * keep-set semantics, one collect of the (rxn, member) pairs.
+    * keep-set semantics over the collected (rxn, members) rows.
     */
   private def pruneToTargetsLocal(
       state: NetworkState,
+      members: Array[(String, Seq[Stoich], Seq[Stoich])],
       targetIds: Seq[String]): NetworkState = {
     import scala.collection.mutable
-    val members = state.reactions
-      .select(col("_id").as("rxn"), col("Reactants"), col("Products"))
-      .as[(String, Seq[Stoich], Seq[Stoich])]
-      .collect()
     // producedBy: c_id -> reactions with it as a product
     val producedBy = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
     val reactantsOf = mutable.HashMap.empty[String, Seq[String]]
@@ -479,12 +507,17 @@ final class PickaxeEngine(
     // keep every C member (both sides) of kept reactions, plus seeds
     val memberC = keepC ++ keepR.iterator.flatMap(r =>
       (reactantsOf(r) ++ prodIds(r)).filter(_.startsWith("C")))
-    val memberDf = memberC.toSeq.toDF("_id")
-    val outC = state.compounds.where(col("Type") === "Coreactant")
-      .unionByName(state.compounds.join(broadcast(memberDf), Seq("_id"),
-        "left_semi").where(col("Type") =!= "Coreactant"))
-    val outR = state.reactions.join(
-      broadcast(keepR.toSeq.toDF("_id")), Seq("_id"), "left_semi")
+    // the keep sets are driver-side already: ship them as broadcast
+    // variables and filter in place, instead of joining against a
+    // broadcast relation built from the same ids (one job and one hash
+    // join stage per table)
+    def isIn(ids: collection.Set[String]) = {
+      val b = spark.sparkContext.broadcast(ids.toSet)
+      udf((id: String) => b.value.contains(id))
+    }
+    val outC = state.compounds.where(
+      col("Type") === "Coreactant" || isIn(memberC)(col("_id")))
+    val outR = state.reactions.where(isIn(keepR)(col("_id")))
     NetworkState(outC, outR, state.generation)
   }
 
@@ -497,16 +530,25 @@ final class PickaxeEngine(
     */
   def assignIds(state: NetworkState): NetworkState = {
     import graft.operators.DenseIds
-    def ided(df: DataFrame, order: Seq[String], fmt: String) =
-      DenseIds.withDenseRank(df, order.map(col))
+    // both tables rank on one string key in their first column, so the
+    // two ranks plan the same range partitioning, sort and orderings
+    // and share those generated classes. The compound key orders as
+    // (Generation, _id): a generation is a non-negative int, so ten
+    // zero-padded digits order like the number
+    def ided(df: DataFrame, key: Column, fmt: String) =
+      DenseIds.withDenseRank(
+          df.select(key.as("__key") +: df.columns.toSeq.map(col): _*),
+          Seq(col("__key")))
         .withColumn("ID", format_string(fmt, col("__rank")))
-        .drop("__rank")
+        .drop("__rank", "__key")
     // each rank runs its own short chain of driver jobs (range
     // sampling, shuffle, partition counts); the two tables are
     // independent, so overlap them like expandOnce's state pair
     val (cpds, rxns) = PickaxeEngine.concurrently(
-      ided(state.compounds, Seq("Generation", "_id"), "pkc%07d"),
-      ided(state.reactions, Seq("_id"), "pkr%07d"))
+      ided(state.compounds,
+        concat(format_string("%010d", col("Generation")), col("_id")),
+        "pkc%07d"),
+      ided(state.reactions, col("_id"), "pkr%07d"))
     NetworkState(cpds, rxns, state.generation)
   }
 
@@ -530,6 +572,20 @@ final class PickaxeEngine(
 }
 
 object PickaxeEngine {
+
+  /** Reaction regroup of `expandOnce`: one row per `_id` with the
+    * highest ID, the set-union of the operators, and any row's SMILES
+    * and stoichiometry (functions of the content-hash id).
+    */
+  private def mergeReactions(rows: DataFrame): DataFrame =
+    rows.groupBy("_id")
+      .agg(
+        max("ID").as("ID"),
+        first("Reactants").as("Reactants"),
+        first("Products").as("Products"),
+        array_sort(array_distinct(flatten(collect_list("Operators"))))
+          .as("Operators"),
+        first("SMILES_rxn").as("SMILES_rxn"))
 
   /** Evaluate two independent Spark actions from two driver threads
     * (guide §2.6): local-mode jobs are driver-latency-dominated at

@@ -107,4 +107,32 @@ class MineSinkSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/mine_b/reactions").count() ===
       st.reactions.count())
   }
+
+  test("a failed write surfaces its own exception and leaves the stored " +
+    "core table as it was") {
+    val dir = java.nio.file.Files.createTempDirectory("mine").toString
+    MineSink.save(spark, st, dir, "mine_a")
+    def stored() = spark.read.parquet(s"$dir/core_compounds")
+      .select(col("_id"), col("MINES")).as[(String, Seq[String])]
+      .collect().toMap
+    val before = stored()
+    // the reactions write fails inside its job; the compounds and core
+    // writes run alongside it
+    val fail = udf { (s: String) =>
+      if (s != null) throw new IllegalStateException("reactions write failed")
+      s
+    }
+    val bad = st.copy(reactions =
+      st.reactions.withColumn("SMILES_rxn", fail(col("SMILES_rxn"))))
+    val e = intercept[Exception](MineSink.save(spark, bad, dir, "mine_b"))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("reactions write failed")))
+    // no swap happened: the old table is in place, unchanged
+    assert(stored() === before)
+    assert(before.values.forall(_ == Seq("mine_a")))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$dir/core_compounds.old")))
+  }
 }

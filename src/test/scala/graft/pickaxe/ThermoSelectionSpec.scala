@@ -50,4 +50,49 @@ class ThermoSelectionSpec extends SparkSuite {
     assert(out.reactions.select("_id").as[String].collect().toSet
       === Set("R1", "R3"))
   }
+
+  test("ThermoFilter deletes what a driver-side Thermo.deltaG scan puts " +
+    "at or above dgMax, stoichiometry and the boundary included") {
+    // generation 1 again; atoms: CA 3, CB 4, CC 1, CD 2; dgMax = 1
+    //   S1: CA -> CB                dG = -1
+    //   S2: 2 CA -> CB + 2 CC       dG =  0
+    //   S3: 2 CA -> CB + CC         dG =  1  exactly dgMax: deleted
+    //   S4: 3 CC + CA -> 2 CD       dG =  2  deleted
+    //   S5: 2 CB -> 2 CA + CC       dG =  1  deleted
+    //   S6: CB -> CA                dG =  1  no gen-1 product: not
+    //                                        checked, kept
+    val compounds = Seq(
+      ("CA", "CCO", 0), ("CB", "CCCO", 1), ("CC", "C", 1), ("CD", "CC", 1))
+      .map { case (id, smi, g) =>
+        (id, "", smi, "Predicted", g, "", 0, 0.0, true) }
+      .toDF("_id", "ID", "SMILES", "Type", "Generation", "Formula",
+        "Charge", "Mass", "Expand")
+    val rxns = Seq(
+      "S1" -> (Seq(1 -> "CA"), Seq(1 -> "CB")),
+      "S2" -> (Seq(2 -> "CA"), Seq(1 -> "CB", 2 -> "CC")),
+      "S3" -> (Seq(2 -> "CA"), Seq(1 -> "CB", 1 -> "CC")),
+      "S4" -> (Seq(3 -> "CC", 1 -> "CA"), Seq(2 -> "CD")),
+      "S5" -> (Seq(2 -> "CB"), Seq(2 -> "CA", 1 -> "CC")),
+      "S6" -> (Seq(1 -> "CB"), Seq(1 -> "CA")))
+    val reactions = rxns
+      .map { case (id, (r, p)) =>
+        (id, "", r.map(Stoich.tupled), p.map(Stoich.tupled), Seq("rule"), "")
+      }
+      .toDF("_id", "ID", "Reactants", "Products", "Operators", "SMILES_rxn")
+    val dgMax = 1.0
+    val model = (m: graft.chem.Molecule) => m.atoms.size.toDouble
+    val st = NetworkState(compounds, reactions, 1)
+
+    val smiles = Map("CA" -> "CCO", "CB" -> "CCCO", "CC" -> "C", "CD" -> "CC")
+    val gen = Map("CA" -> 0, "CB" -> 1, "CC" -> 1, "CD" -> 1)
+    def side(ms: Seq[(Int, String)]) =
+      ms.map { case (n, c) => n -> graft.chem.Smiles.parse(smiles(c)) }
+    val scan = rxns.collect {
+      case (id, (r, p)) if p.exists(m => gen(m._2) == 1) &&
+          Thermo.deltaG(side(r), side(p), model) >= dgMax => id
+    }.toSet
+    assert(scan === Set("S3", "S4", "S5"))
+    assert(ThermoFilter(dgMax = dgMax, model = model).blockedReactions(st)
+      .as[String].collect().toSet === scan)
+  }
 }
