@@ -21,7 +21,10 @@ import org.apache.spark.sql.SparkSession
   * the sweep itself: a pre-sweep wait-for-quiet and a per-query
   * mid-sweep re-gate (a co-tenant RETURNING mid-sweep contaminated
   * five consecutive driver artifacts), both bounded, both leaving
-  * their waits in the artifact.
+  * their waits in the artifact. BENCH_FULL.json and the diag line
+  * also carry each query's per-layer totals (`layers`: jobs, stages,
+  * tasks, task and GC time, shuffle and spill bytes, codegen
+  * compiles) from its median-time sweep rep, collected by [[Harness]].
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
@@ -36,11 +39,15 @@ object Bench {
     * brace COUNTER (quote-aware), not `indexOf('}')` — a nested value
     * inside `queries` must not silently truncate the map and quietly
     * stop covering most queries. Returns empty when the artifact is
-    * missing/unreadable or records a different scale factor.
+    * missing/unreadable or records a different scale factor or core
+    * count (a line without `cpus` counts as different: 8-core sweeps
+    * have twice overwritten the 32-core baseline).
     */
   private[graft] def parseBaselineMedians(
-      line: String, sfDir: String): Map[String, Double] = {
+      line: String, sfDir: String, cpus: Int): Map[String, Double] = {
     if (!line.contains("\"sf\":\"" + sfDir + "\"")) return Map.empty
+    if (!"\"cpus\":(\\d+)".r.findFirstMatchIn(line)
+        .exists(_.group(1).toInt == cpus)) return Map.empty
     val qObj = {
       val i = line.indexOf("\"queries\":{")
       if (i < 0) return Map.empty
@@ -184,15 +191,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // the committed artifact of this core count: runs at another count
+    // never overwrite (or judge against) the 32-core baseline
+    val defaultFull =
+      if (cpus == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
     var failed = List.empty[String]
     var varianceFlagged = List.empty[String]
     var healed = List.empty[String]
@@ -211,12 +216,11 @@ object Bench {
     val startLoad = loadAvg() // evidence of host contention at start
     // committed per-query baseline for the uniform-contention guard —
     // read BEFORE the run (this process overwrites the artifact later)
-    val baselinePath = sys.env.getOrElse(
-      "SPARK_GRAFT_BASELINE", "BENCH_FULL.json")
+    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", defaultFull)
     val baseline: Map[String, Double] =
       try parseBaselineMedians(
         new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(baselinePath))), sfDir)
+          java.nio.file.Paths.get(baselinePath))), sfDir, cpus)
       catch { case scala.util.control.NonFatal(_) => Map.empty }
     // local-iteration filter: SPARK_GRAFT_BENCH_ONLY=q_a,q_b runs just
     // those queries (never used by the driver, which runs the full set)
@@ -226,9 +230,10 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
+    // each rep's jobs carry the tag `name#rep` for the per-layer totals
     def rep(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        tag: String): Double = Harness.Collector.tagged(spark, tag) {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
@@ -263,7 +268,7 @@ object Bench {
           s"[bench] $name: mid-sweep re-gate waited ${regateWaited}s")
       }
       queryLoad ::= name -> loadAvg()
-      val base = (1 to reps).map(_ => rep(name, fn))
+      val base = (1 to reps).map(i => rep(name, fn, s"$name#$i"))
       // variance guard: reps spreading past 3x within one query is
       // host contention (or cold-start JIT), not the query — the
       // round-9 driver run burned a whole round of trend data on
@@ -302,7 +307,8 @@ object Bench {
         s"${varianceFlagged.size} flagged queries (loadavg $quietLoad)")
     val quietReps: Map[String, Seq[Double]] = selected.keys
       .filter(varianceFlagged.contains)
-      .map(name => name -> (1 to 2).map(_ => rep(name, selected(name))))
+      .map(name => name ->
+        (1 to 2).map(i => rep(name, selected(name), s"$name#quiet$i")))
       .toMap
     var unhealedMedians = List.empty[(String, Double)]
     val results = sweep.map { case (name, base) =>
@@ -366,6 +372,16 @@ object Bench {
     // the sweep PAUSED for a returning co-tenant instead of timing
     // queries into its load
     val gateWaitJson = jsonIntMap(queryGateWaited)
+    // per-layer totals (jobs, stages, tasks, task and GC time, shuffle
+    // and spill bytes, codegen compiles) of each query's median-time
+    // sweep rep, read once stop() has drained the listener bus
+    spark.stop()
+    val layersJson = sweep.toSeq.sortBy(_._1).flatMap { case (name, base) =>
+      val ok = base.zipWithIndex.filter(_._1 >= 0).sortBy(_._1)
+      ok.lift((ok.length - 1) / 2)
+        .flatMap { case (_, i) => Harness.Collector.layers(s"$name#${i + 1}") }
+        .map(l => "\"" + name + "\":" + l.json)
+    }.mkString("{", ",", "}")
     // Two stdout lines (round-18 VERDICT #2): the per-query DIAGNOSTIC
     // maps (every raw rep, per-query start loadavg, per-entry gate
     // waits, unhealed medians) tripled the contract line to ~16 KB and
@@ -380,24 +396,24 @@ object Bench {
     // to BENCH_FULL.json below for any consumer that needs all of it.
     // Timing methodology (count() action, reps, medians, healing) is
     // unchanged — this is output formatting only.
-    val diagLine = s"""{"runs":$runs,"unhealed":$unhealedJson,"query_gate_waited":$gateWaitJson,"query_loadavg":$qLoadJson}"""
+    val diagLine = s"""{"runs":$runs,"unhealed":$unhealedJson,"query_gate_waited":$gateWaitJson,"query_loadavg":$qLoadJson,"layers":$layersJson}"""
     println("[bench-diag] " + diagLine)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"n_failed":${failed.size},"failed":$failedJson,"variance_flagged":$varJson,"healed":$healedJson,"loadavg_start":$startLoad,"loadavg_pregate":$pregateLoad,"load_gate_waited_sec":$gateWaited,"loadavg_quiet":$quietLoad,"sf":"$sfDir"}"""
     println(line)
     // the committed artifact keeps EVERY field of both lines (full
     // precision medians included) so cross-round comparisons and the
     // judge's audit lose nothing to the stdout split
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${results.map { case (k, (m, _)) => s"\"" + k + "\":" + num(m) }.mkString("{", ",", "}")},"runs":$runs,"n_failed":${failed.size},"failed":$failedJson,"variance_flagged":$varJson,"healed":$healedJson,"unhealed":$unhealedJson,"loadavg_start":$startLoad,"loadavg_pregate":$pregateLoad,"load_gate_waited_sec":$gateWaited,"query_gate_waited":$gateWaitJson,"query_loadavg":$qLoadJson,"loadavg_quiet":$quietLoad,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${results.map { case (k, (m, _)) => s"\"" + k + "\":" + num(m) }.mkString("{", ",", "}")},"runs":$runs,"n_failed":${failed.size},"failed":$failedJson,"variance_flagged":$varJson,"healed":$healedJson,"unhealed":$unhealedJson,"loadavg_start":$startLoad,"loadavg_pregate":$pregateLoad,"load_gate_waited_sec":$gateWaited,"query_gate_waited":$gateWaitJson,"query_loadavg":$qLoadJson,"loadavg_quiet":$quietLoad,"layers":$layersJson,"cpus":$cpus,"sf":"$sfDir"}"""
     // The driver's recorded BENCH tail truncates, losing per-query
     // numbers past ~2000 chars — also write the COMPLETE line to a
     // committed artifact so every round's judge can compare all
     // queries. Only sf0.1 runs touch the default artifact (a local
     // sf0.01 debug run must not clobber the committed sf0.1 baseline
-    // — per-sf lines are not comparable); any explicit
+    // — per-sf lines are not comparable), and only a 32-core run
+    // writes BENCH_FULL.json itself; any explicit
     // SPARK_GRAFT_BENCH_FULL path is honored as given.
     val fullPath = sys.env.get("SPARK_GRAFT_BENCH_FULL")
-      .orElse(if (sfDir.endsWith("sf0.1") && only.isEmpty)
-        Some("BENCH_FULL.json")
+      .orElse(if (sfDir.endsWith("sf0.1") && only.isEmpty) Some(defaultFull)
       else None) // a name-filtered run must never clobber the baseline
     fullPath match {
       case Some(p) =>
@@ -408,11 +424,10 @@ object Bench {
         }
       case None =>
         System.err.println(
-          s"[bench] sf=$sfDir: skipping BENCH_FULL.json (sf0.1 only)")
+          s"[bench] sf=$sfDir: skipping $defaultFull (full sf0.1 runs only)")
     }
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries failed: " +
         failed.sorted.mkString(", "))
-    spark.stop()
   }
 }

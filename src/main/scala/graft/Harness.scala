@@ -1,0 +1,112 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+
+/** The one session setup of the mains (Bench, Verify, Explain, Show)
+  * and the one collector of what their Spark jobs did.
+  *
+  * `SPARK_GRAFT_CPUS` (default: the host's core count) sets the local
+  * master and the shuffle partitions; the session runs in UTC with the
+  * UI off and logs at WARN. The collector is installed once per
+  * SparkContext and sums, per tag, the jobs, stages and tasks that ran
+  * while `tagged` held that tag, plus the codegen compiles.
+  */
+object Harness {
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Collector.setup(spark.sparkContext)
+    spark
+  }
+
+  /** What one tag's jobs did. Times in seconds. */
+  final case class Layers(jobs: Long, stages: Long, tasks: Long,
+      taskS: Double, gcS: Double, shuffleBytes: Long, spillBytes: Long,
+      compiles: Long) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        s""""task_s":$taskS,"gc_s":$gcS,"shuffle_bytes":$shuffleBytes,""" +
+        s""""spill_bytes":$spillBytes,"compiles":$compiles}"""
+  }
+
+  /** Jobs carry their tag as a local property, which `Par.concurrently`
+    * threads inherit; a stage takes the tag of the job that submitted
+    * it, a task the tag of its stage. Listener events arrive
+    * asynchronously, so read `layers` only after the bus has drained
+    * (`spark.stop()` drains it).
+    */
+  object Collector extends SparkListener {
+    private val TagKey = "graft.harness.tag"
+    private final class Acc {
+      val jobs, stages, tasks, taskMs, gcMs, shuffle, spill = new AtomicLong
+    }
+    private val byTag = new ConcurrentHashMap[String, Acc]()
+    private val stageAcc = new ConcurrentHashMap[Int, Acc]()
+    private val compiles = new ConcurrentHashMap[String, Long]()
+    private var installedOn: SparkContext = null
+
+    def setup(sc: SparkContext): Unit = synchronized {
+      if (installedOn ne sc) { sc.addSparkListener(this); installedOn = sc }
+    }
+
+    private def acc(props: java.util.Properties): Option[Acc] =
+      Option(props).flatMap(p => Option(p.getProperty(TagKey)))
+        .map(byTag.computeIfAbsent(_, _ => new Acc))
+
+    def tagged[A](spark: SparkSession, tag: String)(body: => A): A = {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty(TagKey)
+      sc.setLocalProperty(TagKey, tag)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try body
+      finally {
+        compiles.put(tag, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+        sc.setLocalProperty(TagKey, outer)
+      }
+    }
+
+    /** Totals of a tag `tagged` ran, also when it started no job. */
+    def layers(tag: String): Option[Layers] =
+      if (!compiles.containsKey(tag)) None
+      else {
+        val a = byTag.getOrDefault(tag, new Acc)
+        Some(Layers(a.jobs.get, a.stages.get, a.tasks.get, a.taskMs.get / 1e3,
+          a.gcMs.get / 1e3, a.shuffle.get, a.spill.get, compiles.get(tag)))
+      }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      acc(e.properties).foreach(_.jobs.incrementAndGet())
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      acc(e.properties).foreach { a =>
+        a.stages.incrementAndGet()
+        stageAcc.put(e.stageInfo.stageId, a)
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(stageAcc.get(e.stageId)).foreach { a =>
+        a.tasks.incrementAndGet()
+        val m = e.taskMetrics
+        if (m != null) {
+          a.taskMs.addAndGet(m.executorRunTime)
+          a.gcMs.addAndGet(m.jvmGCTime)
+          a.shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          a.spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+        }
+      }
+  }
+}

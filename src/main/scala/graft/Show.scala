@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local-iteration result dump: `runMain graft.Show q_x` prints the
   * named queries' results on SPARK_GRAFT_SF_DIR (default sf0.01).
@@ -8,13 +7,7 @@ object Show {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     args.foreach { name =>
       println(s"== $name ==")
       SparkEntry.queries(name)(spark, sfDir).show(100, false)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.chem.{Chem, Formula, Smiles}
-import graft.operators.CheckpointRows
+import graft.operators.{CheckpointRows, Par}
 
 /** The network state: the two core tables + generation counter. */
 final case class NetworkState(
@@ -298,7 +298,7 @@ final class PickaxeEngine(
     // overlap instead of queueing (guide §2.6 "overlap independent
     // jobs") — the shared `predicted` checkpoint above already holds
     // the kernel output, so both jobs read cached blocks.
-    val (outC, outR) = PickaxeEngine.concurrently(
+    val (outC, outR) = Par.concurrently(
       mergedCpds.localCheckpoint(),
       mergedRxns.localCheckpoint())
     NetworkState(outC, outR, g + 1)
@@ -544,7 +544,7 @@ final class PickaxeEngine(
     // each rank runs its own short chain of driver jobs (range
     // sampling, shuffle, partition counts); the two tables are
     // independent, so overlap them like expandOnce's state pair
-    val (cpds, rxns) = PickaxeEngine.concurrently(
+    val (cpds, rxns) = Par.concurrently(
       ided(state.compounds,
         concat(format_string("%010d", col("Generation")), col("_id")),
         "pkc%07d"),
@@ -586,19 +586,6 @@ object PickaxeEngine {
         array_sort(array_distinct(flatten(collect_list("Operators"))))
           .as("Operators"),
         first("SMILES_rxn").as("SMILES_rxn"))
-
-  /** Evaluate two independent Spark actions from two driver threads
-    * (guide §2.6): local-mode jobs are driver-latency-dominated at
-    * fixture scale, so overlapping their schedules halves the
-    * per-generation materialization latency. Daemon threads; FIFO
-    * scheduling lets the second job back-fill the first one's tail.
-    */
-  private[pickaxe] def concurrently[A, B](a: => A, b: => B): (A, B) =
-    // delegate to the shared helper: fresh daemon threads per call (no
-    // fixed pool a nested use could deadlock), caller-thread Spark
-    // local properties captured per call, and the ORIGINAL exception
-    // rethrown instead of ExecutionException (round-18 ADVICE)
-    graft.operators.Par.concurrently(a, b)
 
   /** S2: compound-file ingest (load_compound_set, pickaxe.py:445-495):
     * CSV/TSV/JSON dispatched on extension (file_to_dict_list,

@@ -24,6 +24,11 @@ object PickaxeQueries extends QueryPack {
     "[#1;D1R0:11][#8;H1D2R0:10][#6:9]>>" +
     "[*:1]-[*:2]-[*:10]-[*:9].[*:8]-[*:7]-[*:6]-[*:5]-[*:4]-[*:3]-[*:11]"
 
+  /** The NP-likeness model q_chem_npscore scores with. */
+  def npModelPath: String = sys.env.getOrElse("SPARK_GRAFT_NP_MODEL",
+    "/root/reference/minedatabase/NP_Score/publicnp.model.gz")
+  def npModelPresent: Boolean = new java.io.File(npModelPath).isFile
+
   private def engine(s: org.apache.spark.sql.SparkSession): PickaxeEngine = {
     val core = PickaxeEngine.parseCoreactants(Seq(
       s"ATP\tATP\t$atp", s"ADP\tADP\t$adp"))
@@ -315,14 +320,13 @@ object PickaxeQueries extends QueryPack {
         import s.implicits._
         // Score through the SINK surface (MineSink.coreCompounds, the
         // databases.py:536-572 enrichment), not a bare scorer UDF — the
-        // same path a save_to_mine run takes. Model path resolves from
-        // SPARK_GRAFT_NP_MODEL with the reference tree as default; when
-        // the file is absent (foreign host) the documented stub scorer
-        // runs instead of the whole registry erroring.
-        val modelPath = sys.env.getOrElse("SPARK_GRAFT_NP_MODEL",
-          "/root/reference/minedatabase/NP_Score/publicnp.model.gz")
-        val modelOpt =
-          if (new java.io.File(modelPath).isFile) Some(modelPath) else None
+        // same path a save_to_mine run takes. Without the model file the
+        // query fails by name: the stub scorer's values are not NP
+        // scores, and would only read as 26 oracle mismatches.
+        if (!npModelPresent)
+          throw new java.io.FileNotFoundException(
+            s"q_chem_npscore needs the NP model: $npModelPath not found " +
+              "(set SPARK_GRAFT_NP_MODEL to publicnp.model.gz)")
         val compounds = npOracleMols.toDF("mol_id", "smiles")
           .repartition(4)
           .select(col("mol_id").as("_id"), col("smiles").as("SMILES"),
@@ -331,7 +335,7 @@ object PickaxeQueries extends QueryPack {
         val state = graft.pickaxe.NetworkState(
           compounds, compounds.limit(0), 0)
         graft.pickaxe.MineSink
-          .coreCompounds(state, "np_oracle", modelOpt)
+          .coreCompounds(state, "np_oracle", Some(npModelPath))
           .select(col("_id").as("mol_id"),
             col("NP_likeness").as("np_likeness"))
           .orderBy("mol_id")

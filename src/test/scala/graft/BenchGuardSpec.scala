@@ -13,18 +13,24 @@ class BenchGuardSpec extends AnyFunSuite {
     """{"metric":"total","value":138.9,"unit":"sec","reps":3,""" +
       """"queries":{"q_a":1.5,"q_b":0.25,"q_dead":null},""" +
       """"runs":{"q_a":[1.6,1.5,1.4]},"n_failed":0,"failed":[],""" +
-      """"variance_flagged":[],"sf":"/root/testdata/sf0.1"}"""
+      """"variance_flagged":[],"cpus":32,"sf":"/root/testdata/sf0.1"}"""
 
   test("parseBaselineMedians reads the queries map, skips nulls") {
-    val m = Bench.parseBaselineMedians(line, "/root/testdata/sf0.1")
+    val m = Bench.parseBaselineMedians(line, "/root/testdata/sf0.1", 32)
     assert(m === Map("q_a" -> 1.5, "q_b" -> 0.25))
   }
 
   test("a baseline recorded at another scale factor is ignored") {
-    assert(Bench.parseBaselineMedians(line, "/root/testdata/sf0.01")
+    assert(Bench.parseBaselineMedians(line, "/root/testdata/sf0.01", 32)
       === Map.empty)
-    assert(Bench.parseBaselineMedians("not json at all", "x")
+    assert(Bench.parseBaselineMedians("not json at all", "x", 32)
       === Map.empty)
+    // ...or at another core count, or without a recorded one (the
+    // 8-core sweeps that overwrote the 32-core baseline carried none)
+    assert(Bench.parseBaselineMedians(line, "/root/testdata/sf0.1", 8)
+      === Map.empty)
+    assert(Bench.parseBaselineMedians(line.replace(""""cpus":32,""", ""),
+      "/root/testdata/sf0.1", 32) === Map.empty)
   }
 
   test("parseBaselineMedians survives a nested object inside queries " +
@@ -33,8 +39,8 @@ class BenchGuardSpec extends AnyFunSuite {
       """{"metric":"total","value":9.9,"unit":"sec","reps":3,""" +
         """"queries":{"q_a":1.5,"q_meta":{"inner":{"x":1}},"q_b":0.25,""" +
         """"q_esc":"brace } in string","q_c":2.0},""" +
-        """"runs":{},"sf":"/root/testdata/sf0.1"}"""
-    val m = Bench.parseBaselineMedians(nested, "/root/testdata/sf0.1")
+        """"runs":{},"cpus":4,"sf":"/root/testdata/sf0.1"}"""
+    val m = Bench.parseBaselineMedians(nested, "/root/testdata/sf0.1", 4)
     // every numeric top-level query survives; the old indexOf('}')
     // scan would have stopped at q_meta's inner close brace
     assert(m("q_a") === 1.5)

@@ -14,18 +14,8 @@ import graft.chem.Chem
 class ExpandFrontierSpec extends SparkSuite {
   import spark.implicits._
 
-  private val atp = "Nc1ncnc2c1ncn2C1OC(COP(=O)(O)OP(=O)(O)OP(=O)(O)O)C(O)C1O"
-  private val adp = "Nc1ncnc2c1ncn2C1OC(COP(=O)(O)OP(=O)(O)O)C(O)C1O"
-  private val rule = "[#6;H2D4:8][#8;H0D2:7][#15;H0D4:6][#8;H0D2:5]" +
-    "[#15;H0D4:4][#8;H0D2:3][#15;H0D4:2][#8;H1D2R0:1]." +
-    "[#1;D1R0:11][#8;H1D2R0:10][#6:9]>>" +
-    "[*:1]-[*:2]-[*:10]-[*:9].[*:8]-[*:7]-[*:6]-[*:5]-[*:4]-[*:3]-[*:11]"
-
-  private lazy val core = PickaxeEngine.parseCoreactants(Seq(
-    s"ATP\tATP\t$atp", s"ADP\tADP\t$adp"))
-  private lazy val engine = new PickaxeEngine(spark,
-    PickaxeEngine.parseRules(Seq(s"2.7.1.a\tATP;Any\t$rule\tAny;ADP\t-"),
-      core), core, explicitH = true)
+  private def core = KinaseFixture.core
+  private lazy val engine = KinaseFixture.engine(spark)
 
   // glycerol phosphorylates over three generations, ethylene glycol two
   private val glycerol = "OCC(O)CO"

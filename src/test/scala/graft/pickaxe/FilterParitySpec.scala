@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.chem.{InChISkeleton, Molecule, Smiles}
 
 /** Parity run against the reference's 20-rule filter fixture
   * (tests/data/test_filters; pk_target in tests/conftest.py:144-154,
@@ -38,8 +39,37 @@ class FilterParitySpec extends SparkSuite {
     lines(s"$dataDir/test_filter_targets.csv")
       .tail.filter(_.trim.nonEmpty).map(_.split(",")(1).trim).head
 
+  /** The least SMILES of `s`'s closure under single aromatic n:c:n
+    * 1,3-H flips ([nH]:c:n -> n:c:[nH]): one representative per
+    * tautomer class that the sorted-first pick could have merged.
+    */
+  private def flipClosureRep(s: String): String = {
+    def flips(x: String): Seq[String] =
+      try {
+        val m = Smiles.parse(x)
+        def aromN(i: Int) = m.atoms(i).elem == "N" && m.atoms(i).aromatic
+        (for {
+          n1 <- 0 until m.n
+          if aromN(n1) && m.totalH(n1) == 1 && m.degree(n1) == 2
+          (c, b1) <- m.adj(n1)
+          if b1.aromatic && m.atoms(c).elem == "C" && m.atoms(c).aromatic
+          (n3, b2) <- m.adj(c)
+          if n3 != n1 && b2.aromatic && aromN(n3) &&
+            m.totalH(n3) == 0 && m.degree(n3) == 2
+        } yield Smiles.write(new Molecule(m.atoms
+          .updated(n1, m.atoms(n1).copy(hCount = 0))
+          .updated(n3, m.atoms(n3).copy(hCount = 1)), m.bonds))).distinct
+      } catch { case _: Exception => Nil }
+    val seen = scala.collection.mutable.Set(s)
+    val todo = scala.collection.mutable.Queue(s)
+    while (todo.nonEmpty && seen.size < 10000)
+      flips(todo.dequeue()).foreach(v => if (seen.add(v)) todo.enqueue(v))
+    seen.min
+  }
+
   test("unfiltered 2-generation expansion vs reference count 1740") {
     assume(present)
+    import spark.implicits._
     val st = engine.run(starts, generations = 2)
     val n = st.compounds.count()
     val byGen = st.compounds.groupBy("Generation", "Type").count()
@@ -48,14 +78,15 @@ class FilterParitySpec extends SparkSuite {
     info(s"total=$n ($byGen) vs reference 1740 (test_filters.py:122)")
     // DOCUMENTED DIVERGENCE: the reference (RDKit kernel) reaches 1740
     // compounds on this fixture; our kernel reaches 1860 (+6.9%).
-    // Round-5 diagnostics (graft.pickaxe.TautomerDiag) RULED OUT:
+    // Round-5 diagnostics RULED OUT (the closure count is pinned below):
     //   - aromatic n:c:n tautomer merging (utils.postsanitize_smiles
     //     sorted-first pick) is COMPLETE: the 1807 predicted compounds
     //     form 1807 single-flip closure classes;
     //   - the canonical SMILES writer is exact under atom relabeling
     //     (0/1807 compounds split across 3 random permutations each).
-    // Round-13 diagnostics (graft.pickaxe.SkeletonKeyDiag) ruled out
-    // FOUR more mechanisms, each with an exact count on this network:
+    // Round-13 diagnostics ruled out FOUR more mechanisms, each with
+    // an exact count on this network (the skeleton-key count is pinned
+    // below):
     //   - InChI-block-1 id merging (the reference hashes InChIKey
     //     block 1, utils.py:146-151; ours hashes canonical SMILES):
     //     the full mobile-H + proton-folding key (InChISkeleton)
@@ -81,6 +112,13 @@ class FilterParitySpec extends SparkSuite {
     // container (no RDKit available). Pinned as a regression bound.
     assert(n >= 1700 && n <= 2000, s"2-gen total $n drifted from the " +
       "pinned 1860 (reference: 1740)")
+    val predicted = st.compounds.where(col("Type") === "Predicted")
+      .select("SMILES").as[String].collect().toSeq
+    assert(predicted.size === 1807)
+    assert(predicted.map(flipClosureRep).distinct.size === 1807,
+      "tautomer pick no longer complete: some flip-closure class splits")
+    assert(predicted.map(InChISkeleton.keyOrSmiles).distinct.size === 1807,
+      "InChI-skeleton ids would now merge some predicted compounds")
   }
 
   test("similarity cutoff 0.5 (reference: 436) and [0,0.3,0.5] " +
@@ -93,16 +131,16 @@ class FilterParitySpec extends SparkSuite {
     // hash_range fold, mt19937 + uniform_int draw of 2 bits over
     // 2048). The one detail the written sources leave ambiguous — the
     // bond-hash bit packing — was grid-searched over 24 variants
-    // against these very pins (graft.pickaxe.RdkFpCalib); the
-    // calibrated default (chained 32-bit hash_combine) is the closest.
+    // against these very pins; the calibrated default (chained
+    // 32-bit hash_combine) is the closest.
     // Calibration history on the cutoff-0.5 pin (ref 436): round 1
     // 1407, round 3 1024, round 5 754 (512-bit packing truncation
     // fixed), round 12 480 (RdkFp replica; grid spread 323..848).
     // Multi-threshold pin (ref 1358): 1621 -> 1509 -> 1333 -> 1332.
     // The residual 480-vs-436 gap co-moves with the +120 unfiltered
     // kernel divergence pinned above: ~13 gen-1 compounds sit within
-    // +-0.03 of the 0.5 cutoff (graft.pickaxe.SimDistDiag), so kernel
-    // product-set differences, not just hash bits, decide the tail.
+    // +-0.03 of the 0.5 cutoff, so kernel product-set differences,
+    // not just hash bits, decide the tail.
     val stSingle = engine.run(starts, generations = 2,
       filters = Seq(TanimotoCutoffFilter(Seq(target), Seq(0.5))))
     val nSingle = stSingle.compounds.count()
@@ -212,7 +250,7 @@ class FilterParitySpec extends SparkSuite {
   test("MCS filter [0.1, 0.5] (reference: 382) — pinned with documented " +
     "divergence") {
     assume(present)
-    // DOCUMENTED DIVERGENCE, adjudicated round 15 (McsEdgeDiag): the
+    // DOCUMENTED DIVERGENCE, adjudicated round 15: the
     // reference MCSFilter rides on RDKit's FindMCS; our kernel mirrors
     // its compatibility model (element-only atoms, order-exact bonds,
     // bond-seeded) AND its maximizeBonds=True objective (bonds first,

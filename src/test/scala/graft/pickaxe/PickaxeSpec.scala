@@ -41,13 +41,10 @@ class PickaxeSpec extends SparkSuite {
 
   test("two-generation FADH expansion matches the reference oracle: " +
     "31 compounds / 49 reactions / gens {0,1,2}") {
-    assume(fixturesPresent)
     // mirror test_transform_all (test_pickaxe.py:93-111) exactly:
     // coreactants ATP+ADP only, rule 2.7.1.a only, FADH, 2 generations
-    val core = engine.coreactants.filter(c => Set("ATP", "ADP")(c.name))
-    val e = new PickaxeEngine(spark,
-      engine.rules.filter(_.name == "2.7.1.a"), core,
-      explicitH = true)
+    // (the fixture rows inline, so this pin runs on any host)
+    val e = KinaseFixture.engine(spark)
     val st = e.run(Seq(fadh), generations = 2)
     val nCpds = st.compounds.count() // coreactants included, like len(pk.compounds)
     val nRxns = st.reactions.count()
