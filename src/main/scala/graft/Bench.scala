@@ -41,11 +41,14 @@ object Bench {
     * stop covering most queries. Returns empty when the artifact is
     * missing/unreadable or records a different scale factor or core
     * count (a line without `cpus` counts as different: 8-core sweeps
-    * have twice overwritten the 32-core baseline).
+    * have twice overwritten the 32-core baseline), or when it is a
+    * forced-distributed run (`"local_paths":false`), which is never a
+    * baseline.
     */
   private[graft] def parseBaselineMedians(
       line: String, sfDir: String, cpus: Int): Map[String, Double] = {
     if (!line.contains("\"sf\":\"" + sfDir + "\"")) return Map.empty
+    if (line.contains("\"local_paths\":false")) return Map.empty
     if (!"\"cpus\":(\\d+)".r.findFirstMatchIn(line)
         .exists(_.group(1).toInt == cpus)) return Map.empty
     val qObj = {
@@ -195,9 +198,12 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val spark = Harness.session()
     // the committed artifact of this core count: runs at another count
-    // never overwrite (or judge against) the 32-core baseline
+    // never overwrite (or judge against) the 32-core baseline, and a
+    // run with every size gate forced distributed has its own file
+    val localPaths = operators.LocalGate.enabled(spark)
     val defaultFull =
-      if (cpus == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
+      if (!localPaths) s"BENCH_FULL_distributed_c$cpus.json"
+      else if (cpus == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
     var failed = List.empty[String]
     var varianceFlagged = List.empty[String]
     var healed = List.empty[String]
@@ -259,6 +265,15 @@ object Bench {
     // per-query start loadavg makes contamination attributable per
     // ENTRY, not per sweep (round-15 VERDICT #3)
     var queryLoad = List.empty[(String, Double)]
+    // one untimed, untagged rep of the first query first: otherwise its
+    // first timed rep absorbs JVM and codegen warm-up and the spread
+    // guard flags it although no co-tenant was involved
+    selected.headOption.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name warm-up FAILED: ${e.getMessage}")
+      }
+    }
     val sweep = selected.map { case (name, fn) =>
       val regateWaited = waitForQuiet(regateThreshold, regateCapSec, 5,
         () => loadAvg(), s => Thread.sleep(s * 1000L))
@@ -403,7 +418,7 @@ object Bench {
     // the committed artifact keeps EVERY field of both lines (full
     // precision medians included) so cross-round comparisons and the
     // judge's audit lose nothing to the stdout split
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${results.map { case (k, (m, _)) => s"\"" + k + "\":" + num(m) }.mkString("{", ",", "}")},"runs":$runs,"n_failed":${failed.size},"failed":$failedJson,"variance_flagged":$varJson,"healed":$healedJson,"unhealed":$unhealedJson,"loadavg_start":$startLoad,"loadavg_pregate":$pregateLoad,"load_gate_waited_sec":$gateWaited,"query_gate_waited":$gateWaitJson,"query_loadavg":$qLoadJson,"loadavg_quiet":$quietLoad,"layers":$layersJson,"cpus":$cpus,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${results.map { case (k, (m, _)) => s"\"" + k + "\":" + num(m) }.mkString("{", ",", "}")},"runs":$runs,"n_failed":${failed.size},"failed":$failedJson,"variance_flagged":$varJson,"healed":$healedJson,"unhealed":$unhealedJson,"loadavg_start":$startLoad,"loadavg_pregate":$pregateLoad,"load_gate_waited_sec":$gateWaited,"query_gate_waited":$gateWaitJson,"query_loadavg":$qLoadJson,"loadavg_quiet":$quietLoad,"layers":$layersJson,"cpus":$cpus,"local_paths":$localPaths,"sf":"$sfDir"}"""
     // The driver's recorded BENCH tail truncates, losing per-query
     // numbers past ~2000 chars — also write the COMPLETE line to a
     // committed artifact so every round's judge can compare all
@@ -411,10 +426,14 @@ object Bench {
     // sf0.01 debug run must not clobber the committed sf0.1 baseline
     // — per-sf lines are not comparable), and only a 32-core run
     // writes BENCH_FULL.json itself; any explicit
-    // SPARK_GRAFT_BENCH_FULL path is honored as given.
-    val fullPath = sys.env.get("SPARK_GRAFT_BENCH_FULL")
-      .orElse(if (sfDir.endsWith("sf0.1") && only.isEmpty) Some(defaultFull)
-      else None) // a name-filtered run must never clobber the baseline
+    // SPARK_GRAFT_BENCH_FULL path is honored as given. A
+    // forced-distributed run always writes its own artifact and only
+    // that one: it is never read as a baseline.
+    val fullPath =
+      if (!localPaths) Some(defaultFull)
+      else sys.env.get("SPARK_GRAFT_BENCH_FULL")
+        .orElse(if (sfDir.endsWith("sf0.1") && only.isEmpty) Some(defaultFull)
+        else None) // a name-filtered run must never clobber the baseline
     fullPath match {
       case Some(p) =>
         try java.nio.file.Files.writeString(

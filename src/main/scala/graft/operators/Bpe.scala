@@ -60,29 +60,32 @@ object Bpe {
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum("wc").as("cnt"))
 
+  /** Distinct words up to which [[train]] runs driver-side. */
+  val LocalVocabLimit = 200_000L
+
   /** Learn `n` merge rules from a corpus of documents (`textCol`).
     * Returns the rules in learned order plus the final vocabulary
     * segmentation (word, wc, syms).
     *
     * SIZE-GATED HYBRID (the pruneNetwork discipline): training state
     * is VOCABULARY-sized — one row per distinct word — and the merge
-    * loop pays `n` Spark-job round-trips of fixed overhead. Below
-    * `localVocabThreshold` distinct words the (w, wc) table collects
+    * loop pays `n` Spark-job round-trips of fixed overhead. Up to
+    * `LocalVocabLimit` distinct words the (w, wc) table collects
     * once and the IDENTICAL deterministic loop (same argmax order,
     * same greedy merge) runs driver-side — ~70 ms × n of job overhead
     * becomes microseconds; past the gate the distributed loop runs
-    * unchanged, so a web-scale vocabulary never collects. Bit-parity
-    * of the two paths is spec-pinned (BpeSpec).
+    * unchanged, so a web-scale vocabulary never collects, and
+    * [[LocalGate]] (`spark.graft.localPaths=false`) forces it at any
+    * size. Bit-parity of the two paths is spec-pinned (BpeSpec).
     */
   def train(
       docs: DataFrame, n: Int,
-      textCol: String = "text",
-      localVocabThreshold: Long = 200_000L): (Seq[MergeRule], DataFrame) = {
+      textCol: String = "text"): (Seq[MergeRule], DataFrame) = {
     val spark = docs.sparkSession
     val base = docs
       .select(explode(TextOps.tokens(textCol)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
-    if (base.count() <= localVocabThreshold) {
+    if (LocalGate.enabled(spark) && base.count() <= LocalVocabLimit) {
       import spark.implicits._
       val words = base.as[(String, Long)].collect()
       val (rules, syms) = trainLocal(words, n)

@@ -20,15 +20,11 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
   *
   * Rounds needed = the bipartite graph's diameter in node->group->node
   * hops (tiny for dedup clusters); `localCheckpoint` truncates lineage
-  * each round. SIZE-GATED HYBRID like GraphClosure: below
-  * `localMembershipThreshold` rows the components run as driver-side
+  * each round. SIZE-GATED HYBRID like GraphClosure: up to
+  * `LocalMembershipLimit` rows the components run as driver-side
   * union-find — identical result, one job; past the gate the iterative
-  * path runs unchanged, so 100 TB inputs never collect. The 1 M
-  * default is the measured crossover (local[8], 4-node clusters,
-  * min-of-2 runs: local / distributed = 1.9 s / 4.4 s at 500 k rows,
-  * 3.7 s / 3.6 s at 1 M, 8.0 s / 5.8 s at 2 M, 17.4 s / 10.2 s at
-  * 4 M) — beyond it the collect costs more wall-clock than the
-  * shuffles it avoids, on top of the driver-heap bite.
+  * path runs unchanged, so 100 TB inputs never collect, and
+  * [[LocalGate]] (`spark.graft.localPaths=false`) forces it at any size.
   *
   * Reference analog: the compound dedup-merge fixpoint
   * (/root/reference/minedatabase/pickaxe.py:533-556) unions duplicate
@@ -36,6 +32,15 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
   * clusters.
   */
 object ConnectedComponents {
+
+  /** Membership rows up to which the components run driver-side: the
+    * measured crossover (local[8], 4-node clusters, min-of-2 runs:
+    * local / distributed = 1.9 s / 4.4 s at 500 k rows, 3.7 s / 3.6 s
+    * at 1 M, 8.0 s / 5.8 s at 2 M, 17.4 s / 10.2 s at 4 M) — beyond it
+    * the collect costs more wall-clock than the shuffles it avoids, on
+    * top of the driver-heap bite.
+    */
+  val LocalMembershipLimit = 1_000_000L
 
   /** @param membership (nodeCol, groupCol) rows; two nodes are
     *                   connected iff they share at least one group
@@ -46,8 +51,7 @@ object ConnectedComponents {
       membership: DataFrame,
       nodeCol: String,
       groupCol: String,
-      maxIter: Int = 50,
-      localMembershipThreshold: Long = 1_000_000L): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     // Null rows are dropped up front: a null GROUP key is "no
     // membership" (the distributed path's equi-joins would drop it
     // anyway, while the local HashMap would have glued all null-group
@@ -63,8 +67,9 @@ object ConnectedComponents {
       .where(col(nodeCol).isNotNull && col(groupCol).isNotNull)
       .persist()
     try {
-      val nRows = m0.count() // also materializes the persist
-      if (nRows <= localMembershipThreshold)
+      // the count also materializes the persist
+      if (LocalGate.enabled(membership.sparkSession) &&
+          m0.count() <= LocalMembershipLimit)
         return localComponents(m0, nodeCol, groupCol)
       val m = m0.distinct()
       var lab = m.select(nodeCol).distinct()

@@ -15,13 +15,17 @@ import org.apache.spark.sql.functions._
   *
   * SIZE-GATED HYBRID: a multi-round distributed BFS costs dozens of Spark
   * jobs of fixed overhead; on a small graph that overhead dominates by
-  * orders of magnitude. When the (deduped) edge set fits comfortably on
-  * the driver (`localEdgeThreshold`, default 4M edges) the closure runs
-  * as an in-memory BFS over a collected adjacency list — identical
-  * result, one job. Past the gate the iterative semi-join path runs
-  * unchanged, so 100 TB inputs never collect.
+  * orders of magnitude. When the edge set fits comfortably on the driver
+  * (`LocalEdgeLimit`) the closure runs as an in-memory BFS over a
+  * collected adjacency list — identical result, one job. Past the gate
+  * the iterative semi-join path runs unchanged, so 100 TB inputs never
+  * collect. [[LocalGate]] (`spark.graft.localPaths=false`) forces the
+  * iterative path at any size.
   */
 object GraphClosure {
+
+  /** Raw edge rows up to which the closure runs driver-side. */
+  val LocalEdgeLimit = 4_000_000L
 
   /** @param edges   two-column DataFrame of (aCol, bCol) adjacency
     * @param seeds   DataFrame containing column `aCol` (the initial A set)
@@ -33,8 +37,7 @@ object GraphClosure {
       aCol: String,
       bCol: String,
       seeds: DataFrame,
-      maxIter: Int = 50,
-      localEdgeThreshold: Long = 4_000_000L): (DataFrame, DataFrame) = {
+      maxIter: Int = 50): (DataFrame, DataFrame) = {
     // RAW rows are cached and counted for the size gate (the
     // ConnectedComponents.byGroup discipline): the driver-side BFS
     // absorbs duplicate edges natively, so the local path never pays
@@ -44,11 +47,16 @@ object GraphClosure {
     // q_graph_closure). Only the iterative path dedups, where repeated
     // rows would inflate every join. Raw count >= distinct count, so
     // the gate errs toward the scale-safe distributed path.
-    val e0 = edges.select(aCol, bCol).persist()
-    val nEdges = e0.count() // also materializes the persist
-    if (nEdges <= localEdgeThreshold)
-      return localClosure(e0, aCol, bCol, seeds)
-    val e = e0.distinct()
+    val e0 = edges.select(aCol, bCol)
+    if (LocalGate.enabled(edges.sparkSession)) {
+      e0.persist()
+      if (e0.count() <= LocalEdgeLimit) // also materializes the persist
+        return localClosure(e0, aCol, bCol, seeds)
+    }
+    // deduped once: every round's joins and the final B set read this
+    // checkpoint instead of re-running the distinct shuffle
+    val e = e0.distinct().localCheckpoint()
+    e0.unpersist()
     var visitedA = seeds.select(aCol).distinct().localCheckpoint()
     var frontierA = visitedA
     var iter = 0
@@ -75,8 +83,6 @@ object GraphClosure {
     }
     val visitedB = e.join(visitedA, Seq(aCol), "left_semi")
       .select(bCol).distinct()
-      .localCheckpoint() // materialize before releasing the raw cache
-    e0.unpersist()
     if (!done)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"bipartiteClosure: iteration budget maxIter=$maxIter exhausted " +

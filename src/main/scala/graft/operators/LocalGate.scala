@@ -1,0 +1,32 @@
+package graft.operators
+
+import org.apache.spark.sql.SparkSession
+
+/** The one switch for every size-gated hybrid operator: the Pickaxe
+  * prune (`PickaxeEngine.pruneNetwork`), the filter cascade
+  * (`pickaxe.Cascade`), [[GraphClosure]], [[ConnectedComponents]] and
+  * [[Bpe]]. Each of them runs a driver-local twin below its own measured
+  * crossover and its distributed fixpoint above it.
+  *
+  * `spark.graft.localPaths` (default `true`) keeps those gates as they
+  * are. `false` sends every gated operator down its distributed path,
+  * an empty input included, and skips the job that sizes the input for
+  * the gate. At fixture scale only the local twins run otherwise, so the
+  * switch is how the distributed side gets checked against the oracle:
+  * `-Dspark.graft.localPaths=false` on a forked main (Spark copies
+  * `spark.*` system properties into the session conf), or
+  * `spark.conf.set` in a session.
+  */
+object LocalGate {
+
+  val key = "spark.graft.localPaths"
+
+  /** Whether gated operators may take their driver-local path. A value
+    * other than true/false fails here rather than silently choosing one.
+    */
+  def enabled(spark: SparkSession): Boolean = {
+    val raw = spark.conf.get(key, "true")
+    raw.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be true or false, got '$raw'"))
+  }
+}

@@ -3,10 +3,20 @@ package graft.pickaxe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.LocalGate
+
 /** D6 + J8: the cascading delete of the filter pipeline and the
   * product-of-native back-trace, as relational fixpoints.
   */
 object Cascade {
+
+  /** The size gate of both fixpoints: the network has at most
+    * `PickaxeEngine.LocalRxnLimit` reactions. With
+    * `spark.graft.localPaths=false` the answer is no, without the count.
+    */
+  private def localPath(state: NetworkState): Boolean =
+    LocalGate.enabled(state.reactions.sparkSession) &&
+      state.reactions.count() <= PickaxeEngine.LocalRxnLimit
 
   /** Cascading filter delete (base_filter.py:163-286): remove the chosen
     * compounds, but delete a reaction only when ALL its C-products are
@@ -16,13 +26,12 @@ object Cascade {
     */
   def cascadeDelete(
       state: NetworkState,
-      removeIds: DataFrame,
-      localRxnThreshold: Long = 200_000L): NetworkState = {
+      removeIds: DataFrame): NetworkState = {
     val spark = state.compounds.sparkSession
     // SIZE-GATED HYBRID (see PickaxeEngine.pruneToTargets): small networks
     // run the identical fixpoint driver-side in one collect instead of
     // paying per-round Spark job overhead; large ones stay distributed.
-    if (state.reactions.count() <= localRxnThreshold)
+    if (localPath(state))
       return cascadeDeleteLocal(state, removeIds)
     val prodM = state.reactions
       .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
@@ -151,9 +160,8 @@ object Cascade {
     */
   def deleteReactions(
       state: NetworkState,
-      rxnIds: DataFrame,
-      localRxnThreshold: Long = 200_000L): NetworkState = {
-    if (state.reactions.count() <= localRxnThreshold)
+      rxnIds: DataFrame): NetworkState = {
+    if (localPath(state))
       return deleteReactionsLocal(state, rxnIds)
     val prodM = state.reactions
       .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
@@ -234,8 +242,10 @@ object Cascade {
     while (queue.nonEmpty) {
       val r = queue.dequeue()
       if (dead.add(r)) {
-        // members touched by this deletion: orphan check
-        (prodOf(r) ++ reacOf(r)).foreach { c =>
+        // members touched by this deletion: orphan check (an id that
+        // names no reaction of the network touches nothing, as on the
+        // distributed path)
+        (prodOf.getOrElse(r, Nil) ++ reacOf.getOrElse(r, Nil)).foreach { c =>
           if (!removed(c) && !protectedC(c) &&
             producedBy.getOrElse(c, mutable.HashSet.empty)
               .forall(dead.contains)) {

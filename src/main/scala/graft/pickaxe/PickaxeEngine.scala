@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.chem.{Chem, Formula, Smiles}
-import graft.operators.{CheckpointRows, Par}
+import graft.operators.{CheckpointRows, LocalGate, Par}
 
 /** The network state: the two core tables + generation counter. */
 final case class NetworkState(
@@ -362,15 +362,16 @@ final class PickaxeEngine(
     * SIZE-GATED HYBRID: the multi-round distributed BFS pays dozens of
     * Spark jobs of fixed overhead; on small networks (the common
     * interactive case — a few generations of expansion) that overhead
-    * dominates. Below `localRxnThreshold` reactions the membership pairs
-    * are collected once and the identical reverse BFS runs driver-side;
-    * past the gate the iterative semi-join path runs unchanged, so
-    * cluster-scale networks never collect.
+    * dominates. Up to `PickaxeEngine.LocalRxnLimit` reactions the
+    * membership pairs are collected once and the identical reverse BFS
+    * runs driver-side; past the gate the iterative semi-join path runs
+    * unchanged, so cluster-scale networks never collect.
+    * `spark.graft.localPaths=false` ([[graft.operators.LocalGate]])
+    * forces the semi-join path at any size.
     */
   def pruneToTargets(
       state: NetworkState,
-      targetSmiles: Seq[String],
-      localRxnThreshold: Long = 200_000L): NetworkState = {
+      targetSmiles: Seq[String]): NetworkState = {
     val targetIds = targetSmiles.flatMap(Chem.standardize(_))
       .map(s => Chem.compoundHash(s, 'C'))
     if (targetIds.isEmpty)
@@ -378,7 +379,7 @@ final class PickaxeEngine(
         state.generation)
     pruneNetwork(state,
       state.compounds.where(col("_id").isin(targetIds: _*)).select("_id"),
-      localRxnThreshold, localSeedIds = Some(targetIds))
+      localSeedIds = Some(targetIds))
   }
 
   /** D4/D5 prune with a DISTRIBUTED target set: `targetIds` is a
@@ -391,15 +392,14 @@ final class PickaxeEngine(
     */
   def pruneToTargetsDf(
       state: NetworkState,
-      targetIds: DataFrame,
-      localRxnThreshold: Long = 200_000L): NetworkState = {
+      targetIds: DataFrame): NetworkState = {
     if (targetIds.isEmpty)
       return NetworkState(state.compounds.limit(0),
         state.reactions.limit(0), state.generation)
     val present = state.compounds
       .join(targetIds.select("_id").distinct(), Seq("_id"), "left_semi")
       .select("_id")
-    pruneNetwork(state, present, localRxnThreshold)
+    pruneNetwork(state, present)
   }
 
   /** General whitelist prune (prune_network / find_minimal_set,
@@ -413,20 +413,20 @@ final class PickaxeEngine(
   def pruneNetwork(
       state: NetworkState,
       whitelist: DataFrame,
-      localRxnThreshold: Long = 200_000L,
       localSeedIds: Option[Seq[String]] = None): NetworkState = {
     // the gate and the local path's input in one bounded collect: at
-    // most threshold + 1 reactions cross to the driver, and a network
-    // with more than the threshold takes the distributed path below
-    val cap = math.max(0L, math.min(localRxnThreshold + 1, Int.MaxValue)).toInt
-    val members = state.reactions
-      .select(col("_id").as("rxn"), col("Reactants"), col("Products"))
-      .as[(String, Seq[Stoich], Seq[Stoich])]
-      .limit(cap).collect()
-    if (members.length <= localRxnThreshold) {
-      val seedIds = localSeedIds.getOrElse(
-        whitelist.select("_id").as[String].collect().toSeq)
-      return pruneToTargetsLocal(state, members, seedIds)
+    // most limit + 1 reactions cross to the driver, and a network
+    // with more than the limit takes the distributed path below
+    if (LocalGate.enabled(spark)) {
+      val members = state.reactions
+        .select(col("_id").as("rxn"), col("Reactants"), col("Products"))
+        .as[(String, Seq[Stoich], Seq[Stoich])]
+        .limit(PickaxeEngine.LocalRxnLimit.toInt + 1).collect()
+      if (members.length <= PickaxeEngine.LocalRxnLimit) {
+        val seedIds = localSeedIds.getOrElse(
+          whitelist.select("_id").as[String].collect().toSeq)
+        return pruneToTargetsLocal(state, members, seedIds)
+      }
     }
     val seeds = whitelist
       .select(col("_id").as("c_id")).distinct()
@@ -572,6 +572,12 @@ final class PickaxeEngine(
 }
 
 object PickaxeEngine {
+
+  /** Reactions up to which the prune (`pruneNetwork`) and the filter
+    * cascade (`Cascade`) run their fixpoints driver-side; see
+    * `pruneToTargets`.
+    */
+  val LocalRxnLimit = 200_000L
 
   /** Reaction regroup of `expandOnce`: one row per `_id` with the
     * highest ID, the set-union of the operators, and any row's SMILES

@@ -31,6 +31,10 @@ class BenchGuardSpec extends AnyFunSuite {
       === Map.empty)
     assert(Bench.parseBaselineMedians(line.replace(""""cpus":32,""", ""),
       "/root/testdata/sf0.1", 32) === Map.empty)
+    // ...or by a run with every size gate forced distributed
+    assert(Bench.parseBaselineMedians(line.replace(""""cpus":32,""",
+      """"cpus":32,"local_paths":false,"""), "/root/testdata/sf0.1", 32)
+      === Map.empty)
   }
 
   test("parseBaselineMedians survives a nested object inside queries " +

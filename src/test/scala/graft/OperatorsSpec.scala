@@ -138,8 +138,8 @@ class OperatorsSpec extends SparkSuite {
     assert(as.as[Long].collect().toSet === Set(1L, 2L, 3L))
     assert(bs.as[Long].collect().toSet === Set(10L, 20L))
     // distributed path (gate forced off) must agree with the local path
-    val (ad, bd) = GraphClosure.bipartiteClosure(edges, "a", "b", seeds,
-      localEdgeThreshold = 0L)
+    val (ad, bd) = withConf(LocalGate.key, "false")(
+      GraphClosure.bipartiteClosure(edges, "a", "b", seeds))
     assert(ad.as[Long].collect().toSet === Set(1L, 2L, 3L))
     assert(bd.as[Long].collect().toSet === Set(10L, 20L))
   }
@@ -277,8 +277,8 @@ class OperatorsSpec extends SparkSuite {
     val local = ConnectedComponents.byGroup(m, "node", "grp")
       .as[(Long, Long)].collect().toMap
     assert(local === expect)
-    val dist = ConnectedComponents.byGroup(m, "node", "grp",
-        localMembershipThreshold = 0L)
+    val dist = withConf(LocalGate.key, "false")(
+        ConnectedComponents.byGroup(m, "node", "grp"))
       .as[(Long, Long)].collect().toMap
     assert(dist === expect)
     // string node ids order lexicographically in both paths
@@ -286,8 +286,8 @@ class OperatorsSpec extends SparkSuite {
       .toDF("node", "grp")
     val sLocal = ConnectedComponents.byGroup(sm, "node", "grp")
       .as[(String, String)].collect().toMap
-    val sDist = ConnectedComponents.byGroup(sm, "node", "grp",
-        localMembershipThreshold = 0L)
+    val sDist = withConf(LocalGate.key, "false")(
+        ConnectedComponents.byGroup(sm, "node", "grp"))
       .as[(String, String)].collect().toMap
     assert(sLocal === Map("a" -> "a", "b" -> "a", "c" -> "a"))
     assert(sDist === sLocal)
@@ -310,8 +310,8 @@ class OperatorsSpec extends SparkSuite {
     val expectNulls = Map(1L -> 1L, 2L -> 1L)
     val nLocal = ConnectedComponents.byGroup(withNulls, "node", "grp")
       .as[(Long, Long)].collect().toMap
-    val nDist = ConnectedComponents.byGroup(withNulls, "node", "grp",
-        localMembershipThreshold = 0L)
+    val nDist = withConf(LocalGate.key, "false")(
+        ConnectedComponents.byGroup(withNulls, "node", "grp"))
       .as[(Long, Long)].collect().toMap
     assert(nLocal === expectNulls)
     assert(nDist === expectNulls)

@@ -85,11 +85,11 @@ class BpeSpec extends SparkSuite {
     "distributed merge loop") {
     val docs = graft.Tables.load(spark, sf, "documents")
       .where(pmod(col("doc_id"), lit(7)) === 0)
-    // localVocabThreshold = 0 forces the distributed path; the default
-    // takes the driver-side loop — rules AND final segmentation must
-    // agree exactly
+    // spark.graft.localPaths=false forces the distributed path; the
+    // default takes the driver-side loop — rules AND final segmentation
+    // must agree exactly
     val (rulesDist, vocabDist) =
-      Bpe.train(docs, n = 6, localVocabThreshold = 0L)
+      withConf(LocalGate.key, "false")(Bpe.train(docs, n = 6))
     val (rulesLocal, vocabLocal) = Bpe.train(docs, n = 6)
     assert(rulesLocal === rulesDist)
     val d = vocabDist.select("w", "wc", "syms")
@@ -107,7 +107,7 @@ class BpeSpec extends SparkSuite {
     val docs = Seq("a😀a a😀a bb bb bb")
       .toSeq.map(Tuple1(_)).toDF("text")
     val (rulesDist, vocabDist) =
-      Bpe.train(docs, n = 3, localVocabThreshold = 0L)
+      withConf(LocalGate.key, "false")(Bpe.train(docs, n = 3))
     val (rulesLocal, vocabLocal) = Bpe.train(docs, n = 3)
     assert(rulesLocal === rulesDist)
     val d = vocabDist.select("w", "syms")
@@ -133,7 +133,8 @@ class BpeSpec extends SparkSuite {
     assert(Bpe.compareUtf8(emoji, pua) > 0)
     assert(emoji < pua) // the UTF-16 order DOES diverge
     val docs = Seq(Tuple1(s"${emoji}x ${pua}x")).toDF("text")
-    val (rulesDist, _) = Bpe.train(docs, n = 1, localVocabThreshold = 0L)
+    val (rulesDist, _) =
+      withConf(LocalGate.key, "false")(Bpe.train(docs, n = 1))
     val (rulesLocal, _) = Bpe.train(docs, n = 1)
     assert(rulesLocal === rulesDist)
     // and the winner is the UTF-8-least pair, led by U+F8FF

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.chem.{MolFile, NPScore, Smiles}
+import graft.operators.LocalGate
 
 class CascadeAndIOSpec extends SparkSuite {
   import spark.implicits._
@@ -55,13 +56,30 @@ class CascadeAndIOSpec extends SparkSuite {
     for (rm <- Seq(Seq("CP1"), Seq("CP3", "CP4"),
         Seq("CP1", "CP2", "CP3", "CP4"))) {
       val loc = Cascade.cascadeDelete(state(), rm.toDF("_id"))
-      val dist = Cascade.cascadeDelete(state(), rm.toDF("_id"),
-        localRxnThreshold = -1L)
+      val dist = withConf(LocalGate.key, "false")(
+        Cascade.cascadeDelete(state(), rm.toDF("_id")))
       assert(dist.compounds.select("_id").as[String].collect().sorted
         === loc.compounds.select("_id").as[String].collect().sorted)
       assert(dist.reactions.select("_id").as[String].collect().sorted
         === loc.reactions.select("_id").as[String].collect().sorted)
     }
+  }
+
+  test("deleteReactions: distributed path agrees with the local gate") {
+    def ids(st: NetworkState) =
+      (st.compounds.select("_id").as[String].collect().sorted.toSeq,
+        st.reactions.select("_id").as[String].collect().sorted.toSeq)
+    for (rxns <- Seq(Seq.empty[String], Seq("R1"), Seq("R2"), Seq("R3"),
+        Seq("R2", "R3"), Seq("R1", "R2", "R3"), Seq("RX"))) {
+      val loc = ids(Cascade.deleteReactions(state(), rxns.toDF("_id")))
+      val dist = ids(withConf(LocalGate.key, "false")(
+        Cascade.deleteReactions(state(), rxns.toDF("_id"))))
+      assert(dist === loc, s"deleting $rxns")
+    }
+    // deleting R1 orphans P1 and P2, whose consumers R2 and R3 die and
+    // orphan P3 and P4; the starting compound is protected
+    assert(ids(Cascade.deleteReactions(state(), Seq("R1").toDF("_id"))) ===
+      (Seq("CS"), Seq.empty[String]))
   }
 
   test("cascade delete touches ONLY requested compounds plus true orphans") {

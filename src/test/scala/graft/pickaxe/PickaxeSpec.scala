@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.operators.LocalGate
 
 /** Engine tests against the reference's own fixture data
   * (/root/reference/tests/data — pure data files, reusable per SURVEY §5).
@@ -58,6 +59,25 @@ class PickaxeSpec extends SparkSuite {
     assert(st.compounds.groupBy("_id").count().where(col("count") > 1).isEmpty)
     // operator tagged on every reaction
     assert(st.reactions.where(size(col("Operators")) === 0).isEmpty)
+  }
+
+  test("prune of the inline 31/49 network to a generation-2 target: " +
+    "the distributed path keeps the local path's compounds and reactions") {
+    val e = KinaseFixture.engine(spark)
+    val st = e.run(Seq(fadh), generations = 2)
+    val target = st.compounds
+      .where(col("Generation") === 2 && col("Type") === "Predicted")
+      .orderBy("_id").select("_id", "SMILES").first()
+    def ids(p: NetworkState) =
+      (p.compounds.select("_id").collect().map(_.getString(0)).sorted.toSeq,
+        p.reactions.select("_id").collect().map(_.getString(0)).sorted.toSeq)
+    val local = ids(e.pruneToTargets(st, Seq(target.getString(1))))
+    val dist = ids(withConf(LocalGate.key, "false")(
+      e.pruneToTargets(st, Seq(target.getString(1)))))
+    assert(dist === local)
+    // the target survives, reached through a generation-1 reaction
+    assert(local._1.contains(target.getString(0)))
+    assert(local._2.size >= 2)
   }
 
   test("expansion is deterministic and partitioning-invariant") {
@@ -117,7 +137,8 @@ class PickaxeSpec extends SparkSuite {
     assert(pruned.reactions.count() === 4) // test_pickaxe.py:219
     assert(pruned.compounds.count() === 6) // test_pickaxe.py:220
     // distributed path (size gate forced off) returns the identical sets
-    val dist = e.pruneToTargets(st, Seq(target), localRxnThreshold = -1L)
+    val dist = withConf(LocalGate.key, "false")(
+      e.pruneToTargets(st, Seq(target)))
     assert(dist.compounds.select("_id").collect().map(_.getString(0)).sorted
       === pruned.compounds.select("_id").collect().map(_.getString(0)).sorted)
     assert(dist.reactions.select("_id").collect().map(_.getString(0)).sorted
