@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   * their waits in the artifact. BENCH_FULL.json and the diag line
   * also carry each query's per-layer totals (`layers`: jobs, stages,
   * tasks, task and GC time, shuffle and spill bytes, codegen
-  * compiles) from its median-time sweep rep, collected by [[Harness]].
+  * compiles, driver time outside its jobs) from its median-time sweep
+  * rep, collected by [[Harness]].
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
@@ -388,7 +389,7 @@ object Bench {
     // queries into its load
     val gateWaitJson = jsonIntMap(queryGateWaited)
     // per-layer totals (jobs, stages, tasks, task and GC time, shuffle
-    // and spill bytes, codegen compiles) of each query's median-time
+    // and spill bytes, codegen compiles, driver time) of each query's median-time
     // sweep rep, read once stop() has drained the listener bus
     spark.stop()
     val layersJson = sweep.toSeq.sortBy(_._1).flatMap { case (name, base) =>

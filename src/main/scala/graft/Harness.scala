@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The one session setup of the mains (Bench, Verify, Explain, Show)
@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * master and the shuffle partitions; the session runs in UTC with the
   * UI off and logs at WARN. The collector is installed once per
   * SparkContext and sums, per tag, the jobs, stages and tasks that ran
-  * while `tagged` held that tag, plus the codegen compiles.
+  * while `tagged` held that tag, plus the codegen compiles and the
+  * driver time: the tag's wall time outside all of its jobs.
   */
 object Harness {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
@@ -33,14 +34,32 @@ object Harness {
     spark
   }
 
-  /** What one tag's jobs did. Times in seconds. */
+  /** What one tag's jobs did. Times in seconds; `driverS` is the tag's
+    * wall time minus the union of its jobs' intervals (planning, driver
+    * work and the gaps between jobs).
+    */
   final case class Layers(jobs: Long, stages: Long, tasks: Long,
       taskS: Double, gcS: Double, shuffleBytes: Long, spillBytes: Long,
-      compiles: Long) {
+      compiles: Long, driverS: Double) {
     def json: String =
       s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
         s""""task_s":$taskS,"gc_s":$gcS,"shuffle_bytes":$shuffleBytes,""" +
-        s""""spill_bytes":$spillBytes,"compiles":$compiles}"""
+        s""""spill_bytes":$spillBytes,"compiles":$compiles,""" +
+        s""""driver_s":$driverS}"""
+  }
+
+  /** Milliseconds of `[from, to]` covered by none of `jobs` (start, end)
+    * intervals, in epoch milliseconds.
+    */
+  def uncoveredMs(from: Long, to: Long, jobs: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var reach = from
+    jobs.map { case (a, b) => (math.max(a, from), math.min(b, to)) }
+      .filter { case (a, b) => a < b }.sortBy(_._1)
+      .foreach { case (a, b) =>
+        if (b > reach) { covered += b - math.max(a, reach); reach = b }
+      }
+    math.max(0L, to - from - covered)
   }
 
   /** Jobs carry their tag as a local property, which `Par.concurrently`
@@ -57,6 +76,14 @@ object Harness {
     private val byTag = new ConcurrentHashMap[String, Acc]()
     private val stageAcc = new ConcurrentHashMap[Int, Acc]()
     private val compiles = new ConcurrentHashMap[String, Long]()
+    /** tag -> its `tagged` call's (start, end), epoch milliseconds */
+    private val walls = new ConcurrentHashMap[String, (Long, Long)]()
+    /** running job -> (tag, start); a finished job's interval goes to
+      * its tag's list
+      */
+    private val running = new ConcurrentHashMap[Int, (String, Long)]()
+    private val jobSpans =
+      new ConcurrentHashMap[String, java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
     private var installedOn: SparkContext = null
 
     def setup(sc: SparkContext): Unit = synchronized {
@@ -72,9 +99,11 @@ object Harness {
       val outer = sc.getLocalProperty(TagKey)
       sc.setLocalProperty(TagKey, tag)
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t0 = System.currentTimeMillis()
       try body
       finally {
         compiles.put(tag, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+        walls.put(tag, (t0, System.currentTimeMillis()))
         sc.setLocalProperty(TagKey, outer)
       }
     }
@@ -84,12 +113,26 @@ object Harness {
       if (!compiles.containsKey(tag)) None
       else {
         val a = byTag.getOrDefault(tag, new Acc)
+        val (t0, t1) = walls.get(tag)
+        val spans = Option(jobSpans.get(tag)).toSeq
+          .flatMap(q => scala.jdk.CollectionConverters.IterableHasAsScala(q).asScala)
         Some(Layers(a.jobs.get, a.stages.get, a.tasks.get, a.taskMs.get / 1e3,
-          a.gcMs.get / 1e3, a.shuffle.get, a.spill.get, compiles.get(tag)))
+          a.gcMs.get / 1e3, a.shuffle.get, a.spill.get, compiles.get(tag),
+          uncoveredMs(t0, t1, spans) / 1e3))
       }
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      acc(e.properties).foreach(_.jobs.incrementAndGet())
+      acc(e.properties).foreach { a =>
+        a.jobs.incrementAndGet()
+        running.put(e.jobId, (e.properties.getProperty(TagKey), e.time))
+      }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(running.remove(e.jobId)).foreach { case (tag, start) =>
+        jobSpans.computeIfAbsent(tag,
+          _ => new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]())
+          .add((start, e.time))
+      }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       acc(e.properties).foreach { a =>

@@ -71,7 +71,12 @@ object ConnectedComponents {
       if (LocalGate.enabled(membership.sparkSession) &&
           m0.count() <= LocalMembershipLimit)
         return localComponents(m0, nodeCol, groupCol)
-      val m = m0.distinct()
+      // deduplicate once: every round joins `m` twice, and an
+      // unmaterialized distinct would re-run its shuffle in each join
+      // and in each round's checkpoint job. The raw rows are not read
+      // again once it is filled
+      val m = m0.distinct().localCheckpoint()
+      m0.unpersist()
       var lab = m.select(nodeCol).distinct()
         .withColumn("component", col(nodeCol))
         .localCheckpoint()
@@ -97,6 +102,8 @@ object ConnectedComponents {
         s"byGroup: iteration budget maxIter=$maxIter exhausted before " +
           "fixpoint — labels would split real components; raise maxIter " +
           "(rounds needed = the membership graph's node-group diameter)")
+      // the labels are checkpointed: `m`'s blocks are not read again
+      m.unpersist()
       lab
     } finally m0.unpersist()
   }

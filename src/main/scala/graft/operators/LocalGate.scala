@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 /** The one switch for every size-gated hybrid operator: the Pickaxe
@@ -28,5 +31,18 @@ object LocalGate {
     val raw = spark.conf.get(key, "true")
     raw.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
       s"$key must be true or false, got '$raw'"))
+  }
+
+  /** The elements of `rdd`, when there are few enough for a driver-local
+    * path: one job, in which each partition ships at most its share of
+    * `limit` (and one more). `None` when any partition holds more than
+    * its share, so a table above `limit` never crosses to the driver
+    * whole, and a skewed one takes the distributed path.
+    */
+  def collectUpTo[T: ClassTag](rdd: RDD[T], limit: Int): Option[Array[T]] = {
+    val share = math.max(1, limit / math.max(1, rdd.getNumPartitions))
+    val parts = rdd.mapPartitions(it => Iterator(it.take(share + 1).toArray))
+      .collect()
+    if (parts.exists(_.length > share)) None else Some(parts.flatten)
   }
 }

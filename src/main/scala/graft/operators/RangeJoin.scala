@@ -34,18 +34,29 @@ object RangeJoin {
       inclusive: Boolean = false): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val b = lit(bucketWidth)
-    val rb = ranges.withColumn(
-      "__bucket",
-      explode(sequence(
-        floor(col(loCol) / b).cast("long"),
-        floor(col(hiCol) / b).cast("long"))))
+    val first = floor(col(loCol) / b).cast("long")
+    val last = floor(col(hiCol) / b).cast("long")
+    // each range lists its buckets and then its last bucket once more,
+    // as a copy whose lower bound is +∞, so it matches no (finite) value.
+    // So no bucket key is unique on the ranges side, whatever the
+    // ranges: Spark generates a broadcast hash join's code for unique or
+    // repeated build keys from the broadcast data, and without the copy
+    // two requests whose windows happen to share a bucket or not compile
+    // two classes for one plan. The copy is told apart inside the
+    // predicate, which reads both sides, so no filter pushed below the
+    // join can remove it
+    val rb = ranges.select(col("*"),
+        posexplode(concat(sequence(first, last), array(last)))
+          .as(Seq("__bucket_pos", "__bucket")))
+      .withColumn("__lo", when(col("__bucket_pos") > last - first,
+        lit(Double.PositiveInfinity)).otherwise(col(loCol)))
     val fb = facts.withColumn("__bucket", floor(col(valueCol) / b).cast("long"))
     val pred =
-      if (inclusive) col(valueCol) >= col(loCol) && col(valueCol) <= col(hiCol)
-      else col(valueCol) > col(loCol) && col(valueCol) < col(hiCol)
+      if (inclusive) col(valueCol) >= col("__lo") && col(valueCol) <= col(hiCol)
+      else col(valueCol) > col("__lo") && col(valueCol) < col(hiCol)
     fb.join(rb, Seq("__bucket"))
       .where(pred)
-      .drop("__bucket")
+      .drop("__bucket", "__bucket_pos", "__lo")
   }
 
   /** INTERVAL × INTERVAL overlap join: `[aLo, aHi] ∩ [bLo, bHi] ≠ ∅`

@@ -370,9 +370,13 @@ final case class MetabolomicsFilter(
 private[pickaxe] object ReactionMembers {
   def apply(state: NetworkState): DataFrame = {
     val g = state.generation
+    // the generation test is a UDF, not `col("Generation") === g`: Spark
+    // writes an int literal into the generated Java source, so every
+    // generation would compile its own copy of the stage
+    val ofGen = udf((gen: Int) => gen == g)
     val compounds = state.compounds.select(col("_id").as("c_id"),
       col("SMILES"),
-      (col("Generation") === g &&
+      (ofGen(col("Generation")) &&
         !col("Type").isin("Coreactant", "Target Compound")).as("genC"))
     // the side follows from the member's position in Reactants ++
     // Products; a `transform` lambda tagging each member would be an

@@ -116,13 +116,17 @@ object MassSearch {
     */
   def peakStats(hits: DataFrame): DataFrame = {
     import hits.sparkSession.implicits._
-    hits.select("peak", "Formula", "_id").as[(String, String, String)]
+    // the adduct rides along unused: it keeps the adduct windows' stage
+    // of the hits' plan the same generated class as the one a query of
+    // the hits (peak, adduct, compound) compiles
+    hits.select("peak", "adduct", "Formula", "_id")
+      .as[(String, String, String, String)]
       .repartition(col("peak"))
       .mapPartitions { rows =>
         rows.toSeq.groupBy(_._1).iterator.map { case (peak, hs) =>
           (peak, hs.size.toLong,
-            hs.flatMap(h => Option(h._2)).distinct.size.toLong,
-            hs.flatMap(h => Option(h._3)).distinct.size.toLong)
+            hs.flatMap(h => Option(h._3)).distinct.size.toLong,
+            hs.flatMap(h => Option(h._4)).distinct.size.toLong)
         }
       }
       .toDF("peak", "total_hits", "n_formulas", "n_compounds")
@@ -204,19 +208,50 @@ object MassSearch {
       ppm: Boolean = false,
       ms2TolMDa: Double = 100.0,
       useJaccard: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
     val hits = adductSearch(spark, compounds,
       peaksMs2.select("name", "mz", "charge"), adducts, tol, ppm)
     val scoreUdf = spectralScoreUdf(ms2TolMDa, useJaccard)
-    val w = Window.partitionBy("peak")
-      .orderBy(col("spectral_score").desc, col("_id").asc)
+    // W4: rank() over (partition by peak order by spectral_score desc,
+    // _id asc), as one shuffle on the peak and a rank per peak in each
+    // partition, like peakStats: a window plans a sort stage, a stage
+    // after it and interpreted projections, several times the
+    // generated classes of this plan
     hits
       .join(spectra.withColumnRenamed("c_id", "_id"), Seq("_id"))
       .join(peaksMs2.select(col("name").as("peak"), col("ms2")), Seq("peak"))
-      .withColumn("spectral_score", scoreUdf(col("spectrum"), col("ms2")))
-      .withColumn("rank", rank().over(w))
-      .select("peak", "adduct", "_id", "SMILES", "spectral_score", "rank")
+      .select(col("peak"), col("adduct"), col("_id"), col("SMILES"),
+        scoreUdf(col("spectrum"), col("ms2")).as("spectral_score"))
+      .as[(String, String, String, String, Double)]
+      .repartition(col("peak"))
+      .mapPartitions { rows =>
+        rows.toSeq.groupBy(_._1).iterator.flatMap { case (_, hs) =>
+          val sorted = hs.sortWith { (a, b) =>
+            val c = compareScores(a._5, b._5)
+            if (c != 0) c > 0 else compareIds(a._3, b._3) < 0
+          }
+          // tied rows (same score and compound) share a rank; the next
+          // row's rank counts every row before it
+          var rank = 0
+          sorted.indices.map { i =>
+            val h = sorted(i)
+            if (i == 0 || compareScores(h._5, sorted(i - 1)._5) != 0 ||
+              compareIds(h._3, sorted(i - 1)._3) != 0) rank = i + 1
+            (h._1, h._2, h._3, h._4, h._5, rank)
+          }
+        }
+      }
+      .toDF("peak", "adduct", "_id", "SMILES", "spectral_score", "rank")
   }
+
+  /** Spark's order of doubles: -0.0 equals 0.0, NaN is the largest. */
+  private def compareScores(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Spark's order of strings: by UTF-8 bytes. */
+  private def compareIds(a: String, b: String): Int =
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
   /** Likelihood scoring (score_compounds, metabolomics.py:1209-1269):
     * 0.75 for native-set members, 0.25 base for derived compounds.

@@ -1,7 +1,13 @@
 package graft.pickaxe
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.chem.{Chem, Formula, Smiles}
 import graft.operators.{CheckpointRows, LocalGate, Par}
@@ -56,16 +62,18 @@ trait NetworkFilter {
   *
   * Dataflow per generation (SURVEY.md §2.3):
   *   frontier select (P1) -> kernel over broadcast rules (E2/E3/J1/J2)
-  *   -> reaction groupBy-merge with operator set-union (A1/D2)
-  *   -> compound regroup-merge dedup, first-generation-wins (D1/E6)
-  * with one localCheckpoint per state table per generation for flat
+  *   -> reaction reduce-merge with operator set-union (A1/D2)
+  *   -> compound reduce-merge dedup, first-generation-wins (D1/E6)
+  * with one local checkpoint per state table per generation for flat
   * lineage.
   *
-  * Scale design: the only shuffles are the two regroup merges per
-  * generation, both hash-partitioned on content ids; rules and
-  * coreactants are broadcast (they are small dimension tables); the
-  * chemistry runs inside one UDF (the imperative kernel, the documented
-  * exception to expression-only plans).
+  * Scale design: the only shuffles are the two merges per generation,
+  * both hash-partitioned on content ids; rules and coreactants are
+  * broadcast (they are small dimension tables). A generation runs on the
+  * state tables' rows (RDDs of Catalyst rows, [[CheckpointRows]]), not
+  * on a query plan: it compiles no generated class, and each merge is a
+  * single job. The state tables are DataFrames over those rows for
+  * every other step (filters, prune, ids, export).
   */
 final class PickaxeEngine(
     spark: SparkSession,
@@ -99,22 +107,23 @@ final class PickaxeEngine(
       mkCompound(c._id, c.smiles, "Coreactant", 0, expand = false))
     // dedup on the driver: a dropDuplicates over the local rows would
     // plan an aggregate and a shuffle into every generation-1 job
-    val compounds = (start ++ core).distinctBy(_._id).toDF()
-    // every later generation reads checkpointed tables; a generation-0
-    // state over RDD leaves of the same schemas lets generation 1 plan
-    // exactly like the generations after it, so they share generated
-    // classes instead of compiling their own. Lazy: the first
-    // generation's jobs fill it
-    NetworkState(compounds.localCheckpoint(eager = false), noReactions, 0)
+    val compounds = (start ++ core).distinctBy(_._id)
+      .map(PickaxeEngine.compoundRow)
+    // RDD leaves of the schemas `expandOnce` writes, like every later
+    // generation's tables, so every generation's consumers plan alike
+    // and share generated classes; one slice per core at most, like a
+    // local relation's scan
+    val slices = math.max(1,
+      math.min(compounds.size, spark.sparkContext.defaultParallelism))
+    NetworkState(CheckpointRows.frame(spark,
+      spark.sparkContext.parallelize(compounds, slices),
+      PickaxeEngine.compoundSchema, compounds.size.toLong), noReactions, 0)
   }
 
-  /** No reactions yet: an RDD leaf typed as `expandOnce`'s merge writes
-    * its reactions.
-    */
+  /** No reactions yet: an RDD leaf of the reaction table's schema. */
   private def noReactions: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      PickaxeEngine.mergeReactions(spark.emptyDataset[ReactionRow].toDF())
-        .schema)
+    CheckpointRows.frame(spark, spark.sparkContext.emptyRDD[InternalRow],
+      PickaxeEngine.reactionSchema, 0L)
 
   /** DataFrame-seed initial state: `starting` carries compound rows in
     * the [[CompoundRow]] schema — already standardized, organic-
@@ -188,7 +197,6 @@ final class PickaxeEngine(
       state: NetworkState,
       filters: Seq[NetworkFilter] = Nil,
       pruneBetweenGens: Boolean = false): NetworkState = {
-    val g = state.generation
     val filteredState0 = applyFilters(state, filters)
     // prune_between_gens (pickaxe.py:631-645): after the filter pass
     // and before expanding, restrict the network to everything needed
@@ -203,104 +211,88 @@ final class PickaxeEngine(
           .select("_id")
         pruneNetwork(filteredState0, white)
       } else filteredState0
-    val afterFilters = filteredState.compounds
-    // the generation test is a UDF, not `col("Generation") === g`: Spark
-    // writes an int literal into the generated Java source, so every
-    // generation would compile its own copy of each stage; the UDF keeps
-    // `g` in the plan's references and the code identical across them
-    val ofGen = udf((gen: Int) => gen == g)
-    // P1 frontier predicate (pickaxe.py:658-664)
-    val frontier = afterFilters
-      .where(ofGen(col("Generation")) && col("Expand") &&
-        !col("Type").isin("Coreactant", "Target Compound"))
-
-    val rulesB = spark.sparkContext.broadcast(rules)
-    val coreB = spark.sparkContext.broadcast(coreactantMap)
+    val g = state.generation
+    val sc = spark.sparkContext
+    val rulesB = sc.broadcast(rules)
+    val coreB = sc.broadcast(coreactantMap)
     val eh = explicitH
-    // the kernel as a UDF under explode: the frontier filter, the kernel
-    // call and the row output run in one generated stage, where a typed
-    // flatMap adds an object round trip and a serializer stage of its own
-    val kernel = udf { (id: String, smi: String) =>
-      RuleKernel.applyAll(id, smi, rulesB.value, coreB.value, explicitH = eh)
-    }
-    // LAZY localCheckpoint, not persist: a persisted kernel output opts
-    // every shuffle above it out of AQE re-partitioning, so the
-    // reaction-merge groupBy materialized 32-wide for a handful of rows
-    // (profiled 1.2-1.6 s task time on every pickaxe query's first
-    // generation). Lazy does not defer everything: with AQE on, the
-    // query stages below the checkpoint still run when it is created;
-    // only the final stage (the kernel call here) waits for its
-    // first consumer, which saves at most one job over the eager form
-    // (measured: eager added one sequential job per generation,
-    // q_pickaxe_skeleton +0.4 s). The two concurrent state checkpoints
-    // below both read it; the kernel computes once only because local
-    // mode has a single BlockManager whose partition locks serialize
-    // the two jobs' first reads. On a multi-executor cluster the two
-    // jobs can compute and cache the same partition on different
-    // executors, running the chemistry twice.
-    val predicted = frontier
-      .select(explode(kernel(col("_id"), col("SMILES"))).as("p"))
-      .select("p.*")
-      .localCheckpoint(eager = false)
+    import PickaxeEngine.{Cpd, compoundRows, reactionRows}
+    // the generation runs on the tables' rows in Catalyst's binary form:
+    // the frontier test, the kernel and both merges compile no generated
+    // class, and each merge is one job (a DataFrame regroup is two under
+    // adaptive execution: its shuffle stage, then the rest)
+    val cpds = compoundRows(filteredState.compounds)
+    // P1 frontier predicate (pickaxe.py:658-664) -> kernel (E2/E3/J1/J2).
+    // The predictions have two consumers, the two merges below: a local
+    // checkpoint computes them once. It is lazy: the first merge job
+    // fills it. The two merge jobs run concurrently; the kernel computes
+    // once only because local mode has a single BlockManager whose
+    // partition locks serialize the two jobs' first reads. On a
+    // multi-executor cluster the two jobs can compute and cache the same
+    // partition on different executors, running the chemistry twice.
+    val predicted = cpds.flatMap { r =>
+      val frontier = r.getInt(Cpd.Generation) == g &&
+        !r.isNullAt(Cpd.Expand) && r.getBoolean(Cpd.Expand) &&
+        !r.isNullAt(Cpd.Type) && {
+          val t = r.getUTF8String(Cpd.Type).toString
+          t != "Coreactant" && t != "Target Compound"
+        }
+      if (!frontier) Nil
+      else RuleKernel.applyAll(r.getUTF8String(Cpd.Id).toString,
+        r.getUTF8String(Cpd.Smiles).toString, rulesB.value, coreB.value,
+        explicitH = eh)
+    }.localCheckpoint()
+
+    // both merges shuffle into the session's shuffle width; each
+    // checkpoint then coalesces its table to its size, as adaptive
+    // execution coalesces a DataFrame shuffle
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // D2/A1: reaction merge with operator set-union — this generation's
-    // predictions and the existing reactions regroup in ONE aggregation,
-    // one shuffle instead of a regroup followed by a full-outer join. An
-    // existing reaction keeps its ID; the SMILES and stoichiometry are
-    // functions of the content-hash id, so any row's copy is the
-    // reaction's
-    val newRxns = predicted.select(col("rxnId").as("_id"), lit("").as("ID"),
-      col("reactants").as("Reactants"), col("products").as("Products"),
-      array(col("operator")).as("Operators"),
-      col("smilesRxn").as("SMILES_rxn"))
-    val mergedRxns = PickaxeEngine.mergeReactions(filteredState.reactions
-      .select(newRxns.columns.map(col).toSeq: _*)
-      .union(newRxns))
+    // predictions and the existing reactions reduce by id in one
+    // shuffle. An existing reaction keeps its ID; the SMILES and
+    // stoichiometry are functions of the content-hash id, so any row's
+    // copy is the reaction's
+    val mergedRxns = reactionRows(filteredState.reactions)
+      .map { r => val c = r.copy(); (c.getUTF8String(0), c: InternalRow) }
+      .union(predicted.map(p =>
+        (UTF8String.fromString(p.rxnId), PickaxeEngine.reactionRow(p))))
+      .reduceByKey(PickaxeEngine.mergeReactionRows _, width)
+      .map { case (_, r) => PickaxeEngine.normalizeOperators(r) }
 
-    // D1/E6: compound dedup, first-generation-wins: this generation's
-    // products and the known compounds regroup on (id, SMILES) in one
-    // shuffle, and only ids no known compound has stay. An id is the
-    // hash of its SMILES, so the pair groups as the id would, and the
-    // boolean aggregate keeps the HashAggregate codegen'd — no broadcast
-    // of the known ids, no SortAggregate over a string buffer
-    val newCpds = predicted
-      .select(explode(col("productSmiles")).as("p"))
-      .select(col("p._1").as("_id"), col("p._2").as("SMILES"),
-        lit(false).as("known"))
-      .union(afterFilters.select(col("_id"), col("SMILES"),
-        lit(true).as("known")))
-      .groupBy("_id", "SMILES")
-      .agg(max("known").as("known"))
-      .where(!col("known"))
-      .select("_id", "SMILES")
-      .as[(String, String)]
-      .map { t => PickaxeEngine.mkCompound(t._1, t._2, "Predicted", g + 1,
-        expand = true) }
-      .toDF()
+    // D1/E6: compound merge, first-generation-wins: the known compounds
+    // and this generation's products reduce on (id, SMILES), and a pair
+    // that no known compound holds becomes a new compound. An id is the
+    // hash of its SMILES, so the pair groups as the id would
+    val mergedCpds = cpds
+      .map { r =>
+        val c = r.copy()
+        ((c.getUTF8String(Cpd.Id), c.getUTF8String(Cpd.Smiles)), c)
+      }
+      .union(predicted.flatMap(_.productSmiles.map { case (i, smi) =>
+        ((UTF8String.fromString(i), UTF8String.fromString(smi)),
+          null: InternalRow)
+      }))
+      .reduceByKey((a, b) => if (a != null) a else b, width)
+      .map {
+        case ((i, smi), null) =>
+          PickaxeEngine.compoundRow(PickaxeEngine.mkCompound(i.toString,
+            smi.toString, "Predicted", g + 1, expand = true))
+        // the expanded frontier is done (Expand=false), like the
+        // reference's post-gen flag clear
+        case (_, r) =>
+          if (r.getInt(Cpd.Generation) == g) r.setBoolean(Cpd.Expand, false)
+          r
+      }
 
-    val mergedCpds = afterFilters
-      // expanded frontier is done (Expand=false), like the reference's
-      // post-gen flag clear
-      .withColumn("Expand",
-        when(ofGen(col("Generation")), lit(false)).otherwise(col("Expand")))
-      .unionByName(newCpds)
-
-    // localCheckpoint alone (NO Dataset-level persist): it is eager and
-    // self-caching, while a .persist() wrapper pinned every shuffle
-    // under it to the static spark.sql.shuffle.partitions width (cached
-    // plans opt out of AQE re-partitioning), materializing 32-wide
-    // states of a handful of rows — and leaked one InMemoryRelation per
-    // generation. Without it AQE coalesces the state width to the DATA
-    // (1 partition at fixture scale, advisory-sized at MINE scale) —
-    // the scale-adaptive partitioning the optimization brief asks for.
-    // The two materializations are independent jobs; run them from two
-    // driver threads so their (driver-latency-dominated) schedules
-    // overlap instead of queueing (guide §2.6 "overlap independent
-    // jobs") — the shared `predicted` checkpoint above already holds
-    // the kernel output, so both jobs read cached blocks.
+    // the two checkpoints are independent jobs; run them from two driver
+    // threads so their (driver-latency-dominated) schedules overlap
+    // instead of queueing (guide §2.6 "overlap independent jobs")
     val (outC, outR) = Par.concurrently(
-      mergedCpds.localCheckpoint(),
-      mergedRxns.localCheckpoint())
+      CheckpointRows.checkpoint(spark, mergedCpds,
+        PickaxeEngine.compoundSchema, "expandOnce compounds"),
+      CheckpointRows.checkpoint(spark, mergedRxns,
+        PickaxeEngine.reactionSchema, "expandOnce reactions"))
     NetworkState(outC, outR, g + 1)
   }
 
@@ -414,18 +406,22 @@ final class PickaxeEngine(
       state: NetworkState,
       whitelist: DataFrame,
       localSeedIds: Option[Seq[String]] = None): NetworkState = {
-    // the gate and the local path's input in one bounded collect: at
-    // most limit + 1 reactions cross to the driver, and a network
-    // with more than the limit takes the distributed path below
+    // the gate and the local path's input in one bounded collect of the
+    // member ids: a network with more than the limit never crosses to
+    // the driver and takes the distributed path below
     if (LocalGate.enabled(spark)) {
-      val members = state.reactions
-        .select(col("_id").as("rxn"), col("Reactants"), col("Products"))
-        .as[(String, Seq[Stoich], Seq[Stoich])]
-        .limit(PickaxeEngine.LocalRxnLimit.toInt + 1).collect()
-      if (members.length <= PickaxeEngine.LocalRxnLimit) {
+      def ids(a: ArrayData): Seq[String] =
+        (0 until a.numElements()).map(a.getStruct(_, 2).getUTF8String(1)
+          .toString)
+      val members = CheckpointRows.within(state.reactions, "prune members")(
+        LocalGate.collectUpTo(PickaxeEngine.reactionRows(state.reactions)
+          .map(r => (r.getUTF8String(0).toString, ids(r.getArray(2)),
+            ids(r.getArray(3)))),
+          PickaxeEngine.LocalRxnLimit.toInt))
+      members.foreach { m =>
         val seedIds = localSeedIds.getOrElse(
           whitelist.select("_id").as[String].collect().toSeq)
-        return pruneToTargetsLocal(state, members, seedIds)
+        return pruneToTargetsLocal(state, m, seedIds)
       }
     }
     val seeds = whitelist
@@ -479,7 +475,7 @@ final class PickaxeEngine(
     */
   private def pruneToTargetsLocal(
       state: NetworkState,
-      members: Array[(String, Seq[Stoich], Seq[Stoich])],
+      members: Array[(String, Seq[String], Seq[String])],
       targetIds: Seq[String]): NetworkState = {
     import scala.collection.mutable
     // producedBy: c_id -> reactions with it as a product
@@ -487,10 +483,10 @@ final class PickaxeEngine(
     val reactantsOf = mutable.HashMap.empty[String, Seq[String]]
     val prodIds = mutable.HashMap.empty[String, Seq[String]]
     members.foreach { case (rxn, reac, prod) =>
-      prod.foreach(m =>
-        producedBy.getOrElseUpdate(m.c_id, mutable.ArrayBuffer.empty) += rxn)
-      reactantsOf(rxn) = reac.map(_.c_id).filter(_.startsWith("C"))
-      prodIds(rxn) = prod.map(_.c_id)
+      prod.foreach(c =>
+        producedBy.getOrElseUpdate(c, mutable.ArrayBuffer.empty) += rxn)
+      reactantsOf(rxn) = reac.filter(_.startsWith("C"))
+      prodIds(rxn) = prod
     }
     val keepC = mutable.HashSet[String](targetIds: _*)
     val queue = mutable.Queue[String](targetIds: _*)
@@ -507,49 +503,97 @@ final class PickaxeEngine(
     // keep every C member (both sides) of kept reactions, plus seeds
     val memberC = keepC ++ keepR.iterator.flatMap(r =>
       (reactantsOf(r) ++ prodIds(r)).filter(_.startsWith("C")))
-    // the keep sets are driver-side already: ship them as broadcast
-    // variables and filter in place, instead of joining against a
-    // broadcast relation built from the same ids (one job and one hash
-    // join stage per table)
-    def isIn(ids: collection.Set[String]) = {
+    // the keep sets are driver-side already: filter the rows in place by
+    // broadcast sets, instead of joining against a broadcast relation
+    // built from the same ids (one job and one hash join stage per table)
+    def kept(df: DataFrame, ids: collection.Set[String],
+        orCoreactant: Boolean): DataFrame = {
       val b = spark.sparkContext.broadcast(ids.toSet)
-      udf((id: String) => b.value.contains(id))
+      val id = df.schema.fieldIndex("_id")
+      val tpe = if (orCoreactant) df.schema.fieldIndex("Type") else -1
+      CheckpointRows.frame(spark, CheckpointRows.rows(df).filter(r =>
+        (tpe >= 0 && !r.isNullAt(tpe) &&
+          r.getUTF8String(tpe).toString == "Coreactant") ||
+          b.value.contains(r.getUTF8String(id).toString)), df.schema, df)
     }
-    val outC = state.compounds.where(
-      col("Type") === "Coreactant" || isIn(memberC)(col("_id")))
-    val outR = state.reactions.where(isIn(keepR)(col("_id")))
-    NetworkState(outC, outR, state.generation)
+    NetworkState(kept(state.compounds, memberC, orCoreactant = true),
+      kept(state.reactions, keepR, orCoreactant = false), state.generation)
   }
 
-  /** W1: dense export ids (assign_ids, pickaxe.py:1046-1102) — via the
-    * distributed two-pass rank (operators.DenseIds), not a global
-    * `row_number() over (order by ...)` window: the window form moves
-    * every row through one task, which is fine for a golden-file
-    * export and a straggler on a 100 TB network table. Result is
-    * bit-identical (the (Generation, _id) / (_id) orders are total).
+  /** W1: dense export ids (assign_ids, pickaxe.py:1046-1102):
+    * compounds numbered in (Generation, _id) order, reactions in `_id`
+    * order. Up to `PickaxeEngine.LocalRxnLimit` rows the keys are
+    * collected in one bounded job and numbered driver-side; above it (or
+    * with `spark.graft.localPaths=false`, [[graft.operators.LocalGate]])
+    * the distributed two-pass rank (operators.DenseIds) numbers them, not
+    * a global `row_number() over (order by ...)` window: the window form
+    * moves every row through one task, which is fine for a golden-file
+    * export and a straggler on a 100 TB network table. Both paths give
+    * the same ids (the orders are total).
     */
   def assignIds(state: NetworkState): NetworkState = {
-    import graft.operators.DenseIds
-    // both tables rank on one string key in their first column, so the
-    // two ranks plan the same range partitioning, sort and orderings
-    // and share those generated classes. The compound key orders as
-    // (Generation, _id): a generation is a non-negative int, so ten
+    // both tables rank on one string key: the compound key orders as
+    // (Generation, _id) — a generation is a non-negative int, so ten
     // zero-padded digits order like the number
-    def ided(df: DataFrame, key: Column, fmt: String) =
-      DenseIds.withDenseRank(
-          df.select(key.as("__key") +: df.columns.toSeq.map(col): _*),
-          Seq(col("__key")))
-        .withColumn("ID", format_string(fmt, col("__rank")))
-        .drop("__rank", "__key")
-    // each rank runs its own short chain of driver jobs (range
-    // sampling, shuffle, partition counts); the two tables are
-    // independent, so overlap them like expandOnce's state pair
-    val (cpds, rxns) = Par.concurrently(
-      ided(state.compounds,
-        concat(format_string("%010d", col("Generation")), col("_id")),
-        "pkc%07d"),
-      ided(state.reactions, col("_id"), "pkr%07d"))
-    NetworkState(cpds, rxns, state.generation)
+    val cKey = concat(format_string("%010d", col("Generation")), col("_id"))
+    val rKey = col("_id")
+    val local =
+      if (!LocalGate.enabled(spark)) None
+      else {
+        val cs = state.compounds.schema
+        val (cId, cGen) = (cs.fieldIndex("_id"), cs.fieldIndex("Generation"))
+        val rId = state.reactions.schema.fieldIndex("_id")
+        val keys = CheckpointRows.rows(state.compounds)
+          .map(r => (true, r.getUTF8String(cId).toString,
+            f"${r.getInt(cGen)}%010d" + r.getUTF8String(cId)))
+          .union(CheckpointRows.rows(state.reactions).map { r =>
+            val id = r.getUTF8String(rId).toString
+            (false, id, id)
+          })
+        CheckpointRows.within(state.compounds, "assignIds keys")(
+          LocalGate.collectUpTo(keys, PickaxeEngine.LocalRxnLimit.toInt))
+      }
+    local match {
+      case Some(keys) =>
+        // number each table's keys in byte order, as the rank does
+        def ids(compound: Boolean, fmt: String) =
+          keys.collect { case (`compound`, id, key) =>
+              (UTF8String.fromString(key), id) }
+            .sortWith((a, b) => a._1.compareTo(b._1) < 0)
+            .zipWithIndex
+            .map { case ((_, id), i) => id -> fmt.format(i + 1) }.toMap
+        NetworkState(withIds(state.compounds, ids(true, "pkc%07d")),
+          withIds(state.reactions, ids(false, "pkr%07d")), state.generation)
+      case None =>
+        import graft.operators.DenseIds
+        // both ranks plan the same range partitioning, sort and
+        // orderings on their string key and share those generated classes
+        def ided(df: DataFrame, key: Column, fmt: String) =
+          DenseIds.withDenseRank(
+              df.select(key.as("__key") +: df.columns.toSeq.map(col): _*),
+              Seq(col("__key")))
+            .withColumn("ID", format_string(fmt, col("__rank")))
+            .drop("__rank", "__key")
+        // each rank runs its own short chain of driver jobs (range
+        // sampling, shuffle, partition counts); the two tables are
+        // independent, so overlap them like expandOnce's state pair
+        val (cpds, rxns) = Par.concurrently(
+          ided(state.compounds, cKey, "pkc%07d"),
+          ided(state.reactions, rKey, "pkr%07d"))
+        NetworkState(cpds, rxns, state.generation)
+    }
+  }
+
+  /** `df` with its `ID` column set from `ids`, by `_id`. */
+  private def withIds(df: DataFrame, ids: Map[String, String]): DataFrame = {
+    val b = spark.sparkContext.broadcast(ids)
+    val schema = df.schema
+    val (id, idCol) = (schema.fieldIndex("_id"), schema.fieldIndex("ID"))
+    CheckpointRows.frame(spark, CheckpointRows.rows(df).map { r =>
+      val v = r.copy().toSeq(schema).toArray
+      v(idCol) = UTF8String.fromString(b.value(r.getUTF8String(id).toString))
+      new GenericInternalRow(v): InternalRow
+    }, schema, df)
   }
 
   /** TSV export (pickaxe.py:1104-1163): deterministic order by ID. */
@@ -579,19 +623,78 @@ object PickaxeEngine {
     */
   val LocalRxnLimit = 200_000L
 
-  /** Reaction regroup of `expandOnce`: one row per `_id` with the
-    * highest ID, the set-union of the operators, and any row's SMILES
-    * and stoichiometry (functions of the content-hash id).
+  /** The state tables' schemas: compound and reaction rows. */
+  val compoundSchema: StructType = Encoders.product[CompoundRow].schema
+  val reactionSchema: StructType = Encoders.product[ReactionRow].schema
+
+  /** Column ordinals of a compound row ([[compoundSchema]]). */
+  private[pickaxe] object Cpd {
+    val Id = 0; val Smiles = 2; val Type = 3; val Generation = 4
+    val Expand = 8
+  }
+
+  private def rowsIn(df: DataFrame, schema: StructType): RDD[InternalRow] =
+    CheckpointRows.rows(
+      if (df.columns.sameElements(schema.fieldNames)) df
+      else df.select(schema.fieldNames.toSeq.map(col): _*))
+
+  /** A compound table's rows in [[compoundSchema]]'s column order. */
+  private[pickaxe] def compoundRows(df: DataFrame): RDD[InternalRow] =
+    rowsIn(df, compoundSchema)
+
+  /** A reaction table's rows in [[reactionSchema]]'s column order. */
+  private[pickaxe] def reactionRows(df: DataFrame): RDD[InternalRow] =
+    rowsIn(df, reactionSchema)
+
+  private def utf(s: String): UTF8String = UTF8String.fromString(s)
+
+  private[pickaxe] def compoundRow(c: CompoundRow): InternalRow =
+    new GenericInternalRow(Array[Any](utf(c._id), utf(c.ID), utf(c.SMILES),
+      utf(c.Type), c.Generation, utf(c.Formula), c.Charge, c.Mass, c.Expand))
+
+  private def stoichArray(xs: Seq[Stoich]): ArrayData =
+    new GenericArrayData(xs.map(s =>
+      new GenericInternalRow(Array[Any](s.stoich, utf(s.c_id)))).toArray[Any])
+
+  /** The reaction row of one kernel prediction: no ID yet, one operator. */
+  private[pickaxe] def reactionRow(p: RuleKernel.Predicted): InternalRow =
+    new GenericInternalRow(Array[Any](utf(p.rxnId), utf(""),
+      stoichArray(p.reactants), stoichArray(p.products),
+      new GenericArrayData(Array[Any](utf(p.operator))), utf(p.smilesRxn)))
+
+  private def operators(r: InternalRow): Seq[UTF8String] =
+    if (r.isNullAt(4)) Nil
+    else {
+      val a = r.getArray(4)
+      (0 until a.numElements()).map(a.getUTF8String)
+    }
+
+  private def withOperators(r: InternalRow, ops: Seq[UTF8String],
+      id: UTF8String): InternalRow =
+    new GenericInternalRow(Array[Any](r.getUTF8String(0), id, r.getArray(2),
+      r.getArray(3),
+      new GenericArrayData(ops.distinct.sortWith(_.compareTo(_) < 0)
+        .toArray[Any]),
+      r.getUTF8String(5)))
+
+  private def maxId(a: InternalRow, b: InternalRow): UTF8String =
+    if (a.isNullAt(1)) b.getUTF8String(1)
+    else if (b.isNullAt(1)) a.getUTF8String(1)
+    else Seq(a.getUTF8String(1), b.getUTF8String(1)).max
+
+  /** Two rows of one reaction as one: the highest ID, the set-union of
+    * the operators, and either row's SMILES and stoichiometry (functions
+    * of the content-hash id).
     */
-  private def mergeReactions(rows: DataFrame): DataFrame =
-    rows.groupBy("_id")
-      .agg(
-        max("ID").as("ID"),
-        first("Reactants").as("Reactants"),
-        first("Products").as("Products"),
-        array_sort(array_distinct(flatten(collect_list("Operators"))))
-          .as("Operators"),
-        first("SMILES_rxn").as("SMILES_rxn"))
+  private[pickaxe] def mergeReactionRows(a: InternalRow,
+      b: InternalRow): InternalRow =
+    withOperators(a, operators(a) ++ operators(b), maxId(a, b))
+
+  /** The operators of a merged reaction row sorted and distinct, as a
+    * reaction seen once has them too.
+    */
+  private[pickaxe] def normalizeOperators(r: InternalRow): InternalRow =
+    withOperators(r, operators(r), r.getUTF8String(1))
 
   /** S2: compound-file ingest (load_compound_set, pickaxe.py:445-495):
     * CSV/TSV/JSON dispatched on extension (file_to_dict_list,

@@ -15,6 +15,17 @@ class BenchGuardSpec extends AnyFunSuite {
       """"runs":{"q_a":[1.6,1.5,1.4]},"n_failed":0,"failed":[],""" +
       """"variance_flagged":[],"cpus":32,"sf":"/root/testdata/sf0.1"}"""
 
+  test("layers carry driver_s: a rep's wall time outside the union of " +
+    "its jobs' intervals") {
+    // a 10 s rep; jobs 1-4 s and 3-6 s overlap (5 s covered), the job
+    // from 8 s runs past the rep's end (2 s covered)
+    assert(Harness.uncoveredMs(0L, 10000L,
+      Seq((1000L, 4000L), (3000L, 6000L), (8000L, 12000L))) === 3000L)
+    assert(Harness.uncoveredMs(0L, 10000L, Nil) === 10000L)
+    assert(Harness.Layers(1, 1, 1, 0.0, 0.0, 0, 0, 0, 3.0).json
+      .contains("\"driver_s\":3.0"))
+  }
+
   test("parseBaselineMedians reads the queries map, skips nulls") {
     val m = Bench.parseBaselineMedians(line, "/root/testdata/sf0.1", 32)
     assert(m === Map("q_a" -> 1.5, "q_b" -> 0.25))

@@ -28,13 +28,15 @@ class HarnessSpec extends SparkSuite {
     assert(l.shuffleBytes > 0) // the repartition's exchange
     assert(l.compiles >= 1)
     assert(l.taskS >= 0 && l.gcS >= 0)
+    assert(l.driverS >= 0)
     assert(Harness.Collector.layers("spec#2").isEmpty)
     assert(spark.sparkContext.getLocalProperty("graft.harness.tag") == null)
   }
 
   test("Layers render as one JSON object with the artifact's field names") {
-    assert(Harness.Layers(3, 4, 12, 0.5, 0.01, 2048, 0, 7).json ===
+    assert(Harness.Layers(3, 4, 12, 0.5, 0.01, 2048, 0, 7, 0.25).json ===
       """{"jobs":3,"stages":4,"tasks":12,"task_s":0.5,"gc_s":0.01,""" +
-        """"shuffle_bytes":2048,"spill_bytes":0,"compiles":7}""")
+        """"shuffle_bytes":2048,"spill_bytes":0,"compiles":7,""" +
+        """"driver_s":0.25}""")
   }
 }
