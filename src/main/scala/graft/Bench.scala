@@ -25,7 +25,8 @@ import org.apache.spark.sql.SparkSession
   * also carry each query's per-layer totals (`layers`: jobs, stages,
   * tasks, task and GC time, shuffle and spill bytes, codegen
   * compiles, driver time outside its jobs) from its median-time sweep
-  * rep, collected by [[Harness]].
+  * rep, collected by [[Harness]], plus every sweep rep's compiles in
+  * rep order (`rep_compiles`).
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
@@ -394,9 +395,11 @@ object Bench {
     spark.stop()
     val layersJson = sweep.toSeq.sortBy(_._1).flatMap { case (name, base) =>
       val ok = base.zipWithIndex.filter(_._1 >= 0).sortBy(_._1)
+      val repCompiles = base.indices
+        .flatMap(i => Harness.Collector.compilesOf(s"$name#${i + 1}"))
       ok.lift((ok.length - 1) / 2)
         .flatMap { case (_, i) => Harness.Collector.layers(s"$name#${i + 1}") }
-        .map(l => "\"" + name + "\":" + l.json)
+        .map(l => "\"" + name + "\":" + l.copy(repCompiles = repCompiles).json)
     }.mkString("{", ",", "}")
     // Two stdout lines (round-18 VERDICT #2): the per-query DIAGNOSTIC
     // maps (every raw rep, per-query start loadavg, per-entry gate

@@ -36,16 +36,20 @@ object Harness {
 
   /** What one tag's jobs did. Times in seconds; `driverS` is the tag's
     * wall time minus the union of its jobs' intervals (planning, driver
-    * work and the gaps between jobs).
+    * work and the gaps between jobs). `repCompiles`, when set, holds
+    * the compiles of every rep of the tag's query in rep order, so a
+    * cold first rep shows apart from a contended one.
     */
   final case class Layers(jobs: Long, stages: Long, tasks: Long,
       taskS: Double, gcS: Double, shuffleBytes: Long, spillBytes: Long,
-      compiles: Long, driverS: Double) {
+      compiles: Long, driverS: Double, repCompiles: Seq[Long] = Nil) {
     def json: String =
       s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
         s""""task_s":$taskS,"gc_s":$gcS,"shuffle_bytes":$shuffleBytes,""" +
         s""""spill_bytes":$spillBytes,"compiles":$compiles,""" +
-        s""""driver_s":$driverS}"""
+        s""""driver_s":$driverS""" +
+        (if (repCompiles.isEmpty) ""
+        else repCompiles.mkString(""","rep_compiles":[""", ",", "]")) + "}"
   }
 
   /** Milliseconds of `[from, to]` covered by none of `jobs` (start, end)
@@ -107,6 +111,9 @@ object Harness {
         sc.setLocalProperty(TagKey, outer)
       }
     }
+
+    /** Codegen compiles of a tag `tagged` ran. */
+    def compilesOf(tag: String): Option[Long] = Option(compiles.get(tag))
 
     /** Totals of a tag `tagged` ran, also when it started no job. */
     def layers(tag: String): Option[Layers] =

@@ -1105,51 +1105,61 @@ object RelationalQueries extends QueryPack {
         // (bucket-wise max, the merge law); the intersection estimate
         // is inclusion-exclusion est(x)+est(y)-est(x∪y) on the raw
         // estimates. At 100 TB this answers any overlap question
-        // from three register tables without re-scanning — the exact
-        // overlap (one distinct + self-join here) rides along as the
-        // measured error, because I-E error compounds and should be
-        // REPORTED, not assumed.
+        // from the register tables without re-scanning — the exact
+        // overlap rides along as the measured error, because I-E
+        // error compounds and should be REPORTED, not assumed.
+        //
+        // Every flag row carries its own label and the labels of the
+        // two pairs that hold it, so one register aggregation by
+        // (label, bucket) builds the three flag sketches and the three
+        // union sketches (the union's bucket maximum is the maximum
+        // over both flags' rows) and hllEstimate runs once. The exact
+        // side is the distinct (label, order) count per label, and the
+        // exact overlap is its inclusion-exclusion |x|+|y|-|x∪y|. Both
+        // sides read the one distinct (label, order) table and meet in
+        // a shuffled hash join on the label, whose two inputs share the
+        // label partitioning: no broadcast, so no stage whose creation
+        // waits on only one side. The estimates join as the optional
+        // side: every label has one, and a plan that reads none
+        // (count()) drops the sketch branch.
         val li = t(s, dir, "lineitem")
-        // the register table and the exact distinct-key table (dk,
-        // below) are independent aggregations over the same scan —
-        // materialize both checkpoints from two driver threads
-        // (guide §2.6)
-        val (regs, dk) = graft.operators.Par.concurrently(
-          Sketches.hllRegisters(
-              li, col("l_orderkey"), Seq("l_returnflag"), p = 12)
-            .localCheckpoint(), // 3*4096 rows; probed by 3 pair unions
-          li.select(col("l_returnflag").as("f"),
-            col("l_orderkey").as("ok")).distinct().localCheckpoint())
-        val single = Sketches.hllEstimate(regs, Seq("l_returnflag"))
-          .select(col("l_returnflag"), col("hll_est"))
         val pairs = Seq(("A", "N"), ("A", "R"), ("N", "R"))
-        val unionRegs = pairs.map { case (x, y) =>
-          regs.where(col("l_returnflag").isin(x, y))
-            .withColumn("pair", lit(s"$x+$y"))
-            .groupBy("pair", "bucket").agg(max("reg").as("reg"))
-        }.reduce(_ unionByName _)
-        val unionEst = Sketches.hllEstimate(unionRegs, Seq("pair"))
-          .select(col("pair"), col("hll_est").as("est_union"))
-        val pairDf = pairs.map { case (x, y) =>
-          Seq((s"$x+$y", x, y)) }.reduce(_ ++ _) match {
-          case rows =>
-            import s.implicits._
-            rows.toDF("pair", "fx", "fy")
-        }
-        val exact = dk.toDF("fx", "ok")
-          .join(dk.toDF("fy", "ok"), Seq("ok"))
-          .where(col("fx") < col("fy"))
-          .groupBy("fx", "fy")
-          .agg(countDistinct("ok").as("exact_both"))
-        broadcast(pairDf)
-          .join(single.toDF("fx", "est_x"), Seq("fx"))
-          .join(single.toDF("fy", "est_y"), Seq("fy"))
-          .join(unionEst, Seq("pair"))
-          .join(exact, Seq("fx", "fy"))
-          .withColumn("est_both", expr(
-            "round(est_x + est_y - est_union, 1)"))
+        def pair(x: String, y: String) = s"$x+$y"
+        val labels = typedLit(pairs.flatMap(p => Seq(p._1, p._2)).distinct
+          .map(f => f -> (f +: pairs.collect {
+            case (x, y) if x == f || y == f => pair(x, y) })).toMap)
+        // each label's (pair, role) slots: x and y are the pair's
+        // flags, u its union
+        val roles = typedLit(pairs.flatMap { case (x, y) =>
+            val p = pair(x, y)
+            Seq(x -> (p, "x"), y -> (p, "y"), p -> (p, "u"))
+          }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) })
+        val keys = li
+          .select(col("l_orderkey").as("ok"),
+            explode(element_at(labels, col("l_returnflag"))).as("label"))
+          .distinct()
+        val exact = keys.groupBy("label").agg(count(lit(1)).as("exact"))
+        def slot(role: String, c: String) =
+          max(when(col("r._2") === role, col(c)))
+        Sketches.hllEstimate(
+            Sketches.hllRegisters(keys, col("ok"), Seq("label"), p = 12),
+            Seq("label"))
+          .hint("shuffle_hash")
+          .join(exact, Seq("label"), "right")
+          .select(col("hll_est"), col("exact"),
+            explode(element_at(roles, col("label"))).as("r"))
+          .groupBy(col("r._1").as("pair"))
+          .agg(slot("x", "hll_est").as("est_x"),
+            slot("y", "hll_est").as("est_y"),
+            slot("u", "hll_est").as("est_union"),
+            (slot("x", "exact") + slot("y", "exact") - slot("u", "exact"))
+              .as("exact_both"))
+          // pairs that share no order have no overlap row
+          .where(col("exact_both") > 0)
           .select(col("pair"), col("est_x"), col("est_y"),
-            col("est_union"), col("est_both"), col("exact_both"))
+            col("est_union"),
+            expr("round(est_x + est_y - est_union, 1)").as("est_both"),
+            col("exact_both"))
           .orderBy("pair")
       },
       Some("""WITH k AS (SELECT DISTINCT l_returnflag AS f,
@@ -1742,28 +1752,33 @@ object RelationalQueries extends QueryPack {
         // Confidence-style ratios stay exact: support counts are
         // ints; the lift display does ONE division chain from exact
         // counts.
+        //
+        // One chain of stages: each side of the self-join carries its
+        // part's support (a broadcast lookup of the per-part counts),
+        // so the (a, b) aggregation yields the whole row and the top-10
+        // needs no join back, and the order count is a scalar subquery
+        // (a plan of its own). Branches that run side by side and meet
+        // later let adaptive execution number the stages after them in
+        // the order the branches finish, and each new numbering
+        // compiles new classes. The lookup is a left join: every part
+        // has its count, and a plan that reads no support (count())
+        // drops the lookup instead of computing it.
         val li = t(s, dir, "lineitem")
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
           .distinct()
-          // same four-consumer shape as q_agg_pmi: one scan+distinct
-          // behind a barrier instead of one per consumer
-          .localCheckpoint(eager = false)
-        val nOrders = li.select("ok").distinct()
-          .agg(count(lit(1)).as("n_orders"))
-        val itemSupp = li.groupBy("pk").agg(count(lit(1)).as("supp"))
-        val pairs = li.toDF("ok", "a")
-          .join(li.toDF("ok", "b"), Seq("ok"))
+        val nOrders = li.select("ok").distinct().agg(count(lit(1))).scalar()
+        val withSupp = li.join(
+          li.groupBy("pk").agg(count(lit(1)).as("supp")), Seq("pk"), "left")
+        withSupp.toDF("a", "ok", "supp_a")
+          .join(withSupp.toDF("b", "ok", "supp_b"), Seq("ok"))
           .where(col("a") < col("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("supp_ab"))
-        val top = pairs
+          .groupBy("a", "b")
+          .agg(count(lit(1)).as("supp_ab"), max("supp_a").as("supp_a"),
+            max("supp_b").as("supp_b"))
           .orderBy(col("supp_ab").desc, col("a").asc, col("b").asc)
           .limit(10)
-        top
-          .join(itemSupp.toDF("a", "supp_a"), Seq("a"))
-          .join(itemSupp.toDF("b", "supp_b"), Seq("b"))
-          .crossJoin(broadcast(nOrders))
           .withColumn("lift", round(
-            (col("supp_ab") * col("n_orders")).cast("double") /
+            (col("supp_ab") * nOrders).cast("double") /
               (col("supp_a") * col("supp_b")), 4))
           .select("a", "b", "supp_ab", "supp_a", "supp_b", "lift")
           .orderBy(col("supp_ab").desc, col("a").asc, col("b").asc)

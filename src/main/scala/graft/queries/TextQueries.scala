@@ -26,6 +26,10 @@ object TextQueries extends QueryPack {
   private val sparkToks = "filter(split(text, ' '), x -> x != '')"
   private val duckToks = "list_filter(string_split(text, ' '), x -> x != '')"
 
+  /** Spark's order of strings: by UTF-8 bytes. */
+  private def utf8(x: String) =
+    org.apache.spark.unsafe.types.UTF8String.fromString(x)
+
   /** Location of q_text_tokens' exported word→n_tokens model
     * artifact. Oracle SQL is a static string, so the path cannot vary
     * with the Verify outDir; the query overwrites it on every run
@@ -698,34 +702,48 @@ object TextQueries extends QueryPack {
       "q_text_tfidf", Seq("P9", "A8", "W3"),
       (s, dir) => {
         // TF-IDF top-3 terms per document. Ranking uses the EXACT
-        // rational score (tf*N)/df — a long multiply (exact) and ONE
-        // IEEE division (correctly rounded on every engine), so rank
-        // order cannot diverge between Spark and the oracle; the
-        // displayed smoothed tfidf = tf * ln((N+1)/(df+1)) is rounded
-        // to 4 decimals. At scale: tf is one shuffle on (doc, term),
-        // df one on term, the doc count broadcasts (1-row agg), the
-        // top-3 window partitions by doc — all hash-partitioned.
-        val base = docs(s, dir)
-          .withColumn("t", TextOps.tokens("text"))
-          .where(expr("size(t) > 0"))
-          .select(col("doc_id"), col("t"))
-        val tf = base
-          .select(col("doc_id"), explode(col("t")).as("term"))
+        // rational score tf/df, compared by cross-multiplied longs
+        // (tf_a * df_b vs tf_b * df_a). For tf * df below 2^50 that is
+        // the order of the correctly rounded (tf*N)/df of the oracle:
+        // two distinct such quotients differ by more than their
+        // rounding, so rank order cannot diverge between Spark and the
+        // oracle; the displayed smoothed tfidf = tf * ln((N+1)/(df+1))
+        // is rounded to 4 decimals. At scale: the tokens shuffle once,
+        // on the term (each token, where a (doc, term) partial count
+        // would cross two shuffles), and tf, df and their join run in
+        // that partitioning; the top-3 ranks per document after one shuffle
+        // on the document (a window would plan a sort stage, a stage
+        // after it and interpreted projections). N, the count of
+        // documents with a token, is a scalar subquery that only the
+        // display column reads. Tokens are the split's non-empty
+        // pieces, as TextOps.tokens gives them, without its lambda.
+        import s.implicits._
+        val d = docs(s, dir)
+        val n = d.where(col("text").rlike("[^ ]")).agg(count(lit(1)))
+          .scalar()
+        val tf = d
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+          .where(col("term") =!= "")
+          .repartition(col("term"))
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
         val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-        val n = base.agg(count(lit(1)).as("n"))
-        val scored = tf.join(dfreq, Seq("term"))
-          .crossJoin(broadcast(n))
-          .withColumn("score",
-            (col("tf") * col("n")).cast("double") / col("df"))
+        tf.hint("shuffle_hash").join(dfreq, Seq("term"))
+          .select("doc_id", "term", "tf", "df")
+          .as[(Long, String, Long, Long)]
+          .repartition(col("doc_id"))
+          .mapPartitions { rows =>
+            rows.toSeq.groupBy(_._1).iterator.flatMap { case (_, ts) =>
+              ts.sortWith { (a, b) =>
+                val c = java.lang.Long.compare(a._3 * b._4, b._3 * a._4)
+                if (c != 0) c > 0 else utf8(a._2).compareTo(utf8(b._2)) < 0
+              }.take(3).zipWithIndex.map { case (r, i) =>
+                (r._1, i + 1, r._2, r._3, r._4)
+              }
+            }
+          }
+          .toDF("doc_id", "rnk", "term", "tf", "df")
           .withColumn("tfidf", round(col("tf") *
-            log((col("n") + lit(1.0)) / (col("df") + lit(1.0))), 4))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id")
-          .orderBy(col("score").desc, col("term").asc)
-        scored.withColumn("rnk", row_number().over(w))
-          .where(col("rnk") <= 3)
-          .select("doc_id", "rnk", "term", "tf", "df", "tfidf")
+            log((n + lit(1.0)) / (col("df") + lit(1.0))), 4))
           .orderBy("doc_id", "rnk")
       },
       Some(s"""WITH d AS (SELECT doc_id, $duckToks AS t FROM documents
@@ -744,7 +762,7 @@ object TextQueries extends QueryPack {
         FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk"""),
       "TF-IDF top terms per doc: exact rational ranking score (no " +
         "float-log rank flips), smoothed-log tfidf display column; " +
-        "tf/df/window all hash-partitioned shuffles."),
+        "tf/df on one term shuffle, top-3 per doc on one doc shuffle."),
 
     GraftQuery(
       "q_text_quality", Seq("P5", "A8"),

@@ -26,6 +26,15 @@ class BenchGuardSpec extends AnyFunSuite {
       .contains("\"driver_s\":3.0"))
   }
 
+  test("layers carry rep_compiles: every rep's compile count in rep " +
+    "order, so a cold first rep reads apart from contention") {
+    val l = Harness.Layers(1, 1, 1, 0.0, 0.0, 0, 0, 0, 3.0)
+    assert(l.copy(repCompiles = Seq(31L, 0L, 0L)).json
+      .endsWith(""""driver_s":3.0,"rep_compiles":[31,0,0]}"""))
+    // absent when no rep was recorded
+    assert(!l.json.contains("rep_compiles"))
+  }
+
   test("parseBaselineMedians reads the queries map, skips nulls") {
     val m = Bench.parseBaselineMedians(line, "/root/testdata/sf0.1", 32)
     assert(m === Map("q_a" -> 1.5, "q_b" -> 0.25))
