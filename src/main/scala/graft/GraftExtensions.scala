@@ -12,13 +12,14 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * }}}
   *
   * injects `graft_hash64` (the fused 60-bit md5 hash,
-  * [[graft.expressions.Hash64]]) into every session built from that
-  * config, including sessions the library never touches — thriftserver
+  * [[graft.expressions.Hash64]]), `graft_nfc`, the fused shingle
+  * kernels, `bit_tanimoto` and `vec_dot` into every session built from
+  * that config, including sessions the library never touches — thriftserver
   * SQL clients, notebook sessions, structured-streaming jobs. The
-  * imperative twin `Hash64.register(spark)` stays for sessions created
+  * imperative `Hash64.register(spark)` stays for sessions created
   * without the config (Tables.load and the DataFrame-bearing operator
-  * entry points call it idempotently); both routes build the identical
-  * expression.
+  * entry points call it; it writes only names the session does not
+  * resolve yet); both routes build the identical expression.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -74,5 +75,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.expressions.WinnowFps(exprs.head,
           intLit(exprs(1), "k"), intLit(exprs(2), "t"))
       }))
+    graft.expressions.BitTanimoto.register(ext)
+    graft.expressions.VecDot.register(ext)
   }
 }

@@ -22,8 +22,7 @@ object Tables {
     *    the session-local TimestampType; with the gate's UTC session
     *    timezone this is value-identical to the oracle's naive read.
     *  - TimestampType: already what every query expects → pass through.
-    * Works on batch AND streaming DataFrames (pure projection), so the
-    * streaming twins share the exact normalization the batch gate runs.
+    * A pure projection, so it works on batch AND streaming DataFrames.
     */
   def normalizeEventsTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

@@ -89,19 +89,11 @@ object BitTanimoto {
   }
 
   /** SparkSessionExtensions hook: register `bit_tanimoto` as a SQL
-    * function (spark.sql.extensions=graft.expressions.GraftExtensions).
+    * function (spark.sql.extensions=graft.GraftExtensions).
     */
   def register(ext: SparkSessionExtensions): Unit =
     ext.injectFunction((
       new FunctionIdentifier("bit_tanimoto"),
       new ExpressionInfo(classOf[BitTanimoto].getName, "bit_tanimoto"),
       (children: Seq[Expression]) => BitTanimoto(children(0), children(1))))
-}
-
-/** `--conf spark.sql.extensions=graft.expressions.GraftExtensions` */
-final class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    BitTanimoto.register(ext)
-    VecDot.register(ext)
-  }
 }

@@ -75,10 +75,9 @@ object NfcNormalize {
     * [[Hash64.register]]).
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"graft_nfc takes 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      }, "built-in")
+    Hash64.registerOnce(spark, "graft_nfc") { exprs =>
+      require(exprs.length == 1,
+        s"graft_nfc takes 1 argument, got ${exprs.length}")
+      NfcNormalize(exprs.head)
+    }
 }

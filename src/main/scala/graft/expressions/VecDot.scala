@@ -86,7 +86,7 @@ object VecDot {
   }
 
   /** SparkSessionExtensions hook: register `vec_dot` as a SQL function
-    * (spark.sql.extensions=graft.expressions.GraftExtensions).
+    * (spark.sql.extensions=graft.GraftExtensions).
     */
   def register(ext: SparkSessionExtensions): Unit =
     ext.injectFunction((

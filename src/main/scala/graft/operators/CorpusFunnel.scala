@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The shared corpus-build funnel combinator — the one shape all four
   * modality funnels (text q_pipeline_corpus, image q_pipeline_images,
-  * video q_pipeline_video, audio q_pipeline_audio) and their streaming
-  * twins instantiate: decode/demux gate -> kernel-derived quality gate
-  * -> banded near-dup keep-smallest -> per-group funnel counts. Each
+  * video q_pipeline_video, audio q_pipeline_audio) instantiate:
+  * decode/demux gate -> kernel-derived quality gate -> banded near-dup
+  * keep-smallest -> per-group funnel counts. Each
   * modality plugs its own kernel, gate predicates, band geometry, and
   * verify discipline; the funnel algebra (candidate generation over
   * band collisions only — never all-pairs, keep-smallest

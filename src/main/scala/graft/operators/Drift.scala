@@ -43,31 +43,21 @@ object Drift {
       expr(s"((($valueCol) - ${mn}L) * ${bins}L) div " +
         s"(${mx}L - ${mn}L + 1L)")))
 
+  /** Per-side bin-count table (bin, n) for a slice: one aggregate. */
   private def binCounts(
-      df: DataFrame, valueCol: String, mn: Long, mx: Long, bins: Int,
-      as: String): DataFrame =
-    df.select(bin(valueCol, mn, mx, bins).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as(as))
-
-  /** Per-side bin-count table for a slice — the compact state a
-    * streaming current side maintains (one running count per bin,
-    * complete mode) and the batch path computes in one aggregate.
-    */
-  def sliceBins(
       df: DataFrame, valueCol: String, mn: Long, mx: Long,
       bins: Int): DataFrame =
-    binCounts(df, valueCol, mn, mx, bins, "n")
+    df.select(bin(valueCol, mn, mx, bins).as("bin"))
+      .groupBy("bin").agg(count(lit(1)).as("n"))
 
-  /** Drift report from two bin-count tables (bin, n) — the SHARED
-    * kernel behind the batch [[binnedDrift]] and the streaming path
-    * (a complete-mode bin-count snapshot fed to this directly), so
-    * the two cannot drift apart. One row:
+  /** Drift report from two bin-count tables (bin, n) — the kernel
+    * behind [[binnedDrift]]. One row:
     * (n_ref, n_cur, psi, kl, ks, drifted) with
     * psi = Σ (q−p)·ln(q/p), kl = Σ q·ln(q/p), ks = max |Q(b) − P(b)|
     * over grid-edge CDFs, drifted = psi ≥ `psiThreshold` (0.2 is the
     * conventional "significant shift" bar).
     */
-  def reportFromBins(
+  private def reportFromBins(
       refBins: DataFrame, curBins: DataFrame, bins: Int,
       psiThreshold: Double = 0.2): DataFrame = {
     // full bin spine: every grid bin exists in the aligned table, so
@@ -122,8 +112,8 @@ object Drift {
       psiThreshold: Double = 0.2): DataFrame = {
     require(bins >= 2 && mx > mn, "binnedDrift: degenerate grid")
     reportFromBins(
-      sliceBins(ref, valueCol, mn, mx, bins),
-      sliceBins(cur, valueCol, mn, mx, bins),
+      binCounts(ref, valueCol, mn, mx, bins),
+      binCounts(cur, valueCol, mn, mx, bins),
       bins, psiThreshold)
   }
 }

@@ -74,17 +74,14 @@ object Expectations {
     markers.foldLeft(labeled)(_ drop _)
   }
 
-  /** Shared per-row indicator kernel behind [[withViolations]] and the
-    * streaming twin (`streaming.StreamingOps.expectationsStream`):
-    * returns the (possibly join-augmented) frame, one (rule, column,
-    * bad) triple per rule — `bad` a never-null boolean column on that
-    * frame — and the helper marker columns to drop afterwards. NotNull
-    * and InRange are pure codegen'd predicates; Unique equi-joins the
-    * minority dup-key table (batch only — it aggregates `df` itself);
-    * ForeignKey left-joins the parent's distinct keys, which is a
-    * stream-static join when `df` streams.
+  /** Per-row indicator kernel behind [[withViolations]]: returns the
+    * (possibly join-augmented) frame, one (rule, column, bad) triple
+    * per rule — `bad` a never-null boolean column on that frame — and
+    * the helper marker columns to drop afterwards. NotNull and InRange
+    * are pure codegen'd predicates; Unique equi-joins the minority
+    * dup-key table; ForeignKey left-joins the parent's distinct keys.
     */
-  def ruleIndicators(df: DataFrame, rules: Seq[Rule])
+  private def ruleIndicators(df: DataFrame, rules: Seq[Rule])
       : (DataFrame, Seq[(String, String, Column)], Seq[String]) = {
     require(rules.nonEmpty, "ruleIndicators: no rules")
     var cur = df

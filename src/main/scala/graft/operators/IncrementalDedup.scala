@@ -45,8 +45,7 @@ object IncrementalDedup {
     * static `prior` — every action here (emptiness probe, Bloom build)
     * runs on the prior side only, and the shard-side plan is a
     * stateless filter/union plus a stream-static left-anti join, all
-    * supported in micro-batch mode. StreamingSpec pins batch parity,
-    * making this the §2.10 streaming twin without a second kernel.
+    * supported in micro-batch mode. StreamingSpec pins batch parity.
     */
   def newRows(
       shard: DataFrame,

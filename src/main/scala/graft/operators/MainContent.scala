@@ -226,52 +226,6 @@ object MainContent {
       .drop("__nw", "__stop", "__ld", "__prev", "__next")
   }
 
-  /** Single-document twin of the classify/keep/reassemble pipeline —
-    * the classification is per-document by construction (the context
-    * windows partition by id), so one pure function serves the
-    * STREAMING path with no state store at all. Batch parity is
-    * spec-pinned against [[mainContent]]; the thresholds and rules
-    * are the same lines of logic transliterated.
-    */
-  def extractLocal(html: String): String = {
-    val blocks = htmlBlocks(html)
-    if (blocks.isEmpty) return ""
-    val cls = blocks.map { b =>
-      val words = b.text.split(' ').filter(_.nonEmpty)
-      val stop = words.count(w =>
-        Stopwords.contains(w.toLowerCase(java.util.Locale.ROOT))) /
-        math.max(words.length, 1).toDouble
-      val ld = b.linkChars.toDouble / math.max(b.text.length, 1)
-      if (ld > 0.2) "bad"
-      else if (b.text.length < 70) "short"
-      else if (stop >= 0.30 && b.text.length > 200) "good"
-      else if (stop >= 0.30) "neargood"
-      else "bad"
-    }
-    val n = blocks.length
-    val prev = new Array[String](n)
-    val next = new Array[String](n)
-    var last: String = null
-    var i = 0
-    while (i < n) {
-      prev(i) = last
-      if (cls(i) == "good" || cls(i) == "bad") last = cls(i)
-      i += 1
-    }
-    last = null
-    i = n - 1
-    while (i >= 0) {
-      next(i) = last
-      if (cls(i) == "good" || cls(i) == "bad") last = cls(i)
-      i -= 1
-    }
-    blocks.indices.iterator.filter { k =>
-      cls(k) == "good" ||
-        ((cls(k) == "short" || cls(k) == "neargood") &&
-          (prev(k) == "good" || next(k) == "good"))
-    }.map(blocks(_).text).mkString("\n")
-  }
-
   /** Extract each document's main content: classify, keep, and
     * reassemble in block order (all-chrome pages come back "").
     * Replaces `htmlCol` with the extracted text.

@@ -696,8 +696,7 @@ object Multimodal {
     * `sid` appended; the media column is dropped after the kernel so
     * the exploded rows stay narrow). The whole clip rides on its one
     * blob row, so the kernel is a STATELESS per-row projection — no
-    * window, no shuffle, and the same plan on a streaming frame
-    * (see [[graft.streaming.StreamingOps.videoMatchStream]]).
+    * window, no shuffle, and the same plan on a streaming frame.
     */
   def videoShingles(
       df: DataFrame, mediaCol: String, k: Int = 3): DataFrame = {

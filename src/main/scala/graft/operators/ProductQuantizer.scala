@@ -153,7 +153,7 @@ object ProductQuantizer {
 
   /** Pack per-(id, subspace) code rows into one row per id with the m
     * codes as a j-ordered array — the storage/probe layout of the
-    * coded corpus (VectorIndex.savePq, StreamingOps.ivfPqStaticSide).
+    * coded corpus (VectorIndex.savePq).
     */
   def packCodes(codes: DataFrame, idCol: String = "vec_id"): DataFrame =
     codes
@@ -164,14 +164,13 @@ object ProductQuantizer {
 
   /** The IVF-PQ chain assembled ONCE — coarse-cell assignment +
     * codebook + codes over one (vec_id, qe, nq) relation — shared by
-    * the batch q_sim_ivfpq query, the streaming static side
-    * (StreamingOps.ivfPqStaticSide), and the stream-batch parity spec,
-    * so a change to the composition (assignment expression, refine
-    * step, geometry) lands everywhere or nowhere. cent, cellOf, and cb
-    * are localCheckpointed: each feeds at least two consumers, and the
-    * pinned cent evaluation is what guarantees the EXPOSED centroids
-    * are the ones the cells were assigned against (a re-evaluated
-    * sample over nondeterministic lineage could silently disagree).
+    * the IVF-PQ queries, so a change to the composition (assignment
+    * expression, refine step, geometry) lands everywhere or nowhere.
+    * cent, cellOf, and cb are localCheckpointed: each feeds at least
+    * two consumers, and the pinned cent evaluation is what guarantees
+    * the EXPOSED centroids are the ones the cells were assigned against
+    * (a re-evaluated sample over nondeterministic lineage could
+    * silently disagree).
     */
   case class IvfPq(
       cent: DataFrame,

@@ -28,21 +28,11 @@ import org.apache.spark.sql.functions._
   */
 object Quantiles {
 
-  /** Append a `bucket` column (0 .. buckets-1) to `df`: the value
-    * column's per-`groupCol` quantile bucket. Rows with a null value
-    * get a null bucket (they have no rank); a group too small to fill
-    * every bucket uses the buckets its cut points define.
-    *
-    * @param accuracy GK accuracy knob (rank error <= 1/accuracy); the
-    *                 default 10000 bounds each sketch partial to a few
-    *                 KB while placing edges within 0.01% rank
-    */
   /** Per-group GK-sketch cut points: (groupCol, __graft_cuts) with
     * buckets-1 interior quantile values per group — the broadcastable
-    * table both [[quantileBuckets]] and the streaming bucket scorer
-    * (`StreamingOps.qualityBucketStream`) join against.
+    * table [[quantileBuckets]] joins against.
     */
-  def cutPoints(
+  private def cutPoints(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
@@ -56,14 +46,22 @@ object Quantiles {
         s"array(${ps.mkString(",")}), $accuracy)").as("__graft_cuts"))
   }
 
-  /** Append a `bucket` column via a broadcast join against
-    * [[cutPoints]]. The cut table is BROADCAST, so `groupCol` must be
+  /** Append a `bucket` column (0 .. buckets-1) to `df`: the value
+    * column's per-`groupCol` quantile bucket. Rows with a null value
+    * get a null bucket (they have no rank); a group too small to fill
+    * every bucket uses the buckets its cut points define.
+    *
+    * The cut table is BROADCAST, so `groupCol` must be
     * low-cardinality (languages, generations, sources — the documented
     * uses); a high-cardinality group column makes the cut table itself
     * large and belongs in a plain shuffled join, not this operator.
     * The bucket comparison uses the Column-API `filter` lambda — no
     * SQL-string interpolation, so a value column named `c` (or one
     * needing backticks) resolves correctly.
+    *
+    * @param accuracy GK accuracy knob (rank error <= 1/accuracy); the
+    *                 default 10000 bounds each sketch partial to a few
+    *                 KB while placing edges within 0.01% rank
     */
   def quantileBuckets(
       df: DataFrame,
@@ -86,7 +84,7 @@ object Quantiles {
     * of a long column WITHOUT a global sort — the third point on the
     * quantile ladder beside the exact per-group window
     * (q_text_quantile, needs a per-partition sort) and the GK sketch
-    * ([[cutPoints]], approximate): two bucket-refinement passes.
+    * ([[quantileBuckets]], approximate): two bucket-refinement passes.
     *
     * Pass 1 histograms values into ≤ `buckets` integer-width bins
     * (one map-side-combined aggregate) and finds the bin containing

@@ -54,24 +54,6 @@ object Sampling {
     * hash-partitioned window per stratum (no global sort, no
     * collect); ties break on the row key for full determinism.
     */
-  /** Compiled twin of [[detU01]] (bit-identical: the SQL form parses
-    * the first 8 md5 hex chars = the first 4 digest bytes big-endian)
-    * — the streaming reservoir computes keys in keyed state where SQL
-    * expressions can't reach. Parity is spec-pinned.
-    */
-  def detU01Scala(key: String, salt: String = ""): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val d = md.digest((key + salt).getBytes("UTF-8"))
-    val h = (d(0) & 0xffL) << 24 | (d(1) & 0xffL) << 16 |
-      (d(2) & 0xffL) << 8 | (d(3) & 0xffL)
-    (h.toDouble + 1.0) / 4294967296.0
-  }
-
-  /** Compiled twin of [[exponentialKey]]. */
-  def exponentialKeyScala(weight: Double, key: String,
-      salt: String = ""): Double =
-    -math.log(detU01Scala(key, salt)) / weight
-
   def stratifiedSample(
       df: DataFrame,
       groupCol: Column,

@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Gap-based sessionization: assign a session id per key, starting a new
   * session whenever the gap to the previous event exceeds `gapSeconds`.
-  * This is the batch twin of the Structured Streaming
-  * `flatMapGroupsWithState` sessionizer in `graft.streaming` — same
-  * semantics, one window pass, one shuffle on the key.
+  * One window pass, one shuffle on the key.
   *
   * All time arithmetic is integer microseconds (`unix_micros`) so results
   * are bit-exact and engine-portable (no double rounding, no tz).

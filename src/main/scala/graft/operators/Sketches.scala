@@ -35,11 +35,7 @@ object Sketches {
     * (`length(bin(w))` — no leading zeros in either engine), so the
     * register table is integer-exact and oracle-reproducible.
     */
-  /** The per-row (bucket, rho) projection shared by [[hllRegisters]]
-    * and the streaming twin (`StreamingOps.hllStream`) — stateless
-    * narrow work, so both engines aggregate the identical rows.
-    */
-  def hllProjection(
+  def hllRegisters(
       df: DataFrame,
       keyExpr: Column,
       groupCols: Seq[String],
@@ -55,16 +51,9 @@ object Sketches {
       .withColumn("__rho",
         when(col("__w") === 0L, lit(wBits + 1))
           .otherwise(lit(wBits + 1) - length(bin(col("__w")))))
-  }
-
-  def hllRegisters(
-      df: DataFrame,
-      keyExpr: Column,
-      groupCols: Seq[String],
-      p: Int = 12): DataFrame =
-    hllProjection(df, keyExpr, groupCols, p)
-      .groupBy(groupCols.map(col) :+ col("bucket"): _*)
+      .groupBy(gs :+ col("bucket"): _*)
       .agg(max("__rho").cast("long").as("reg"))
+  }
 
   /** Raw HLL estimate per group from a register table: the harmonic-mean
     * formula `alpha_m * m^2 / sum_j 2^-M_j` with the sum kept EXACT as a
@@ -116,29 +105,19 @@ object Sketches {
     * universe in fixed memory, with the one-sided guarantee
     * `est ≥ true` (never undercounts) that the query audits.
     */
-  /** The per-row (row, bucket) explode shared by [[cmsSketch]] and the
-    * streaming twin (`StreamingOps.cmsStream`) — stateless narrow work.
-    */
-  def cmsProjection(
+  def cmsSketch(
       df: DataFrame,
       keyExpr: Column,
-      d: Int,
-      w: Int): DataFrame = {
+      d: Int = 4,
+      w: Int = 1024): DataFrame = {
     require(d >= 1 && w >= 2)
     df.select(keyExpr.cast("string").as("__cms_key"))
       .withColumn("row", explode(expr(s"sequence(0, ${d - 1})")))
       .withColumn("bucket",
         expr(s"graft_hash64(concat(row, ':', __cms_key)) % $w"))
-  }
-
-  def cmsSketch(
-      df: DataFrame,
-      keyExpr: Column,
-      d: Int = 4,
-      w: Int = 1024): DataFrame =
-    cmsProjection(df, keyExpr, d, w)
       .groupBy("row", "bucket")
       .agg(count(lit(1)).as("cnt"))
+  }
 
   /** Persist an HLL register table (the VectorIndex/TextIndex
     * discipline applied to sketches): registers as parquet plus a

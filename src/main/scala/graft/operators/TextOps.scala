@@ -74,9 +74,7 @@ object TextOps {
 
   /** One row per (doc, LSH band key): tokenization, shingling, and the
     * k-hash minhash signature run in one projection, then the `bands`
-    * band keys explode. Works on batch AND streaming inputs (every step
-    * is stateless), so a static corpus side and a stream side of the
-    * same near-dup join are built by the same call.
+    * band keys explode. Every step is a stateless projection.
     */
   def bandedDocs(
       docs: org.apache.spark.sql.DataFrame,
@@ -277,10 +275,10 @@ object TextOps {
 
   /** The quality blend q_text_quantile ranks by — 0.4·length-saturation
     * + 0.4·type-token-ratio + 0.2·(1 − stopword share) — as ONE
-    * expression over the raw text column, so the batch decile query,
-    * the streaming bucket scorer, and the DuckDB oracle share a single
-    * definition. Zero-token docs score null (they have no rank; DuckDB
-    * would NaN on the divide and sort to the opposite window end).
+    * expression over the raw text column, so the batch decile query
+    * and the DuckDB oracle share a single definition. Zero-token docs
+    * score null (they have no rank; DuckDB would NaN on the divide and
+    * sort to the opposite window end).
     */
   def qualityScore(textCol: String): Column =
     expr(
@@ -294,9 +292,8 @@ object TextOps {
 
   /** Cut the k-gram spans starting at the (1-based, ascending) match
     * positions in `psCol` out of `textCol` — the exact-substring
-    * REMOVAL step of Lee et al.'s dedup loop, shared by the batch
-    * q_text_clean query and [[graft.streaming.StreamingOps.cleanStream]]
-    * so the two paths cannot drift. One left fold over the doc's own
+    * REMOVAL step of Lee et al.'s dedup loop, used by the
+    * q_text_clean query. One left fold over the doc's own
     * sorted positions (state = (emitted-so-far, next-uncovered-char)):
     * emit text[cur, p-1] when a match starts past cur, advance cur to
     * max(cur, p + k) — overlapping/adjacent spans merge for free, and
@@ -375,10 +372,8 @@ object TextOps {
       regexp_count(afterPhone, lit(ipv4Re))).cast("long")
   }
 
-  /** The per-doc scrub projection — ONE definition shared by the batch
-    * query (q_text_scrub), its streaming twin
-    * ([[graft.streaming.StreamingOps.scrubStream]]), and their parity
-    * spec, so the three surfaces cannot drift apart. Returns a struct
+  /** The per-doc scrub projection — ONE definition shared by
+    * q_text_scrub and the corpus pipeline's scrub stage. Returns a struct
     * of (n_pii, n_masked, scrubbed): sequential PII hit count
     * ([[piiCount]]), blocklisted-token count, and the scrubbed text
     * re-joined on single spaces after [[scrubPii]] + [[maskTokens]].
@@ -486,11 +481,8 @@ object TextOps {
       }
     }
 
-  /** Gopher-rule verdict bits over a TOKEN-ARRAY column — ONE
-    * definition shared by the batch query (q_text_gopher), its
-    * streaming twin ([[graft.streaming.StreamingOps.gopherStream]]),
-    * and their parity spec, so the surfaces cannot drift apart
-    * (same contract as [[scrubProjection]]). Every bound is
+  /** Gopher-rule verdict bits over a TOKEN-ARRAY column — the rule
+    * projection of q_text_gopher. Every bound is
     * cross-multiplied to integer comparisons (Rae et al. 2021 §A1.1):
     *   p_wc:    50 <= word count <= 100000
     *   p_mwl:   3 <= mean word length <= 10  (sumlen vs 3n / 10n)
@@ -511,20 +503,6 @@ object TextOps {
     'p_stop', cast(size(array_intersect(array_distinct($toksCol),
       array('the','a'))) >= 2 as bigint))""")
 
-  /** DSIR-style hashed-unigram importance model (Xie et al., NeurIPS
-    * 2023): a COMPLETE `buckets`-row table (b, s4) where s4 is the
-    * exact 1e4-scaled integer log-ratio ln p_target(b) - ln p_raw(b)
-    * with add-one smoothing — ONE definition shared by the batch
-    * query (q_text_dsir), its streaming twin
-    * ([[graft.streaming.StreamingOps.dsirStream]]), and their parity
-    * spec (same contract as [[scrubProjection]]/[[gopherBits]]).
-    * Target token mass comes from `isTarget` rows; raw mass from the
-    * whole corpus. Every bucket 0..buckets-1 gets a row — buckets
-    * unseen in the corpus carry the smoothed empty-count ratio — so a
-    * stream-side join can never silently drop a novel token's bucket.
-    * The model is FIXED-size (never grows with the corpus) and
-    * broadcast-sized by construction.
-    */
   /** Parse SubRip (.srt) / WebVTT (.vtt) subtitle text into cue rows
     * (ordinal, start_ms, end_ms, text) — the sidecar-subtitle twin of
     * [[graft.operators.Multimodal.mp4Cues]]' in-container bridge, and
@@ -784,10 +762,8 @@ object TextOps {
       .drop("__cleaned")
   }
 
-  /** The (host, line) BOILERPLATE table behind [[removeBoilerplate]]
-    * — ONE definition shared with the streaming twin's static side
-    * ([[graft.streaming.StreamingOps.boilerlineStream]]) so batch
-    * and stream frequency semantics cannot drift. A line qualifies
+  /** The (host, line) BOILERPLATE table behind [[removeBoilerplate]].
+    * A line qualifies
     * when it appears in >= `minFrac` of a host's >= `minHostDocs`
     * documents. Columns: (hostCol, line). Returned UNPERSISTED —
     * the caller owns the caching contract; at scale this is the
@@ -865,6 +841,17 @@ object TextOps {
       (if (params.nonEmpty) params.mkString("?", "&", "") else "")
   }
 
+  /** DSIR-style hashed-unigram importance model (Xie et al., NeurIPS
+    * 2023): a COMPLETE `buckets`-row table (b, s4) where s4 is the
+    * exact 1e4-scaled integer log-ratio ln p_target(b) - ln p_raw(b)
+    * with add-one smoothing — the model of q_text_dsir. Target token
+    * mass comes from `isTarget` rows; raw mass from the whole corpus.
+    * Every bucket 0..buckets-1 gets a row — buckets unseen in the
+    * corpus carry the smoothed empty-count ratio — so a join on the
+    * bucket can never silently drop a novel token's bucket. The model
+    * is FIXED-size (never grows with the corpus) and broadcast-sized
+    * by construction.
+    */
   def dsirModel(
       corpus: org.apache.spark.sql.DataFrame,
       isTarget: Column,

@@ -119,12 +119,12 @@ object VectorIndex {
     * Ids must be disjoint from the indexed corpus (caller contract —
     * the index never dedups).
     *
-    * Distribution-shift contract (mirrors clusterAssignStream's
-    * merge-on-refresh): appended vectors always land in their nearest
-    * EXISTING cell, so cells stay probe-correct but grow lopsided if
-    * the arrival distribution departs from the build sample; cell
-    * geometry refreshes only on an offline rebuild/refine of the full
-    * corpus (swap indexes under the reader like any static side).
+    * Distribution-shift contract: appended vectors always land in
+    * their nearest EXISTING cell, so cells stay probe-correct but grow
+    * lopsided if the arrival distribution departs from the build
+    * sample; cell geometry refreshes only on an offline rebuild/refine
+    * of the full corpus (swap indexes under the reader like any static
+    * side).
     */
   def append(
       index: IvfIndex,
@@ -294,9 +294,8 @@ object VectorIndex {
       // rank by the SAME negated-coalesced key as argmaxCell: plain
       // `cos.desc` would rank NaN FIRST (Spark sorts NaN largest), so
       // a zero-norm (NaN-cosine) centroid would be probed first here
-      // but never by the streaming closures (java.lang.Double
-      // ordering ranks NaN last) — key NaN/null to the +Inf side,
-      // last under ascending
+      // but last by argmaxCell — key NaN/null to the +Inf side, last
+      // under ascending
       .withColumn("rn", row_number().over(
         Window.partitionBy(queryIdCol).orderBy(
           coalesce(-col("cos"), lit(Double.PositiveInfinity)).asc,
@@ -528,8 +527,7 @@ object VectorIndex {
     * nearest cells (broadcast centroids), candidates come from the
     * cell equi-join against the bucketed coded table (exchange-free
     * on the corpus side), each candidate unpacks its m codes and sums
-    * the broadcast per-query distance table — the relational twin of
-    * the streaming closure probe. Geometry (m, subLen) is carried on
+    * the broadcast per-query distance table. Geometry (m, subLen) is carried on
     * the index (pinned at build, re-derived once at load), so a probe
     * is a lazy plan-builder that cannot run with the wrong constants.
     *
@@ -552,9 +550,8 @@ object VectorIndex {
       // rank by the SAME negated-coalesced key as argmaxCell: plain
       // `cos.desc` would rank NaN FIRST (Spark sorts NaN largest), so
       // a zero-norm (NaN-cosine) centroid would be probed first here
-      // but never by the streaming closures (java.lang.Double
-      // ordering ranks NaN last) — key NaN/null to the +Inf side,
-      // last under ascending
+      // but last by argmaxCell — key NaN/null to the +Inf side, last
+      // under ascending
       .withColumn("rn", row_number().over(
         Window.partitionBy(queryIdCol).orderBy(
           coalesce(-col("cos"), lit(Double.PositiveInfinity)).asc,

@@ -57,9 +57,8 @@ object VectorOps {
     * ranks/filters last — argmaxCell and the probe windows key through
     * coalesce(-cos, +Inf), thresholds (`cos >= t`) drop NULL — and
     * which is exactly what the DuckDB oracles compute (DuckDB division
-    * by zero is NULL). The streaming closures' java.lang.Double NaN
-    * sorts last too, so all three surfaces agree: a degenerate vector
-    * is never anyone's best match.
+    * by zero is NULL), so both engines agree: a degenerate vector is
+    * never anyone's best match.
     */
   def cosine(dotCol: String, naCol: String, nbCol: String): Column =
     expr(s"try_divide($dotCol, sqrt(cast($naCol as double)) * " +

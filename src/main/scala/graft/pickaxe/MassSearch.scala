@@ -172,7 +172,8 @@ object MassSearch {
   }
 
   /** The one spectral-scoring UDF — shared by batch ms2Search and the
-    * streaming twin (StreamingOps.ms2ScoreStream) so the mDa/1000
+    * streaming peak feed ([[graft.streaming.StreamingOps.ms2ScoreStream]])
+    * so the mDa/1000
     * conversion, jaccard-vs-dot dispatch, and the score*1000 scale
     * (metabolomics.py:675) can never diverge between the two.
     */

@@ -567,7 +567,7 @@ object RelationalQueries extends QueryPack {
           AS bucket, event_type, count(*) AS n,
           round(sum(value),3) AS sum_value
         FROM events GROUP BY 1,2 ORDER BY 1,2"""),
-      "Windowed-by-time aggregation — the batch twin of the streaming path."),
+      "Windowed-by-time aggregation."),
 
     GraftQuery(
       "q_sessionize", Seq("W8", "E1"),

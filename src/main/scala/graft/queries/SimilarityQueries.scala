@@ -1495,7 +1495,7 @@ object SimilarityQueries extends QueryPack {
         gateCheckIvf(s, nRows, k)
         val e = quantized(s, dir)
         // the ONE assembled chain (cells + codebook + codes) shared
-        // with the streaming static side and the parity spec
+        // by the IVF-PQ queries
         val ivfpq = ProductQuantizer.buildIvfPq(
           e.select("vec_id", "qe", "nq"), kCentroids = k,
           m = 8, subLen = 8, kCodes = 16)

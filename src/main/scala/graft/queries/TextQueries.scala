@@ -46,10 +46,10 @@ object TextQueries extends QueryPack {
       .orElse(sys.env.get("GRAFT_TOKENS_VOCAB_PATH"))
       .getOrElse("/root/repo/spark-warehouse/q_text_tokens_vocab")
 
-  /** The corpus blocklist — ONE definition shared by q_text_scrub,
-    * the corpus pipeline's scrub stage, and the streaming parity spec.
+  /** The corpus blocklist — ONE definition shared by q_text_scrub and
+    * the corpus pipeline's scrub stage.
     */
-  private[graft] val PipelineBlocklist = Seq("customer", "merge", "window")
+  private val PipelineBlocklist = Seq("customer", "merge", "window")
   private val duckBlocklist =
     PipelineBlocklist.map(t => s"'$t'").mkString("[", ",", "]")
 
@@ -111,11 +111,10 @@ object TextQueries extends QueryPack {
           GROUP BY 1)"""
 
   /** Per-source boilerplate-phrase set (word bigrams with document
-    * frequency >= 5 within their source) — ONE definition shared by
-    * q_text_boilerplate and the streaming twin's static side, so the
-    * two cannot drift.
+    * frequency >= 5 within their source) — the phrase half of
+    * q_text_boilerplate.
     */
-  private[graft] def boilerplateSet(base: DataFrame): DataFrame =
+  private def boilerplateSet(base: DataFrame): DataFrame =
     base
       .select(col("doc_id"), col("source"),
         TextOps.tokens("text").as("t"))
@@ -127,11 +126,9 @@ object TextQueries extends QueryPack {
       .where(col("df") >= 5).select("source", "g")
 
   /** Per-doc boilerplate occurrence stats against a boilerplate set —
-    * the scoring half of q_text_boilerplate, shared with the
-    * streaming twin (which runs it per micro-batch against the
-    * FROZEN static set).
+    * the scoring half of q_text_boilerplate.
     */
-  private[graft] def boilerplatePerDoc(
+  private def boilerplatePerDoc(
       base: DataFrame, bp: DataFrame): DataFrame =
     base
       .select(col("doc_id"), col("source"),
@@ -398,11 +395,10 @@ object TextQueries extends QueryPack {
     * winnow/shingle kernels run once per stage, and stages 2/3 each
     * feed both the next stage and a count aggregation.
     */
-  /** The per-stage relations of [[corpusPipeline]] — exposed so the
-    * streaming-parity spec can diff each batch stage's survivor set
-    * against the composed streaming pipeline, not just final counts.
+  /** The per-stage relations of [[corpusPipeline]], so a query can
+    * read each stage's survivor set, not just the final counts.
     */
-  private[graft] final case class CorpusStages(
+  private final case class CorpusStages(
       corpus: DataFrame, // doc_id, lang, source, text
       scored: DataFrame, // scorable docs (quality score non-null)
       q1: DataFrame,     // quality survivors
@@ -509,13 +505,13 @@ object TextQueries extends QueryPack {
       cp: DataFrame => DataFrame): DataFrame =
     corpusStages(s, dir, cp).counts
 
-  private[graft] def corpusStages(
+  private def corpusStages(
       s: SparkSession, dir: String,
       cp: DataFrame => DataFrame): CorpusStages = {
     val all = docs(s, dir).select("doc_id", "lang", "source", "text")
     // stage 0: scrub — PII tags + blocklist masking via the shared
     // per-doc projection (TextOps.scrubProjection, the same definition
-    // q_text_scrub aggregates and scrubStream emits). Everything
+    // q_text_scrub aggregates). Everything
     // downstream — quality scoring, dedup shingles, decontamination
     // fingerprints, packing token counts — consumes the SCRUBBED
     // bytes: what ships is what was checked. Scrub drops nothing, so
@@ -817,7 +813,7 @@ object TextQueries extends QueryPack {
         // rollup. No global sort anywhere.
         val ranked = docs(s, dir)
           // the ONE shared blend definition (also q_text_quality /
-          // q_text_quantile / qualityBucketStream); zero-token docs
+          // q_text_quantile); zero-token docs
           // score null and drop, like the size(t) > 0 guard
           .withColumn("q", TextOps.qualityScore("text"))
           .where(col("q").isNotNull)
@@ -872,8 +868,7 @@ object TextQueries extends QueryPack {
         // same output contract, exact away from bucket edges.
         // zero-token docs score null (NaN in DuckDB via divide-by-zero,
         // sorting to the opposite window end) — excluded on BOTH sides.
-        // The blend lives in TextOps.qualityScore, shared with the
-        // streaming bucket scorer (qualityBucketStream).
+        // The blend lives in TextOps.qualityScore.
         val scored = docs(s, dir)
           .withColumn("q", TextOps.qualityScore("text"))
           .where(col("q").isNotNull)
@@ -2623,8 +2618,7 @@ object TextQueries extends QueryPack {
         // measurement the audit-style queries report. One projection +
         // one small aggregation; no joins, no window.
         // rule bits come from the ONE shared projection
-        // (TextOps.gopherBits) — the streaming twin and the parity
-        // spec consume the same definition, scrub-style
+        // (TextOps.gopherBits)
         docs(s, dir)
           .withColumn("t", TextOps.tokens("text"))
           .withColumn("g", TextOps.gopherBits("t"))
@@ -2749,8 +2743,7 @@ object TextQueries extends QueryPack {
           .withColumn("b", expr(s"${TextOps.hash64("tok")} % $B"))
           .groupBy("doc_id", "b")
           .agg(count(lit(1)).as("c"))
-        // model definition shared with the streaming twin
-        // (StreamingOps.dsirStream) via TextOps.dsirModel
+        // the model definition lives in TextOps.dsirModel
         val model = TextOps.dsirModel(docs(s, dir),
           col("source").isin("src1", "src2", "src3", "src4"),
           buckets = B)

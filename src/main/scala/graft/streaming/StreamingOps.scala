@@ -1,29 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.pickaxe.AdductRow
 
-/** Keyed session state carried across micro-batches (top-level so the
-  * state encoder's generated code can reach the constructor).
-  */
-final case class SessionState(lastTs: Long, sessionId: Long, nEvents: Long)
-
-/** Structured Streaming surfaces (SURVEY §2.10).
+/** Structured Streaming surface (SURVEY §2.10).
   *
   * The reference is pure batch; its one unbounded-in-principle feed is
   * the metabolomics peak stream (annotate_peaks processes peaks one at a
-  * time, metabolomics.py:354-397). Streaming analogs here:
+  * time, metabolomics.py:354-397). That feed is the only streaming
+  * surface here:
   *
   *  - `peakSearchStream`: stream of peaks joined to the static compound
   *    table — a stream-static interval join; no watermark needed because
   *    the static side never lates.
-  *  - `windowedEventCounts`: watermarked sliding-window aggregation over
-  *    an event stream (the streaming twin of q_time_buckets).
-  *  - `sessionize`: custom keyed state via flatMapGroupsWithState — the
-  *    streaming twin of the batch gap-sessionize operator.
+  *  - `ms2StaticSide` + `ms2ScoreStream`: the same join with the static
+  *    spectra attached, scored by batch ms2Search's kernel and reduced to
+  *    a per-(event-time-window, peak) best hit.
   */
 object StreamingOps {
 
@@ -50,35 +44,12 @@ object StreamingOps {
       tol: Double = 0.001,
       ppm: Boolean = false,
       excludeHalogens: Boolean = true,
-      bucketWidth: Double = 0.01): DataFrame = {
-    val spark = compounds.sparkSession
-    import spark.implicits._
-    val adductDf = adducts.toDF()
-      .select(col("name").as("adduct"), col("mult"), col("ionMass"))
-    val ranges = peaks.crossJoin(broadcast(adductDf))
-      .where((col("charge") === "+" && col("ionMass") > 0) ||
-        (col("charge") === "-" && col("ionMass") < 0))
-      .withColumn("pm", (col("mz") - col("ionMass")) / col("mult"))
-      .withColumn("tol_da", if (ppm) col("pm") * tol / 1e6 else lit(tol))
-      .select(col("name").as("peak"), col("adduct"),
-        (col("pm") - col("tol_da")).as("lo"),
-        (col("pm") + col("tol_da")).as("hi"))
-      // bucket keys on the stream side: every bucket the window overlaps
-      .withColumn("bucket", explode(sequence(
-        floor(col("lo") / bucketWidth).cast("long"),
-        floor(col("hi") / bucketWidth).cast("long"))))
-    // batch adductSearch's candidate predicate (metabolomics.py:231,
-    // 239-241): neutral compounds, P4 halogen exclusion
-    val cands0 = compounds.where(col("Charge") === 0)
-    val cands =
-      if (excludeHalogens) cands0.where(!col("Formula").rlike("F[^e]|Cl|Br"))
-      else cands0
-    val bucketed = cands
-      .withColumn("bucket", floor(col("Mass") / bucketWidth).cast("long"))
-    ranges.join(bucketed, Seq("bucket"))
+      bucketWidth: Double = 0.01): DataFrame =
+    adductWindows(peaks, adducts, tol, ppm, bucketWidth)
+      .join(bucketedCandidates(compounds, excludeHalogens, bucketWidth),
+        Seq("bucket"))
       .where(col("Mass") >= col("lo") && col("Mass") <= col("hi"))
       .select("peak", "adduct", "_id", "SMILES", "Formula", "Mass")
-  }
 
   /** Pre-joined static side for [[ms2ScoreStream]]: batch adductSearch's
     * candidate predicate (neutral compounds, halogen exclusion —
@@ -93,20 +64,10 @@ object StreamingOps {
       compounds: DataFrame,
       spectra: DataFrame, // c_id, spectrum: array<(mz,intensity)>
       excludeHalogens: Boolean = true,
-      bucketWidth: Double = 0.01): DataFrame = {
-    val cands0 = compounds.where(col("Charge") === 0)
-    // the regex is the reference's own (metabolomics.py:240), quirks
-    // included: a formula-final F does not match F[^e] and leaks
-    // through — batch MassSearch shares the exact pattern, so parity
-    // holds on both engines
-    val cands =
-      if (excludeHalogens) cands0.where(!col("Formula").rlike("F[^e]|Cl|Br"))
-      else cands0
-    cands
-      .withColumn("bucket", floor(col("Mass") / bucketWidth).cast("long"))
+      bucketWidth: Double = 0.01): DataFrame =
+    bucketedCandidates(compounds, excludeHalogens, bucketWidth)
       .select("bucket", "_id", "Mass")
       .join(spectra.withColumnRenamed("c_id", "_id"), Seq("_id"))
-  }
 
   /** Stream-static MS2 spectral scoring — the streaming twin of
     * MassSearch.ms2Search (q_pickaxe_ms2): each arriving MS2 peak
@@ -144,22 +105,9 @@ object StreamingOps {
       windowDuration: String = "10 minutes",
       bucketWidth: Double = 0.01,
       staticSide: Option[DataFrame] = None): DataFrame = {
-    val spark = compounds.sparkSession
-    import spark.implicits._
     import graft.pickaxe.MassSearch
-    val adductDf = adducts.toDF()
-      .select(col("name").as("adduct"), col("mult"), col("ionMass"))
-    val ranges = peaks.withWatermark("ts", watermark)
-      .crossJoin(broadcast(adductDf))
-      .where((col("charge") === "+" && col("ionMass") > 0) ||
-        (col("charge") === "-" && col("ionMass") < 0))
-      .withColumn("pm", (col("mz") - col("ionMass")) / col("mult"))
-      .select(col("name").as("peak"), col("ts"), col("ms2"),
-        col("adduct"),
-        (col("pm") - tolDa).as("lo"), (col("pm") + tolDa).as("hi"))
-      .withColumn("bucket", explode(sequence(
-        floor(col("lo") / bucketWidth).cast("long"),
-        floor(col("hi") / bucketWidth).cast("long"))))
+    val ranges = adductWindows(peaks.withWatermark("ts", watermark),
+      adducts, tolDa, ppm = false, bucketWidth, col("ts"), col("ms2"))
     val staticDf = staticSide.getOrElse(
       ms2StaticSide(compounds, spectra, excludeHalogens, bucketWidth)
         .persist())
@@ -185,2793 +133,52 @@ object StreamingOps {
         col("m.id").as("best_id"))
   }
 
-  /** Watermarked tumbling-window counts per event type. */
-  def windowedEventCounts(
-      events: DataFrame, // columns: ts (timestamp), event_type
-      windowDuration: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDuration), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("bucket"), col("event_type"), col("n"))
-
-  /** Streaming MinHash-LSH near-dup flagging against a static corpus —
-    * the streaming twin of q_dedup_minhash_lsh for a continuously-
-    * arriving document feed: each arriving doc is minhash-banded
-    * (TextOps.bandedDocs, stateless one-projection work) and equi-joined
-    * to the precomputed corpus band table; sharing >= 1 band key flags
-    * it as a near-dup candidate. A watermarked per-(window, doc) max
-    * aggregation folds the doc's band rows back to ONE verdict row —
-    * deterministic (max over booleans; min over matched corpus ids),
-    * state bounded by the watermark. At scale the corpus band table is
-    * a plain hash-partitioned static side; the stream side never
-    * shuffles more than its own micro-batch.
-    *
-    * Output: bucket (window start), <idCol>, is_neardup, dup_of (the
-    * smallest matching corpus doc id, null when none). Docs shorter
-    * than `shingleW` words have no shingles and emit NO verdict row
-    * (TextOps.bandedDocs drops them — an empty signature would collide
-    * every short doc with every short corpus doc).
+  /** Each peak (name, mz, charge) crossed with the adducts of its
+    * charge, as the inclusive neutral-mass window [lo, hi] (ppm or Da
+    * tolerance, adductSearch's arithmetic) with `peak`, `adduct`, the
+    * `carry` columns and one row per `bucketWidth` bucket the window
+    * overlaps (the stream side of the bucketed interval join).
     */
-  def nearDupStaticSide(
-      corpus: DataFrame, // idCol, textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      shingleW: Int = 3,
-      minhashK: Int = 9,
-      bands: Int = 3): DataFrame =
-    graft.operators.TextOps
-      .bandedDocs(corpus, textCol, shingleW, minhashK, bands)
-      .select(col("band_key"), col(idCol).as("dup_of"))
-      .distinct()
-
-  def nearDupStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      corpus: DataFrame, // idCol, textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      shingleW: Int = 3,
-      minhashK: Int = 9,
-      bands: Int = 3,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.TextOps
-    // caching contract: pass a PERSISTED nearDupStaticSide (same
-    // shingleW/minhashK/bands) and unpersist it on query stop; when
-    // omitted the band table is persisted internally and stays cached
-    // for the session lifetime (a stream-static join re-runs the static
-    // plan — one md5 per corpus shingle — every micro-batch otherwise)
-    val corpusBands = staticSide.getOrElse(
-      nearDupStaticSide(corpus, idCol, textCol, shingleW, minhashK, bands)
-        .persist())
-    TextOps.bandedDocs(docs.withWatermark(tsCol, watermark),
-        textCol, shingleW, minhashK, bands)
-      .join(corpusBands, Seq("band_key"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(max(col("dup_of").isNotNull).as("is_neardup"),
-        min(col("dup_of")).as("dup_of"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("is_neardup"), col("dup_of"))
-  }
-
-  final case class QuotaEvent(source: String, docId: Long, tsMicros: Long)
-  final case class QuotaVerdict(
-      source: String, docId: Long, admitted: Boolean, nAdmitted: Long)
-
-  /** Streaming per-source quota admission — the arrival-order twin of
-    * q_text_domain_cap's quota: admit the FIRST `k` docs per source,
-    * reject the rest. Keyed state is ONE counter per source (bounded
-    * by the source vocabulary, not the doc volume); within a
-    * micro-batch rows process in (tsMicros, docId) order so a batch's
-    * verdicts are deterministic whatever the partitioning. Quality-
-    * preferential capping needs the whole day's candidates and stays
-    * a batch job (the window/TopKAgg forms); this is the online
-    * admission-control half — rate limiting by key — that decides at
-    * arrival time. Parity: over event-ordered arrivals the admitted
-    * set equals the batch row_number-by-(ts, doc_id) <= k cut
-    * (spec-pinned, including quota exhaustion across micro-batches).
-    */
-  def quotaAdmitStream(
-      docs: Dataset[QuotaEvent], k: Int): Dataset[QuotaVerdict] = {
-    val spark = docs.sparkSession
+  private def adductWindows(
+      peaks: DataFrame,
+      adducts: Seq[AdductRow],
+      tol: Double,
+      ppm: Boolean,
+      bucketWidth: Double,
+      carry: Column*): DataFrame = {
+    val spark = peaks.sparkSession
     import spark.implicits._
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState[Long, QuotaVerdict](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()) {
-        (src: String, rows: Iterator[QuotaEvent],
-         state: GroupState[Long]) =>
-          var n = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(r => (r.tsMicros, r.docId)).map {
-            r =>
-              val admit = n < k
-              if (admit) n += 1
-              QuotaVerdict(src, r.docId, admit, n)
-          }
-          state.update(n)
-          out.iterator
-      }
+    val adductDf = adducts.toDF()
+      .select(col("name").as("adduct"), col("mult"), col("ionMass"))
+    peaks.crossJoin(broadcast(adductDf))
+      .where((col("charge") === "+" && col("ionMass") > 0) ||
+        (col("charge") === "-" && col("ionMass") < 0))
+      .withColumn("pm", (col("mz") - col("ionMass")) / col("mult"))
+      .withColumn("tol_da", if (ppm) col("pm") * tol / 1e6 else lit(tol))
+      .select((col("name").as("peak") +: carry) ++ Seq(col("adduct"),
+        (col("pm") - col("tol_da")).as("lo"),
+        (col("pm") + col("tol_da")).as("hi")): _*)
+      .withColumn("bucket", explode(sequence(
+        floor(col("lo") / bucketWidth).cast("long"),
+        floor(col("hi") / bucketWidth).cast("long"))))
   }
 
-  /** Static side for [[clusterAssignStream]]: the (band_key ->
-    * component) lookup of an already-clustered corpus — minhash band
-    * membership (TextOps.bandedDocs) clustered by
-    * ConnectedComponents.byGroup, then folded to one component per
-    * band key (every doc sharing a band key is in the same component
-    * by construction, so min() is exact, not a heuristic). Returned
-    * UNPERSISTED — caller owns the caching contract like the other
-    * static-side builders; at scale this table is what a pipeline
-    * persists next to its corpus (hash-partitioned by band_key, the
-    * join key).
-    */
-  def clusterAssignStaticSide(
-      corpus: DataFrame, // idCol, textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      shingleW: Int = 3,
-      minhashK: Int = 9,
-      bands: Int = 3): DataFrame = {
-    val membership = graft.operators.TextOps
-      .bandedDocs(corpus, textCol, shingleW, minhashK, bands)
-      .select(col(idCol), col("band_key"))
-    val comp = graft.operators.ConnectedComponents
-      .byGroup(membership, idCol, "band_key")
-    membership.join(comp, Seq(idCol))
-      .groupBy("band_key").agg(min("component").as("component"))
-  }
-
-  /** Incremental dedup-cluster assignment — the step after
-    * [[nearDupStream]]'s flagging: each arriving doc is minhash-banded
-    * (stateless) and its band keys are joined to the persisted
-    * (band_key -> component) table of the last offline clustering run;
-    * the doc is assigned the canonical id of the matching cluster.
-    * Output per (window, doc): bucket, <idCol>, is_known, component
-    * (null when no band matches — a genuinely new doc).
-    *
-    * MERGE-ON-REFRESH CONTRACT: arrivals never mutate the static
-    * table. An arriving doc whose bands hit TWO existing components is
-    * evidence those clusters should merge — here it is assigned the
-    * smallest matching canonical (min over its band hits,
-    * deterministic), and the merge itself happens at the next offline
-    * refresh, when the corpus + arrivals are re-clustered and the
-    * rebuilt static side is swapped in. Between refreshes, assignments
-    * are exact for docs hitting one component and conservatively
-    * min-canonical for bridge docs; docs assigned null join the corpus
-    * as new cluster seeds at the refresh. Docs shorter than `shingleW`
-    * words have no shingles and emit NO verdict row (same drop as
-    * [[nearDupStream]] — an empty signature would collide every short
-    * doc); a consumer needing every arrival accounted for must treat
-    * absent ids as unclustered. Same caching contract as the other
-    * ops: pass a PERSISTED `staticSide` and unpersist it on query
-    * stop, or the internally-built one stays cached for the session
-    * lifetime.
-    */
-  def clusterAssignStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      corpus: DataFrame, // idCol, textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      shingleW: Int = 3,
-      minhashK: Int = 9,
-      bands: Int = 3,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.TextOps
-    val keyToComp = staticSide.getOrElse(
-      clusterAssignStaticSide(
-        corpus, idCol, textCol, shingleW, minhashK, bands).persist())
-    TextOps.bandedDocs(docs.withWatermark(tsCol, watermark),
-        textCol, shingleW, minhashK, bands)
-      .join(keyToComp, Seq("band_key"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(min(col("component")).as("component"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("component").isNotNull.as("is_known"), col("component"))
-  }
-
-  /** Streaming per-host BOILERPLATE-LINE removal — the streaming twin
-    * of TextOps.removeBoilerplate: arriving docs explode into
-    * positional lines (stateless), anti-join the PERSISTED (host,
-    * line) boilerplate table of the last offline corpus pass
-    * (TextOps.boilerplateLines — the ONE shared definition, so batch
-    * and stream frequency semantics cannot drift), and reassemble in
-    * document order inside the window aggregation. Same
-    * refresh contract as [[clusterAssignStream]]: arrivals never
-    * mutate the static table; hosts and lines that became frequent
-    * since the last offline pass are caught at the next refresh.
-    * Output per (bucket, host, id): `n_kept` surviving lines and the
-    * reassembled `cleaned` text. A doc whose EVERY line is
-    * boilerplate emits NO row (the anti-join consumes all its lines)
-    * — the streaming analog of batch's "" — so a consumer needing
-    * every arrival accounted for must treat absent ids as fully
-    * boilerplate. Scale shape: the anti-join shuffles on the same
-    * (host, line) key the static table is partitioned by; state is
-    * one window aggregation keyed by (host, id).
-    */
-  def boilerlineStream(
-      docs: DataFrame, // hostCol, idCol, textCol, tsCol
-      corpus: DataFrame, // hostCol, idCol, textCol
-      hostCol: String = "host",
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      minFrac: Double = 0.6,
-      minHostDocs: Int = 3,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val boiler = staticSide.getOrElse(
-      graft.operators.TextOps.boilerplateLines(
-        corpus, hostCol, idCol, textCol, minFrac, minHostDocs)
-        .persist())
-      .withColumnRenamed("line", "__line")
-    docs.withWatermark(tsCol, watermark)
-      .select(col(hostCol), col(idCol), col(tsCol),
-        posexplode(split(col(textCol), "\n"))
-          .as(Seq("__idx", "__line")))
-      .join(boiler, Seq(hostCol, "__line"), "left_anti")
-      .groupBy(window(col(tsCol), windowDuration),
-        col(hostCol), col(idCol))
-      .agg(count(lit(1)).as("n_kept"),
-        array_join(expr(
-          "transform(array_sort(collect_list(struct(__idx, __line)))," +
-            " x -> x.__line)"), "\n").as("cleaned"))
-      .select(col("window.start").as("bucket"), col(hostCol),
-        col(idCol), col("n_kept"), col("cleaned"))
-  }
-
-  /** Static side for [[paraDedupStream]]: the corpus's distinct
-    * paragraph keys under TextOps.paragraphKey — the ONE shared key
-    * definition with batch [[graft.operators.TextOps.dedupParagraphs]]
-    * so batch and stream dedup identity cannot drift. One column
-    * (`__key`); returned UNPERSISTED (caller owns caching); at scale
-    * this is the paragraph-hash artifact a pipeline persists next to
-    * its corpus, hash-partitioned by the key it joins on.
-    */
-  def paragraphKeyStaticSide(
-      corpus: DataFrame,
-      textCol: String = "text"): DataFrame =
-    corpus
-      .select(explode(split(col(textCol), "\n")).as("__para"))
-      .select(graft.operators.TextOps.paragraphKey(col("__para"))
-        .as("__key"))
-      .distinct()
-
-  /** Streaming PARAGRAPH dedup — the streaming twin of
-    * [[graft.operators.TextOps.dedupParagraphs]]'s corpus-probe
-    * half: each arriving doc's paragraphs anti-join the frozen
-    * paragraph-key table of the last offline corpus pass, repeats
-    * WITHIN the arriving doc collapse to their first position (the
-    * batch keep-first rule), and survivors reassemble in document
-    * order inside the window aggregation. Same refresh contract as
-    * [[boilerlineStream]]: arrivals never mutate the static table —
-    * a paragraph two different arrivals both introduce is deduped by
-    * the next offline pass, not by the stream. A doc whose EVERY
-    * paragraph is already known emits NO row (the anti-join consumes
-    * it all) — the streaming analog of batch's "". Scale shape: the
-    * anti-join shuffles on the hash-distributed paragraph key; state
-    * is one window aggregation keyed by id.
-    */
-  def paraDedupStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      corpus: DataFrame, // textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val keys = staticSide.getOrElse(
-      paragraphKeyStaticSide(corpus, textCol).persist())
-    val firstOccurrence =
-      "filter(__arr, x -> NOT exists(__arr," +
-        " y -> y.__key = x.__key AND y.__idx < x.__idx))"
-    docs.withWatermark(tsCol, watermark)
-      .select(col(idCol), col(tsCol),
-        posexplode(split(col(textCol), "\n"))
-          .as(Seq("__idx", "__para")))
-      .withColumn("__key",
-        graft.operators.TextOps.paragraphKey(col("__para")))
-      .join(keys, Seq("__key"), "left_anti")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(expr("array_sort(collect_list(struct(__idx, __para," +
-        " __key)))").as("__arr"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        expr(s"size($firstOccurrence)").as("n_kept"),
-        expr(s"array_join(transform($firstOccurrence," +
-          " x -> x.__para), '\\n')").as("cleaned"))
-  }
-
-  /** Streaming MAIN-CONTENT extraction — the streaming twin of
-    * [[graft.operators.MainContent.mainContent]]: the jusText-shaped
-    * classification is per-document by construction, so the stream
-    * is entirely STATELESS (no watermark, no state store, no static
-    * side to refresh) — one extracted-content column per arriving
-    * page via the spec-pinned single-doc twin
-    * ([[graft.operators.MainContent.extractLocal]]).
-    */
-  def mainContentStream(
-      docs: DataFrame,
-      htmlCol: String = "html",
-      outCol: String = "content"): DataFrame = {
-    val ex = udf((h: String) =>
-      graft.operators.MainContent.extractLocal(h))
-    docs.withColumn(outCol, ex(col(htmlCol)))
-  }
-
-  /** Static side for [[qualityBucketStream]]: per-group quantile cut
-    * points of the corpus quality score (TextOps.qualityScore — the
-    * same blend q_text_quantile ranks by), via the mergeable GK-sketch
-    * aggregation (`Quantiles.cutPoints`). Returned UNPERSISTED — same
-    * caller-owned caching contract as the other static builders.
-    */
-  def qualityCutsStaticSide(
-      corpus: DataFrame, // groupCol, textCol
-      groupCol: String = "lang",
-      textCol: String = "text",
-      buckets: Int = 10,
-      accuracy: Int = 10000): DataFrame =
-    graft.operators.Quantiles.cutPoints(
-      corpus.withColumn("__graft_q",
-        graft.operators.TextOps.qualityScore(textCol)),
-      groupCol, "__graft_q", buckets, accuracy)
-
-  /** Streaming quality bucketing — the streaming twin of
-    * q_text_quantile's "keep the top X% per language" filter: each
-    * arriving doc computes its quality score statelessly and joins the
-    * BROADCAST per-group cut points of the last offline corpus pass
-    * (the production shape: corpus quantiles refresh offline, the
-    * stream scores online — same refresh contract as
-    * [[clusterAssignStream]]). Entirely STATELESS: no aggregation, no
-    * watermark, no state store; one output row per arriving doc with
-    * its score and bucket (0..buckets-1). Docs with no tokens or a
-    * group absent from the corpus cuts get a null bucket — they have
-    * no rank under the corpus distribution.
-    */
-  def qualityBucketStream(
-      docs: DataFrame, // idCol, groupCol, textCol
-      corpus: DataFrame, // groupCol, textCol
-      idCol: String = "doc_id",
-      groupCol: String = "lang",
-      textCol: String = "text",
-      buckets: Int = 10,
-      accuracy: Int = 10000,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    require(!docs.columns.contains("q") && !docs.columns.contains("bucket"),
-      "qualityBucketStream: input already has a q/bucket column (these " +
-        "are the op's output names)")
-    require(!docs.columns.contains("__graft_cuts"),
-      "qualityBucketStream: input already has a __graft_cuts column " +
-        "(reserved for the broadcast cut table)")
-    val cuts = staticSide.getOrElse(
-      qualityCutsStaticSide(corpus, groupCol, textCol, buckets, accuracy)
-        .persist())
-    docs
-      .withColumn("q", graft.operators.TextOps.qualityScore(textCol))
-      .join(broadcast(cuts), Seq(groupCol), "left")
-      .withColumn("bucket",
-        // a null q must stay null — filter() would treat the null
-        // predicate as "drop" and score the doc into bucket 0
-        when(col("q").isNull, lit(null))
-          .otherwise(size(filter(col("__graft_cuts"), c => c < col("q")))))
-      .select(col(idCol), col(groupCol), col("q"), col("bucket"))
-  }
-
-  /** Streaming corpus scrubbing — the streaming twin of q_text_scrub's
-    * per-doc stage: every arriving doc is PII-scrubbed
-    * ([[graft.operators.TextOps.scrubPii]] — emails, phones, IPv4s to
-    * typed tags) and its blocklisted tokens masked
-    * ([[graft.operators.TextOps.maskTokens]] — whole-token semantics),
-    * with per-doc hit counts. Entirely STATELESS — no watermark, no
-    * state store, no static side: the blocklist is part of the plan
-    * (blocklists are broadcast-sized by nature), so this is a pure
-    * projection that runs in append mode at any rate and composes in
-    * front of the rest of the streaming pipeline (scrub first, like
-    * the batch corpus build).
-    *
-    * Output: <idCol>, n_pii, n_masked, scrubbed.
-    */
-  def scrubStream(
-      docs: DataFrame, // idCol, textCol, ...
-      blocklist: Seq[String],
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tag: String = "[MASKED]"): DataFrame = {
-    import graft.operators.TextOps
-    require(!docs.columns.contains("__graft_sp"),
-      "scrubStream: input already has a __graft_sp column (reserved)")
-    // the per-doc projection is THE shared definition
-    // (TextOps.scrubProjection) — batch q_text_scrub and this twin
-    // cannot drift apart
-    docs
-      .withColumn("__graft_sp",
-        TextOps.scrubProjection(col(textCol), blocklist, tag))
-      .select(col(idCol),
-        col("__graft_sp.n_pii").as("n_pii"),
-        col("__graft_sp.n_masked").as("n_masked"),
-        col("__graft_sp.scrubbed").as("scrubbed"))
-  }
-
-  /** Streaming Gopher-rule quality gate — the streaming twin of
-    * q_text_gopher's per-doc stage: each arriving document gets the
-    * four rule verdict bits and an overall pass flag, from the ONE
-    * shared projection (TextOps.gopherBits), so batch and stream
-    * cannot drift. Stateless — pure projection, no watermark, no
-    * state; aggregation (per-language pass rates) is the downstream
-    * job's choice, exactly like scrubStream leaves counting to the
-    * caller.
-    */
-  def gopherStream(
-      docs: DataFrame, // idCol, textCol, ...
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    import graft.operators.TextOps
-    require(!docs.columns.contains("__graft_g"),
-      "gopherStream: input already has a __graft_g column (reserved)")
-    docs
-      .withColumn("__graft_g",
-        TextOps.gopherBits(s"filter(split($textCol, ' '), x -> x != '')"))
-      .select(col(idCol),
-        col("__graft_g.p_wc").as("p_wc"),
-        col("__graft_g.p_mwl").as("p_mwl"),
-        col("__graft_g.p_alpha").as("p_alpha"),
-        col("__graft_g.p_stop").as("p_stop"),
-        (col("__graft_g.p_wc") * col("__graft_g.p_mwl") *
-          col("__graft_g.p_alpha") * col("__graft_g.p_stop") === 1L)
-          .as("pass"))
-  }
-
-  /** Streaming DSIR importance scoring — the streaming twin of
-    * q_text_dsir: each arriving doc's tokens hash into the FIXED
-    * 64-row importance model (TextOps.dsirModel — the ONE shared
-    * definition, so batch selection weights and stream scores cannot
-    * drift), and a watermarked per-(window, doc) aggregation folds the
-    * token rows into the exact integer weight sum_b c_b * s4_b. The
-    * model covers every bucket by construction, so a novel-vocabulary
-    * doc scores through the smoothed empty-bucket ratio instead of
-    * silently losing tokens (the perplexityStream OOV contract).
-    * Join side is 64 rows — broadcast at any corpus scale; state is
-    * the windowed aggregation only.
-    */
-  def dsirStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      model: DataFrame, // (b, s4) from TextOps.dsirModel
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      buckets: Int = 64): DataFrame = {
-    import graft.operators.TextOps
-    docs.columns.filter(_.startsWith("__graft_")).foreach(c =>
-      require(false, s"dsirStream: input column $c is reserved"))
-    graft.expressions.Hash64.register(docs.sparkSession)
-    docs.withWatermark(tsCol, watermark)
-      .select(col(idCol), col(tsCol),
-        explode(TextOps.tokens(textCol)).as("__graft_tok"))
-      .withColumn("__graft_b",
-        expr(s"${TextOps.hash64("__graft_tok")} % $buckets"))
-      .join(broadcast(model.select(col("b").as("__graft_b"),
-        col("s4").as("__graft_s4"))), Seq("__graft_b"))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(count(lit(1)).as("n_tok"), sum("__graft_s4").as("weight"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("n_tok"), col("weight"))
-  }
-
-  /** Static side for [[contaminationStream]]: the eval/benchmark set's
-    * distinct winnowed fingerprints (TextOps.winnowCompiled — same
-    * k/t geometry as batch q_text_contamination). Eval sets are tiny,
-    * so this broadcasts at any corpus scale. Returned UNPERSISTED —
-    * caller-owned caching contract as usual.
-    */
-  def contaminationStaticSide(
-      evalSet: DataFrame, // textCol
-      textCol: String = "text",
-      gramK: Int = 8,
-      guaranteeT: Int = 11): DataFrame = {
-    // winnowCompiled resolves the graft_winnow session function
-    graft.expressions.Hash64.register(evalSet.sparkSession)
-    evalSet
-      .withColumn("__graft_win",
-        graft.operators.TextOps.winnowCompiled(gramK, guaranteeT)(
-          col(textCol)))
-      .select(explode(col("__graft_win")).as("fp")).distinct()
-  }
-
-  /** Streaming benchmark decontamination — the streaming twin of
-    * q_text_contamination: each arriving doc winnows its fingerprints
-    * statelessly, left-joins the BROADCAST eval fingerprint set, and a
-    * watermarked per-(window, doc) aggregation folds the fp rows to
-    * one verdict: overlap ratio (shared fps / own fps, the same
-    * length-normalized metric as batch) and a contaminated flag at
-    * `flagRatio`. Docs shorter than the guarantee threshold have no
-    * fingerprints and emit NO verdict row (no overlap is measurable).
-    * State is bounded by the watermark; the eval set refreshes
-    * offline like the other static sides.
-    */
-  def contaminationStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      evalSet: DataFrame, // textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      gramK: Int = 8,
-      guaranteeT: Int = 11,
-      flagRatio: Double = 0.75,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    graft.expressions.Hash64.register(docs.sparkSession)
-    val evalFps = staticSide.getOrElse(
-      contaminationStaticSide(evalSet, textCol, gramK, guaranteeT)
-        .persist())
-    docs.withWatermark(tsCol, watermark)
-      .withColumn("__graft_win",
-        graft.operators.TextOps.winnowCompiled(gramK, guaranteeT)(
-          col(textCol)))
-      .where(size(col("__graft_win")) > 0)
-      .select(col(idCol), col(tsCol),
-        explode(col("__graft_win")).as("fp"))
-      .join(broadcast(evalFps.withColumn("__graft_hit", lit(1L))),
-        Seq("fp"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(count(lit(1)).as("n_fps"),
-        sum(coalesce(col("__graft_hit"), lit(0L))).as("n_shared"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("n_fps"), col("n_shared"),
-        (col("n_shared") / col("n_fps")).as("overlap"),
-        (col("n_shared") / col("n_fps") >= flagRatio)
-          .as("contaminated"))
-  }
-
-  /** Streaming exact-substring REMOVAL — the streaming twin of
-    * q_text_clean: each arriving doc winnows (position, fingerprint)
-    * pairs, the positions whose fingerprint appears in the broadcast
-    * eval set are collected per (window, doc), and
-    * [[graft.operators.TextOps.removeSpans]] (the SAME fold the batch
-    * query uses) cuts the matched k-gram spans, emitting the cleaned
-    * text. Docs with no fingerprints (shorter than the guarantee
-    * threshold) and docs with no eval overlap pass through verbatim —
-    * `explode_outer` keeps them as a single null-position row, so
-    * nothing is dropped.
-    *
-    * State: one watermarked (window, doc) group per doc — but unlike
-    * [[contaminationStream]] (two longs per group) each group carries
-    * the doc's FULL TEXT (first(textCol)) plus its matched positions
-    * until watermark expiry, so state-store size scales with doc size
-    * x in-flight doc count. On high-rate streams of large documents,
-    * bound the trigger (maxFilesPerTrigger / maxOffsetsPerTrigger) and
-    * keep the watermark tight, or run the batch q_text_clean path over
-    * micro-batched input instead. The static side is the eval set's
-    * distinct fingerprints ([[contaminationStaticSide]], tiny by
-    * definition). Caching contract as usual: pass a PERSISTED
-    * `staticSide` and unpersist on stop, or the internal one persists
-    * for the session lifetime.
-    *
-    * Output: bucket, <idCol>, n_matched, removed_chars, cleaned.
-    */
-  def cleanStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      evalSet: DataFrame, // textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      gramK: Int = 8,
-      guaranteeT: Int = 11,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val reserved = Seq("__graft_wp", "__graft_pos", "__graft_hit",
-      "__graft_ps", "fp")
-    reserved.foreach(c => require(!docs.columns.contains(c),
-      s"cleanStream: input already has a $c column (reserved)"))
-    val evalFps = staticSide.getOrElse(
-      contaminationStaticSide(evalSet, textCol, gramK, guaranteeT)
-        .persist())
-    docs.withWatermark(tsCol, watermark)
-      .withColumn("__graft_wp",
-        graft.operators.TextOps.winnowPositionsCompiled(gramK, guaranteeT)(
-          col(textCol)))
-      .select(col(idCol), col(tsCol), col(textCol),
-        explode_outer(col("__graft_wp")).as("__graft_w"))
-      .select(col(idCol), col(tsCol), col(textCol),
-        col("__graft_w._1").as("__graft_pos"),
-        col("__graft_w._2").as("fp"))
-      .join(broadcast(evalFps.withColumn("__graft_hit", lit(1L))),
-        Seq("fp"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(first(col(textCol)).as(textCol),
-        sort_array(collect_list(when(col("__graft_hit").isNotNull,
-          col("__graft_pos")))).as("__graft_ps"))
-      .withColumn("cleaned",
-        graft.operators.TextOps.removeSpans(textCol, "__graft_ps", gramK))
-      .select(col("window.start").as("bucket"), col(idCol),
-        size(col("__graft_ps")).cast("long").as("n_matched"),
-        (length(col(textCol)) - length(col("cleaned"))).cast("long")
-          .as("removed_chars"),
-        col("cleaned"))
-  }
-
-  /** Streaming ANN over a static embedding corpus — the streaming twin
-    * of q_sim_lsh_ann: the corpus is banded-sign-LSH sketched once
-    * (static side, hash-partitioned on band key at scale); each arriving
-    * query vector computes the same quantize/sketch/band projection
-    * statelessly and equi-joins the corpus band table; a watermarked
-    * per-(window, query) aggregation keeps the best-cosine candidate —
-    * min(struct(-cos, id)), so score ties break to the SMALLEST id like
-    * the batch q_sim_lsh_ann ranking. Pairs sharing several bands appear
-    * once per shared band — harmless for the best-candidate reduce, so
-    * no stateful distinct is needed; n_band_hits counts band-pair rows,
-    * not distinct candidates (documented).
-    *
-    * Caching contract: pass `staticSide` = a PERSISTED [[annStaticSide]]
-    * (same bands/bitsPerBand) and unpersist it on query stop; when
-    * omitted it is persisted internally for the session lifetime.
-    *
-    * Output: bucket, <queryIdCol>, n_band_hits, best_cos, best_id.
-    */
-  private def annBanded(
-      df: DataFrame, embCol: String, bands: Int, bitsPerBand: Int)
-      : DataFrame = {
-    import graft.operators.VectorOps
-    df.withColumn("q_", VectorOps.quantize(embCol))
-      .withColumn("n_", VectorOps.normSq("q_"))
-      .withColumn("sk_", VectorOps.signSketch("q_", bands * bitsPerBand))
-      .withColumn("bkey", explode(VectorOps.bandKeys("sk_", bands,
-        bitsPerBand)))
-      .drop(embCol, "sk_")
-  }
-
-  def annStaticSide(
-      corpus: DataFrame, // idCol, embCol
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      bands: Int = 4,
-      bitsPerBand: Int = 8): DataFrame =
-    annBanded(corpus, embCol, bands, bitsPerBand)
-      .select(col("bkey"), col(idCol), col("q_").as("cqe"),
-        col("n_").as("cnq"))
-
-  def annStream(
-      queries: DataFrame, // queryIdCol, embedding, tsCol
-      corpus: DataFrame, // idCol, embedding
-      queryIdCol: String = "query_id",
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      bands: Int = 4,
-      bitsPerBand: Int = 8,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.VectorOps
-    // static side persisted once — the interpreted-HOF sketch would
-    // otherwise re-run over the whole corpus every micro-batch
-    val corpusBands = staticSide.getOrElse(
-      annStaticSide(corpus, idCol, embCol, bands, bitsPerBand).persist())
-    annBanded(queries.withWatermark(tsCol, watermark), embCol, bands,
-        bitsPerBand)
-      .join(corpusBands, Seq("bkey"))
-      .withColumn("dot", VectorOps.dot("q_", "cqe"))
-      .withColumn("cos", VectorOps.cosine("dot", "n_", "cnq"))
-      .groupBy(window(col(tsCol), windowDuration), col(queryIdCol))
-      .agg(count(lit(1)).as("n_band_hits"),
-        // highest cos, ties to the smallest id (batch rank parity); a
-        // null cosine (zero-norm quantized vector -> divide-by-null)
-        // coalesces to +Inf so it ranks LAST like batch's desc
-        // nulls-last ordering, instead of winning the struct min
-        min(struct(coalesce(-col("cos"), lit(Double.PositiveInfinity))
-          .as("nc"), col(idCol).as("id"))).as("m"))
-      .select(col("window.start").as("bucket"), col(queryIdCol),
-        col("n_band_hits"),
-        when(col("m.nc") === Double.PositiveInfinity, lit(null))
-          .otherwise(-col("m.nc")).as("best_cos"),
-        col("m.id").as("best_id"))
-  }
-
-  /** Static side for [[ivfPqStream]] — everything the probe path
-    * needs, built ONCE from the corpus via the shared
-    * [[ProductQuantizer.buildIvfPq]] chain: the coded corpus table
-    * (id, cell, m packed PQ codes), plus the coarse centroids and the
-    * PQ codebook COLLECTED to the driver (both are bounded by design:
-    * centroids ≤ the √n cap, codebook = m × k entries — the same data
-    * the batch path broadcasts). `coded` is returned UNPERSISTED —
-    * caller-owned caching contract as usual. The probe layout needs a
-    * dense codebook (every (subspace, code) present), which the k-row
-    * sample guarantees whenever the corpus has ≥ kCodes vectors; a
-    * smaller corpus fails loudly rather than mis-indexing.
-    */
-  case class IvfPqStatic(
-      coded: DataFrame, // idCol, cell, codes array<int> (length m)
-      centroids: Array[(Long, Array[Long], Long)], // (c_id, cqe, cnq)
-      codebook: Array[Array[(Array[Long], Long)]], // [j][code] = (cvec, cnorm)
-      m: Int,
-      subLen: Int,
-      kCodes: Int)
-
-  def ivfPqStaticSide(
-      corpus: DataFrame, // idCol, embCol
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      kCentroids: Int,
-      m: Int = 8,
-      subLen: Int = 8,
-      kCodes: Int = 16): IvfPqStatic = {
-    import graft.operators.{ProductQuantizer, VectorIndex, VectorOps}
-    val e = corpus
-      .select(col(idCol).as("vec_id"), col(embCol))
-      .withColumn("qe", VectorOps.quantize(embCol))
-      .withColumn("nq", VectorOps.normSq("qe"))
-      .select("vec_id", "qe", "nq")
-      .localCheckpoint() // feeds centroid sample, assignment, codebook
-    // the ONE assembled chain — shared with batch q_sim_ivfpq
-    val ivfpq = ProductQuantizer.buildIvfPq(e, kCentroids, m, subLen,
-      kCodes)
-    val coded = ProductQuantizer.packCodes(ivfpq.codes)
-      .join(ivfpq.cellOf, Seq("vec_id"))
-      .select(col("vec_id").as(idCol), col("cell"), col("codes"))
-    // collect the chain's OWN pinned sample (buildIvfPq
-    // localCheckpoints it) — re-evaluating sampleCentroids here would
-    // re-run the top-k scan and lean on e's checkpoint for agreement
-    // instead of being the same data by construction
-    val centLocal = ivfpq.cent
-      .select("c_id", "cqe", "cnq")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-      .sortBy(_._1)
-    val cbRows = ivfpq.cb.select("j", "cidx", "cvec", "cnorm").collect()
-      .map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Long](2).toArray, r.getLong(3)))
-    val cbLocal = Array.tabulate(m) { j =>
-      val entries = cbRows.filter(_._1 == j).sortBy(_._2)
-      require(entries.length == kCodes &&
-        entries.zipWithIndex.forall { case (en, i) => en._2 == i },
-        s"ivfPqStaticSide: codebook for subspace $j is not dense " +
-          s"0..${kCodes - 1} (got ${entries.map(_._2).mkString(",")}) — " +
-          s"the corpus has fewer than kCodes=$kCodes vectors; shrink " +
-          "kCodes or grow the corpus")
-      entries.map(en => (en._3, en._4))
-    }
-    IvfPqStatic(coded, centLocal, cbLocal, m, subLen, kCodes)
-  }
-
-  /** Streaming IVF-PQ probe — the streaming twin of q_sim_ivfpq: each
-    * arriving query quantizes on the SAME expression as the batch path,
-    * then one compiled closure over the bounded driver-collected
-    * statics assigns its coarse cell (identical double-cosine argmax
-    * and (cos desc, c_id) tie rule as VectorIndex.argmaxCell — NaN
-    * ranks last via java.lang.Double ordering, matching Spark's) and
-    * emits its m × k ADC distance table. Candidates come from ONE
-    * stream-static equi-join on the cell; each candidate's approximate
-    * distance is a pure expression over (qtab, codes) — no per-pair
-    * aggregation — and a single watermarked (window, query) reduce
-    * keeps the best candidate, ties to the smallest id (batch rank
-    * parity). Queries landing in an empty cell emit nothing (the
-    * annStream miss contract), and malformed rows (null or
-    * mis-dimensioned embeddings) drop the same way instead of
-    * poisoning the query.
-    *
-    * Output: bucket, <queryIdCol>, n_cell_mates, best_adist, best_id.
-    */
-  def ivfPqStream(
-      queries: DataFrame, // queryIdCol, embCol, tsCol
-      static: IvfPqStatic,
-      queryIdCol: String = "query_id",
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes"): DataFrame = {
-    import graft.operators.VectorOps
-    val cents = static.centroids
-    val cbArr = static.codebook
-    val (m, subLen, kCodes) = (static.m, static.subLen, static.kCodes)
-    val dims = static.centroids.headOption.map(_._2.length).getOrElse(0)
-    val probe = udf { qe: Seq[Long] =>
-      // a malformed row (null embedding, wrong dimension) must DROP,
-      // not poison the query: a thrown exception fails the whole
-      // stream and re-fails on restart, while a null probe result
-      // null-keys the cell join and the row falls out — the streaming
-      // analog of the batch path's null-propagating expressions
-      if (qe == null || qe.length != dims || dims < m * subLen)
-        null.asInstanceOf[(Long, Array[Long])]
-      else {
-        var nq = 0L
-        qe.foreach(x => nq += x * x)
-        var bestNc = Double.NaN
-        var bestId = Long.MaxValue
-        var first = true
-        cents.foreach { case (cid, cqe, cnq) =>
-          var dot = 0L
-          var i = 0
-          while (i < cqe.length) { dot += cqe(i) * qe(i); i += 1 }
-          val nc =
-            -(dot / (math.sqrt(cnq.toDouble) * math.sqrt(nq.toDouble)))
-          val cmp = if (first) -1 else java.lang.Double.compare(nc, bestNc)
-          if (cmp < 0 || (cmp == 0 && cid < bestId)) {
-            bestNc = nc; bestId = cid; first = false
-          }
-        }
-        val qtab = new Array[Long](m * kCodes)
-        var j = 0
-        while (j < m) {
-          var qnorm = 0L
-          var d = 0
-          while (d < subLen) {
-            val v = qe(j * subLen + d); qnorm += v * v; d += 1
-          }
-          var c = 0
-          while (c < kCodes) {
-            val (cvec, cnorm) = cbArr(j)(c)
-            var dot = 0L
-            var i = 0
-            while (i < subLen) {
-              dot += cvec(i) * qe(j * subLen + i); i += 1
-            }
-            qtab(j * kCodes + c) = qnorm + cnorm - 2 * dot
-            c += 1
-          }
-          j += 1
-        }
-        (bestId, qtab)
-      }
-    }
-    queries.withWatermark(tsCol, watermark)
-      .withColumn("qe", VectorOps.quantize(embCol))
-      .withColumn("p", probe(col("qe")))
-      .select(col(queryIdCol), col(tsCol),
-        col("p._1").as("cell"), col("p._2").as("qtab"))
-      .join(static.coded, Seq("cell"))
-      .withColumn("adist", expr(
-        s"aggregate(sequence(0, ${m - 1}), cast(0 as bigint), " +
-          s"(acc, j) -> acc + element_at(qtab, " +
-          s"j * $kCodes + element_at(codes, j + 1) + 1))"))
-      .groupBy(window(col(tsCol), windowDuration), col(queryIdCol))
-      .agg(count(lit(1)).as("n_cell_mates"),
-        min(struct(col("adist").as("ad"), col(idCol).as("id"))).as("m"))
-      .select(col("window.start").as("bucket"), col(queryIdCol),
-        col("n_cell_mates"), col("m.ad").as("best_adist"),
-        col("m.id").as("best_id"))
-  }
-
-  /** Streaming exact dedup — the streaming twin of the batch
-    * hash-groupBy dedup (q_dedup_exact) for a continuously-arriving
-    * document feed: duplicates of a content hash are dropped while the
-    * hash's state lives, and state is evicted once the watermark passes
-    * it, so memory stays bounded at any stream length (the batch
-    * operator's "distinct forever" is unbounded by design; a stream
-    * must trade lateness for state).
-    */
-  def dedupStream(
-      docs: DataFrame, // columns: <hashCol>, <tsCol> (event time), ...
-      hashCol: String,
-      tsCol: String,
-      watermark: String = "1 hour"): DataFrame =
-    docs
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(hashCol)
-
-  /** Streaming sample-ratio-mismatch guardrail — the streaming twin of
-    * q_events_srm: per closed day, the distinct active users split
-    * across the hash variants, with the batch query's exact integer
-    * chi-square against the 50/50 design. Topology is the documented
-    * two-stateful-operator chain Spark supports natively: a
-    * watermarked `dropDuplicatesWithinWatermark` on (day, user)
-    * feeding an event-time tumbling-window aggregation — the built-in
-    * operators own both state stores, nothing custom. Append-mode
-    * output: one FINAL row per day once the watermark passes it,
-    * bit-identical to the batch query over the same closed data
-    * (parity spec-pinned). A (day, user) pair re-arriving after its
-    * dedup state expired would double-count, but the same watermark
-    * has already excluded those rows from the window — the standard
-    * within-watermark exactness trade.
-    *
-    * Day semantics: the dedup key is the UTC epoch-day — the SAME
-    * boundary `window(ts, "1 day")` aggregates on — so the two
-    * stateful stages can never disagree about which day a user
-    * belongs to. The batch twin labels days in the session timezone,
-    * so exact batch parity holds only under a UTC session (the
-    * library's test/bench configuration) — ASSERTED below rather than
-    * assumed, so a non-UTC deployment fails loudly instead of
-    * silently breaking the pinned bit-parity.
-    */
-  def srmStream(
-      events: DataFrame, // ts (event time), user_id
-      watermark: String = "1 day"): DataFrame = {
-    val tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
-    require(java.time.ZoneId.of(tz).normalized() ==
-      java.time.ZoneOffset.UTC,
-      s"srmStream buckets days by UTC epoch-day; batch-parity requires " +
-        s"spark.sql.session.timeZone=UTC (got '$tz')")
-    graft.expressions.Hash64.register(events.sparkSession)
-    val vExpr =
-      s"${graft.operators.TextOps.hash64("cast(user_id as string)")} % 2"
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"),
-        expr("floor(cast(ts as long) / 86400)").as("uday"),
-        col("user_id"))
-      .dropDuplicatesWithinWatermark("uday", "user_id")
-      .withColumn("v", expr(vExpr))
-      .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(
-        sum(when(col("v") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("v") === 1, 1L).otherwise(0L)).as("n_b"))
-      .withColumn("chi2_x1e6", expr(
-        "cast(floor(cast((n_a - n_b) as double) * (n_a - n_b) " +
-          "/ (n_a + n_b) * 1000000) as bigint)"))
-      .withColumn("srm_flag", expr("chi2_x1e6 > 3841000"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
-        col("n_a"), col("n_b"), col("chi2_x1e6"), col("srm_flag"))
-  }
-
-  /** Static corpus term statistics for [[tfidfStream]]: one row per
-    * term with its document frequency and the corpus doc count
-    * attached. Returned UNPERSISTED — same caching contract as the
-    * other static-side builders.
-    */
-  def tfidfStaticSide(
-      corpus: DataFrame, textCol: String = "text"): DataFrame = {
-    import graft.operators.TextOps
-    val base = corpus
-      .withColumn("__graft_t", TextOps.tokens(textCol))
-      .where(expr("size(__graft_t) > 0"))
-    base.select(explode(expr("array_distinct(__graft_t)")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
-  }
-
-  /** Streaming TF-IDF — score each arriving document's terms against
-    * STATIC corpus statistics (df table + corpus count, the standard
-    * production shape: corpus stats refresh offline, the stream scores
-    * online). Per-doc term counts are computed inside one projection
-    * (array expressions — no pre-aggregation), so the whole pipeline
-    * carries a SINGLE stateful aggregation: the watermarked
-    * per-(window, doc) collect of scored terms, folded to the top-k by
-    * an array sort in the output projection. Ranking uses the same
-    * exact rational key as batch q_text_tfidf (score desc, term asc).
-    * Terms absent from the corpus have no df and are dropped by the
-    * stream-static join (documented OOV behavior).
-    *
-    * Output: bucket, <idCol>, top_terms (array, best first), best_tfidf.
-    */
-  def tfidfStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      corpus: DataFrame, // textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      topK: Int = 3,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.TextOps
-    val stats = staticSide.getOrElse(
-      tfidfStaticSide(corpus, textCol).persist())
-    docs.withWatermark(tsCol, watermark)
-      .withColumn("__graft_t", TextOps.tokens(textCol))
-      .where(expr("size(__graft_t) > 0"))
-      .withColumn("__graft_tc", expr(
-        "transform(array_distinct(__graft_t), x -> " +
-          "struct(x as term, size(filter(__graft_t, y -> y = x)) as tf))"))
-      .select(col(idCol), col(tsCol),
-        explode(col("__graft_tc")).as("tc"))
-      .select(col(idCol), col(tsCol),
-        col("tc.term").as("term"), col("tc.tf").as("tf"))
-      // no broadcast hint: the vocabulary table grows with the corpus
-      // (millions of terms at scale) — let the planner/AQE choose
-      .join(stats, Seq("term"))
-      // negated exact rational rank key: array_sort ascending puts the
-      // best (highest score, then smallest term) first
-      .withColumn("nscore",
-        -(col("tf") * col("n")).cast("double") / col("df"))
-      .withColumn("tfidf", round(col("tf") *
-        log((col("n") + lit(1.0)) / (col("df") + lit(1.0))), 4))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(collect_list(
-        struct(col("nscore"), col("term"), col("tfidf"))).as("terms"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        expr(s"transform(slice(array_sort(terms), 1, $topK), " +
-          "s -> s.term)").as("top_terms"),
-        expr("element_at(array_sort(terms), 1).tfidf").as("best_tfidf"))
-  }
-
-  /** Static side for [[perplexityStream]]: the pruned, PRE-SCORED
-    * add-one bigram LM of q_text_perplexity, serving-shaped. Rows
-    * (kind, key, s), integer scores in the batch query's exact 1e-4
-    * scale:
-    *  - kind 'bg': the `topKBi` most frequent corpus bigrams, scored
-    *    with the IDENTICAL batch expression (ratio of exact counts,
-    *    one IEEE division, then -ln) — a stream doc whose bigrams are
-    *    all retained scores bit-for-bit like the batch query;
-    *  - kind 'w1': the `topKUni` most frequent unigrams with the
-    *    unseen-bigram backoff round(ln(C(w1)+V)·1e4) — add-one with
-    *    C(bigram)=0;
-    *  - kind 'oov' (key ''): the unknown-history score
-    *    round(ln(V)·1e4) — add-one with both counts 0.
-    * Pruning changes scores ONLY for n-grams outside the top-K (the
-    * CCNet serving trade: the LM table must broadcast; rare n-grams
-    * degrade to backoff). Ties in the top-K cut break
-    * deterministically (count desc, key asc). Returned UNPERSISTED —
-    * caller-owned caching contract as usual.
-    */
-  def perplexityStaticSide(
-      corpus: DataFrame, textCol: String = "text",
-      topKUni: Int = 65536, topKBi: Int = 262144): DataFrame = {
-    require(topKUni > 0 && topKBi > 0 &&
-      topKUni <= (1 << 20) && topKBi <= (1 << 20),
-      "perplexityStaticSide: the pruned LM is a broadcast static — " +
-        "top-K tables are capped at 1M rows each")
-    import graft.operators.TextOps
-    val base = corpus
-      .withColumn("__graft_t", TextOps.tokens(textCol))
-      .where(expr("size(__graft_t) >= 2"))
-    val cw = base.select(explode(col("__graft_t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cw"))
-    val vDf = cw.agg(count(lit(1)).as("v"))
-    val bgS = base
-      .select(explode(TextOps.wordShingles("__graft_t", 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("cbg"))
-      .withColumn("w1", expr("split(bg, ' ')[0]"))
-      .join(cw, col("w1") === col("w"))
-      .crossJoin(broadcast(vDf))
-      .orderBy(col("cbg").desc, col("bg").asc)
-      .limit(topKBi)
-      .select(lit("bg").as("kind"), col("bg").as("key"),
-        expr("cast(round(-ln(cast(cbg + 1 as double) / " +
-          "cast(cw + v as double)) * 10000) as bigint)").as("s"))
-    val w1S = cw.crossJoin(broadcast(vDf))
-      .orderBy(col("cw").desc, col("w").asc)
-      .limit(topKUni)
-      .select(lit("w1").as("kind"), col("w").as("key"),
-        expr("cast(round(ln(cast(cw + v as double)) * 10000) " +
-          "as bigint)").as("s"))
-    val oov = vDf.select(lit("oov").as("kind"), lit("").as("key"),
-      expr("cast(round(ln(cast(v as double)) * 10000) as bigint)")
-        .as("s"))
-    bgS.unionByName(w1S).unionByName(oov)
-  }
-
-  /** Streaming CCNet-style quality scoring — arriving docs score their
-    * mean bigram negative log-likelihood against the STATIC pruned LM
-    * (corpus counts refresh offline, the stream scores online — the
-    * q_text_perplexity serving twin). Per bigram the score resolves
-    * bg → w1-backoff → oov (three broadcast left equi-joins, the last
-    * on a constant key to attach the 1-row OOV score), so EVERY
-    * arriving doc scores — no silent drops on novel vocabulary. One
-    * stateful aggregation: the watermarked per-(window, doc) integer
-    * sum; the mean is one exact division in the output projection,
-    * identical to the batch query's display rule.
-    *
-    * Output: bucket, <idCol>, n_big, nll.
-    */
-  def perplexityStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      corpus: DataFrame, // textCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    import graft.operators.TextOps
-    docs.columns.filter(_.startsWith("__graft_")).foreach(c =>
-      require(false, s"perplexityStream: input column $c is reserved"))
-    val lm = staticSide.getOrElse(
-      perplexityStaticSide(corpus, textCol).persist())
-    val bgRows = lm.where(col("kind") === "bg")
-      .select(col("key").as("__graft_bg"), col("s").as("__graft_sbg"))
-    val w1Rows = lm.where(col("kind") === "w1")
-      .select(col("key").as("__graft_w1"), col("s").as("__graft_sw1"))
-    val oovRow = lm.where(col("kind") === "oov")
-      .select(col("s").as("__graft_soov"), lit(1).as("__graft_one"))
-    docs.withWatermark(tsCol, watermark)
-      .withColumn("__graft_t", TextOps.tokens(textCol))
-      .where(expr("size(__graft_t) >= 2"))
-      .select(col(idCol), col(tsCol),
-        explode(TextOps.wordShingles("__graft_t", 2)).as("__graft_bg"))
-      .withColumn("__graft_w1", expr("split(__graft_bg, ' ')[0]"))
-      .join(broadcast(bgRows), Seq("__graft_bg"), "left")
-      .join(broadcast(w1Rows), Seq("__graft_w1"), "left")
-      .withColumn("__graft_one", lit(1))
-      .join(broadcast(oovRow), Seq("__graft_one"), "left")
-      .withColumn("__graft_s", coalesce(
-        col("__graft_sbg"), col("__graft_sw1"), col("__graft_soov")))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(count(lit(1)).as("n_big"), sum("__graft_s").as("__graft_ss"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("n_big"),
-        (col("__graft_ss") / (col("n_big") * lit(10000.0))).as("nll"))
-  }
-
-  final case class SessionEvent(userId: Long, ts: java.sql.Timestamp)
-  final case class TransEvent(
-    userId: Long, ts: java.sql.Timestamp, eventId: Long,
-    eventType: String)
-  final case class TransState(lastTs: Long, lastId: Long, lastType: String)
-  final case class TransPair(eventType: String, nextType: String)
-  final case class FunnelEvent(
-    userId: Long, eventType: String, ts: java.sql.Timestamp)
-  final case class FunnelState(stageTimes: Seq[Long])
-  final case class FunnelOut(userId: Long, stage: Int, ts: java.sql.Timestamp)
-  final case class SessionOut(userId: Long, nEvents: Long, sessionId: Long)
-
-  final case class PackDoc(lang: String, docId: Long, nTok: Long)
-  final case class PackedDoc(
-      lang: String, docId: Long, nTok: Long, packId: Long)
-  final case class PackState(cumTokens: Long)
-
-  /** Streaming sequence packing — the stateful continuation of
-    * q_text_pack's concat-and-chunk: per-language cumulative token
-    * counts live in keyed state, so pack ids stay MONOTONE across
-    * micro-batches (a doc's pack = its exclusive running-total div
-    * `budget`, exactly the batch rule — a batch re-pack of the same
-    * arrival order reproduces the stream's assignment). Within a
-    * micro-batch a group's docs pack in docId order; across batches
-    * the order is arrival order — the contract of any online packer
-    * (a late doc packs where it ARRIVES; re-ordering would mean
-    * re-writing shipped packs). State is one counter per language —
-    * bounded by language cardinality, no timeout needed.
-    *
-    * Memory note: each (language, micro-batch) group is buffered and
-    * sorted IN MEMORY inside its task (`rows.toSeq.sortBy` — per-batch
-    * docId ordering is inherent to the contract), so per-task memory
-    * is the hot language's share of ONE trigger interval, not of the
-    * stream. On a high-rate source cap the trigger with
-    * `maxOffsetsPerTrigger`/`maxFilesPerTrigger` so that share stays
-    * executor-resident.
-    */
-  def packStream(
-      docs: Dataset[PackDoc],
-      budget: Long = 512L): Dataset[PackedDoc] = {
-    require(budget > 0, s"budget must be positive: $budget")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.groupByKey(_.lang)
-      .flatMapGroupsWithState[PackState, PackedDoc](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (lang: String, rows: Iterator[PackDoc],
-         state: GroupState[PackState]) =>
-          var st = state.getOption.getOrElse(PackState(0L))
-          val out = rows.toSeq.sortBy(_.docId).map { d =>
-            val packId = st.cumTokens / budget
-            st = PackState(st.cumTokens + d.nTok)
-            PackedDoc(lang, d.docId, d.nTok, packId)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Streaming keyword search — the serving twin of the persistent
-    * BM25 index (`operators.TextIndex`): arriving queries (id + term
-    * array) explode to (query, term) rows, join the STATIC postings /
-    * df side (term-keyed — over a catalog-bucketed postings table the
-    * static side is exchange-free, same contract as the batch probe),
-    * score with the ONE shared BM25 float discipline (per-term scores
-    * scaled to exact 1e-4 integers before the per-(query, doc) sum),
-    * and a watermarked per-(window, query) aggregation keeps the
-    * single best hit (min(struct(-s4, doc_id)) — the stream best-hit
-    * reduce used across this pack). Queries whose terms all miss the
-    * vocabulary emit nothing (a retrieval miss, not a quality gate —
-    * unlike perplexityStream's OOV contract).
-    */
-  def searchStream(
-      queries: DataFrame, // idCol, termsCol (array<string>), tsCol
-      index: graft.operators.Bm25Index,
-      idCol: String = "query_id",
-      termsCol: String = "terms",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes"): DataFrame = {
-    queries.columns.filter(_.startsWith("__graft_")).foreach(c =>
-      require(false, s"searchStream: input column $c is reserved"))
-    val post = index.postings
-      .join(index.dfTable, Seq("term"))
-      .join(index.docLens, Seq("doc_id"))
-      .crossJoin(broadcast(index.stats))
-      .select(col("term").as("__graft_term"), col("doc_id"),
-        col("tf"), col("df"), col("dl"), col("n"), col("avgdl"))
-    queries.withWatermark(tsCol, watermark)
-      .select(col(idCol), col(tsCol),
-        explode(col(termsCol)).as("__graft_term"))
-      .join(post, Seq("__graft_term"))
-      .withColumn("__graft_s",
-        log(lit(1.0) + (col("n") - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5))) *
-          (col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) *
-            (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol),
-        col("doc_id"))
-      .agg(count(lit(1)).as("__graft_nt"),
-        sum(round(col("__graft_s") * 10000).cast("long"))
-          .as("__graft_s4"))
-      .groupBy(col("window"), col(idCol))
-      .agg(min(struct((-col("__graft_s4")).as("ns"),
-        col("doc_id").as("d"))).as("m"),
-        count(lit(1)).as("n_hits"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("n_hits"), col("m.d").as("best_doc"),
-        (-col("m.ns") / 10000.0).as("best_bm25"))
-  }
-
-  /** Streaming point-in-time dimension lookup — the ONLINE side of
-    * q_join_pit's feature-store join: each arriving fact sees the
-    * static SCD2 dimension version valid at the fact's OWN event time
-    * (never a later one — the training-serving-skew guarantee, now at
-    * serving time). Stream-static inner join on (key, valid_from <=
-    * ts), then one watermarked per-(window, fact) aggregation keeps
-    * the LATEST qualifying version via the pack's best-hit reduce
-    * (max of a (valid_from, version) struct — valid_from per key is
-    * unique, so the reduce is total-ordered). Facts older than every
-    * version emit nothing (there is no feature to serve — the batch
-    * twin's version-0 bucket is a report row, not a servable value).
-    * Dim must carry (keyCol, valid_from, version).
-    */
-  def pitLookupStream(
-      facts: DataFrame, // idCol, keyCol, tsCol
-      dim: DataFrame, // keyCol, valid_from, version
-      idCol: String = "fact_id",
-      keyCol: String = "k",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes"): DataFrame = {
-    facts.columns.filter(_.startsWith("__graft_")).foreach(c =>
-      require(false, s"pitLookupStream: input column $c is reserved"))
-    val d = dim.select(col(keyCol).as("__graft_k"),
-      col("valid_from").as("__graft_vf"),
-      col("version").as("__graft_ver"))
-    facts.withWatermark(tsCol, watermark)
-      .join(d, col(keyCol) === col("__graft_k") &&
-        col("__graft_vf") <= col(tsCol))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(max(struct(col("__graft_vf").as("vf"),
-        col("__graft_ver").as("ver"))).as("m"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("m.vf").as("valid_from"), col("m.ver").as("version"))
-  }
-
-  /** STREAM-STREAM time-interval join — both sides unbounded (every
-    * other join in this pack is stream-static): left events match
-    * right events of the same key with right.ts in [left.ts,
-    * left.ts + windowSeconds]. Both sides carry the watermark, so
-    * Spark bounds the join state to watermark + window and evicts
-    * buffered rows once no future match is possible — the canonical
-    * two-feed correlation (view→purchase conversion, order→fill,
-    * request→response) at unbounded scale. Inner join: a pair emits
-    * as soon as both sides arrive; the batch twin is the identical
-    * range predicate on the static table (parity spec-pinned over
-    * the real events parquet).
-    */
-  def intervalJoinStream(
-      left: DataFrame, // keyCol, tsCol
-      right: DataFrame, // keyCol, tsCol
-      keyCol: String = "user_id",
-      tsCol: String = "ts",
-      windowSeconds: Long = 3600L,
-      watermark: String = "2 hours"): DataFrame = {
-    val l = left
-      .select(col(keyCol).as("key"), col(tsCol).as("left_ts"))
-      .withWatermark("left_ts", watermark)
-    val r = right
-      .select(col(keyCol).as("__graft_rk"), col(tsCol).as("right_ts"))
-      .withWatermark("right_ts", watermark)
-    l.join(r,
-      col("key") === col("__graft_rk") &&
-        col("right_ts") >= col("left_ts") &&
-        col("right_ts") <=
-          col("left_ts") + expr(s"interval $windowSeconds seconds"))
-      .select("key", "left_ts", "right_ts")
-  }
-
-  final case class SeriesBucket(
-      series: String, bucket: java.sql.Timestamp, cnt: Long)
-  final case class AnomalyOut(
-      series: String, bucket: java.sql.Timestamp, cnt: Long,
-      z: Option[Double], isAnomaly: Boolean)
-  final case class AnomalyState(recent: Seq[Long])
-
-  final case class WeightedArrival(key: Long, weight: Double)
-  final case class ReservoirState(
-      items: Seq[(Double, Long)], seen: Long)
-  final case class ReservoirSnapshot(
-      nSeen: Long, ids: Seq[Long], idsFp: Long)
-
-  /** Streaming weighted reservoir without replacement — the online
-    * twin of `Sampling.weightedSample`: keep the `n` arrivals with
-    * the smallest deterministic exponential keys (`-ln(u)/w`, u an
-    * md5 hash of the row key — `Sampling.exponentialKeyScala`, the
-    * compiled twin of the batch SQL, parity spec-pinned). Because the
-    * keys are a pure function of (row key, weight), the reservoir
-    * after ANY prefix of the stream equals the batch sample over
-    * that prefix — arrival order, batching, and restarts cannot
-    * change the draw (the property rand()-based reservoirs lack).
-    * Emits one snapshot per micro-batch (CUMULATIVE seen-count,
-    * sorted sample ids, order-independent id fingerprint); the
-    * snapshot whose nSeen equals the corpus size is the final
-    * sample. State: n (ek, key) pairs under ONE group key — a
-    * global top-k is inherently a single cut point, same funnel as
-    * the batch TakeOrdered's driver merge; n is sample-sized, not
-    * corpus-sized.
-    */
-  def weightedSampleStream(
-      arrivals: Dataset[WeightedArrival],
-      n: Int,
-      salt: String = ""): Dataset[ReservoirSnapshot] = {
-    require(n > 0, s"sample size must be positive: $n")
-    val spark = arrivals.sparkSession
-    import spark.implicits._
-    arrivals.groupByKey(_ => 0)
-      .flatMapGroupsWithState[ReservoirState, ReservoirSnapshot](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (_: Int, rows: Iterator[WeightedArrival],
-         state: GroupState[ReservoirState]) =>
-          var items = state.getOption.map(_.items)
-            .getOrElse(Seq.empty[(Double, Long)])
-          var seen = state.getOption.map(_.seen).getOrElse(0L)
-          rows.foreach { r =>
-            seen += 1
-            val ek = graft.operators.Sampling
-              .exponentialKeyScala(r.weight, r.key.toString, salt)
-            items = ((ek, r.key) +: items).sortBy(_._1).take(n)
-          }
-          state.update(ReservoirState(items, seen))
-          val ids = items.map(_._2).sorted
-          val fp = ids.foldLeft(0L)((a, id) =>
-            a + graft.operators.VectorOps.hash64Scala(id.toString)
-              % 1000000007L)
-          Iterator.single(ReservoirSnapshot(seen, ids, fp))
-      }
-  }
-
-  final case class SeriesValue(
-      series: String, bucket: java.sql.Timestamp, v: Long)
-  final case class FilledBucket(
-      series: String, bucket: java.sql.Timestamp, v: Long,
-      isGap: Boolean)
-  final case class HoldState(lastBucketMs: Long, lastV: Long)
-
-  /** Streaming gap filling — the stateful twin of q_events_gapfill's
-    * spine + forward fill: per series, keyed state remembers the last
-    * emitted bucket and value; when an arriving bucket jumps more
-    * than `stepSeconds` past the previous one, the missing buckets
-    * are SYNTHESIZED with the held value (`isGap = true`) before the
-    * observed bucket emits — so the output stream is a complete
-    * regular series, exactly what the batch spine produces over the
-    * same arrival order (sample-and-hold contract, parity
-    * spec-pinned). Out-of-order buckets within a micro-batch fill in
-    * bucket-time order; an arrival at or before the held bucket
-    * passes through unfilled (late data is the caller's
-    * dedup/correction policy, not the filler's). State: one
-    * (bucket, value) pair per live series — bounded, no timeout.
-    */
-  def gapFillStream(
-      values: Dataset[SeriesValue],
-      stepSeconds: Long = 3600L): Dataset[FilledBucket] = {
-    require(stepSeconds > 0, s"stepSeconds must be positive: $stepSeconds")
-    val spark = values.sparkSession
-    import spark.implicits._
-    val stepMs = stepSeconds * 1000L
-    values.groupByKey(_.series)
-      .flatMapGroupsWithState[HoldState, FilledBucket](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (series: String, rows: Iterator[SeriesValue],
-         state: GroupState[HoldState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[FilledBucket]
-          rows.toSeq.sortBy(_.bucket.getTime).foreach { r =>
-            val t = r.bucket.getTime
-            if (st != null && t > st.lastBucketMs) {
-              var fill = st.lastBucketMs + stepMs
-              while (fill < t) {
-                out += FilledBucket(series,
-                  new java.sql.Timestamp(fill), st.lastV, isGap = true)
-                fill += stepMs
-              }
-            }
-            out += FilledBucket(series, r.bucket, r.v, isGap = false)
-            if (st == null || t > st.lastBucketMs)
-              st = HoldState(t, r.v)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Streaming trailing-baseline z-score anomaly detection — the
-    * stateful continuation of q_events_anomaly: per SERIES (the batch
-    * query's single global hourly series generalizes to one series per
-    * metric/event-type), keyed state holds the last `baseline`
-    * finalized bucket counts, and each arriving bucket scores
-    * z = (m*x - S) / sqrt(m*SS - S^2) against that ring — numerator
-    * and radicand exact integers, ONE sqrt + ONE division + the same
-    * HALF_UP 4-decimal rounding Spark's `round` applies, so a batch
-    * replay of the same bucket order reproduces the stream's verdicts
-    * bit for bit (the parity spec's pin). Buckets seen before the ring
-    * fills emit z = None (exactly the batch `m = 6` gate); the current
-    * bucket never contaminates its own baseline (scored BEFORE being
-    * pushed). Input is a stream of FINALIZED bucket counts (the
-    * append-mode output of an upstream watermarked windowed count —
-    * same division of labor as packStream taking docs, not raw text).
-    * Within a micro-batch a series' buckets score in bucket-time
-    * order; across batches, arrival order — the online contract.
-    * State: `baseline` longs per live series — bounded, no timeout.
-    */
-  def anomalyStream(
-      buckets: Dataset[SeriesBucket],
-      baseline: Int = 6,
-      threshold: Double = 2.0): Dataset[AnomalyOut] = {
-    require(baseline >= 2, s"baseline must be >= 2: $baseline")
-    val spark = buckets.sparkSession
-    import spark.implicits._
-    buckets.groupByKey(_.series)
-      .flatMapGroupsWithState[AnomalyState, AnomalyOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (series: String, rows: Iterator[SeriesBucket],
-         state: GroupState[AnomalyState]) =>
-          var recent = state.getOption.map(_.recent)
-            .getOrElse(Seq.empty[Long])
-          val out = rows.toSeq.sortBy(_.bucket.getTime).map { bkt =>
-            val z =
-              if (recent.size < baseline) None
-              else {
-                val m = baseline.toLong
-                val sS = recent.sum
-                val ss = recent.map(c => c * c).sum
-                val den = m * ss - sS * sS
-                if (den <= 0) None
-                else Some(BigDecimal(
-                  (m * bkt.cnt - sS).toDouble / math.sqrt(den.toDouble))
-                  .setScale(4, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble)
-              }
-            recent = (recent :+ bkt.cnt).takeRight(baseline)
-            AnomalyOut(series, bkt.bucket, bkt.cnt, z,
-              z.exists(v => v < -threshold || v > threshold))
-          }
-          state.update(AnomalyState(recent))
-          out.iterator
-      }
-  }
-
-  final case class MixtureDoc(source: String, docId: String, nTok: Long)
-  final case class MixtureVerdict(
-      source: String, docId: String, nTok: Long,
-      cumBefore: Long, keep: Boolean)
-  final case class MixtureState(cumTokens: Long)
-
-  /** Streaming token-budget mixture — the stateful continuation of
-    * q_pipeline_mixture's take-until cut: each source's cumulative
-    * token count lives in keyed state, and an arriving doc is KEPT iff
-    * its EXCLUSIVE running total is still under the source's budget —
-    * the batch rule verbatim, so the straddling doc is kept and a
-    * source exceeds its budget by strictly less than that one doc
-    * (the MixtureBoundSpec bound). Within a micro-batch a source's
-    * docs cut in docId order; across batches, arrival order — the
-    * online contract (the batch query's md5-priority shuffle is an
-    * OFFLINE reproducibility device; an online cut takes docs as they
-    * come). The count advances for DROPPED docs too, which is what
-    * take-until means: the total is monotone, so once a source crosses
-    * its budget nothing later can sneak back in. Sources without a
-    * budget entry always drop — they are not part of the mixture.
-    *
-    * State: one counter per source — bounded by source cardinality, no
-    * timeout needed. Budgets are plan constants (a mixture spec is
-    * broadcast-sized by nature, like the scrub blocklist); refresh
-    * them by restarting the query, the same offline-refresh contract
-    * as the quality cuts and cluster lookups.
-    */
-  def mixtureStream(
-      docs: Dataset[MixtureDoc],
-      budgets: Map[String, Long]): Dataset[MixtureVerdict] = {
-    require(budgets.nonEmpty && budgets.values.forall(_ >= 0),
-      "budgets must be non-empty with non-negative token targets")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState[MixtureState, MixtureVerdict](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (source: String, rows: Iterator[MixtureDoc],
-         state: GroupState[MixtureState]) =>
-          val budget = budgets.getOrElse(source, 0L)
-          var st = state.getOption.getOrElse(MixtureState(0L))
-          val out = rows.toSeq.sortBy(_.docId).map { d =>
-            val before = st.cumTokens
-            st = MixtureState(before + d.nTok)
-            MixtureVerdict(source, d.docId, d.nTok, before,
-              before < budget)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Streaming ordered-funnel state machine — the streaming twin of
-    * q_events_funnel's greedy first-touch semantics: per user, anchor
-    * on the first `steps(0)` event, then advance one stage per
-    * matching event that is strictly later than, and within
-    * `windowSeconds` of, the previous stage's conversion time. Keyed
-    * state is ONE timestamp per converted stage (the same bound that
-    * makes the batch chain skew-safe); a row is emitted each time a
-    * user advances a stage. Window arithmetic is integer microseconds,
-    * so stage boundaries are bit-identical to the batch query's
-    * timestamp comparisons.
-    *
-    * Parity contract: processing in event-time order reproduces the
-    * batch chained-min result exactly (the first in-order qualifying
-    * event IS the min); rows are sorted per micro-batch, so in-order
-    * DELIVERY across batches gives exact parity, and a late event
-    * older than an already-converted stage is ignored — the same
-    * lateness trade every stateful twin here makes (cf. ms2 windows).
-    */
-  def funnelStream(
-      events: Dataset[FunnelEvent],
-      steps: Seq[String] = Seq("view", "click", "purchase"),
-      windowSeconds: Long = 6 * 3600L): Dataset[FunnelOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    require(steps.nonEmpty, "funnelStream: steps must be non-empty")
-    val winMicros = windowSeconds * 1000000L
-    def micros(t: java.sql.Timestamp): Long =
-      (t.getTime / 1000) * 1000000L + t.getNanos / 1000
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (userId: Long, rows: Iterator[FunnelEvent],
-         state: GroupState[FunnelState]) =>
-          var times = state.getOption
-            .map(_.stageTimes.toVector).getOrElse(Vector.empty[Long])
-          val out = Vector.newBuilder[FunnelOut]
-          rows.toSeq.sortBy(e => micros(e.ts)).foreach { e =>
-            val k = times.length // next stage to convert
-            if (k < steps.length && e.eventType == steps(k)) {
-              val t = micros(e.ts)
-              if (k == 0 || (t > times(k - 1) && t <= times(k - 1) + winMicros)) {
-                times = times :+ t
-                out += FunnelOut(userId, k + 1, e.ts)
-              }
-            }
-          }
-          state.update(FunnelState(times))
-          out.result().iterator
-      }
-  }
-
-  /** One decoded frame hash arriving on the stream (dHash in 32-bit
-    * halves, the cross-engine convention).
-    */
-  final case class FrameHash(clipId: Long, f: Int, dlo: Long, dhi: Long)
-
-  /** Keyed state of [[keyframeStream]]: the last seen frame per clip
-    * — O(1) per clip, so total state is bounded by live clip count.
-    */
-  final case class KeyframeState(lastF: Int, dlo: Long, dhi: Long)
-
-  final case class KeyframeOut(
-      clipId: Long, f: Int, ham: Int, keyframe: Boolean)
-
-  /** ONLINE shot-boundary detection — the stateful streaming twin of
-    * q_multimodal_keyframes' lag-window detector: per-clip keyed
-    * state carries only the last frame's dHash; an arriving frame
-    * emits its hamming delta and the keyframe verdict (first frame of
-    * a clip, or delta > threshold). A clip's first frame reports
-    * ham = -1 (the batch side's null lag). Frames are ordered within
-    * each micro-batch; ACROSS batches each clip's frames must arrive
-    * in index order (the sequence-packing stream's contract — a video
-    * ingest feed is naturally ordered).
-    */
-  def keyframeStream(
-      frames: Dataset[FrameHash],
-      hamThreshold: Int = 16): Dataset[KeyframeOut] = {
-    val spark = frames.sparkSession
-    import spark.implicits._
-    frames.groupByKey(_.clipId)
-      .flatMapGroupsWithState[KeyframeState, KeyframeOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (clip: Long, rows: Iterator[FrameHash],
-         state: GroupState[KeyframeState]) =>
-          var st = state.getOption.getOrElse(KeyframeState(-1, 0L, 0L))
-          val out = rows.toSeq.sortBy(_.f).map { fr =>
-            val ham =
-              if (st.lastF < 0) -1
-              else java.lang.Long.bitCount(fr.dlo ^ st.dlo) +
-                java.lang.Long.bitCount(fr.dhi ^ st.dhi)
-            st = KeyframeState(fr.f, fr.dlo, fr.dhi)
-            KeyframeOut(clip, fr.f, ham, ham < 0 || ham > hamThreshold)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Gap-based streaming sessionization with explicit keyed state —
-    * emits a row per event annotated with its running session id.
-    */
-  def sessionize(
-      events: Dataset[SessionEvent],
-      gapSeconds: Long): Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (userId: Long, rows: Iterator[SessionEvent],
-         state: GroupState[SessionState]) =>
-          var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L, 0L))
-          val out = rows.toSeq.sortBy(_.ts.getTime).map { ev =>
-            val t = ev.ts.getTime
-            st =
-              if (st.lastTs == Long.MinValue ||
-                t - st.lastTs > gapSeconds * 1000)
-                SessionState(t, st.sessionId + 1, st.nEvents + 1)
-              else st.copy(lastTs = t, nEvents = st.nEvents + 1)
-            SessionOut(userId, st.nEvents, st.sessionId)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Streaming HyperLogLog registers — the streaming twin of
-    * `Sketches.hllRegisters` (q_agg_hll's sketch): arriving rows are
-    * bucketed/rho'd by the SAME stateless projection the batch side
-    * runs (`Sketches.hllProjection`), then a running per-(group,
-    * bucket) max maintains the registers across micro-batches.
-    *
-    * This is the one streaming distinct-count whose state does NOT
-    * grow with the number of distinct keys: the aggregation state IS
-    * the sketch — at most `2^p` rows per group forever, whatever the
-    * stream's cardinality (an exact streaming distinct would hold
-    * every key seen). A snapshot of the output feeds
-    * `Sketches.hllEstimate` unchanged; the parity spec pins snapshot
-    * registers — and therefore the estimate — bit-equal to the batch
-    * sketch of the same rows, independent of micro-batch slicing
-    * (max is order- and batching-insensitive).
-    *
-    * Run with update or complete output mode (no watermark: registers
-    * never expire; they merge monotonically).
-    */
-  def hllStream(
-      rows: DataFrame,
-      keyExpr: org.apache.spark.sql.Column,
-      groupCols: Seq[String],
-      p: Int = 12): DataFrame =
-    graft.operators.Sketches.hllProjection(rows, keyExpr, groupCols, p)
-      .groupBy(groupCols.map(col) :+ col("bucket"): _*)
-      .agg(max("__rho").cast("long").as("reg"))
-
-  /** Streaming Count-Min sketch — the streaming twin of
-    * `Sketches.cmsSketch` (q_agg_cms): arriving keys explode into
-    * their d hash rows and a running per-(row, bucket) sum maintains
-    * the cells across micro-batches. Like [[hllStream]], the state IS
-    * the sketch — exactly d×w counters forever, whatever the key
-    * universe — so a feed of unbounded-cardinality keys gets
-    * point-frequency answers (`Sketches.cmsEstimate` over any
-    * snapshot) in fixed memory. Sum is batching-insensitive, so the
-    * snapshot cells are bit-equal to the batch sketch of the same
-    * rows (parity spec). Update/complete mode; no watermark — cells
-    * merge monotonically.
-    */
-  def cmsStream(
-      rows: DataFrame,
-      keyExpr: org.apache.spark.sql.Column,
-      d: Int = 4,
-      w: Int = 1024): DataFrame =
-    graft.operators.Sketches.cmsProjection(rows, keyExpr, d, w)
-      .groupBy("row", "bucket")
-      .agg(count(lit(1)).as("cnt"))
-
-  /** Streaming user-journey transitions — the streaming twin of
-    * q_events_transitions: keyed state holds ONE (ts, id, type) tuple
-    * per user (the previous event), and each arrival emits the
-    * (previous, current) pair before becoming the new state. Arrivals
-    * are ordered within a micro-batch by the batch query's exact
-    * (ts, event_id) tie-break; like the sessionizer, cross-batch
-    * correctness assumes the feed delivers a user's events in time
-    * order across batches (the state is the boundary event, so
-    * in-order feeds produce the identical pair multiset — parity
-    * spec). Downstream counting/normalizing is the consumer's plain
-    * aggregation.
-    */
-  def transitionsStream(
-      events: Dataset[TransEvent]): Dataset[TransPair] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[TransState, TransPair](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[TransEvent],
-         state: GroupState[TransState]) =>
-          var st = state.getOption
-          val out = Vector.newBuilder[TransPair]
-          rows.toSeq
-            .sortBy(e => ((e.ts.getTime / 1000) * 1000000L +
-              e.ts.getNanos / 1000, e.eventId))
-            .foreach { e =>
-              st.foreach(s => out += TransPair(s.lastType, e.eventType))
-              st = Some(TransState(e.ts.getTime, e.eventId, e.eventType))
-            }
-          st.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** Static side for [[containmentStream]]: the corpus's ranked
-    * fingerprint postings and per-doc sorted arrays — the same two
-    * relations the batch q_text_containment derives, PRE-computed so
-    * each micro-batch pays only the probe. `postings` carries the
-    * PPJoin positional metadata (rk_b = the token's rank in its doc
-    * under the global (df, fp) order, n_b = the doc's token count);
-    * `arrays` carries (b, fps_b) for the exact array-intersect
-    * overlap. Persist both (the caller owns the lifecycle).
-    */
-  def containmentStaticSide(
-      corpus: DataFrame, // idCol, textCol
-      idCol: String = "doc_id",
-      textCol: String = "text"): (DataFrame, DataFrame) = {
-    import graft.operators.TextOps
-    val fpArr = corpus
-      .withColumn("__fps", array_sort(array_distinct(
-        TextOps.charFingerprints(textCol, w = 8, step = 4))))
-      .select(col(idCol).as("b"), col("__fps").as("fps_b"),
-        size(col("__fps")).cast("long").as("n_b"))
-    val fps = fpArr.select(col("b"), col("n_b"),
-      explode(col("fps_b")).as("fp"))
-    val dfreq = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-    val postings = fps.join(dfreq, Seq("fp"))
-      .withColumn("rk_b", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("b").orderBy("df", "fp")))
-      .select("fp", "b", "rk_b", "n_b")
-    (postings, fpArr.select("b", "fps_b"))
-  }
-
-  /** Streaming containment detection — the streaming twin of
-    * q_text_containment for an arriving document feed: is this doc
-    * substantially CONTAINED in some corpus doc (C(A,B) = |A∩B|/|A|
-    * ≥ τ — the quote/subsumption direction)? Candidates come from
-    * one fp equi-join of the arrival's distinct fingerprints against
-    * the static ranked postings, pruned by the same PPJoin positional
-    * filter the batch side uses (a corpus token too late in its
-    * doc's global order to leave τ·n_a overlap room generates no
-    * candidate — lossless, the first shared token always qualifies;
-    * the arrival side skips the prefix filter entirely, which only
-    * ever widens candidates, so stream and batch verdicts agree —
-    * the parity spec pins pair-set equality). One watermarked
-    * aggregation folds the candidate rows per (window, arrival,
-    * corpus doc); the exact overlap is one array_intersect against
-    * the static per-doc arrays. Output: bucket, <idCol>, container,
-    * n_a, overlap, containment.
-    */
-  def containmentStream(
-      docs: DataFrame, // idCol, textCol, tsCol
-      postings: DataFrame, // from containmentStaticSide._1, persisted
-      arrays: DataFrame, // from containmentStaticSide._2, persisted
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      tauNum: Int = 4,
-      tauDen: Int = 5): DataFrame = {
-    import graft.operators.TextOps
-    val arr = docs.withWatermark(tsCol, watermark)
-      .withColumn("__fps", array_sort(array_distinct(
-        TextOps.charFingerprints(textCol, w = 8, step = 4))))
-      .withColumn("__n_a", size(col("__fps")).cast("long"))
-    val cand = arr.select(col(tsCol), col(idCol), col("__n_a"),
-        col("__fps"), explode(col("__fps")).as("fp"))
-      .join(postings, Seq("fp"))
-      .where(col(idCol) =!= col("b") &&
-        lit(tauDen) * (col("n_b") - col("rk_b") + 1L) >=
-          lit(tauNum) * col("__n_a"))
-    cand
-      .groupBy(window(col(tsCol), windowDuration), col(idCol),
-        col("b"))
-      .agg(first("__n_a").as("n_a"), first("__fps").as("fps_a"))
-      .join(arrays, Seq("b"))
-      .withColumn("overlap",
-        size(array_intersect(col("fps_a"), col("fps_b"))).cast("long"))
-      .where(col("overlap") * tauDen >= col("n_a") * tauNum)
-      .withColumn("containment",
-        round(col("overlap").cast("double") / col("n_a"), 4))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("b").as("container"), col("n_a"), col("overlap"),
-        col("containment"))
-  }
-
-  /** Streaming equi-width histogram — the online half of
-    * q_agg_histogram: arrivals land in the SAME integer-div bins as
-    * the batch query (the bin grid `(mn, mx)` is an offline constant
-    * broadcast into the projection, like the quality cuts and the
-    * scrub blocklist — refresh by restart), and one watermarked
-    * (window, bucket) count aggregation emits finalized per-window
-    * bins. Integer-exact end to end, so a batch replay of any window's
-    * arrivals reproduces the stream's bins bit for bit (parity
-    * spec-pinned over the real orders feed). Out-of-grid arrivals
-    * clamp into the edge bins — the online analogue of the frozen-grid
-    * append contract.
-    */
-  def histogramStream(
-      values: DataFrame, // valueCol (long), tsCol (event time)
-      mn: Long, mx: Long,
-      bins: Int = 20,
-      valueCol: String = "c",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes"): DataFrame = {
-    require(bins >= 1 && mx >= mn, s"histogramStream: bins=$bins mn=$mn mx=$mx")
-    values.withWatermark(tsCol, watermark)
-      .withColumn("bucket", expr(
-        s"greatest(0L, least(${bins - 1}L, " +
-          s"(($valueCol - ${mn}L) * ${bins}L) div (${mx}L - ${mn}L + 1L)))"))
-      .groupBy(window(col(tsCol), windowDuration), col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(valueCol).as("lo"), max(valueCol).as("hi"))
-      .select(col("window.start").as("ws"), col("bucket"), col("n"),
-        col("lo"), col("hi"))
-  }
-
-  final case class RfmEvent(
-      userId: Long, us: Long, isPurchase: Boolean, cents: Long)
-  final case class RfmState(lastUs: Long, f: Long, m: Long)
-  final case class RfmRow(userId: Long, lastUs: Long, f: Long, m: Long)
-
-  /** Streaming RFM profile — the ONLINE half of q_events_rfm: keyed
-    * state accumulates each user's (last-seen micros, purchase count,
-    * purchase cents), and every micro-batch emits the user's CURRENT
-    * profile row. All three fields are monotone non-decreasing and
-    * integer-exact, so the profile after ANY prefix of the stream
-    * equals the batch per-user aggregate over that prefix whatever the
-    * arrival order or batching (parity spec-pinned over the real
-    * events table). Segment thresholds (the batch query's fixed cuts)
-    * apply downstream against the serving anchor — recency is a
-    * read-time comparison, not state. State: 3 longs per live user.
-    */
-  def rfmStream(events: Dataset[RfmEvent]): Dataset[RfmRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.userId)
-      .mapGroupsWithState[RfmState, RfmRow](
-        GroupStateTimeout.NoTimeout()) {
-        (userId: Long, rows: Iterator[RfmEvent],
-         state: GroupState[RfmState]) =>
-          var st = state.getOption.getOrElse(RfmState(Long.MinValue, 0L, 0L))
-          rows.foreach { e =>
-            st = RfmState(
-              math.max(st.lastUs, e.us),
-              st.f + (if (e.isPurchase) 1L else 0L),
-              st.m + (if (e.isPurchase) e.cents else 0L))
-          }
-          state.update(st)
-          RfmRow(userId, st.lastUs, st.f, st.m)
-      }
-  }
-
-  final case class MergeChange(
-      k: Long, name: String, v: Long, op: String, seq: Long)
-  final case class MergeRowState(
-      seq: Long, op: String, name: String, v: Long)
-  final case class MergeSnapshot(
-      k: Long, op: String, name: String, v: Long, seq: Long)
-
-  /** Streaming CDC merge — the ONLINE half of `Merge.cdcMerge`: keyed
-    * state holds each key's winning (version, op, payload), and every
-    * micro-batch emits the key's CURRENT resolved row (op = "d" rows
-    * are live tombstones — a serving layer drops them, exactly as the
-    * batch LEFT ANTI does). The winner rule is the batch reduce
-    * verbatim — lexicographic max of (seq, op, payload) — so after ANY
-    * prefix of the feed, in ANY arrival order or batching, the state
-    * table equals the batch latest-wins reduce over that prefix, and
-    * applying the final snapshot to a base table reproduces
-    * `Merge.cdcMerge(base, feed)` row for row (parity spec-pinned).
-    * State: one row per live key — the natural lower bound for a merge
-    * view; keys never expire (a CDC table's keyset IS the state).
-    */
-  def cdcMergeStream(
-      changes: Dataset[MergeChange]): Dataset[MergeSnapshot] = {
-    val spark = changes.sparkSession
-    import spark.implicits._
-    changes.groupByKey(_.k)
-      .mapGroupsWithState[MergeRowState, MergeSnapshot](
-        GroupStateTimeout.NoTimeout()) {
-        (k: Long, rows: Iterator[MergeChange],
-         state: GroupState[MergeRowState]) =>
-          val candidates = rows.map(c =>
-            MergeRowState(c.seq, c.op, c.name, c.v)) ++
-            state.getOption.iterator
-          val best = candidates.maxBy(s => (s.seq, s.op, s.name, s.v))
-          state.update(best)
-          MergeSnapshot(k, best.op, best.name, best.v, best.seq)
-      }
-  }
-
-  /** Streaming data-quality expectations — the online twin of
-    * `Expectations.check` (q_expectations): running violation counters
-    * per rule over an unbounded ingest, maintained as ONE streaming
-    * aggregation whose state is rule-sized forever. Each arriving row
-    * projects through the SHARED indicator kernel
-    * (`Expectations.ruleIndicators` — batch and stream cannot drift),
-    * explodes into its |rules| (rule, column, bad) rows (bounded
-    * fan-out), and a (rule, col_name) grouped sum keeps the exact
-    * violation totals; `pass` is the zero-violations verdict over
-    * everything ingested so far. ForeignKey rules ride a stream-static
-    * left join against the parent's distinct keys (the parent is the
-    * static dimension, refreshed by restart like every broadcast-style
-    * constant in this file).
-    *
-    * `Unique` is rejected: exact uniqueness needs the full key history,
-    * which is the dedup family's keyed state — run `dedupStream` on the
-    * key and count arrivals minus survivors instead (the same
-    * count − countDistinct identity the batch rule computes).
-    *
-    * Run in complete (or update) output mode; no watermark — counters
-    * merge monotonically, and sums are batching-insensitive, so any
-    * snapshot equals the batch check of the rows ingested so far
-    * (parity spec-pinned under adversarial batching).
-    */
-  def expectationsStream(
-      rows: DataFrame,
-      rules: Seq[graft.operators.Expectations.Rule]): DataFrame = {
-    import graft.operators.Expectations
-    require(!rules.exists(_.isInstanceOf[Expectations.Unique]),
-      "expectationsStream: Unique needs the full key history — use " +
-        "dedupStream on the key and count arrivals minus survivors")
-    val (cur, indicators, _) = Expectations.ruleIndicators(rows, rules)
-    cur
-      .select(explode(array(indicators.map { case (rule, c, bad) =>
-        struct(lit(rule).as("rule"), lit(c).as("col_name"),
-          bad.cast("long").as("bad"))
-      }: _*)).as("i"))
-      .groupBy(col("i.rule").as("rule"), col("i.col_name").as("col_name"))
-      .agg(sum("i.bad").as("violations"))
-      .withColumn("pass", col("violations") === 0L)
-  }
-
-  /** Streaming drift monitoring — the online half of
-    * `Drift.binnedDrift` (q_drift_psi): the CURRENT side's running
-    * bin counts over the frozen grid, maintained as one complete-mode
-    * aggregation whose state is ≤ `bins` counters forever (counts
-    * merge monotonically; no watermark). Any snapshot feeds
-    * `Drift.reportFromBins` against the offline reference bins —
-    * the report kernel is SHARED with batch, so the streaming PSI
-    * verdict cannot drift from the batch one (parity spec-pinned
-    * under adversarial batching). The reference histogram is an
-    * offline constant like the quality cuts and the scrub blocklist:
-    * refresh by restart.
-    */
-  def driftBinsStream(
-      values: DataFrame,
-      mn: Long, mx: Long, bins: Int = 20,
-      valueCol: String = "v"): DataFrame =
-    values
-      .select(graft.operators.Drift.bin(valueCol, mn, mx, bins)
-        .as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n"))
-
-  /** Streaming boilerplate scoring — the streaming twin of
-    * q_text_boilerplate's per-doc half: arriving docs are scored
-    * against a FROZEN per-source boilerplate-phrase set (the offline
-    * corpus statistic, refreshed by restart like the quality cuts and
-    * the scrub blocklist). The plan is literally the batch scoring
-    * function (TextQueries.boilerplatePerDoc) applied to a streaming
-    * frame: explode → stream-static (source, gram) equi-join → one
-    * stateful per-doc aggregation in update mode — so stream and
-    * batch verdicts CANNOT drift (parity spec-pinned). Docs arrive
-    * whole (one row per doc), so each doc's stats finalize in its
-    * arrival micro-batch.
-    */
-  def boilerplateStream(docs: DataFrame, bp: DataFrame): DataFrame =
-    graft.queries.TextQueries.boilerplatePerDoc(docs, bp)
-
-  final case class DistinctEvent(
-      userId: Long, eventType: String, tsMicros: Long)
-  final case class DistinctState(
-      firstSeen: Map[String, Long], nSeen: Long)
-  final case class DistinctSnapshot(
-      userId: Long, eventType: String, firstTsMicros: Long,
-      nthDistinct: Long, nSeenEvents: Long)
-
-  /** Streaming running COUNT(DISTINCT) — the streaming twin of
-    * q_win_running_distinct: keyed state holds each user's
-    * (event_type -> min event-time) map (bounded by the TYPE
-    * vocabulary, not the event volume — the same reduction that makes
-    * the batch rewrite linear), and each micro-batch re-emits the
-    * touched user's full first-occurrence ranking. Late events are
-    * handled exactly (a new earlier ts re-ranks the map — no
-    * watermark approximation), so the LATEST snapshot per user (max
-    * nSeenEvents, the monotone version stamp) equals the batch
-    * ranking over the same prefix whatever the batching or arrival
-    * order (parity spec-pinned). Update-mode output.
-    */
-  def runningDistinctStream(
-      events: Dataset[DistinctEvent]): Dataset[DistinctSnapshot] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[DistinctState, DistinctSnapshot](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()) {
-        (u: Long, rows: Iterator[DistinctEvent],
-         state: GroupState[DistinctState]) =>
-          val prev = state.getOption
-            .getOrElse(DistinctState(Map.empty, 0L))
-          var first = prev.firstSeen
-          var nNew = 0L
-          rows.foreach { e =>
-            nNew += 1L
-            val cur = first.get(e.eventType)
-            if (cur.forall(e.tsMicros < _))
-              first = first.updated(e.eventType, e.tsMicros)
-          }
-          // monotone version stamp: total events seen for this user
-          val seenSoFar = prev.nSeen + nNew
-          state.update(DistinctState(first, seenSoFar))
-          first.toSeq
-            .sortBy { case (t, ts) => (ts, t) }
-            .zipWithIndex.iterator.map { case ((t, ts), i) =>
-              DistinctSnapshot(u, t, ts, i + 1L, seenSoFar)
-            }
-      }
-  }
-
-  /** Streaming winsorized stats — the streaming twin of
-    * q_events_winsorized's scoring half: arriving events are clipped
-    * against a FROZEN per-type [lo, hi] cut table (the offline GK
-    * quantiles, refreshed by restart like the quality cuts and the
-    * scrub blocklist) and folded into a running per-type aggregate.
-    * The plan is a stream-static broadcast-able equi-join on the
-    * tiny cut table plus one stateful combining aggregation in
-    * update mode — the same exact-integer columns as the batch
-    * query, so the LATEST row per type equals the batch result over
-    * the same prefix (parity spec-pinned).
-    * `events`: (event_type, v6); `cuts`: (event_type, lo, hi).
-    */
-  def winsorizedStream(events: DataFrame, cuts: DataFrame): DataFrame =
-    events
-      .join(broadcast(cuts), Seq("event_type"))
-      .withColumn("w", least(greatest(col("v6"), col("lo")),
-        col("hi")))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        first("lo").as("lo_v6"), first("hi").as("hi_v6"),
-        sum(when(col("v6") < col("lo"), 1L).otherwise(0L))
-          .as("n_clip_lo"),
-        sum(when(col("v6") > col("hi"), 1L).otherwise(0L))
-          .as("n_clip_hi"),
-        sum("w").as("sum_w6"))
-
-  final case class ArrivalEvent(
-      userId: Long, eventId: Long, tsMicros: Long)
-  final case class DisorderState(
-      maxTs: Long, nEvents: Long, nLate: Long, maxLate: Long,
-      sumLate: Long)
-  final case class DisorderSnapshot(
-      userId: Long, nEvents: Long, nLate: Long, maxLateUs: Long,
-      sumLateUs: Long)
-
-  /** Streaming event-time disorder monitor — the streaming twin of
-    * q_events_disorder's per-user lateness core: keyed state carries
-    * the user's running max event time plus four exact integer
-    * counters; each arriving event's lateness is its distance behind
-    * that max. Within a micro-batch, rows are processed in ingest-id
-    * order (the batch query's arrival order), so snapshots are
-    * batching-invariant and the LATEST per user (max nEvents, the
-    * monotone stamp) equals the batch lateness aggregate over the
-    * same prefix — parity spec-pinned. This is the live view of the
-    * watermark-sizing audit: alert when late ppm or max lateness
-    * drifts past what the configured watermark absorbs.
-    */
-  def disorderStream(
-      events: Dataset[ArrivalEvent]): Dataset[DisorderSnapshot] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[DisorderState, DisorderSnapshot](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()) {
-        (u: Long, rows: Iterator[ArrivalEvent],
-         state: GroupState[DisorderState]) =>
-          var st = state.getOption
-            .getOrElse(DisorderState(Long.MinValue, 0L, 0L, 0L, 0L))
-          rows.toSeq.sortBy(_.eventId).foreach { e =>
-            val late =
-              if (st.maxTs == Long.MinValue) 0L
-              else math.max(0L, st.maxTs - e.tsMicros)
-            st = DisorderState(
-              math.max(st.maxTs, e.tsMicros),
-              st.nEvents + 1L,
-              st.nLate + (if (late > 0) 1L else 0L),
-              math.max(st.maxLate, late),
-              st.sumLate + late)
-          }
-          state.update(st)
-          Iterator.single(DisorderSnapshot(
-            u, st.nEvents, st.nLate, st.maxLate, st.sumLate))
-      }
-  }
-
-  final case class EntropyEvent(userId: Long, eventType: String)
-  final case class EntropyState(counts: Map[String, Long])
-  final case class EntropySnapshot(
-      userId: Long, nEvents: Long, nTypes: Long, hX1e6: Long)
-
-  /** Streaming behavioral entropy — the streaming twin of
-    * q_events_entropy: keyed state holds the user's event-type
-    * histogram (bounded by the type vocabulary, NOT the event
-    * volume), and each micro-batch emits one updated snapshot per
-    * touched user. The per-term math is the batch query's expression
-    * verbatim — round(ln(n/c)·c·1e6/n) summed as bigints — so the
-    * LATEST snapshot per user is bit-identical to the batch result
-    * over the same prefix, whatever the batching (parity
-    * spec-pinned). Update-mode output: downstream picks the max-n
-    * snapshot per user (nEvents is the monotone version stamp).
-    */
-  def entropyStream(
-      events: Dataset[EntropyEvent]): Dataset[EntropySnapshot] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[EntropyState, EntropySnapshot](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()) {
-        (u: Long, rows: Iterator[EntropyEvent],
-         state: GroupState[EntropyState]) =>
-          var counts = state.getOption.map(_.counts)
-            .getOrElse(Map.empty[String, Long])
-          rows.foreach { e =>
-            counts = counts.updated(e.eventType,
-              counts.getOrElse(e.eventType, 0L) + 1L)
-          }
-          state.update(EntropyState(counts))
-          val n = counts.values.sum
-          // identical op order to the batch expr
-          // ln(n/c) * c * 1000000 / n (left-associative), terms are
-          // non-negative so math.round == Spark's HALF_UP round
-          val h = counts.values.map { c =>
-            math.round(math.log(n.toDouble / c.toDouble) *
-              c * 1000000L / n)
-          }.sum
-          Iterator.single(EntropySnapshot(u, n, counts.size.toLong, h))
-      }
-  }
-
-  /** Static side for [[imageNearDupStream]] / [[imageFunnelStream]]:
-    * the pHash band table of an already-ingested image corpus —
-    * production decode (Multimodal.featuresColumn, undecodable blobs
-    * drop: a zero pHash must not become a collision magnet), the same
-    * 7 x 9-bit bands as the batch near-dup (q_multimodal_neardup).
-    * Persist it and reuse across queries; at scale it is a plain
-    * hash-partitioned static relation keyed by (band, key).
-    */
-  def imageNearDupStaticSide(
-      corpus: DataFrame, // idCol, mediaCol
-      idCol: String = "img",
-      mediaCol: String = "media"): DataFrame =
-    corpus
-      .withColumn("__mf",
-        graft.operators.Multimodal.featuresColumn(col(mediaCol)))
-      .where(col("__mf.decoded"))
-      .select(col(idCol).as("dup_of"),
-        col("__mf.phash").as("corpus_phash"))
-      .withColumn("j", explode(sequence(lit(0), lit(6))))
-      .withColumn("bk", expr("shiftright(corpus_phash, j * 9) & 511"))
-      .select("j", "bk", "dup_of", "corpus_phash")
-      .distinct()
-
-  /** Streaming image near-dup flagging against a static corpus — the
-    * streaming twin of q_multimodal_neardup for a continuously-
-    * arriving media feed: each arriving blob runs the production
-    * decode column (stateless), its pHash explodes into the 7 x 9-bit
-    * LSH bands, and an equi-join to the precomputed corpus band table
-    * yields candidates, verified at hamming <= `maxHamming` (the
-    * pigeonhole guarantee carries over: <= 6 flipped bits cannot
-    * dirty all 7 bands, so recall vs the corpus is exact at the
-    * verify threshold). Self-matches (same id in feed and corpus) are
-    * excluded. A watermarked per-(window, id) max/min folds the band
-    * rows to ONE verdict row; undecodable blobs emit a verdict row
-    * with is_neardup = false and decoded = false (the funnel needs
-    * the drop accounting). The stream side never shuffles more than
-    * its own micro-batch; the corpus bands are a static equi-join
-    * side.
-    *
-    * Output: bucket, <idCol>, decoded, is_neardup, dup_of (smallest
-    * verified corpus id, null when none).
-    */
-  def imageNearDupStream(
-      images: DataFrame, // idCol, mediaCol, tsCol
-      corpus: DataFrame, // idCol, mediaCol
-      idCol: String = "img",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      maxHamming: Int = 6,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val corpusBands = staticSide.getOrElse(
-      imageNearDupStaticSide(corpus, idCol, mediaCol).persist())
-    bandProbe(images, corpusBands, idCol, mediaCol, tsCol, watermark,
-        maxHamming, onlySmallerIds = false)
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(max(col("decoded")).as("decoded"),
-        max(col("dup_of").isNotNull).as("is_neardup"),
-        min(col("dup_of")).as("dup_of"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("decoded"), col("is_neardup"), col("dup_of"))
-  }
-
-  /** Shared stateless probe: decode column -> band explode -> corpus
-    * band join -> hamming verify. Non-decoded rows pass through on a
-    * sentinel band (-1) that can never match a corpus band, so every
-    * arriving id reaches the verdict aggregation exactly once per
-    * matched band row (or once unmatched). `onlySmallerIds` keeps the
-    * batch dedup discipline (drop only when an EARLIER — smaller-id —
-    * near-dup exists), which makes survivor sets deterministic
-    * whatever the arrival order.
-    */
-  private def bandProbe(
-      images: DataFrame, corpusBands: DataFrame, idCol: String,
-      mediaCol: String, tsCol: String, watermark: String,
-      maxHamming: Int, onlySmallerIds: Boolean): DataFrame = {
-    val verified =
-      expr(s"bit_count(phash ^ corpus_phash) <= $maxHamming") &&
-        col("dup_of") =!= col(idCol) &&
-        (if (onlySmallerIds) col("dup_of") < col(idCol) else lit(true))
-    images.withWatermark(tsCol, watermark)
-      .withColumn("__mf",
-        graft.operators.Multimodal.featuresColumn(col(mediaCol)))
-      .select(col(idCol), col(tsCol), col("__mf.decoded").as("decoded"),
-        col("__mf.px_sum").as("px_sum"), col("__mf.phash").as("phash"))
-      .withColumn("j", explode(when(col("decoded"),
-        sequence(lit(0), lit(6))).otherwise(array(lit(-1)))))
-      .withColumn("bk", expr("shiftright(phash, j * 9) & 511"))
-      .join(corpusBands, Seq("j", "bk"), "left")
-      .withColumn("dup_of", when(verified, col("dup_of")))
-  }
-
-  /** Static side for [[audioMatchStream]]: the landmark table of a
-    * fingerprinted WAV catalog — one (landmark id, clip, frame) row
-    * per consecutive-peak triple (AudioFingerprint.landmarks through
-    * the real sample decode). 512 landmark buckets; persist and reuse.
-    */
-  def audioFpStaticSide(
-      catalog: DataFrame, // idCol, mediaCol (WAV bytes)
-      idCol: String = "clip",
-      mediaCol: String = "media"): DataFrame = {
-    val lms = udf { bytes: Array[Byte] =>
-      graft.operators.AudioHeader
-        .pcm16Samples(if (bytes == null) Array.empty[Byte] else bytes)
-        .map(graft.operators.AudioFingerprint.landmarks)
-        .getOrElse(Array.empty[(Int, Int)])
-        .map { case (t, lid) => t * 512 + lid }.toSeq
-    }
-    catalog
-      .withColumn("__lm", explode(lms(col(mediaCol))))
-      .select(col(idCol).as("cat_clip"),
-        expr("__lm div 512").as("cat_t"), expr("__lm % 512").as("lid"))
-  }
-
-  /** Streaming audio landmark matching against a static catalog — the
-    * audio twin of [[imageNearDupStream]] and the online form of
-    * q_multimodal_audiodup's retrieval: each arriving WAV blob is
-    * landmark-fingerprinted (stateless: sample decode + integer DFT +
-    * peak triples), its landmarks equi-join the catalog's 512-bucket
-    * landmark table (collision slivers, never all-pairs), and a
-    * watermarked count per (window, clip, catalog clip, time offset)
-    * yields the aligned-match evidence; rows meeting `minAligned`
-    * ship as match verdicts — one row per (catalog clip, offset), the
-    * Shazam decision shape (a true match concentrates its count at
-    * ONE offset; random collisions spread thin and never reach the
-    * threshold). A blob's whole landmark set rides on its single
-    * input row, so one stateful aggregation completes the match — no
-    * chained streaming aggs. Self-matches are excluded.
-    *
-    * Output: bucket, <idCol>, cat_clip, dt (frame offset stream −
-    * catalog), n_aligned (>= minAligned).
-    */
-  def audioMatchStream(
-      clips: DataFrame, // idCol, mediaCol, tsCol
-      catalog: DataFrame, // idCol, mediaCol
-      idCol: String = "clip",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      minAligned: Int = 8,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val catalogLms = staticSide.getOrElse(
-      audioFpStaticSide(catalog, idCol, mediaCol).persist())
-    val lms = udf { bytes: Array[Byte] =>
-      graft.operators.AudioHeader
-        .pcm16Samples(if (bytes == null) Array.empty[Byte] else bytes)
-        .map(graft.operators.AudioFingerprint.landmarks)
-        .getOrElse(Array.empty[(Int, Int)])
-        .map { case (t, lid) => t * 512 + lid }.toSeq
-    }
-    clips.withWatermark(tsCol, watermark)
-      .withColumn("__lm", explode(lms(col(mediaCol))))
-      .withColumn("t", expr("__lm div 512"))
-      .withColumn("lid", expr("__lm % 512"))
-      .join(catalogLms, Seq("lid"))
-      .where(col("cat_clip") =!= col(idCol))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol),
-        col("cat_clip"), (col("t") - col("cat_t")).as("dt"))
-      .agg(count(lit(1)).as("n_aligned"))
-      .where(col("n_aligned") >= minAligned)
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("cat_clip"), col("dt"), col("n_aligned"))
-  }
-
-  /** The streaming IMAGE-corpus build funnel — the online composition
-    * of q_pipeline_images' stages, the way the text funnel relays
-    * quality -> cluster-assign -> contamination -> pack: arriving
-    * media runs ONE decode-column pass, then the decode gate, the
-    * luminance quality gate (mean gray < `lumaMax`), and the banded
-    * near-dup assignment against the already-ingested catalog with
-    * the batch discipline (drop only on a SMALLER-id verified
-    * near-dup, so the survivor set is arrival-order-independent and
-    * equals the batch funnel's kept set when the catalog is the batch
-    * corpus). One watermarked aggregation emits one verdict row per
-    * image with full funnel accounting.
-    *
-    * Output: bucket, <idCol>, decoded, quality_ok, is_neardup,
-    * dup_of, survived.
-    */
-  def imageFunnelStream(
-      images: DataFrame, // idCol, mediaCol, tsCol
-      corpus: DataFrame, // idCol, mediaCol
-      idCol: String = "img",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      lumaMax: Int = 170,
-      maxHamming: Int = 6,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val corpusBands = staticSide.getOrElse(
-      imageNearDupStaticSide(corpus, idCol, mediaCol).persist())
-    funnelVerdict(
-      bandProbe(images, corpusBands, idCol, mediaCol, tsCol, watermark,
-          maxHamming, onlySmallerIds = true)
-        .withColumn("quality_ok",
-          col("decoded") && expr(s"px_sum div 1024 < $lumaMax"))
-        .groupBy(window(col(tsCol), windowDuration), col(idCol))
-        .agg(max(col("decoded")).as("decoded"),
-          max(col("quality_ok")).as("quality_ok"),
-          min(when(col("quality_ok"), col("dup_of"))).as("dup_of")),
-      idCol, "decoded")
-  }
-
-  /** Temporal-shingle kernels [[videoFunnelStream]] /
-    * [[videoFpStaticSide]] accept as their container plug: MP4 (the
-    * default), animated GIF, and animated PNG — all fold into the
-    * same base-M shingle space, so a mixed catalog even dedups
-    * ACROSS containers.
-    */
-  val Mp4Shingler: Array[Byte] => Seq[graft.operators.Multimodal.VideoShingle] =
-    graft.operators.Multimodal.videoShingleRows(_, 3)
-  val GifShingler: Array[Byte] => Seq[graft.operators.Multimodal.VideoShingle] =
-    graft.operators.Multimodal.gifShingleRows(_, 3)
-  val ApngShingler: Array[Byte] => Seq[graft.operators.Multimodal.VideoShingle] =
-    graft.operators.Multimodal.apngShingleRows(_, 3)
-
-  /** Container-DISPATCHING plug for MIXED animation streams: GIF and
-    * APNG blobs in one stream/catalog, one shingle space — the
-    * streaming face of q_pipeline_anim's cross-container dedup.
-    */
-  val AnimShingler: Array[Byte] => Seq[graft.operators.Multimodal.VideoShingle] =
-    graft.operators.Multimodal.animShingleRows(_, 3)
-
-  /** Static side for [[videoMatchStream]]: the temporal-shingle table
-    * of a fingerprinted MP4 catalog — one (sid, clip, frame) row per
-    * 3-frame dHash shingle ([[graft.operators.Multimodal.videoShingles]]
-    * through the real demux + image-kernel decode). Persist and reuse.
-    */
-  def videoFpStaticSide(
-      catalog: DataFrame, // idCol, mediaCol (MP4 or GIF bytes)
-      idCol: String = "clip",
-      mediaCol: String = "media",
-      shingler: Array[Byte] => Seq[graft.operators.Multimodal.VideoShingle] =
-        Mp4Shingler): DataFrame = {
-    val sh = udf((bytes: Array[Byte]) =>
-      shingler(if (bytes == null) Array.empty[Byte] else bytes))
-    catalog.select(col(idCol), col(mediaCol))
-      .withColumn("__vs", explode(sh(col(mediaCol))))
-      .select(col(idCol).as("cat_clip"), col("__vs.t").as("cat_t"),
-        col("__vs.sid").as("sid"))
-  }
-
-  /** Streaming video shingle matching against a static catalog — the
-    * video twin of [[audioMatchStream]], completing the per-modality
-    * batch/stream dedup symmetry (text nearDupStream / image
-    * imageNearDupStream / audio audioMatchStream / video here) and
-    * the online form of q_multimodal_videodup's retrieval: each
-    * arriving MP4 blob is shingle-fingerprinted (stateless: sample-
-    * table demux + per-frame image decode + dHash fold — the whole
-    * clip rides on its one input row), its shingles equi-join the
-    * catalog's shingle table on `sid` (collision slivers, never
-    * all-pairs), and a watermarked count per (window, clip, catalog
-    * clip, frame offset) yields the aligned-match evidence; rows
-    * meeting `minAligned` ship as match verdicts — a true duplicate
-    * concentrates its count at ONE offset (dHash cancels brightness
-    * re-grades, the shingle key is shift-covariant), while chance
-    * collisions spread thin. One stateful aggregation completes the
-    * match — no chained streaming aggs. Self-matches are excluded.
-    *
-    * Output: bucket, <idCol>, cat_clip, dt (frame offset stream −
-    * catalog), n_aligned (>= minAligned).
-    */
-  def videoMatchStream(
-      clips: DataFrame, // idCol, mediaCol, tsCol
-      catalog: DataFrame, // idCol, mediaCol
-      idCol: String = "clip",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      minAligned: Int = 6,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val catalogSh = staticSide.getOrElse(
-      videoFpStaticSide(catalog, idCol, mediaCol).persist())
-    graft.operators.Multimodal.videoShingles(
-        clips.withWatermark(tsCol, watermark)
-          .select(col(idCol), col(tsCol), col(mediaCol)), mediaCol)
-      .join(catalogSh, Seq("sid"))
-      .where(col("cat_clip") =!= col(idCol))
-      .groupBy(window(col(tsCol), windowDuration), col(idCol),
-        col("cat_clip"), (col("t") - col("cat_t")).as("dt"))
-      .agg(count(lit(1)).as("n_aligned"))
-      .where(col("n_aligned") >= minAligned)
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("cat_clip"), col("dt"), col("n_aligned"))
-  }
-
-  /** The shared funnel verdict projection all three media funnel
-    * streams end with (the streaming face of
-    * [[graft.operators.CorpusFunnel]]'s keep-smallest discipline):
-    * bucket, id, <gate>, quality_ok, is_neardup, dup_of, survived —
-    * where a clip survives iff it passed the quality gate and no
-    * smaller-id near-duplicate was found.
-    */
-  private def funnelVerdict(
-      df: DataFrame, idCol: String, gateCol: String): DataFrame =
-    df.select(col("window.start").as("bucket"), col(idCol),
-      col(gateCol), col("quality_ok"),
-      (col("quality_ok") && col("dup_of").isNotNull).as("is_neardup"),
-      col("dup_of"),
-      (col("quality_ok") && col("dup_of").isNull).as("survived"))
-
-  /** min cat_clip over evidence groups (cat_clip, dt) with >=
-    * `minAligned` occurrences — the funnel streams' aligned-offset
-    * verify. Single pass: sort the evidence array once, then an
-    * indexed-lambda scan marks position i when the element
-    * minAligned-1 slots earlier is (cat_clip, dt)-equal (all entries
-    * between are equal too in a sorted array, so a run of >=
-    * minAligned contains i). O(E log E) vs the naive
-    * filter-inside-filter O(E^2), which goes quadratic when a hot
-    * shingle/landmark bucket collides with many catalog entries.
-    */
-  private def alignedDupOf(
-      evCol: String, minAligned: Int): org.apache.spark.sql.Column = {
-    val k = minAligned - 1
-    // transform(array(sorted), s -> ...) binds the sorted array ONCE
-    // as a lambda variable — projection collapse would otherwise
-    // inline a withColumn alias and re-sort per reference
-    expr(s"""(transform(array(array_sort($evCol)), s ->
-       array_min(transform(filter(s, (x, i) ->
-         i >= $k AND s[i - $k].cat_clip = x.cat_clip
-         AND s[i - $k].dt = x.dt),
-         x -> x.cat_clip))))[0]""")
-  }
-
-  /** The streaming VIDEO-corpus build funnel — the online composition
-    * of q_pipeline_video's stages (and, with `shingler =
-    * GifShingler`, of q_pipeline_gif's — the container is a PLUG),
-    * the way [[imageFunnelStream]]
-    * relays the image funnel: each arriving container runs ONE
-    * shingle-kernel pass (demux + per-frame decode + dHash fold, all
-    * on the clip's single input row), then the demux gate (no
-    * shingles = truncated/foreign container), the frame-count quality
-    * gate (`minShingles` — frame count minus two, derived from the
-    * same pass), and the temporal near-dup assignment against the
-    * already-ingested catalog with the batch keep-smallest
-    * discipline. The aligned-offset verify keeps the pack's
-    * one-stateful-agg rule: the windowed aggregation collects only
-    * the smaller-id band-collision EVIDENCE (cat_clip, dt) slivers,
-    * and the >= `minAligned` count per (catalog clip, offset) is a
-    * STATELESS post-aggregation array fold — no chained streaming
-    * aggs, state bounded by collision volume. Survivor sets are
-    * arrival-order-independent and equal the batch funnel's kept set
-    * when the catalog is the batch corpus.
-    *
-    * Output: bucket, <idCol>, demuxed, quality_ok, is_neardup,
-    * dup_of, survived.
-    */
-  def videoFunnelStream(
-      clips: DataFrame, // idCol, mediaCol, tsCol
-      catalog: DataFrame, // idCol, mediaCol
-      idCol: String = "clip",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      minShingles: Int = 6,
-      minAligned: Int = 6,
-      staticSide: Option[DataFrame] = None,
-      shingler: Array[Byte] => Seq[graft.operators.Multimodal.VideoShingle] =
-        Mp4Shingler): DataFrame = {
-    // batch parity relies on a non-quality catalog clip (< minShingles
-    // shingles) never reaching minAligned aligned cells — which holds
-    // exactly when minAligned >= minShingles (the audio twin instead
-    // gates its static side, see audioFunnelStaticSide)
-    require(minAligned >= minShingles,
-      s"minAligned ($minAligned) must be >= minShingles ($minShingles)")
-    val catalogSh = staticSide.getOrElse(
-      videoFpStaticSide(catalog, idCol, mediaCol, shingler).persist())
-    val shArr = udf((bytes: Array[Byte]) =>
-      shingler(if (bytes == null) Array.empty[Byte] else bytes))
-    // non-quality clips ride a sentinel shingle (sid -1 can never
-    // match a catalog key, which is a non-negative base-M fold), so
-    // every arriving id reaches the verdict aggregation exactly once
-    val sentinel = array(struct(lit(-1).as("t"), lit(-1L).as("fk"),
-      lit(-1L).as("sid")))
-    clips.withWatermark(tsCol, watermark)
-      .select(col(idCol), col(tsCol), shArr(col(mediaCol)).as("__sh"))
-      .withColumn("demuxed", size(col("__sh")) > 0)
-      .withColumn("quality_ok", size(col("__sh")) >= minShingles)
-      .withColumn("s",
-        explode(when(col("quality_ok"), col("__sh")).otherwise(sentinel)))
-      .select(col(idCol), col(tsCol), col("demuxed"), col("quality_ok"),
-        col("s.t").as("t"), col("s.sid").as("sid"))
-      .join(catalogSh, Seq("sid"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(max(col("demuxed")).as("demuxed"),
-        max(col("quality_ok")).as("quality_ok"),
-        collect_list(when(col("cat_clip") < col(idCol),
-          struct(col("cat_clip"), (col("t") - col("cat_t")).as("dt"))))
-          .as("__ev"))
-      .withColumn("dup_of", alignedDupOf("__ev", minAligned))
-      .transform(funnelVerdict(_, idCol, "demuxed"))
-  }
-
-  /** Static side for [[audioFunnelStream]]: the landmark table of the
-    * catalog's QUALITY survivors — the same decode + duration gates
-    * the arriving side runs, so the near-dup discipline matches the
-    * batch funnel's dedup-among-quality exactly. This filter is NOT
-    * optional for audio: a too-short catalog clip still carries
-    * enough landmarks to clear `minAligned` (unlike the video twin,
-    * where a non-quality clip's shingle count is bounded below
-    * minAligned by construction), so an unfiltered catalog would veto
-    * arriving clips the batch funnel keeps.
-    */
-  /** PCM16 decoders [[audioFunnelStream]]/[[audioFunnelStaticSide]]
-    * accept as their container plug: WAV through the UNIFIED codec
-    * entry point (the default — [[graft.operators.AudioCodecs.samples]]
-    * dispatches on the fmt chunk's audioFormat, so G.711 µ-law/A-law,
-    * IMA-ADPCM, and 8/24-bit/float-32 WAVs ride the same gates as
-    * plain PCM16, decoding to the identical stream their PCM16 twin
-    * carries) and FLAC (the CRC-gated [[graft.operators.FlacDecode]]).
-    * Named values rather than arbitrary lambdas so the plug stays
-    * serializable and the funnel's decode-gate semantics stay
-    * documented per container.
-    */
-  val WavDecoder: Array[Byte] => Option[Array[Short]] =
-    graft.operators.AudioCodecs.samples(_)
-  val FlacDecoder: Array[Byte] => Option[Array[Short]] =
-    graft.operators.FlacDecode.pcm16Samples(_)
-
-  /** Ogg-FLAC plug: reassemble the embedded FLAC stream from the Ogg
-    * pages ([[graft.operators.OggHeader.oggFlacStream]] — CRC-gated,
-    * packets rejoined across page boundaries) and decode it, so .oga
-    * streams ride the same funnel gates as .flac.
-    */
-  val OggFlacDecoder: Array[Byte] => Option[Array[Short]] = b =>
-    graft.operators.OggHeader
-      .oggFlacStream(if (b == null) Array.empty[Byte] else b)
-      .flatMap(graft.operators.FlacDecode.pcm16Samples)
-
-  def audioFunnelStaticSide(
-      catalog: DataFrame, // idCol, mediaCol (PCM16-bearing bytes)
-      idCol: String = "clip",
-      mediaCol: String = "media",
-      minSamples: Long = 512L,
-      decoder: Array[Byte] => Option[Array[Short]] = WavDecoder)
-      : DataFrame = {
-    val lms = udf { bytes: Array[Byte] =>
-      val b = if (bytes == null) Array.empty[Byte] else bytes
-      decoder(b)
-        .filter(_.length >= minSamples)
-        .map(graft.operators.AudioFingerprint.landmarks)
-        .getOrElse(Array.empty[(Int, Int)])
-        .map { case (t, lid) => t * 512 + lid }.toSeq
-    }
-    catalog
-      .withColumn("__lm", explode(lms(col(mediaCol))))
-      .select(col(idCol).as("cat_clip"),
-        expr("__lm div 512").as("cat_t"), expr("__lm % 512").as("lid"))
-  }
-
-  /** The streaming AUDIO-corpus build funnel — the online composition
-    * of q_pipeline_audio's stages (and, with `decoder = FlacDecoder`,
-    * of q_pipeline_flac's — the container is a PLUG), completing the
-    * per-modality batch/stream funnel symmetry (text / image / video
-    * / audio): each arriving blob runs ONE decode+fingerprint kernel
-    * pass (container decode + landmark triples, all on its single
-    * input row),
-    * then the decode gate, the duration quality gate on the REAL
-    * decoded sample count, and the landmark near-dup assignment
-    * against the already-ingested catalog with the batch
-    * keep-smallest discipline. Same one-stateful-agg shape as
-    * [[videoFunnelStream]]: the windowed aggregation collects only
-    * smaller-id landmark-collision evidence (cat_clip, dt) and the
-    * >= `minAligned` verify is a stateless post-aggregation array
-    * fold. Non-quality clips ride a sentinel landmark id (-1 never
-    * matches the 0..511 catalog buckets) so every arriving id gets a
-    * funnel verdict row.
-    *
-    * Output: bucket, <idCol>, decoded, quality_ok, is_neardup,
-    * dup_of, survived.
-    */
-  def audioFunnelStream(
-      clips: DataFrame, // idCol, mediaCol, tsCol
-      catalog: DataFrame, // idCol, mediaCol (PCM16-bearing bytes)
-      idCol: String = "clip",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      minSamples: Long = 512L,
-      minAligned: Int = 8,
-      staticSide: Option[DataFrame] = None,
-      decoder: Array[Byte] => Option[Array[Short]] = WavDecoder)
-      : DataFrame = {
-    val catalogLms = staticSide.getOrElse(
-      audioFunnelStaticSide(catalog, idCol, mediaCol, minSamples,
-        decoder).persist())
-    val kernel = udf { bytes: Array[Byte] =>
-      val b = if (bytes == null) Array.empty[Byte] else bytes
-      decoder(b) match {
-        case Some(sm) => graft.queries.AudioFunnelRow(true,
-          sm.length.toLong,
-          graft.operators.AudioFingerprint.landmarks(sm)
-            .map { case (t, lid) => t * 512 + lid }.toSeq)
-        case None =>
-          graft.queries.AudioFunnelRow(false, 0L, Seq.empty)
-      }
-    }
-    clips.withWatermark(tsCol, watermark)
-      .select(col(idCol), col(tsCol), kernel(col(mediaCol)).as("__af"))
-      .withColumn("decoded", col("__af.decoded"))
-      .withColumn("quality_ok",
-        col("decoded") && col("__af.n_samples") >= minSamples)
-      .withColumn("__lm", explode(when(col("quality_ok"),
-        col("__af.lms")).otherwise(array(lit(-1)))))
-      .select(col(idCol), col(tsCol), col("decoded"), col("quality_ok"),
-        expr("__lm div 512").as("t"), expr("__lm % 512").as("lid"))
-      .join(catalogLms, Seq("lid"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(max(col("decoded")).as("decoded"),
-        max(col("quality_ok")).as("quality_ok"),
-        collect_list(when(col("cat_clip") < col(idCol),
-          struct(col("cat_clip"), (col("t") - col("cat_t")).as("dt"))))
-          .as("__ev"))
-      .withColumn("dup_of", alignedDupOf("__ev", minAligned))
-      .transform(funnelVerdict(_, idCol, "decoded"))
-  }
-
-  /** Union multimodal band membership shared by [[pairAssignStream]]
-    * and its static side: caption minhash bands ("t:"-prefixed, the
-    * [[graft.operators.TextOps.bandedDocs]] geometry) plus 3 x 21-bit
-    * image pHash bands over the DECODED media column ("i:"-prefixed
-    * — pigeonhole-lossless for hamming <= 2, wide enough to need no
-    * verify stage; the q_pipeline_pairs discipline). Captions shorter
-    * than the shingle width emit no text bands and undecodable media
-    * emit no image bands — a pair stays assignable as long as EITHER
-    * modality fingerprints, and one with neither emits nothing.
-    */
-  private def pairMembership(
-      df: DataFrame, idCol: String, textCol: String, mediaCol: String,
-      tsCol: Option[String], shingleW: Int, minhashK: Int,
-      bands: Int): DataFrame = {
-    val keep = (Seq(idCol) ++ tsCol).map(col)
-    val tm = graft.operators.TextOps
-      .bandedDocs(df.select(keep :+ col(textCol): _*), textCol,
-        shingleW, minhashK, bands)
-      .select(keep :+ concat(lit("t:"), col("band_key")).as("band_key"): _*)
-    val im = df.select(keep :+ col(mediaCol): _*)
-      .withColumn("__mf",
-        graft.operators.Multimodal.featuresColumn(col(mediaCol)))
-      .where(col("__mf.decoded"))
-      .withColumn("__j", explode(sequence(lit(0), lit(2))))
-      .select(keep :+ concat_ws(":", lit("i"), col("__j"),
-        expr("shiftright(__mf.phash, __j * 21) & 2097151"))
-        .as("band_key"): _*)
-    tm.unionByName(im)
-  }
-
-  /** Static side for [[pairAssignStream]]: the clustered (band_key ->
-    * component) table of a (caption, image) pair corpus — union
-    * multimodal membership through ConnectedComponents.byGroup, so a
-    * caption cluster and an image pair sharing one doc already carry
-    * ONE canonical (the q_pipeline_pairs structure). Persist and
-    * reuse; refresh offline like [[clusterAssignStaticSide]].
-    */
-  def pairAssignStaticSide(
-      corpus: DataFrame, // idCol, textCol, mediaCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      mediaCol: String = "media",
-      shingleW: Int = 3,
-      minhashK: Int = 9,
-      bands: Int = 3): DataFrame = {
-    val mem = pairMembership(corpus, idCol, textCol, mediaCol, None,
-      shingleW, minhashK, bands)
-    val comp = graft.operators.ConnectedComponents
-      .byGroup(mem, idCol, "band_key")
-    mem.join(comp, Seq(idCol))
-      .groupBy("band_key").agg(min("component").as("component"))
-  }
-
-  /** Streaming CROSS-MODAL pair-cluster assignment — the online form
-    * of q_pipeline_pairs and the multimodal upgrade of
-    * [[clusterAssignStream]]: each arriving (caption, image) pair is
-    * fingerprinted statelessly in BOTH modalities (minhash caption
-    * bands + pHash image bands over the production decode column),
-    * its band keys join the persisted cluster table of the last
-    * offline CC run, and one watermarked aggregation assigns the
-    * minimum matching canonical. A pair whose caption is unusable
-    * (too short, garbled) still assigns by image, and vice versa —
-    * the cross-modal robustness a single-modality assigner lacks.
-    * `matched_modalities` counts the distinct modalities with a
-    * cluster hit (2 = both agreed / glued); pairs with no bands in
-    * either modality emit no verdict (the [[clusterAssignStream]]
-    * short-doc contract).
-    *
-    * Output: bucket, <idCol>, is_known, component, matched_modalities.
-    */
-  def pairAssignStream(
-      pairs: DataFrame, // idCol, textCol, mediaCol, tsCol
-      corpus: DataFrame, // idCol, textCol, mediaCol
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      mediaCol: String = "media",
-      tsCol: String = "ts",
-      watermark: String = "30 minutes",
-      windowDuration: String = "10 minutes",
-      shingleW: Int = 3,
-      minhashK: Int = 9,
-      bands: Int = 3,
-      staticSide: Option[DataFrame] = None): DataFrame = {
-    val keyToComp = staticSide.getOrElse(
-      pairAssignStaticSide(corpus, idCol, textCol, mediaCol,
-        shingleW, minhashK, bands).persist())
-    pairMembership(pairs.withWatermark(tsCol, watermark), idCol,
-        textCol, mediaCol, Some(tsCol), shingleW, minhashK, bands)
-      .join(keyToComp, Seq("band_key"), "left")
-      .groupBy(window(col(tsCol), windowDuration), col(idCol))
-      .agg(min(col("component")).as("component"),
-        size(array_distinct(collect_list(
-          when(col("component").isNotNull,
-            substring(col("band_key"), 1, 1)))))
-          .as("matched_modalities"))
-      .select(col("window.start").as("bucket"), col(idCol),
-        col("component").isNotNull.as("is_known"), col("component"),
-        col("matched_modalities"))
+  /** Batch adductSearch's candidate predicate (metabolomics.py:231,
+    * 239-241): neutral compounds and, with `excludeHalogens`, the P4
+    * halogen exclusion, each row keyed by its Mass bucket. The regex is
+    * the reference's own (metabolomics.py:240), quirks included: a
+    * formula-final F does not match F[^e] and leaks through — batch
+    * MassSearch shares the exact pattern, so parity holds on both
+    * engines.
+    */
+  private def bucketedCandidates(
+      compounds: DataFrame,
+      excludeHalogens: Boolean,
+      bucketWidth: Double): DataFrame = {
+    val neutral = compounds.where(col("Charge") === 0)
+    val cands =
+      if (excludeHalogens) neutral.where(!col("Formula").rlike("F[^e]|Cl|Br"))
+      else neutral
+    cands.withColumn("bucket", floor(col("Mass") / bucketWidth).cast("long"))
   }
 }

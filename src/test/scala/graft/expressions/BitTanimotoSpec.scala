@@ -15,7 +15,7 @@ class BitTanimotoSpec extends AnyFunSuite {
     * SparkSessionExtensions hook performs (the shared session already
     * exists, so the extension config can't be injected at build time
     * here — production sessions use
-    * spark.sql.extensions=graft.expressions.GraftExtensions).
+    * spark.sql.extensions=graft.GraftExtensions).
     */
   private lazy val spark: SparkSession = {
     val s = graft.SparkSuite.session
@@ -28,7 +28,7 @@ class BitTanimotoSpec extends AnyFunSuite {
   }
 
   test("extension hook applies cleanly") {
-    new GraftExtensions().apply(new SparkSessionExtensions)
+    new graft.GraftExtensions().apply(new SparkSessionExtensions)
   }
 
   test("kernel: identical, disjoint, subset, ragged lengths") {

@@ -174,4 +174,21 @@ class Hash64Spec extends SparkSuite {
       .collect().toSeq
     assert(fa.toSet.intersect(fb.toSet).nonEmpty)
   }
+
+  test("a second Hash64.register on the same session leaves each " +
+    "name's lookupFunctionBuilder the same instance") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("graft_hash64", "graft_char_fps", "graft_winnow",
+      "graft_sorted_overlap")
+    def builders = names.map(n =>
+      registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    Hash64.register(spark)
+    val first = builders
+    assert(first.forall(_.isDefined))
+    Hash64.register(spark)
+    names.zip(first.zip(builders)).foreach { case (n, (a, b)) =>
+      assert(a.get eq b.get, s"$n was registered again")
+    }
+  }
 }

@@ -185,17 +185,14 @@ class AudioCodecsSpec extends AnyFunSuite {
     assert(samples(bad) === None)
   }
 
-  test("Ogg-FLAC streaming decoder plug: .oga decodes to the .flac " +
-    "twin's samples; non-Ogg bytes gate to None") {
-    import graft.streaming.StreamingOps
+  test("oggFlacStream: .oga decodes like its .flac twin; non-Ogg is None") {
     val tone = Array.tabulate(600)(i =>
       (math.sin(i * 0.06) * 9000).toShort)
     val flac = FlacDecode.synthesizeFlacPcm16(8000, tone,
       blockSize = 192, subframe = "lpc4")
     val oga = OggHeader.synthesizeOggFlac(flac)
-    assert(StreamingOps.OggFlacDecoder(oga).map(_.toSeq) ===
-      StreamingOps.FlacDecoder(flac).map(_.toSeq))
-    assert(StreamingOps.OggFlacDecoder(flac) === None)
-    assert(StreamingOps.OggFlacDecoder(null) === None)
+    assert(OggHeader.oggFlacStream(oga).flatMap(FlacDecode.pcm16Samples)
+      .map(_.toSeq) === FlacDecode.pcm16Samples(flac).map(_.toSeq))
+    assert(OggHeader.oggFlacStream(flac) === None)
   }
 }

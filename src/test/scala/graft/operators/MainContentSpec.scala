@@ -92,27 +92,6 @@ class MainContentSpec extends SparkSuite {
     assert(content(1)._2 === "") // all-chrome page
   }
 
-  test("extractLocal (the streaming twin) matches the DataFrame " +
-    "pipeline document for document") {
-    val prose = "the story of the day is that the work of the team " +
-      "is done and the result of it is good for all of us and the " +
-      "plan of the week is set out in the notes of the run for the " +
-      "record and more of it besides for the file"
-    val corpus = Seq(
-      s"<div><a>Home</a></div><h1>T</h1><p>$prose</p><div>foot</div>",
-      "<p>short only</p>",
-      s"<p>$prose</p><div>tail note</div>",
-      "<ul><li><a>one</a></li><li><a>two</a></li></ul>",
-      "")
-      .zipWithIndex.map { case (h, i) => (i.toLong, h) }
-    val batch = MainContent.mainContent(
-        corpus.toDF("doc_id", "html"), "doc_id", "html")
-      .as[(Long, String)].collect().toMap
-    corpus.foreach { case (id, html) =>
-      assert(MainContent.extractLocal(html) === batch(id), s"doc $id")
-    }
-  }
-
   test("hostility: garbage, unterminated tags, huge entity refs — " +
     "never a throw, scanner equivalence holds") {
     val rnd = new scala.util.Random(17)

@@ -327,8 +327,8 @@ class VectorIndexSpec extends SparkSuite {
     // a zero vector in the corpus can be sampled as a centroid. Its
     // cosine is undefined: plain `/` under ANSI would THROW
     // (DIVIDE_BY_ZERO) and kill the probe, and a NaN under `cos.desc`
-    // would rank FIRST (Spark sorts NaN largest) while the streaming
-    // closures rank it last. With try_divide the cosine is NULL and
+    // would rank FIRST (Spark sorts NaN largest) while argmaxCell
+    // ranks it last. With try_divide the cosine is NULL and
     // the coalesce(-cos, +Inf) key ranks it last everywhere. Force
     // that geometry: 2 vectors, 2 centroids (both vectors), one of
     // them all-zero.

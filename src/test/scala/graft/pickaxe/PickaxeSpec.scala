@@ -80,32 +80,6 @@ class PickaxeSpec extends SparkSuite {
     assert(local._2.size >= 2)
   }
 
-  test("expansion is deterministic and partitioning-invariant") {
-    assume(fixturesPresent)
-    val a = engine.run(Seq(fadh), 1)
-    val b = engine.run(Seq(fadh), 1)
-    assert(a.reactions.select("_id").collect().map(_.getString(0)).sorted
-      === b.reactions.select("_id").collect().map(_.getString(0)).sorted)
-    val ids = a.compounds.select("_id").collect().map(_.getString(0)).sorted
-    val c = {
-      val st0 = engine.initialState(Seq(fadh))
-      engine.expandOnce(st0.copy(compounds = st0.compounds.repartition(7)))
-    }
-    assert(c.compounds.select("_id").collect().map(_.getString(0)).sorted
-      === ids)
-  }
-
-  test("adjacency arrays mirror reaction membership") {
-    assume(fixturesPresent)
-    val st = engine.run(Seq(fadh), 1)
-    val adj = engine.adjacency(st)
-    // FADH is a reactant in every gen-1 reaction
-    val fadhId = graft.chem.Chem.compoundHash(
-      graft.chem.Chem.standardize(fadh).get, 'C')
-    val row = adj.where(col("_id") === fadhId).collect().head
-    assert(row.getSeq[String](1).size === st.reactions.count())
-  }
-
   test("prune to a target keeps only its producing cone") {
     assume(fixturesPresent)
     val st = engine.run(Seq(fadh), 1)
@@ -145,34 +119,70 @@ class PickaxeSpec extends SparkSuite {
       === pruned.reactions.select("_id").collect().map(_.getString(0)).sorted)
   }
 
-  test("TSV export is byte-deterministic across runs") {
-    assume(fixturesPresent)
-    val core = engine.coreactants.filter(c => Set("ATP", "ADP")(c.name))
-    val e = new PickaxeEngine(spark,
-      engine.rules.filter(_.name == "2.7.1.a"), core,
-      explicitH = true)
-    def export(dir: String): (String, String) = {
-      e.writeTsv(e.run(Seq(fadh), 1), dir)
-      def read(sub: String): String = {
-        val d = new java.io.File(s"$dir/$sub")
-        val part = d.listFiles().filter(_.getName.startsWith("part-")).head
-        new String(Files.readAllBytes(part.toPath))
-      }
-      (read("compounds"), read("reactions"))
-    }
-    val a = export("/tmp/pk_tsv_a")
-    val b = export("/tmp/pk_tsv_b")
-    assert(a._1 === b._1) // golden-file stability (test_pickaxe.py:114-150
-    assert(a._2 === b._2) // shape; ids differ from RDKit's, see SURVEY §7)
-    assert(a._1.linesIterator.next().startsWith("ID\t"))
-    assert(a._1.linesIterator.size > 5)
-  }
+  /** The engine-property cases below run once per engine: the inline
+    * kinase fixture on any host, the reference's fixture files only
+    * where they are present (the getter cancels the case otherwise).
+    */
+  private val propertyEngines: Seq[(String, () => PickaxeEngine)] = Seq(
+    "inline kinase fixture" -> (() => KinaseFixture.engine(spark)),
+    "reference fixture" -> (() => { assume(fixturesPresent); engine }))
 
-  test("assign_ids is dense and deterministic") {
-    assume(fixturesPresent)
-    val st = engine.assignIds(engine.run(Seq(fadh), 1))
-    val ids = st.compounds.select("ID").collect().map(_.getString(0)).sorted
-    assert(ids.head === "pkc0000001")
-    assert(ids.distinct.length === ids.length)
+  for ((label, engineOf) <- propertyEngines) {
+    test(s"expansion is deterministic and partitioning-invariant ($label)") {
+      val engine = engineOf()
+      val a = engine.run(Seq(fadh), 1)
+      val b = engine.run(Seq(fadh), 1)
+      assert(a.reactions.select("_id").collect().map(_.getString(0)).sorted
+        === b.reactions.select("_id").collect().map(_.getString(0)).sorted)
+      val ids = a.compounds.select("_id").collect().map(_.getString(0)).sorted
+      val c = {
+        val st0 = engine.initialState(Seq(fadh))
+        engine.expandOnce(st0.copy(compounds = st0.compounds.repartition(7)))
+      }
+      assert(c.compounds.select("_id").collect().map(_.getString(0)).sorted
+        === ids)
+    }
+
+    test(s"adjacency arrays mirror reaction membership ($label)") {
+      val engine = engineOf()
+      val st = engine.run(Seq(fadh), 1)
+      val adj = engine.adjacency(st)
+      // FADH is a reactant in every gen-1 reaction
+      val fadhId = graft.chem.Chem.compoundHash(
+        graft.chem.Chem.standardize(fadh).get, 'C')
+      val row = adj.where(col("_id") === fadhId).collect().head
+      assert(row.getSeq[String](1).size === st.reactions.count())
+    }
+
+    test(s"TSV export is byte-deterministic across runs ($label)") {
+      val engine = engineOf()
+      val core = engine.coreactants.filter(c => Set("ATP", "ADP")(c.name))
+      val e = new PickaxeEngine(spark,
+        engine.rules.filter(_.name == "2.7.1.a"), core,
+        explicitH = true)
+      def exportTsv(dir: String): (String, String) = {
+        e.writeTsv(e.run(Seq(fadh), 1), dir)
+        def read(sub: String): String = {
+          val d = new java.io.File(s"$dir/$sub")
+          val part = d.listFiles().filter(_.getName.startsWith("part-")).head
+          new String(Files.readAllBytes(part.toPath))
+        }
+        (read("compounds"), read("reactions"))
+      }
+      val a = exportTsv("/tmp/pk_tsv_a")
+      val b = exportTsv("/tmp/pk_tsv_b")
+      assert(a._1 === b._1) // golden-file stability (test_pickaxe.py:114-150
+      assert(a._2 === b._2) // shape; ids differ from RDKit's, see SURVEY §7)
+      assert(a._1.linesIterator.next().startsWith("ID\t"))
+      assert(a._1.linesIterator.size > 5)
+    }
+
+    test(s"assign_ids is dense and deterministic ($label)") {
+      val engine = engineOf()
+      val st = engine.assignIds(engine.run(Seq(fadh), 1))
+      val ids = st.compounds.select("ID").collect().map(_.getString(0)).sorted
+      assert(ids.head === "pkc0000001")
+      assert(ids.distinct.length === ids.length)
+    }
   }
 }

@@ -69,155 +69,4 @@ class RestartSpec extends SparkSuite {
       .as[(Long, Long, Long)].head()
     assert(got === want)
   }
-
-  test("videoFunnelStream windowed evidence state survives a " +
-    "checkpointed restart: clips split across the restart inside ONE " +
-    "window still close to exactly-once batch-parity verdicts") {
-    implicit val sqlCtx = spark.sqlContext
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.{Multimodal, PixelDecode, VideoHeader}
-    def contentGray(g: Int, c: Int): Array[Int] =
-      Array.tabulate(72)(i =>
-        (g * 83 + c * 41 + i * 13 + (i * i) % 23) % 200)
-    def mp4For(id: Int): Array[Byte] = {
-      val g = id / 3; val m = id % 3
-      val nc = if (id == 4) 5 else 8 // id 4: quality-gated short clip
-      val frames = Seq.fill(m)(Array.fill(72)(m * 20)) ++
-        (0 until nc).map(c => contentGray(g, c).map(_ + m * 20))
-      val mp4 = VideoHeader.synthesizeMp4WithSamples("mp42", 600,
-        frames.length * 100L,
-        VideoHeader.TrackSpec("vide", "avc1", 9, 8, 600,
-          frames.length * 100L),
-        frames.map(fr => PixelDecode.encodePngGray(9, 8, fr)),
-        100, samplesPerChunk = 3)
-      if (id == 1) mp4.take(40) else mp4 // id 1: demux-gated truncation
-    }
-    val corpus = (0 until 6).map(id => id.toLong -> mp4For(id))
-    val sh = corpus.map { case (id, b) =>
-      id -> Multimodal.videoShingleRows(b, 3) }.toMap
-    val quality = corpus.map(_._1).filter(sh(_).size >= 6).toSet
-    val dupOf = quality.map { a =>
-      val cands = quality.filter(_ < a).filter { b =>
-        sh(a).flatMap(x => sh(b).filter(_.sid == x.sid)
-            .map(y => (b, x.t - y.t)))
-          .groupBy(identity).values.exists(_.size >= 6)
-      }
-      a -> (if (cands.isEmpty) None else Some(cands.min))
-    }.toMap
-    assert(dupOf.count(_._2.isDefined) >= 2) // the plant is real
-    val ckpt = java.nio.file.Files.createTempDirectory("vf_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("vf_out").toString
-    val catalog = corpus.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val funnel = StreamingOps.videoFunnelStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours")
-    def start() = funnel.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val ts = Timestamp.valueOf("2024-01-01 10:00:00")
-    // phase 1: half the clips arrive, window stays open, query STOPS
-    val q1 = start()
-    try {
-      feed.addData(corpus.take(3).map { case (id, m) => (id, m, ts) }: _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(spark.read.schema(funnel.schema).parquet(outDir).count() === 0,
-      "window not closed — nothing may emit before the restart")
-    // phase 2: restart; the rest of the clips land in the SAME
-    // window (the restored evidence state must merge them), then
-    // next-day arrivals advance the watermark and close it
-    val q2 = start()
-    try {
-      feed.addData(corpus.drop(3).map { case (id, m) => (id, m, ts) }: _*)
-      q2.processAllAvailable()
-      feed.addData((100L, corpus.head._2,
-        Timestamp.valueOf("2024-01-02 10:00:00")))
-      q2.processAllAvailable()
-      feed.addData((101L, corpus.head._2,
-        Timestamp.valueOf("2024-01-02 13:00:00")))
-      q2.processAllAvailable()
-      val got = spark.read.parquet(outDir)
-        .where(col("clip") < 100)
-        .select("clip", "demuxed", "quality_ok", "dup_of", "survived")
-        .collect().map(r => r.getLong(0) ->
-          (r.getBoolean(1), r.getBoolean(2),
-            if (r.isNullAt(3)) None else Some(r.getLong(3)),
-            r.getBoolean(4))).toMap
-      assert(got.keySet === corpus.map(_._1).toSet,
-        "exactly one verdict row per clip across the restart")
-      for ((id, (d, qok, dup, s)) <- got) {
-        assert(d === sh(id).nonEmpty, s"demuxed($id)")
-        assert(qok === quality(id), s"quality($id)")
-        assert(dup === dupOf.getOrElse(id, None), s"dup_of($id)")
-        assert(s === (quality(id) && dupOf.getOrElse(id, None).isEmpty),
-          s"survived($id)")
-      }
-    } finally q2.stop()
-  }
-
-  test("paraDedupStream window state survives a checkpointed " +
-    "restart: the same doc id split across the restart inside one " +
-    "window reassembles exactly once; all-known docs emit no row") {
-    implicit val sqlCtx = spark.sqlContext
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val corpus = Seq(
-      (1L, "known header line"),
-      (2L, "another known paragraph"))
-      .toDF("doc_id", "text")
-    val static = StreamingOps.paragraphKeyStaticSide(corpus).persist()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("pd_ckpt").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("pd_out").toString
-    val feed = MemoryStream[(Long, String, Timestamp)]
-    val stream = StreamingOps.paraDedupStream(
-      feed.toDF().toDF("doc_id", "text", "ts"),
-      corpus, watermark = "2 hours", windowDuration = "1 hour",
-      staticSide = Some(static))
-    def start() = stream.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val ts = Timestamp.valueOf("2024-01-01 10:00:00")
-    // phase 1: doc 10 (one known + one fresh line) and the FIRST
-    // half of doc 50 arrive; the window stays open; the query stops
-    val q1 = start()
-    try {
-      feed.addData(
-        (10L, "known header line\nfresh ten body", ts),
-        (50L, "fresh alpha fifty", ts))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(spark.read.schema(stream.schema).parquet(outDir)
-      .count() === 0, "window open — nothing may emit yet")
-    // phase 2: restart; doc 50's second half lands in the SAME
-    // window (restored state must merge it), an all-known doc 12
-    // arrives (must emit nothing), then next-day arrivals advance
-    // the watermark and close the window
-    val q2 = start()
-    try {
-      feed.addData(
-        (50L, "fresh beta fifty", ts),
-        (12L, "known header line\nanother known paragraph", ts))
-      q2.processAllAvailable()
-      feed.addData((100L, "day two closer",
-        Timestamp.valueOf("2024-01-02 10:00:00")))
-      q2.processAllAvailable()
-      feed.addData((101L, "day two second",
-        Timestamp.valueOf("2024-01-02 13:00:00")))
-      q2.processAllAvailable()
-      val got = spark.read.parquet(outDir)
-        .where(col("doc_id") < 100)
-        .select("doc_id", "n_kept", "cleaned")
-        .collect().map(r => r.getLong(0) ->
-          ((r.getInt(1), r.getString(2)))).toMap
-      // exactly one row per surviving doc; doc 50's halves merged
-      // in (position, text) order; doc 12 absent
-      assert(got === Map(
-        10L -> ((1, "fresh ten body")),
-        50L -> ((2, "fresh alpha fifty\nfresh beta fifty"))))
-    } finally { q2.stop(); static.unpersist() }
-  }
 }

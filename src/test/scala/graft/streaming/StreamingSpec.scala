@@ -127,272 +127,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("streaming image near-dup probe matches q_multimodal_neardup's " +
-    "verdict set across a mid-stream batch split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.PixelDecode
-    // the q_multimodal_neardup image convention, verbatim: two images
-    // per doc, every 3rd doc's second image a 1-px perturbation of
-    // its first (planted near-dup), the rest independent
-    def mkPng(docId: Long, v: Int): Array[Byte] = {
-      val gray = new Array[Int](1024)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val key = (blk: Int) =>
-        if (v == 0 || docId % 3 == 0) s"$docId:$blk" else s"$docId:b:$blk"
-      (0 until 64).foreach { blk =>
-        val d = md.digest(key(blk).getBytes("US-ASCII"))
-        (0 until 16).foreach(o => gray(blk * 16 + o) = d(o) & 0xff)
-      }
-      if (v == 1 && docId % 3 == 0) gray(1023) = (gray(1023) + 1) % 256
-      PixelDecode.encodePngGray(32, 32, gray)
-    }
-    val imgs = for (d <- 0L until 15L; v <- 0 to 1)
-      yield (d * 2 + v, mkPng(d, v))
-    // exact all-pairs truth at spec scale: img is a near-dup iff ANY
-    // other image sits at hamming <= 6
-    def ph(png: Array[Byte]): Long = {
-      val px = PixelDecode.decode(png).get
-      PixelDecode.pHash(PixelDecode.grayLuma(px), px.width, px.height)
-    }
-    val hashes = imgs.map { case (id, png) => id -> ph(png) }
-    val truth = hashes.map { case (id, h) =>
-      id -> hashes.exists { case (id2, h2) =>
-        id2 != id && java.lang.Long.bitCount(h ^ h2) <= 6
-      }
-    }.toMap
-    assert(truth.values.count(identity) >= 10) // planted pairs present
-    val corpus = imgs.toDF("img", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.imageNearDupStream(
-      feed.toDF().toDF("img", "media", "ts"), corpus,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q = out.writeStream.format("memory").queryName("img_neardup")
-      .outputMode("update").start()
-    try {
-      val rows = imgs.map { case (id, png) =>
-        (id, png, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      // mid-stream split: half the feed per micro-batch
-      rows.grouped(rows.size / 2 + 1).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("img_neardup")
-        .groupBy("img").agg(max("is_neardup").as("nd"))
-        .as[(Long, Boolean)].collect().toMap
-      assert(got === truth)
-    } finally q.stop()
-  }
-
-  test("streaming image-corpus funnel matches the batch " +
-    "q_pipeline_images survivor set across a mid-stream batch split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.PixelDecode
-    // the q_pipeline_images byte convention, verbatim: corrupt every
-    // 13th doc's second image (truncated PNG), per-doc luma shift
-    // (doc_id%7 * 20, clipped), planted 1-px near-dup every 3rd doc
-    def mkBytes(docId: Long, v: Int): Array[Byte] = {
-      val gray = new Array[Int](1024)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val key = (blk: Int) =>
-        if (v == 0 || docId % 3 == 0) s"$docId:$blk" else s"$docId:b:$blk"
-      (0 until 64).foreach { blk =>
-        val d = md.digest(key(blk).getBytes("US-ASCII"))
-        (0 until 16).foreach(o => gray(blk * 16 + o) = d(o) & 0xff)
-      }
-      val shift = (docId % 7).toInt * 20
-      (0 until 1024).foreach(i => gray(i) = math.min(gray(i) + shift, 255))
-      if (v == 1 && docId % 3 == 0) gray(1023) = (gray(1023) + 1) % 256
-      val png = PixelDecode.encodePngGray(32, 32, gray)
-      if (docId % 13 == 0 && v == 1) png.take(30) else png
-    }
-    val imgs = for (d <- 0L until 14L; v <- 0 to 1)
-      yield (d * 2 + v, mkBytes(d, v))
-    // batch funnel truth, computed from the operator definitions:
-    // decode gate -> mean-gray < 170 -> drop on smaller-id near-dup
-    val feats = imgs.flatMap { case (id, png) =>
-      PixelDecode.decode(png).map { px =>
-        val g = PixelDecode.grayLuma(px)
-        (id, g.map(_.toLong).sum, PixelDecode.pHash(g, 32, 32))
-      }
-    }
-    val qual = feats.filter(_._2 / 1024 < 170)
-    val kept = qual.filter { case (id, _, h) =>
-      !qual.exists { case (id2, _, h2) =>
-        id2 < id && java.lang.Long.bitCount(h ^ h2) <= 6
-      }
-    }.map(_._1).toSet
-    assert(kept.size < qual.size) // the dedup stage actually cuts
-    assert(qual.size < feats.size || feats.size < imgs.size)
-    val corpus = imgs.toDF("img", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.imageFunnelStream(
-      feed.toDF().toDF("img", "media", "ts"), corpus,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q = out.writeStream.format("memory").queryName("img_funnel")
-      .outputMode("update").start()
-    try {
-      val rows = imgs.map { case (id, png) =>
-        (id, png, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(rows.size / 2 + 1).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val table = spark.table("img_funnel")
-        .groupBy("img").agg(max("decoded").as("decoded"),
-          max("quality_ok").as("q"), max("survived").as("s"))
-        .as[(Long, Boolean, Boolean, Boolean)].collect()
-      // every image gets a verdict row, including the corrupt ones
-      assert(table.map(_._1).toSet === imgs.map(_._1).toSet)
-      assert(table.filter(!_._2).map(_._1).toSet ===
-        imgs.map(_._1).toSet -- feats.map(_._1).toSet)
-      assert(table.filter(_._3).map(_._1).toSet ===
-        qual.map(_._1).toSet)
-      assert(table.filter(_._4).map(_._1).toSet === kept)
-    } finally q.stop()
-  }
-
-  test("streaming video shingle match recovers planted shifted, " +
-    "re-graded clips against a static catalog across a mid-stream " +
-    "batch split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Multimodal, PixelDecode, VideoHeader}
-    // 3 groups of 3 clips sharing 8 content frames; member m delayed
-    // by m flat lead-in frames AND brightened by m*20 gray levels —
-    // the q_multimodal_videodup plant (dHash cancels the re-grade,
-    // shingle ids are shift-covariant)
-    def contentGray(g: Int, c: Int): Array[Int] =
-      Array.tabulate(72)(i =>
-        (g * 97 + c * 31 + i * 7 + (i * i) % 13) % 200)
-    def mp4For(id: Int): Array[Byte] = {
-      val g = id / 3; val m = id % 3; val bright = m * 20
-      val frames = Seq.fill(m)(Array.fill(72)(bright)) ++
-        (0 until 8).map(c => contentGray(g, c).map(_ + bright))
-      VideoHeader.synthesizeMp4WithSamples("mp42", 600,
-        frames.length * 100L,
-        VideoHeader.TrackSpec("vide", "avc1", 9, 8, 600,
-          frames.length * 100L),
-        frames.map(fr => PixelDecode.encodePngGray(9, 8, fr)),
-        100, samplesPerChunk = 3)
-    }
-    val clipMp4s = (0 until 9).map(id => id.toLong -> mp4For(id))
-    // exact truth from the kernel: aligned-count cells >= 6, self
-    // matches excluded, dt = stream frame - catalog frame
-    val sh = clipMp4s.map { case (id, b) =>
-      id -> Multimodal.videoShingleRows(b, 3) }.toMap
-    val truth = (for {
-      (a, sa) <- sh.toSeq; (b, sb) <- sh.toSeq if a != b
-      x <- sa; y <- sb if x.sid == y.sid
-    } yield ((a, b, (x.t - y.t).toLong), 1))
-      .groupBy(_._1).view.mapValues(_.size.toLong)
-      .filter(_._2 >= 6L)
-      .map { case ((a, b, dt), n) => (a, b, dt, n) }.toSet
-    assert(truth.size >= 18, s"fixture too sparse: ${truth.size}")
-    val catalog = clipMp4s.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.videoMatchStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q = out.writeStream.format("memory").queryName("video_match")
-      .outputMode("append").start()
-    try {
-      val rows = clipMp4s.map { case (id, mp4) =>
-        (id, mp4, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(5).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      // append mode: flush the window by advancing the watermark
-      feed.addData((100L, clipMp4s.head._2,
-        Timestamp.valueOf("2024-01-02 10:00:00")))
-      q.processAllAvailable()
-      feed.addData((101L, clipMp4s.head._2,
-        Timestamp.valueOf("2024-01-02 11:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("video_match")
-        .select("clip", "cat_clip", "dt", "n_aligned")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(got === truth)
-    } finally q.stop()
-  }
-
-  test("streaming video-corpus funnel matches the batch " +
-    "q_pipeline_video stages: demux gate, frame-count quality gate, " +
-    "keep-smallest temporal near-dup — across a mid-stream split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Multimodal, PixelDecode, VideoHeader}
-    // 4 groups of 3 clips, 8 shared content frames, member m delayed
-    // by m flat frames + brightened m*20; clip 7 truncated mid-moov
-    // (demux gate), clip 4 only 5 content frames (quality gate)
-    def contentGray(g: Int, c: Int): Array[Int] =
-      Array.tabulate(72)(i =>
-        (g * 89 + c * 37 + i * 11 + (i * i) % 17) % 200)
-    def mp4For(id: Int): Array[Byte] = {
-      val g = id / 3; val m = id % 3; val bright = m * 20
-      val nc = if (id == 4) 5 else 8
-      val frames = Seq.fill(m)(Array.fill(72)(bright)) ++
-        (0 until nc).map(c => contentGray(g, c).map(_ + bright))
-      val mp4 = VideoHeader.synthesizeMp4WithSamples("mp42", 600,
-        frames.length * 100L,
-        VideoHeader.TrackSpec("vide", "avc1", 9, 8, 600,
-          frames.length * 100L),
-        frames.map(fr => PixelDecode.encodePngGray(9, 8, fr)),
-        100, samplesPerChunk = 3)
-      if (id == 7) mp4.take(40) else mp4
-    }
-    val corpus = (0 until 12).map(id => id.toLong -> mp4For(id))
-    // batch-funnel truth from the kernel (q_pipeline_video logic:
-    // dedup candidates among QUALITY clips only — non-quality catalog
-    // clips can never reach minAligned=6 with < 6 shingles, so the
-    // stream's full-catalog band table yields the same verdicts)
-    val sh = corpus.map { case (id, b) =>
-      id -> Multimodal.videoShingleRows(b, 3) }.toMap
-    val demuxed = corpus.map(_._1).filter(sh(_).nonEmpty).toSet
-    val quality = corpus.map(_._1).filter(sh(_).size >= 6).toSet
-    val dupOf = quality.map { a =>
-      val cands = quality.filter(_ < a).filter { b =>
-        sh(a).flatMap(x => sh(b).filter(_.sid == x.sid)
-            .map(y => (b, x.t - y.t)))
-          .groupBy(identity).values.exists(_.size >= 6)
-      }
-      a -> (if (cands.isEmpty) None else Some(cands.min))
-    }.toMap
-    assert(demuxed === (0L until 12L).toSet - 7L)
-    assert(quality === demuxed - 4L)
-    assert(dupOf.count(_._2.isDefined) === 6) // two dups per group
-    val catalog = corpus.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.videoFunnelStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q = out.writeStream.format("memory").queryName("video_funnel")
-      .outputMode("update").start()
-    try {
-      val rows = corpus.map { case (id, mp4) =>
-        (id, mp4, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(7).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("video_funnel")
-        .groupBy("clip").agg(max("demuxed").as("d"),
-          max("quality_ok").as("q"), min("dup_of").as("dup"),
-          max("survived").as("s"))
-        .collect().map(r => r.getLong(0) ->
-          (r.getBoolean(1), r.getBoolean(2),
-            if (r.isNullAt(3)) None else Some(r.getLong(3)),
-            r.getBoolean(4))).toMap
-      // every clip gets a verdict row, including the corrupt one
-      assert(got.keySet === corpus.map(_._1).toSet)
-      for ((id, (d, qok, dup, s)) <- got) {
-        assert(d === demuxed(id), s"demuxed($id)")
-        assert(qok === quality(id), s"quality($id)")
-        assert(dup === dupOf.getOrElse(id, None), s"dup_of($id)")
-        assert(s === (quality(id) && dupOf.getOrElse(id, None).isEmpty),
-          s"survived($id)")
-      }
-    } finally q.stop()
-  }
-
   test("mp4Cues is streaming-transparent: caption extraction from " +
     "arriving multi-track containers matches the batch rows across a " +
     "mid-stream split") {
@@ -433,150 +167,6 @@ class StreamingSpec extends SparkSuite {
       assert(got === want)
       // stateless: no state store operator exists in the query
       assert(q.lastProgress.stateOperators.isEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming audio-corpus funnel matches the batch " +
-    "q_pipeline_audio stages: decode gate, duration quality gate, " +
-    "keep-smallest landmark near-dup — across a mid-stream split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{AudioFingerprint, AudioHeader}
-    // 4 groups of 3 clips sharing a base stream, member m delayed by
-    // m frames of silence; clip 7 truncated mid-fmt (decode gate),
-    // clip 4 only 256 content samples (duration gate — and its 14
-    // landmarks would wrongly veto clip 5 were the catalog unfiltered)
-    val rnd = new scala.util.Random(37)
-    val bases = Array.fill(4)(
-      Array.fill[Short](768)((rnd.nextInt(65536) - 32768).toShort))
-    def wavFor(id: Int): Array[Byte] = {
-      val g = id / 3; val m = id % 3
-      val n = if (id == 4) 256 else 768
-      val wav = AudioHeader.synthesizeWavPcm16(8000,
-        new Array[Short](m * 16) ++ bases(g).take(n))
-      if (id == 7) wav.take(20) else wav
-    }
-    val corpus = (0 until 12).map(id => id.toLong -> wavFor(id))
-    // batch-funnel truth from the kernel
-    val lms = corpus.map { case (id, w) =>
-      id -> AudioHeader.pcm16Samples(w)
-        .map(s => (s.length, AudioFingerprint.landmarks(s)))
-    }.toMap
-    val decoded = corpus.map(_._1).filter(lms(_).isDefined).toSet
-    val quality = corpus.map(_._1)
-      .filter(id => lms(id).exists(_._1 >= 512)).toSet
-    val dupOf = quality.map { a =>
-      val la = lms(a).get._2
-      val cands = quality.filter(_ < a).filter { b =>
-        val lb = lms(b).get._2
-        la.flatMap(x => lb.filter(_._2 == x._2)
-            .map(y => (b, x._1 - y._1)))
-          .groupBy(identity).values.exists(_.size >= 8)
-      }
-      a -> (if (cands.isEmpty) None else Some(cands.min))
-    }.toMap
-    assert(decoded === (0L until 12L).toSet - 7L)
-    assert(quality === decoded - 4L)
-    assert(dupOf.count(_._2.isDefined) === 6)
-    val catalog = corpus.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.audioFunnelStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q = out.writeStream.format("memory").queryName("audio_funnel")
-      .outputMode("update").start()
-    try {
-      val rows = corpus.map { case (id, wav) =>
-        (id, wav, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(7).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("audio_funnel")
-        .groupBy("clip").agg(max("decoded").as("d"),
-          max("quality_ok").as("q"), min("dup_of").as("dup"),
-          max("survived").as("s"))
-        .collect().map(r => r.getLong(0) ->
-          (r.getBoolean(1), r.getBoolean(2),
-            if (r.isNullAt(3)) None else Some(r.getLong(3)),
-            r.getBoolean(4))).toMap
-      assert(got.keySet === corpus.map(_._1).toSet)
-      for ((id, (d, qok, dup, s)) <- got) {
-        assert(d === decoded(id), s"decoded($id)")
-        assert(qok === quality(id), s"quality($id)")
-        assert(dup === dupOf.getOrElse(id, None), s"dup_of($id)")
-        assert(s === (quality(id) && dupOf.getOrElse(id, None).isEmpty),
-          s"survived($id)")
-      }
-    } finally q.stop()
-  }
-
-  test("animated GIFs through the streaming video funnel: the " +
-    "shingler is a container plug — decode gate, frame-count gate, " +
-    "keep-smallest temporal near-dup, batch-kernel parity across a " +
-    "mid-stream split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Multimodal, PixelDecode}
-    // the q_pipeline_video plant geometry, GIF-encoded: clip 7
-    // truncated inside the palette (decode gate), clip 4 only 5
-    // content frames (quality gate)
-    def contentGray(g: Int, c: Int): Array[Int] =
-      Array.tabulate(72)(i =>
-        (g * 89 + c * 37 + i * 11 + (i * i) % 17) % 200)
-    def gifFor(id: Int): Array[Byte] = {
-      val g = id / 3; val m = id % 3; val bright = m * 20
-      val nc = if (id == 4) 5 else 8
-      val frames = Seq.fill(m)(Array.fill(72)(bright)) ++
-        (0 until nc).map(c => contentGray(g, c).map(_ + bright))
-      val gif = PixelDecode.encodeGifGrayAnimated(9, 8, frames)
-      if (id == 7) gif.take(40) else gif
-    }
-    val corpus = (0 until 12).map(id => id.toLong -> gifFor(id))
-    val sh = corpus.map { case (id, b) =>
-      id -> Multimodal.gifShingleRows(b, 3) }.toMap
-    val demuxed = corpus.map(_._1).filter(sh(_).nonEmpty).toSet
-    val quality = corpus.map(_._1).filter(sh(_).size >= 6).toSet
-    val dupOf = quality.map { a =>
-      val cands = quality.filter(_ < a).filter { b =>
-        sh(a).flatMap(x => sh(b).filter(_.sid == x.sid)
-            .map(y => (b, x.t - y.t)))
-          .groupBy(identity).values.exists(_.size >= 6)
-      }
-      a -> (if (cands.isEmpty) None else Some(cands.min))
-    }.toMap
-    assert(demuxed === (0L until 12L).toSet - 7L)
-    assert(quality === demuxed - 4L)
-    assert(dupOf.count(_._2.isDefined) === 6)
-    val catalog = corpus.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.videoFunnelStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours",
-      shingler = StreamingOps.GifShingler)
-    val q = out.writeStream.format("memory").queryName("gif_funnel")
-      .outputMode("update").start()
-    try {
-      val rows = corpus.map { case (id, gif) =>
-        (id, gif, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(7).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("gif_funnel")
-        .groupBy("clip").agg(max("demuxed").as("d"),
-          max("quality_ok").as("q"), min("dup_of").as("dup"),
-          max("survived").as("s"))
-        .collect().map(r => r.getLong(0) ->
-          (r.getBoolean(1), r.getBoolean(2),
-            if (r.isNullAt(3)) None else Some(r.getLong(3)),
-            r.getBoolean(4))).toMap
-      assert(got.keySet === corpus.map(_._1).toSet)
-      for ((id, (d, qok, dup, s)) <- got) {
-        assert(d === demuxed(id), s"demuxed($id)")
-        assert(qok === quality(id), s"quality($id)")
-        assert(dup === dupOf.getOrElse(id, None), s"dup_of($id)")
-        assert(s === (quality(id) && dupOf.getOrElse(id, None).isEmpty),
-          s"survived($id)")
-      }
     } finally q.stop()
   }
 
@@ -690,256 +280,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("MIXED GIF+APNG stream through the container-dispatching " +
-    "AnimShingler: cross-container near-dups resolve keep-smallest " +
-    "(the streaming face of q_pipeline_anim)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Multimodal, PixelDecode}
-    def contentGray(g: Int, c: Int): Array[Int] =
-      Array.tabulate(72)(i =>
-        (g * 71 + c * 41 + i * 13 + (i * i) % 19) % 200)
-    // pairs: even id = GIF, odd id = the SAME content as APNG, one
-    // pad frame ahead + a +25 brightness re-grade — the odd id must
-    // dedup onto its even GIF twin ACROSS containers
-    def mediaFor(id: Int): Array[Byte] = {
-      val g = id / 2; val apng = id % 2 == 1
-      val bright = if (apng) 25 else 0
-      val frames =
-        Seq.fill(if (apng) 1 else 0)(Array.fill(72)(bright)) ++
-          (0 until 8).map(c => contentGray(g, c).map(_ + bright))
-      if (apng) PixelDecode.encodeApngGray(9, 8, frames)
-      else PixelDecode.encodeGifGrayAnimated(9, 8, frames)
-    }
-    val corpus = (0 until 8).map(id => id.toLong -> mediaFor(id))
-    // the batch kernel agrees the pairs share the shingle space
-    val sh = corpus.map { case (id, b) =>
-      id -> Multimodal.animShingleRows(b, 3) }.toMap
-    corpus.foreach { case (id, _) =>
-      assert(sh(id).size >= 6, s"shingles($id)") }
-    val catalog = corpus.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.videoFunnelStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours",
-      shingler = StreamingOps.AnimShingler)
-    val q = out.writeStream.format("memory").queryName("anim_funnel")
-      .outputMode("update").start()
-    try {
-      feed.addData(corpus.map { case (id, m) =>
-        (id, m, Timestamp.valueOf("2024-01-01 10:00:00")) }: _*)
-      q.processAllAvailable()
-      val got = spark.table("anim_funnel")
-        .groupBy("clip").agg(min("dup_of").as("dup"),
-          max("survived").as("s"))
-        .collect().map(r => r.getLong(0) ->
-          ((if (r.isNullAt(1)) None else Some(r.getLong(1))),
-            r.getBoolean(2))).toMap
-      for (id <- 0L until 8L) {
-        if (id % 2 == 1)
-          assert(got(id) === (Some(id - 1), false),
-            s"APNG $id must dup onto its GIF twin")
-        else assert(got(id) === (None, true), s"GIF $id survives")
-      }
-    } finally q.stop()
-  }
-
-  test("FLAC through the streaming audio funnel: the container is a " +
-    "decoder plug — CRC-gated decode gate, duration gate, landmark " +
-    "near-dup, batch-kernel parity across a mid-stream split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{AudioFingerprint, FlacDecode}
-    // same plant geometry as the WAV funnel case, FLAC-encoded with
-    // fixed-predictor frames; clip 7 truncated mid-frame (the CRC
-    // gate), clip 4 only 256 content samples (the duration gate)
-    val rnd = new scala.util.Random(53)
-    val bases = Array.fill(4)(
-      Array.fill[Short](768)((rnd.nextInt(65536) - 32768).toShort))
-    def flacFor(id: Int): Array[Byte] = {
-      val g = id / 3; val m = id % 3
-      val n = if (id == 4) 256 else 768
-      val flac = FlacDecode.synthesizeFlacPcm16(8000,
-        new Array[Short](m * 16) ++ bases(g).take(n),
-        blockSize = 192, subframe = "fixed2")
-      if (id == 7) flac.dropRight(9) else flac
-    }
-    val corpus = (0 until 12).map(id => id.toLong -> flacFor(id))
-    val lms = corpus.map { case (id, f) =>
-      id -> FlacDecode.pcm16Samples(f)
-        .map(s => (s.length, AudioFingerprint.landmarks(s)))
-    }.toMap
-    val decoded = corpus.map(_._1).filter(lms(_).isDefined).toSet
-    val quality = corpus.map(_._1)
-      .filter(id => lms(id).exists(_._1 >= 512)).toSet
-    val dupOf = quality.map { a =>
-      val la = lms(a).get._2
-      val cands = quality.filter(_ < a).filter { b =>
-        val lb = lms(b).get._2
-        la.flatMap(x => lb.filter(_._2 == x._2)
-            .map(y => (b, x._1 - y._1)))
-          .groupBy(identity).values.exists(_.size >= 8)
-      }
-      a -> (if (cands.isEmpty) None else Some(cands.min))
-    }.toMap
-    assert(decoded === (0L until 12L).toSet - 7L) // CRC gate caught 7
-    assert(quality === decoded - 4L)
-    assert(dupOf.count(_._2.isDefined) === 6)
-    val catalog = corpus.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.audioFunnelStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours",
-      decoder = StreamingOps.FlacDecoder)
-    val q = out.writeStream.format("memory").queryName("flac_funnel")
-      .outputMode("update").start()
-    try {
-      val rows = corpus.map { case (id, f) =>
-        (id, f, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(7).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("flac_funnel")
-        .groupBy("clip").agg(max("decoded").as("d"),
-          max("quality_ok").as("q"), min("dup_of").as("dup"),
-          max("survived").as("s"))
-        .collect().map(r => r.getLong(0) ->
-          (r.getBoolean(1), r.getBoolean(2),
-            if (r.isNullAt(3)) None else Some(r.getLong(3)),
-            r.getBoolean(4))).toMap
-      assert(got.keySet === corpus.map(_._1).toSet)
-      for ((id, (d, qok, dup, s)) <- got) {
-        assert(d === decoded(id), s"decoded($id)")
-        assert(qok === quality(id), s"quality($id)")
-        assert(dup === dupOf.getOrElse(id, None), s"dup_of($id)")
-        assert(s === (quality(id) && dupOf.getOrElse(id, None).isEmpty),
-          s"survived($id)")
-      }
-    } finally q.stop()
-  }
-
-  test("streaming audio landmark match recovers planted time-shifted " +
-    "clips against a static catalog across a mid-stream batch split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{AudioFingerprint, AudioHeader}
-    // 3 groups of 3 clips sharing a base stream, members delayed by
-    // 0/1/2 whole frames of silence — the q_multimodal_audiodup plant
-    val rnd = new scala.util.Random(21)
-    val bases = Array.fill(3)(
-      Array.fill[Short](768)((rnd.nextInt(65536) - 32768).toShort))
-    val clipSamples = (0 until 9).map { id =>
-      id.toLong -> (new Array[Short]((id % 3) * 16) ++ bases(id / 3))
-    }
-    val clipWavs = clipSamples.map { case (id, s) =>
-      id -> AudioHeader.synthesizeWavPcm16(8000, s)
-    }
-    // exact truth from the kernel: aligned-count cells >= 8, self
-    // matches excluded, dt = stream frame - catalog frame
-    val lms = clipSamples.map { case (id, s) =>
-      id -> AudioFingerprint.landmarks(s)
-    }.toMap
-    val truth = (for {
-      (a, la) <- lms.toSeq; (b, lb) <- lms.toSeq if a != b
-      ((ta, lida), (tb, lidb)) <- for {
-        x <- la.toSeq; y <- lb.toSeq if x._2 == y._2
-      } yield (x, y)
-    } yield ((a, b, (ta - tb).toLong), 1))
-      .groupBy(_._1).view.mapValues(_.size.toLong)
-      .filter(_._2 >= 8L)
-      .map { case ((a, b, dt), n) => (a, b, dt, n) }.toSet
-    assert(truth.nonEmpty && truth.size >= 6) // each group: 3 ordered pairs
-    val catalog = clipWavs.toDF("clip", "media")
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = StreamingOps.audioMatchStream(
-      feed.toDF().toDF("clip", "media", "ts"), catalog,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q = out.writeStream.format("memory").queryName("audio_match")
-      .outputMode("append").start()
-    try {
-      val rows = clipWavs.map { case (id, wav) =>
-        (id, wav, Timestamp.valueOf("2024-01-01 10:00:00")) }
-      rows.grouped(5).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      // append mode: windowed agg rows finalize at watermark close —
-      // push late-window rows to advance the watermark and flush (two
-      // batches: one carries the new event time, the next emits)
-      feed.addData((100L, clipWavs.head._2,
-        Timestamp.valueOf("2024-01-02 10:00:00")))
-      q.processAllAvailable()
-      feed.addData((101L, clipWavs.head._2,
-        Timestamp.valueOf("2024-01-02 11:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("audio_match")
-        .select("clip", "cat_clip", "dt", "n_aligned")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(got === truth)
-    } finally q.stop()
-  }
-
-  test("streaming keyframe detection matches the batch lag-window " +
-    "detector across a mid-clip batch split; state is one frame per " +
-    "clip") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.PixelDecode
-    // the q_multimodal_keyframes frame kernel, verbatim
-    def frameHash(docId: Long, f: Int): (Long, Long) = {
-      val gray = new Array[Int](72)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      var blk = 0
-      while (blk < 5) {
-        val d = md.digest(s"$docId:${f / 4}:$blk".getBytes("US-ASCII"))
-        var off = 0
-        while (off < 16 && blk * 16 + off < 72) {
-          gray(blk * 16 + off) = d(off) & 0xff; off += 1
-        }
-        blk += 1
-      }
-      gray(0) = (gray(0) + f % 4) % 256
-      val px = PixelDecode.decode(
-        PixelDecode.encodePngGray(9, 8, gray)).get
-      val bits = PixelDecode.dHash(PixelDecode.grayLuma(px), 9, 8)
-      (bits & 0xffffffffL, bits >>> 32)
-    }
-    val clips = Seq(3L, 7L, 12L)
-    val rows = for (c <- clips; f <- 0 until 12) yield {
-      val (lo, hi) = frameHash(c, f)
-      StreamingOps.FrameHash(c, f, lo, hi)
-    }
-    // batch expectation: the lag computation in plain Scala
-    val want = clips.flatMap { c =>
-      var prev: Option[(Long, Long)] = None
-      (0 until 12).map { f =>
-        val (lo, hi) = frameHash(c, f)
-        val ham = prev.map { case (plo, phi) =>
-          java.lang.Long.bitCount(lo ^ plo) +
-            java.lang.Long.bitCount(hi ^ phi)
-        }.getOrElse(-1)
-        prev = Some((lo, hi))
-        (c, f, ham, ham < 0 || ham > 16)
-      }
-    }.toSet
-    val ms = MemoryStream[StreamingOps.FrameHash]
-    val q = StreamingOps.keyframeStream(ms.toDS())
-      .writeStream.format("memory").queryName("kf_stream")
-      .outputMode("append").start()
-    try {
-      // the batch boundary cuts every clip mid-scene: frame 7's delta
-      // must come from frame 6 carried in keyed state
-      ms.addData(rows.filter(_.f < 7): _*)
-      q.processAllAvailable()
-      ms.addData(rows.filter(_.f >= 7): _*)
-      q.processAllAvailable()
-      val got = spark.table("kf_stream")
-        .as[(Long, Int, Int, Boolean)].collect().toSet
-      assert(got === want)
-      // and the detector recovers exactly the planted scene starts
-      val kf = got.filter(_._4).groupBy(_._1).view
-        .mapValues(_.map(_._2).toSeq.sorted).toMap
-      clips.foreach(c => assert(kf(c) === Seq(0, 4, 8), s"clip $c"))
-    } finally q.stop()
-  }
-
   test("streaming MS2 scoring: on-time peaks score identically to " +
     "batch; late-past-watermark peaks are dropped") {
     implicit val sqlCtx = spark.sqlContext
@@ -1039,1059 +379,32 @@ class StreamingSpec extends SparkSuite {
   test("explicit persisted static side: caller owns the cache and can " +
     "unpersist it after the query stops") {
     implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      ("c1", "the quick brown fox jumps over the lazy dog at dawn"))
-      .toDF("doc_id", "text")
-    val staticDf = StreamingOps.nearDupStaticSide(corpus).persist()
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val flagged = StreamingOps.nearDupStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), corpus,
-      staticSide = Some(staticDf))
-    val q = flagged.writeStream.format("memory").queryName("neardup_own")
+    val compounds = Seq(("C1", "CCO", "C2H6O", 46.041865, 0))
+      .toDF("_id", "SMILES", "Formula", "Mass", "Charge")
+    val sp = Seq((50.0, 1.0), (70.0, 1.0))
+    val spectra = Seq(("C1", sp)).toDF("c_id", "spectrum")
+    val staticDf = StreamingOps.ms2StaticSide(compounds, spectra).persist()
+    val peaks =
+      MemoryStream[(String, Double, String, Timestamp, Seq[(Double, Double)])]
+    val scored = StreamingOps.ms2ScoreStream(
+      peaks.toDF().toDF("name", "mz", "charge", "ts", "ms2"),
+      compounds, spectra, Seq(AdductRow("[M+H]+", 1.0, 1.007276)),
+      tolDa = 0.01, staticSide = Some(staticDf))
+    val q = scored.writeStream.format("memory").queryName("ms2_own")
       .outputMode("update").start()
     try {
-      docs.addData(("d_dup",
-        "the quick brown fox jumps over the lazy dog at dawn",
-        Timestamp.valueOf("2024-01-01 10:00:00")))
+      peaks.addData(("p_etoh", 47.049141, "+",
+        Timestamp.valueOf("2024-01-01 10:00:00"), sp))
       q.processAllAvailable()
-      val got = spark.table("neardup_own")
-        .select("doc_id", "is_neardup").as[(String, Boolean)].collect().toSet
-      assert(got === Set(("d_dup", true)))
+      val got = spark.table("ms2_own")
+        .select("peak", "best_id").as[(String, String)].collect().toSet
+      assert(got === Set(("p_etoh", "C1")))
       assert(staticDf.storageLevel !==
         org.apache.spark.storage.StorageLevel.NONE)
     } finally q.stop()
     staticDf.unpersist(blocking = true)
     assert(staticDf.storageLevel ===
       org.apache.spark.storage.StorageLevel.NONE)
-  }
-
-  test("watermarked windowed counts over an event stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val events = MemoryStream[(Timestamp, String)]
-    val counts = StreamingOps.windowedEventCounts(
-      events.toDF().toDF("ts", "event_type"), "1 hour", "2 hours")
-    val q = counts.writeStream.format("memory").queryName("win_counts")
-      .outputMode("complete").start()
-    try {
-      def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-      events.addData((t(10, 5), "view"), (t(10, 55), "view"),
-        (t(11, 5), "view"), (t(10, 30), "purchase"))
-      q.processAllAvailable()
-      val got = spark.table("win_counts")
-        .select(date_format(col("bucket"), "HH").cast("int"),
-          col("event_type"), col("n"))
-        .as[(Int, String, Long)].collect().toSet
-      assert(got === Set((10, "view", 2L), (11, "view", 1L),
-        (10, "purchase", 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup drops in-watermark duplicates across " +
-    "micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val docs = MemoryStream[(String, Timestamp, String)]
-    val deduped = StreamingOps.dedupStream(
-      docs.toDF().toDF("doc_hash", "ts", "body"),
-      "doc_hash", "ts", watermark = "30 minutes")
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      docs.addData(("h1", t(0), "a"), ("h1", t(1), "a-dup"),
-        ("h2", t(2), "b"))
-      q.processAllAvailable()
-      // duplicate h1 arriving in a LATER micro-batch is still dropped
-      docs.addData(("h1", t(5), "a-dup-later"), ("h3", t(6), "c"))
-      q.processAllAvailable()
-      val got = spark.table("dedup_out")
-        .select("doc_hash", "body").as[(String, String)].collect().toSet
-      assert(got === Set(("h1", "a"), ("h2", "b"), ("h3", "c")))
-    } finally q.stop()
-  }
-
-  test("streaming SRM emits the batch chi-square row once a day " +
-    "closes, deduping repeat visits across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(d: Int, h: Int) =
-      Timestamp.valueOf(f"2024-01-0$d $h%02d:30:00")
-    val events = MemoryStream[(Timestamp, Long)]
-    val out = StreamingOps.srmStream(
-      events.toDF().toDF("ts", "user_id"), watermark = "1 day")
-    val q = out.writeStream.format("memory").queryName("srm_out")
-      .outputMode("append").start()
-    try {
-      // day 1: users 1..6, with repeat visits split across batches
-      events.addData((t(1, 9), 1L), (t(1, 10), 2L), (t(1, 11), 3L),
-        (t(1, 12), 1L))
-      q.processAllAvailable()
-      events.addData((t(1, 13), 4L), (t(1, 14), 5L), (t(1, 15), 6L),
-        (t(1, 16), 2L))
-      q.processAllAvailable()
-      assert(spark.table("srm_out").count() === 0L,
-        "day emitted before the watermark closed it")
-      // day 3 arrival pushes the watermark past end-of-day-1
-      events.addData((t(3, 9), 7L))
-      q.processAllAvailable()
-      val got = spark.table("srm_out")
-        .select("day", "n_a", "n_b", "chi2_x1e6", "srm_flag")
-        .as[(String, Long, Long, Long, Boolean)].collect().toSeq
-      // batch twin over the same closed day (q_events_srm core)
-      val batch = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("user_id")
-        .withColumn("v", expr(
-          s"${graft.operators.TextOps.hash64("cast(user_id as string)")}" +
-            " % 2"))
-        .agg(
-          sum(when(col("v") === 0, 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("v") === 1, 1L).otherwise(0L)).as("n_b"))
-        .withColumn("chi2_x1e6", expr(
-          "cast(floor(cast((n_a - n_b) as double) * (n_a - n_b) " +
-            "/ (n_a + n_b) * 1000000) as bigint)"))
-        .withColumn("srm_flag", expr("chi2_x1e6 > 3841000"))
-        .as[(Long, Long, Long, Boolean)].head()
-      assert(got === Seq(("2024-01-01", batch._1, batch._2,
-        batch._3, batch._4)))
-      assert(batch._1 + batch._2 === 6L, "repeat visits not deduped")
-    } finally q.stop()
-  }
-
-  test("streaming quota admission matches the batch first-k cut and " +
-    "exhausts across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = MemoryStream[StreamingOps.QuotaEvent]
-    val out = StreamingOps.quotaAdmitStream(docs.toDS(), k = 2)
-    val q = out.writeStream.format("memory").queryName("quota_out")
-      .outputMode("update").start()
-    try {
-      import StreamingOps.QuotaEvent
-      // batch 1: srcA fills its quota, srcB takes one slot
-      docs.addData(QuotaEvent("A", 1L, 100L), QuotaEvent("A", 2L, 200L),
-        QuotaEvent("A", 3L, 300L), QuotaEvent("B", 10L, 150L))
-      q.processAllAvailable()
-      // batch 2: srcA stays exhausted; srcB's second doc still admits
-      docs.addData(QuotaEvent("A", 4L, 400L), QuotaEvent("B", 11L, 450L),
-        QuotaEvent("B", 12L, 500L))
-      q.processAllAvailable()
-      val admitted = spark.table("quota_out")
-        .where(col("admitted"))
-        .select("source", "docId").as[(String, Long)].collect().toSet
-      // batch twin: first-k by (tsMicros, docId) per source
-      val all = Seq(("A", 1L, 100L), ("A", 2L, 200L), ("A", 3L, 300L),
-        ("B", 10L, 150L), ("A", 4L, 400L), ("B", 11L, 450L),
-        ("B", 12L, 500L)).toDF("source", "docId", "tsMicros")
-      val batchKept = all.withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("source")
-            .orderBy(col("tsMicros"), col("docId"))))
-        .where(col("rk") <= 2)
-        .select("source", "docId").as[(String, Long)].collect().toSet
-      assert(admitted === batchKept, s"got $admitted vs $batchKept")
-      // the per-source counter never exceeds the quota
-      val maxN = spark.table("quota_out")
-        .agg(max("nAdmitted")).as[Long].head()
-      assert(maxN === 2L)
-    } finally q.stop()
-  }
-
-  test("dedupStream state survives a query restart from its checkpoint") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("dedup_out").toString
-    val docs = MemoryStream[(String, Timestamp, String)]
-    val deduped = StreamingOps.dedupStream(
-      docs.toDF().toDF("doc_hash", "ts", "body"),
-      "doc_hash", "ts", watermark = "30 minutes")
-    // the memory sink cannot recover from a checkpoint; the file sink
-    // is the fault-tolerant surface a real pipeline restarts on
-    def start() = deduped.writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val q1 = start()
-    try {
-      docs.addData(("h1", t(0), "a"), ("h2", t(1), "b"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(spark.read.parquet(out).count() === 2)
-    // restart from the same checkpoint: the dedup state must be
-    // RESTORED, so a replayed h1 is still recognized as a duplicate
-    val q2 = start()
-    try {
-      docs.addData(("h1", t(5), "a-after-restart"), ("h3", t(6), "c"))
-      q2.processAllAvailable()
-      val got = spark.read.parquet(out)
-        .select("doc_hash", "body").as[(String, String)].collect().toSet
-      assert(got === Set(("h1", "a"), ("h2", "b"), ("h3", "c")))
-    } finally q2.stop()
-  }
-
-  test("srmStream's two-stateful chain (dedup state + window state) " +
-    "survives a checkpointed restart") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(d: Int, h: Int) =
-      Timestamp.valueOf(f"2024-01-0$d $h%02d:30:00")
-    val ckpt = java.nio.file.Files.createTempDirectory("srm_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("srm_out").toString
-    val events = MemoryStream[(Timestamp, Long)]
-    val srm = StreamingOps.srmStream(
-      events.toDF().toDF("ts", "user_id"), watermark = "1 day")
-    def start() = srm.writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    // phase 1: day-1 users 1..4 (user 2 twice), then STOP before the
-    // watermark closes the day — both state stores must persist
-    val q1 = start()
-    try {
-      events.addData((t(1, 9), 1L), (t(1, 10), 2L), (t(1, 11), 3L),
-        (t(1, 12), 2L), (t(1, 13), 4L))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(spark.read.parquet(out).count() === 0,
-      "no day closed yet — nothing emitted before the restart")
-    // phase 2: after restart, a repeat visit of user 1 must STILL
-    // dedup (restored dedup state), and the day-3 arrival closes
-    // day 1 with the restored window counts
-    val q2 = start()
-    try {
-      events.addData((t(1, 14), 1L), (t(3, 9), 9L))
-      q2.processAllAvailable()
-      val got = spark.read.parquet(out)
-        .select("day", "n_a", "n_b").as[(String, Long, Long)]
-        .collect().toSeq
-      assert(got.length === 1, s"exactly day 1 closes: $got")
-      assert(got.head._1 === "2024-01-01")
-      assert(got.head._2 + got.head._3 === 4L,
-        s"users 1..4 once each across the restart: $got")
-    } finally q2.stop()
-  }
-
-  test("streaming minhash-LSH near-dup flags corpus matches and passes " +
-    "novel docs") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      ("c1", "the quick brown fox jumps over the lazy dog at dawn"),
-      ("c2", "pack my box with five dozen liquor jugs before noon"))
-      .toDF("doc_id", "text")
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val flagged = StreamingOps.nearDupStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), corpus)
-    val q = flagged.writeStream.format("memory").queryName("neardup_out")
-      .outputMode("update").start()
-    try {
-      def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-      docs.addData(
-        // identical to c1: every band key collides -> flagged
-        ("d_dup", "the quick brown fox jumps over the lazy dog at dawn",
-          t(0)),
-        // unrelated text: no shared shingles, no shared bands
-        ("d_new", "completely different words about spark catalyst plans " +
-          "and shuffle partitions everywhere", t(1)),
-        // shorter than the shingle width: no shingles -> no verdict row
-        // (an empty signature must NOT collide via md5(''))
-        ("d_short", "hello world", t(2)))
-      q.processAllAvailable()
-      val got = spark.table("neardup_out")
-        .select("doc_id", "is_neardup", "dup_of")
-        .as[(String, Boolean, Option[String])].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got("d_dup") === ((true, Some("c1"))))
-      assert(got("d_new") === ((false, None)))
-      assert(!got.contains("d_short"))
-    } finally q.stop()
-  }
-
-  test("incremental cluster assignment: an arriving dup of a known " +
-    "cluster gets that cluster's canonical id; novel docs get null") {
-    implicit val sqlCtx = spark.sqlContext
-    // corpus: c1/c3 are identical texts -> one cluster with canonical
-    // min("c1","c3") = "c1"; c2 is its own singleton cluster
-    val corpus = Seq(
-      ("c1", "the quick brown fox jumps over the lazy dog at dawn"),
-      ("c3", "the quick brown fox jumps over the lazy dog at dawn"),
-      ("c2", "pack my box with five dozen liquor jugs before noon"))
-      .toDF("doc_id", "text")
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val assigned = StreamingOps.clusterAssignStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), corpus)
-    val q = assigned.writeStream.format("memory")
-      .queryName("cluster_assign_out").outputMode("update").start()
-    try {
-      def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-      docs.addData(
-        // identical to the c1/c3 cluster -> its canonical, not c3
-        ("d_dup", "the quick brown fox jumps over the lazy dog at dawn",
-          t(0)),
-        // identical to the singleton c2 cluster
-        ("d_c2", "pack my box with five dozen liquor jugs before noon",
-          t(1)),
-        // unrelated: no band hits -> is_known=false, null component
-        ("d_new", "completely different words about spark catalyst " +
-          "plans and shuffle partitions everywhere", t(2)))
-      q.processAllAvailable()
-      val got = spark.table("cluster_assign_out")
-        .select("doc_id", "is_known", "component")
-        .as[(String, Boolean, Option[String])].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got("d_dup") === ((true, Some("c1"))))
-      assert(got("d_c2") === ((true, Some("c2"))))
-      assert(got("d_new") === ((false, None)))
-    } finally q.stop()
-  }
-
-  test("cross-modal pair assignment: arriving pairs assign by caption " +
-    "bands, image bands, or both; either modality alone suffices") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.PixelDecode
-    def png(seed: Int): Array[Byte] = PixelDecode.encodePngGray(32, 32,
-      Array.tabulate(1024)(i => (seed * 53 + i * 7 + (i * i) % 19) % 256))
-    // corpus: c1/c3 caption-dups (canonical c1); c2/c4 image-dups
-    // (canonical c2); captions unique across c2/c4
-    val corpus = Seq(
-      ("c1", "the quick brown fox jumps over the lazy dog at dawn", png(1)),
-      ("c3", "the quick brown fox jumps over the lazy dog at dawn", png(3)),
-      ("c2", "pack my box with five dozen liquor jugs before noon", png(2)),
-      ("c4", "how vexingly quick daft zebras jump over fences today", png(2)))
-      .toDF("doc_id", "text", "media")
-    val pairs = MemoryStream[(String, String, Array[Byte], Timestamp)]
-    val out = StreamingOps.pairAssignStream(
-      pairs.toDF().toDF("doc_id", "text", "media", "ts"), corpus)
-    val q = out.writeStream.format("memory").queryName("pair_assign")
-      .outputMode("update").start()
-    try {
-      def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-      pairs.addData(
-        // caption hit only -> c1 cluster, one modality
-        ("d_text", "the quick brown fox jumps over the lazy dog at dawn",
-          png(100), t(0)),
-        // image hit only -> c2 cluster, one modality
-        ("d_img", "entirely novel caption about catalyst shuffle plans " +
-          "and broadcast joins", png(2), t(1)),
-        // both modalities hit different clusters -> min canonical, 2
-        ("d_both", "the quick brown fox jumps over the lazy dog at dawn",
-          png(2), t(2)),
-        // caption unusable (below shingle width), image carries it
-        ("d_short", "hi", png(2), t(3)),
-        // image undecodable, caption carries it
-        ("d_noimg", "the quick brown fox jumps over the lazy dog at dawn",
-          "not an image".getBytes, t(4)),
-        // neither matches -> known=false, zero matched modalities
-        ("d_new", "completely different words about spark catalyst " +
-          "plans and shuffle partitions everywhere", png(101), t(5)))
-      q.processAllAvailable()
-      val got = spark.table("pair_assign")
-        .select("doc_id", "is_known", "component", "matched_modalities")
-        .as[(String, Boolean, Option[String], Int)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      assert(got("d_text") === ((true, Some("c1"), 1)))
-      assert(got("d_img") === ((true, Some("c2"), 1)))
-      assert(got("d_both") === ((true, Some("c1"), 2)))
-      assert(got("d_short") === ((true, Some("c2"), 1)))
-      assert(got("d_noimg") === ((true, Some("c1"), 1)))
-      assert(got("d_new") === ((false, None, 0)))
-    } finally q.stop()
-  }
-
-  test("streaming quality bucketing scores arriving docs against " +
-    "broadcast corpus cut points; unknown groups and empty docs get " +
-    "null buckets") {
-    implicit val sqlCtx = spark.sqlContext
-    // corpus qualities ~0.49 .. 0.66 — the junk arrival scores below
-    // every cut, the clean arrival above any p<=0.9 cut
-    val corpus = Seq(
-      ("c1", "en", "the cat ran far away today"),
-      ("c2", "en", "the a cat sat on a mat"),
-      ("c3", "en", "alpha beta gamma delta epsilon zeta"),
-      ("c4", "en", "one two three four five six seven eight nine ten"))
-      .toDF("doc_id", "lang", "text")
-    val docs = MemoryStream[(String, String, String)]
-    val out = StreamingOps.qualityBucketStream(
-      docs.toDF().toDF("doc_id", "lang", "text"), corpus, buckets = 2)
-    val q = out.writeStream.format("memory").queryName("qbucket_out")
-      .outputMode("append").start()
-    try {
-      docs.addData(
-        ("d_good", "en", "red orange yellow green blue indigo violet"),
-        ("d_junk", "en", "the the the a a"),
-        ("d_other", "zz", "totally unscored language words here"),
-        ("d_empty", "en", "  "))
-      q.processAllAvailable()
-      val got = spark.table("qbucket_out")
-        .select("doc_id", "bucket")
-        .as[(String, Option[Int])].collect().toMap
-      assert(got("d_good") === Some(1))
-      assert(got("d_junk") === Some(0))
-      assert(got("d_other").isEmpty) // lang has no corpus cuts
-      assert(got("d_empty").isEmpty) // no tokens -> no rank
-    } finally q.stop()
-  }
-
-  test("streaming scrub masks PII and blocklist tokens identically to " +
-    "the batch kernel composition") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.TextOps
-    val bl = Seq("customer", "merge")
-    val fixture = Seq(
-      ("d1", "mail jane.doe@ex.co about the customer merge today"),
-      ("d2", "ping 10.0.42.7 then call +1 555 867 5309"),
-      ("d3", "no sensitive content in this one"),
-      ("d4", "customers accumulate but customer is masked"),
-      // email/IPv4 overlap: ONE replacement, so n_pii must be 1
-      ("d5", "root@10.0.0.1.example.com pinged us"))
-    val docs = MemoryStream[(String, String)]
-    val out = StreamingOps.scrubStream(
-      docs.toDF().toDF("doc_id", "text"), bl)
-    val q = out.writeStream.format("memory").queryName("scrub_out")
-      .outputMode("append").start()
-    try {
-      docs.addData(fixture: _*)
-      q.processAllAvailable()
-      val got = spark.table("scrub_out")
-        .select("doc_id", "n_pii", "n_masked", "scrubbed")
-        .as[(String, Long, Long, String)].collect().sortBy(_._1)
-      // batch twin: q_text_scrub's per-doc stage IS the same shared
-      // TextOps.scrubProjection, so this pins stream == the projection
-      // the batch query aggregates over
-      val want = fixture.toDF("doc_id", "text")
-        .withColumn("sp",
-          TextOps.scrubProjection(col("text"), bl, "[MASKED]"))
-        .select(col("doc_id"), col("sp.n_pii"), col("sp.n_masked"),
-          col("sp.scrubbed"))
-        .as[(String, Long, Long, String)].collect().sortBy(_._1)
-      assert(got === want)
-      // and the values themselves are the intended ones, not just
-      // stream==batch on a shared bug
-      val byId = got.map(r => r._1 -> r).toMap
-      assert(byId("d1") === (("d1", 1L, 2L,
-        "mail [EMAIL] about the [MASKED] [MASKED] today")))
-      assert(byId("d2") === (("d2", 2L, 0L,
-        "ping [IP] then call [PHONE]")))
-      assert(byId("d3") === (("d3", 0L, 0L,
-        "no sensitive content in this one")))
-      assert(byId("d4") === (("d4", 0L, 1L,
-        "customers accumulate but [MASKED] is masked")))
-      // overlapping email/IPv4 span: one [EMAIL] tag, counted ONCE
-      assert(byId("d5") === (("d5", 1L, 0L, "[EMAIL] pinged us")))
-    } finally q.stop()
-  }
-
-  test("streaming decontamination flags verbatim eval overlap; clean " +
-    "docs pass; sub-threshold docs emit no verdict") {
-    implicit val sqlCtx = spark.sqlContext
-    val evalSet = Seq(
-      Tuple1("the quick brown fox jumps over the lazy dog at dawn"))
-      .toDF("text")
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val out = StreamingOps.contaminationStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), evalSet)
-    val q = out.writeStream.format("memory").queryName("contam_out")
-      .outputMode("update").start()
-    try {
-      def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-      docs.addData(
-        // verbatim copy of the eval doc: every fingerprint shared
-        ("d_copy", "the quick brown fox jumps over the lazy dog at dawn",
-          t(0)),
-        // unrelated text: zero shared fingerprints
-        ("d_clean", "completely different words about spark catalyst " +
-          "plans and shuffle partitions everywhere", t(1)),
-        // below the 11-char guarantee threshold: no fingerprints
-        ("d_tiny", "hello", t(2)))
-      q.processAllAvailable()
-      val got = spark.table("contam_out")
-        .select("doc_id", "contaminated", "overlap")
-        .as[(String, Boolean, Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got("d_copy") === ((true, 1.0)))
-      assert(got("d_clean")._1 === false)
-      assert(got("d_clean")._2 === 0.0)
-      assert(!got.contains("d_tiny"))
-    } finally q.stop()
-  }
-
-  test("streaming decontamination verdicts equal the batch query's " +
-    "math on a shared real-corpus fixture") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.TextOps
-    // same fixture through both paths: sf0.001 docs, src0 as the eval
-    // set — the pattern the near-dup and TF-IDF parity cases use
-    val all = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    val evalSet = all.where($"source" === "src0").select("text")
-    val corpusDocs = all.where($"source" =!= "src0").limit(30)
-      .select($"doc_id".cast("string").as("doc_id"), $"text")
-      .as[(String, String)].collect()
-    // batch twin: q_text_contamination's exact per-doc math (same
-    // kernel, same distinct-fp counting, same length-normalized ratio)
-    val batchDocs = corpusDocs.toSeq.toDF("doc_id", "text")
-      .withColumn("win", TextOps.winnowCompiled(8, 11)(col("text")))
-      .where(size(col("win")) > 0)
-      .localCheckpoint()
-    val evalFps = evalSet
-      .withColumn("win", TextOps.winnowCompiled(8, 11)(col("text")))
-      .select(explode(col("win")).as("fp")).distinct()
-    val sharedB = batchDocs
-      .select($"doc_id", explode($"win").as("fp"))
-      .join(broadcast(evalFps), Seq("fp"))
-      .groupBy("doc_id").agg(countDistinct("fp").as("nfp"))
-    val batch = batchDocs.join(sharedB, Seq("doc_id"), "left")
-      .select($"doc_id", size($"win").cast("long").as("n_fps"),
-        coalesce($"nfp", lit(0L)).as("n_shared"))
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 ->
-        ((r._2, r._3, r._3.toDouble / r._2, r._3.toDouble / r._2 >= 0.75)))
-      .toMap
-    assert(batch.nonEmpty)
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val out = StreamingOps.contaminationStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), evalSet)
-    val q = out.writeStream.format("memory")
-      .queryName("contam_parity_out").outputMode("update").start()
-    try {
-      val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
-      docs.addData(corpusDocs.map(d => (d._1, d._2, t0)).toSeq: _*)
-      q.processAllAvailable()
-      val got = spark.table("contam_parity_out")
-        .select("doc_id", "n_fps", "n_shared", "overlap", "contaminated")
-        .as[(String, Long, Long, Double, Boolean)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-      assert(got === batch)
-    } finally q.stop()
-  }
-
-  test("streaming span removal emits the same cleaned text as the " +
-    "batch q_text_clean math on a shared real-corpus fixture") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.TextOps
-    val all = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    val evalSet = all.where($"source" === "src0").select("text")
-    val corpusDocs = all.where($"source" =!= "src0").limit(30)
-      .select($"doc_id".cast("string").as("doc_id"), $"text")
-      .as[(String, String)].collect() ++ Seq(
-        // pass-through branches: no eval-gram overlap; below the
-        // 11-char guarantee threshold (no fingerprints at all)
-        ("d_untouched", "zzzz qqqq xxxx wwww yyyy unrelated gibberish"),
-        ("d_tiny", "hello"))
-    // batch twin: q_text_clean's exact per-doc math (same positional
-    // winnow kernel, same broadcast eval-fp join, same removeSpans fold)
-    val evalFps = evalSet
-      .withColumn("win", TextOps.winnowCompiled(8, 11)(col("text")))
-      .select(explode($"win").as("fp")).distinct()
-    val batch = corpusDocs.toSeq.toDF("doc_id", "text")
-      .withColumn("wp", TextOps.winnowPositionsCompiled(8, 11)($"text"))
-      .select($"doc_id", $"text", explode_outer($"wp").as("w"))
-      .select($"doc_id", $"text", $"w._1".as("pos"), $"w._2".as("fp"))
-      .join(broadcast(evalFps.withColumn("hit", lit(1L))), Seq("fp"), "left")
-      .groupBy("doc_id")
-      .agg(first($"text").as("text"),
-        sort_array(collect_list(when($"hit".isNotNull, $"pos"))).as("ps"))
-      .withColumn("cleaned", TextOps.removeSpans("text", "ps", 8))
-      .select($"doc_id", size($"ps").cast("long").as("n_matched"),
-        $"cleaned")
-      .as[(String, Long, String)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(batch.size === 32)
-    // the fixture exercises both branches: contaminated real docs
-    // (src0 shares grams across this synthetic corpus) and the two
-    // injected pass-through docs, which must come out verbatim
-    assert(batch.values.exists(_._1 > 0L))
-    assert(batch("d_untouched") === ((0L,
-      "zzzz qqqq xxxx wwww yyyy unrelated gibberish")))
-    assert(batch("d_tiny") === ((0L, "hello")))
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val out = StreamingOps.cleanStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), evalSet)
-    val q = out.writeStream.format("memory")
-      .queryName("clean_parity_out").outputMode("update").start()
-    try {
-      val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
-      docs.addData(corpusDocs.map(d => (d._1, d._2, t0)).toSeq: _*)
-      q.processAllAvailable()
-      val got = spark.table("clean_parity_out")
-        .select("doc_id", "n_matched", "cleaned")
-        .as[(String, Long, String)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got === batch)
-    } finally q.stop()
-  }
-
-  test("streaming ANN finds the matching corpus vector for arriving " +
-    "queries; orthogonal queries miss every band") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      ("v1", Seq(1.0f, 0.0f, 2.0f, 0.0f)),
-      ("v2", Seq(0.0f, 3.0f, 0.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
-    val queries = MemoryStream[(String, Seq[Float], Timestamp)]
-    val out = StreamingOps.annStream(
-      queries.toDF().toDF("query_id", "embedding", "ts"), corpus)
-    val q = out.writeStream.format("memory").queryName("ann_out")
-      .outputMode("update").start()
-    try {
-      def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-      queries.addData(
-        ("q_v1", Seq(1.0f, 0.0f, 2.0f, 0.0f), t(0)), // identical to v1
-        ("q_far", Seq(-1.0f, 0.0f, -2.0f, 0.0f), t(1))) // -v1: opposite
-      q.processAllAvailable()
-      val got = spark.table("ann_out")
-        .select("query_id", "best_id", "best_cos")
-        .as[(String, String, Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got("q_v1")._1 === "v1")
-      assert(got("q_v1")._2 > 0.999999) // exact match up to IEEE sqrt
-      // -v1 flips every hyperplane sign: all band keys differ from both
-      // corpus vectors' keys, so it never reaches the join output
-      assert(!got.contains("q_far"))
-    } finally q.stop()
-  }
-
-  test("streaming IVF-PQ probe matches the batch composition's best " +
-    "candidate and cell-mate count on a shared real-corpus fixture") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{ProductQuantizer, VectorOps}
-    val all = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val static = StreamingOps.ivfPqStaticSide(all, kCentroids = 8)
-    static.coded.persist().count()
-    // batch twin: the q_sim_ivfpq math through the SAME buildIvfPq
-    // chain the static side uses (the parity under test is the probe
-    // mechanics — closure argmax + qtab expression vs the relational
-    // path; self NOT excluded — the stream side has no notion of a
-    // query being a corpus row)
-    val e = all
-      .withColumn("qe", VectorOps.quantize("embedding"))
-      .withColumn("nq", VectorOps.normSq("qe"))
-      .select("vec_id", "qe", "nq")
-    val ivfpq = ProductQuantizer.buildIvfPq(e, kCentroids = 8,
-      m = 8, subLen = 8, kCodes = 16)
-    val q = e.where($"vec_id" % 50 === 0)
-      .select($"vec_id".as("query_id"), $"qe")
-    val qCell = q.select("query_id")
-      .join(ivfpq.cellOf.withColumnRenamed("vec_id", "query_id"),
-        Seq("query_id"))
-    val cand = ivfpq.cellOf.join(qCell, Seq("cell"))
-      .select("query_id", "vec_id")
-    val batch = ProductQuantizer
-      .adcScoreCandidates(q, cand, ivfpq.codes, ivfpq.cb,
-        m = 8, subLen = 8)
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n"),
-        min(struct($"adist".as("ad"), $"vec_id".as("id"))).as("m"))
-      .select($"query_id", $"n", $"m.ad", $"m.id")
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(batch.nonEmpty)
-    val probes = all.where($"vec_id" % 50 === 0)
-      .select($"vec_id", $"embedding")
-      .as[(Long, Seq[Float])].collect()
-    val queries = MemoryStream[(Long, Seq[Float], Timestamp)]
-    val out = StreamingOps.ivfPqStream(
-      queries.toDF().toDF("query_id", "embedding", "ts"), static)
-    val sq = out.writeStream.format("memory").queryName("ivfpq_out")
-      .outputMode("update").start()
-    try {
-      val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
-      queries.addData(probes.map(p => (p._1, p._2, t0)).toSeq: _*)
-      sq.processAllAvailable()
-      val got = spark.table("ivfpq_out")
-        .select("query_id", "n_cell_mates", "best_adist", "best_id")
-        .as[(Long, Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      assert(got === batch)
-    } finally {
-      sq.stop()
-      static.coded.unpersist()
-    }
-  }
-
-  test("streaming TF-IDF scores arriving docs against static corpus " +
-    "stats; OOV-only docs emit nothing; late docs are dropped") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      ("apple banana apple"), ("banana cherry"), ("banana date"))
-      .toDF("text")
-    // N=3; df: apple 1, banana 3, cherry 1, date 1
-    val docs = MemoryStream[(String, String, Timestamp)]
-    val staticDf = StreamingOps.tfidfStaticSide(corpus).persist()
-    val scored = StreamingOps.tfidfStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), corpus,
-      staticSide = Some(staticDf))
-    val q = scored.writeStream.format("memory").queryName("tfidf_stream")
-      .outputMode("update").start()
-    try {
-      def t(s: String) = Timestamp.valueOf(s)
-      docs.addData(
-        // apple: tf1*N3/df1=3, cherry: 3, banana: tf2*N3/df3=2
-        // -> score desc, term asc: apple, cherry, banana
-        ("d1", "apple banana banana cherry", t("2024-01-01 10:00:00")),
-        // only out-of-vocabulary terms: no df rows -> no output row
-        ("d_oov", "zebra zebra", t("2024-01-01 10:01:00")))
-      q.processAllAvailable()
-      // advance the watermark past d1's window, then send a late doc
-      docs.addData(("d_adv", "banana", t("2024-01-01 11:30:00")))
-      q.processAllAvailable()
-      docs.addData(("d_late", "apple", t("2024-01-01 10:02:00")))
-      q.processAllAvailable()
-      val got = spark.table("tfidf_stream")
-        .select("doc_id", "top_terms", "best_tfidf")
-        .as[(String, Seq[String], Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got("d1")._1 === Seq("apple", "cherry", "banana"))
-      assert(got("d1")._2 === math.rint(math.log(4.0 / 2.0) * 1e4) / 1e4)
-      assert(!got.contains("d_oov"))
-      assert(!got.contains("d_late"))
-    } finally q.stop()
-    staticDf.unpersist(blocking = true)
-  }
-
-  test("streaming perplexity equals batch q_text_perplexity when the " +
-    "pruned LM covers the corpus; novel n-grams back off, never drop") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = spark.read.parquet(s"$sf/documents.parquet")
-    // default top-K far exceeds the sf0.001 vocabulary -> zero pruning
-    val lm = StreamingOps.perplexityStaticSide(corpus).persist()
-    val docs = MemoryStream[(Long, String, Timestamp)]
-    val out = StreamingOps.perplexityStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), corpus,
-      staticSide = Some(lm))
-    val q = out.writeStream.format("memory").queryName("ppl_stream")
-      .outputMode("update").start()
-    try {
-      def t(i: Int) = new Timestamp(1704103200000L + i * 1000L)
-      val fixture = corpus.select("doc_id", "text")
-        .as[(Long, String)].collect().toSeq
-      docs.addData(fixture.zipWithIndex
-        .map { case ((id, tx), i) => (id, tx, t(i)) })
-      // a doc of entirely novel vocabulary: every bigram resolves to
-      // the OOV row — one row out, not a silent drop (the tfidf
-      // stream's documented OOV drop is wrong for a quality GATE:
-      // unscoreable docs must surface, not vanish)
-      docs.addData((900001L, "qqxz wvpk", t(fixture.size)))
-      q.processAllAvailable()
-      val got = spark.table("ppl_stream")
-        .select("doc_id", "n_big", "nll")
-        .as[(Long, Long, Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      // batch twin over the same table: full-coverage LM -> exact
-      val want = graft.SparkEntry.queries("q_text_perplexity")(spark, sf)
-        .select("doc_id", "n_big", "nll")
-        .as[(Long, Long, Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(want.keySet.subsetOf(got.keySet))
-      want.foreach { case (id, (nb, nll)) =>
-        assert(got(id) === ((nb, nll)), s"doc $id diverges from batch")
-      }
-      // the OOV doc scored through the backoff chain: ln(V) per bigram
-      val soov = lm.where(col("kind") === "oov")
-        .select("s").as[Long].head()
-      assert(got(900001L) === ((1L, soov / 10000.0)))
-    } finally q.stop()
-    lm.unpersist(blocking = true)
-  }
-
-  test("streaming sequence packing keeps pack ids monotone across " +
-    "micro-batches via per-language keyed state") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = MemoryStream[StreamingOps.PackDoc]
-    val packed = StreamingOps.packStream(docs.toDS(), budget = 10L)
-    val q = packed.toDF().writeStream.format("memory")
-      .queryName("pack_out").outputMode("append").start()
-    try {
-      // batch 1: en cumulative 0,6,12 -> packs 0,0,1; fr starts its own
-      docs.addData(
-        StreamingOps.PackDoc("en", 1L, 6L),
-        StreamingOps.PackDoc("en", 2L, 6L),
-        StreamingOps.PackDoc("en", 3L, 6L),
-        StreamingOps.PackDoc("fr", 10L, 9L))
-      q.processAllAvailable()
-      // batch 2: en continues at 18 -> pack 1; fr at 9 -> pack 0
-      docs.addData(
-        StreamingOps.PackDoc("en", 4L, 6L),
-        StreamingOps.PackDoc("fr", 11L, 1L))
-      q.processAllAvailable()
-      val got = spark.table("pack_out")
-        .select("lang", "docId", "packId")
-        .as[(String, Long, Long)].collect()
-        .map(r => (r._1, r._2) -> r._3).toMap
-      assert(got(("en", 1L)) === 0L)
-      assert(got(("en", 2L)) === 0L)
-      assert(got(("en", 3L)) === 1L)
-      assert(got(("en", 4L)) === 1L) // state carried: cum 18 div 10
-      assert(got(("fr", 10L)) === 0L)
-      assert(got(("fr", 11L)) === 0L) // fr cum 9 still inside pack 0
-    } finally q.stop()
-  }
-
-  test("composed streaming corpus pipeline (scrub -> quality -> dedup " +
-    "-> decontamination -> pack) matches the batch pipeline stage by " +
-    "stage") {
-    implicit val sqlCtx = spark.sqlContext
-    // Shared fixture: the SAME sf0.001 documents table the batch
-    // q_pipeline_corpus runs on. The streaming side composes the four
-    // stage ops in the production topology — each stage's survivors
-    // RELAY into the next stage's stream (topic -> job -> topic) — so
-    // the stage boundaries (drop rules, null semantics, column
-    // contracts) are exercised, which is where composition bugs hide
-    // (the round-8 lesson). Every stage's survivor SET, and the final
-    // pack assignment of every doc, must equal the batch pipeline's.
-    val stages = graft.queries.TextQueries.corpusStages(
-      spark, sf, _.localCheckpoint())
-    val batch1 = stages.q1.select("doc_id").as[Long].collect().toSet
-    val batch2 = stages.q2.select("doc_id").as[Long].collect().toSet
-    val batch3 = stages.q3.select("doc_id").as[Long].collect().toSet
-    val batchPacks = stages.packed.select("lang", "doc_id", "pack_id")
-      .as[(String, Long, Long)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(batch1.nonEmpty && batch2.nonEmpty && batch3.nonEmpty)
-    val corpus = stages.corpus.localCheckpoint()
-    val evalSet = spark.read.parquet(s"$sf/documents.parquet")
-      .where(col("source") === "src0").select("text")
-    def surviving(ids: Set[Long]) =
-      corpus.join(ids.toSeq.toDF("doc_id"), Seq("doc_id"))
-        .localCheckpoint()
-    def t(i: Int) = new Timestamp(1704103200000L + i * 1000L)
-
-    // stage 0: scrub — raw docs stream through scrubStream; the
-    // per-doc scrubbed text must equal the batch pipeline's corpus
-    // text (both are the shared TextOps.scrubProjection), so every
-    // downstream stage consumes identical bytes in both topologies
-    val raw = spark.read.parquet(s"$sf/documents.parquet")
-      .where(col("source") =!= "src0")
-    val in0 = MemoryStream[(Long, String)]
-    val out0 = StreamingOps.scrubStream(
-      in0.toDF().toDF("doc_id", "text"),
-      graft.queries.TextQueries.PipelineBlocklist)
-    val sq0 = out0.writeStream.format("memory").queryName("pipe_s0")
-      .outputMode("append").start()
-    val s0 = try {
-      in0.addData(raw.select("doc_id", "text")
-        .as[(Long, String)].collect().toSeq)
-      sq0.processAllAvailable()
-      spark.table("pipe_s0").select("doc_id", "scrubbed")
-        .as[(Long, String)].collect().toMap
-    } finally sq0.stop()
-    val batchText = corpus.select("doc_id", "text")
-      .as[(Long, String)].collect().toMap
-    assert(s0 === batchText, "stage 0 (scrub) text diverges")
-
-    // stage 1: quality bucketing against the corpus cut points, at
-    // the batch query's accuracy => identical GK cuts, same >= 2 keep
-    val in1 = MemoryStream[(Long, String, String)]
-    val out1 = StreamingOps.qualityBucketStream(
-      in1.toDF().toDF("doc_id", "lang", "text"),
-      corpus.select("lang", "text"), accuracy = 1000000)
-    val sq1 = out1.writeStream.format("memory").queryName("pipe_s1")
-      .outputMode("append").start()
-    val s1 = try {
-      in1.addData(corpus.select("doc_id", "lang", "text")
-        .as[(Long, String, String)].collect().toSeq)
-      sq1.processAllAvailable()
-      spark.table("pipe_s1").where(col("bucket") >= 2)
-        .select("doc_id").as[Long].collect().toSet
-    } finally sq1.stop()
-    assert(s1 === batch1, "stage 1 (quality) survivors diverge")
-
-    // stage 2: incremental cluster assignment against the stage-1
-    // survivors, at the batch dedup geometry (w=3, k=16, 4 bands);
-    // keep unclustered (absent or null component) + cluster canonicals
-    val surv1 = surviving(s1)
-    val static2 = StreamingOps.clusterAssignStaticSide(
-      surv1.select("doc_id", "text"),
-      shingleW = 3, minhashK = 16, bands = 4).persist()
-    val in2 = MemoryStream[(Long, String, Timestamp)]
-    val out2 = StreamingOps.clusterAssignStream(
-      in2.toDF().toDF("doc_id", "text", "ts"),
-      surv1.select("doc_id", "text"),
-      shingleW = 3, minhashK = 16, bands = 4,
-      staticSide = Some(static2))
-    val sq2 = out2.writeStream.format("memory").queryName("pipe_s2")
-      .outputMode("update").start()
-    val s2 = try {
-      in2.addData(surv1.select("doc_id", "text")
-        .as[(Long, String)].collect().toSeq.zipWithIndex
-        .map { case ((id, tx), i) => (id, tx, t(i)) })
-      sq2.processAllAvailable()
-      val comp = spark.table("pipe_s2")
-        .select("doc_id", "component")
-        .as[(Long, Option[Long])].collect().toMap
-      s1.filter(id => comp.get(id).forall(c => c.forall(_ == id)))
-    } finally {
-      sq2.stop()
-      static2.unpersist(blocking = true)
-    }
-    assert(s2 === batch2, "stage 2 (dedup) survivors diverge")
-
-    // stage 3: decontamination vs the src0 eval set (same winnow
-    // geometry and 0.75 flag ratio as the batch stage); docs with no
-    // fingerprints emit no verdict and are KEPT, the batch drop-order
-    val surv2 = surviving(s2)
-    val in3 = MemoryStream[(Long, String, Timestamp)]
-    val out3 = StreamingOps.contaminationStream(
-      in3.toDF().toDF("doc_id", "text", "ts"), evalSet)
-    val sq3 = out3.writeStream.format("memory").queryName("pipe_s3")
-      .outputMode("update").start()
-    val s3 = try {
-      in3.addData(surv2.select("doc_id", "text")
-        .as[(Long, String)].collect().toSeq.zipWithIndex
-        .map { case ((id, tx), i) => (id, tx, t(i)) })
-      sq3.processAllAvailable()
-      val dropped = spark.table("pipe_s3")
-        .where(col("contaminated"))
-        .select("doc_id").as[Long].collect().toSet
-      s2 -- dropped
-    } finally sq3.stop()
-    assert(s3 === batch3, "stage 3 (decontamination) survivors diverge")
-
-    // stage 4: stateful sequence packing at the batch budget; one
-    // micro-batch, so the per-lang docId order equals the batch
-    // prefix-scan order and every pack id must match exactly
-    val surv3 = surviving(s3).withColumn("n_tok",
-      expr("cast(size(filter(split(text, ' '), x -> x != '')) as bigint)"))
-    val in4 = MemoryStream[StreamingOps.PackDoc]
-    val out4 = StreamingOps.packStream(in4.toDS(), budget = 512L)
-    val sq4 = out4.toDF().writeStream.format("memory")
-      .queryName("pipe_s4").outputMode("append").start()
-    val streamPacks = try {
-      in4.addData(surv3.select("lang", "doc_id", "n_tok")
-        .as[(String, Long, Long)].collect().toSeq
-        .map(r => StreamingOps.PackDoc(r._1, r._2, r._3)))
-      sq4.processAllAvailable()
-      spark.table("pipe_s4").select("lang", "docId", "packId")
-        .as[(String, Long, Long)].collect()
-        .map(r => (r._1, r._2) -> r._3).toMap
-    } finally sq4.stop()
-    assert(streamPacks === batchPacks,
-      "stage 4 (packing) assignments diverge")
-  }
-
-  test("streaming mixture enforces per-source token budgets across " +
-    "micro-batches with take-until straddle semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingOps.{MixtureDoc, MixtureVerdict}
-    val budgets = Map("srcA" -> 10L, "srcB" -> 5L)
-    val docs = MemoryStream[MixtureDoc]
-    val out = StreamingOps.mixtureStream(docs.toDS(), budgets)
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("mixture_out").outputMode("append").start()
-    val batch1 = Seq(
-      MixtureDoc("srcA", "a1", 4L), MixtureDoc("srcA", "a2", 5L),
-      MixtureDoc("srcA", "a3", 6L), // before=9 < 10: the straddler
-      MixtureDoc("srcB", "b1", 7L), // before=0 < 5: straddles alone
-      MixtureDoc("srcB", "b2", 1L), // before=7 >= 5: drops
-      MixtureDoc("srcC", "c1", 2L)) // no budget entry: drops
-    try {
-      docs.addData(batch1: _*)
-      q.processAllAvailable()
-      docs.addData( // state persisted: both sources are now exhausted
-        MixtureDoc("srcA", "a4", 1L), MixtureDoc("srcB", "b3", 1L))
-      q.processAllAvailable()
-      val got = spark.table("mixture_out")
-        .as[MixtureVerdict].collect()
-      val kept = got.filter(_.keep).map(_.docId).toSet
-      assert(kept === Set("a1", "a2", "a3", "b1"))
-      // the take-until bound: a source's kept tokens exceed its budget
-      // by strictly less than its straddling (last-kept) doc
-      for ((src, budget) <- budgets) {
-        val sel = got.filter(v => v.source == src && v.keep)
-        val straddler = sel.maxBy(_.cumBefore).nTok
-        assert(sel.map(_.nTok).sum - straddler < budget)
-      }
-      // single-batch parity with the batch take-until rule: PrefixSum
-      // over the same order (priority = docId) picks the same docs
-      val base = batch1.toDF()
-        .select(col("source"), col("docId"), col("nTok"))
-      val cum = graft.operators.PrefixSum
-        .runningTotal(base, "source", "docId", "nTok")
-      val batchKeep = cum
-        .withColumn("budget", coalesce(
-          element_at(typedLit[Map[String, Long]](budgets), col("source")),
-          lit(0L)))
-        .where(col("cum_before") < col("budget"))
-        .select("docId").as[String].collect().toSet
-      assert(kept === batchKeep,
-        "stream take-until diverges from the batch PrefixSum rule")
-    } finally q.stop()
-  }
-
-  test("stateful streaming sessionization splits on gap across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val events = MemoryStream[StreamingOps.SessionEvent]
-    val sessions = StreamingOps.sessionize(events.toDS(), gapSeconds = 3600)
-    val q = sessions.writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    try {
-      def ev(u: Long, s: String) =
-        StreamingOps.SessionEvent(u, Timestamp.valueOf(s))
-      events.addData(ev(1, "2024-01-01 00:00:00"), ev(1, "2024-01-01 00:10:00"))
-      q.processAllAvailable()
-      // state persists across micro-batches: a 2h gap opens session 2
-      events.addData(ev(1, "2024-01-01 02:30:00"), ev(2, "2024-01-01 00:00:00"))
-      q.processAllAvailable()
-      val byUser = spark.table("sessions")
-        .groupBy("userId").agg(max("sessionId").as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(byUser === Map(1L -> 2L, 2L -> 1L))
-    } finally q.stop()
-  }
-
-  test("events streaming twins read the driver's real events parquet " +
-    "through the shared loader normalization") {
-    // Round-10 lesson: the in-memory streaming specs stayed green while
-    // every batch events query broke on a testdata re-encode (ts went
-    // TIMESTAMP(NANOS) → TIMESTAMP(µs)). This case drives the streaming
-    // twins from the REAL testdata file through the same
-    // Tables.normalizeEventsTs projection the batch loader uses, so a
-    // future schema drift turns the suite red here too.
-    val path = s"$sf/events.parquet"
-    val batch = graft.Tables.load(spark, sf, "events")
-    // the file source wants a DIRECTORY; point it at the real testdata
-    // file through a symlink so the bytes under test stay the driver's
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-stream")
-    dir.toFile.deleteOnExit()
-    java.nio.file.Files.createSymbolicLink(
-      dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
-    val rawSchema = spark.read.parquet(path).schema
-    val stream = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(rawSchema).parquet(dir.toString))
-
-    // windowed counts: complete mode over the bounded file → final
-    // windows must equal the batch tumbling-window aggregation
-    val counts = StreamingOps.windowedEventCounts(stream,
-      windowDuration = "1 hour", watermark = "2 hours")
-    val q1 = counts.writeStream.format("memory").queryName("real_ev_counts")
-      .outputMode("complete").start()
-    try {
-      q1.processAllAvailable()
-      val got = spark.table("real_ev_counts")
-        .select(col("bucket"), col("event_type"), col("n"))
-        .as[(Timestamp, String, Long)].collect().toSet
-      val want = batch
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("bucket"), col("event_type"), col("n"))
-        .as[(Timestamp, String, Long)].collect().toSet
-      assert(want.nonEmpty && got === want,
-        "streaming windowed counts diverge from batch over the real events table")
-    } finally q1.stop()
-
-    // stateful sessionization: max session id per user must match the
-    // batch window-based sessionizer on the same loaded data
-    val sessions = StreamingOps.sessionize(
-      stream.select(col("user_id").as("userId"), col("ts"))
-        .as[StreamingOps.SessionEvent],
-      gapSeconds = 3600)
-    val q2 = sessions.writeStream.format("memory").queryName("real_ev_sessions")
-      .outputMode("append").start()
-    try {
-      q2.processAllAvailable()
-      val got = spark.table("real_ev_sessions")
-        .groupBy("userId").agg(max("sessionId").as("n"))
-        .as[(Long, Long)].collect().toMap
-      val want = graft.operators.Sessionize
-        .sessionize(batch, "user_id", "ts", 3600)
-        .groupBy(col("user_id")).agg(max("session_id").as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(want.nonEmpty && got === want,
-        "streaming sessionization diverges from batch over the real events table")
-    } finally q2.stop()
   }
 
   test("incremental dedup is streaming-transparent: the batch kernel " +
@@ -2121,1302 +434,5 @@ class StreamingSpec extends SparkSuite {
       assert(got === want && got === Set(2L, 4L),
         "stream kept set must equal the batch kernel's on the same rows")
     } finally q.stop()
-  }
-
-  test("streaming gopher gate scores arriving docs identically to the " +
-    "batch rule projection, one fixture per failing rule") {
-    implicit val sqlCtx = spark.sqlContext
-    val fixtures = Seq(
-      (1L, ("word " * 60).trim + " the a"),          // passes all four
-      (2L, "short doc the a"),                       // fails wc only
-      (3L, (("w" * 20 + " ") * 60).trim + " the a"), // fails mwl only
-      (4L, ("12345 " * 60).trim + " the a"),         // fails alpha only
-      (5L, ("word " * 60).trim))                     // fails stop only
-    val docs = MemoryStream[(Long, String)]
-    val out = StreamingOps.gopherStream(docs.toDF().toDF("doc_id", "text"))
-    val q = out.writeStream.format("memory").queryName("gopher_stream")
-      .outputMode("append").start()
-    try {
-      docs.addData(fixtures.take(2): _*)
-      q.processAllAvailable()
-      docs.addData(fixtures.drop(2): _*)
-      q.processAllAvailable()
-      val got = spark.table("gopher_stream")
-        .as[(Long, Long, Long, Long, Long, Boolean)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4, r._5), r._6)).toMap
-      // batch twin over the same rows through the SAME projection
-      val want = fixtures.toDF("doc_id", "text")
-        .withColumn("t", graft.operators.TextOps.tokens("text"))
-        .withColumn("g", graft.operators.TextOps.gopherBits("t"))
-        .select(col("doc_id"), col("g.p_wc"), col("g.p_mwl"),
-          col("g.p_alpha"), col("g.p_stop"))
-        .as[(Long, Long, Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4, r._5),
-          r._2 * r._3 * r._4 * r._5 == 1L)).toMap
-      assert(got === want, "stream verdicts diverge from batch bits")
-      assert(got(1L) === (((1L, 1L, 1L, 1L), true)))
-      assert(got(2L) === (((0L, 1L, 1L, 1L), false)))
-      assert(got(3L) === (((1L, 0L, 1L, 1L), false)))
-      assert(got(4L) === (((1L, 1L, 0L, 1L), false)))
-      assert(got(5L) === (((1L, 1L, 1L, 0L), false)))
-    } finally q.stop()
-  }
-
-  test("streaming funnel state machine matches the batch chained-min " +
-    "funnel over the real events table") {
-    val batch = graft.Tables.load(spark, sf, "events")
-    // the batch q_events_funnel derivation, kept per-user for comparison
-    val v = batch.where(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts").as("tv"))
-    def step(prev: org.apache.spark.sql.DataFrame, et: String,
-             tPrev: String, tOut: String) =
-      batch.where(col("event_type") === et)
-        .join(prev.select("user_id", tPrev), Seq("user_id"))
-        .where(col("ts") > col(tPrev) &&
-          col("ts") <= col(tPrev) + expr("INTERVAL 6 HOUR"))
-        .groupBy("user_id").agg(min("ts").as(tOut))
-    val wantByStage = Seq(
-      v.select("user_id").as[Long].collect().toSet,
-      step(v, "click", "tv", "tc").select("user_id").as[Long]
-        .collect().toSet,
-      step(step(v, "click", "tv", "tc"), "purchase", "tc", "tp")
-        .select("user_id").as[Long].collect().toSet)
-
-    // single-batch file stream: per-group sort makes delivery in-order
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel-stream")
-    dir.toFile.deleteOnExit()
-    java.nio.file.Files.createSymbolicLink(
-      dir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$sf/events.parquet"))
-    val raw = spark.read.parquet(s"$sf/events.parquet")
-    val stream = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(raw.schema).parquet(dir.toString))
-      .select(col("user_id").as("userId"),
-        col("event_type").as("eventType"), col("ts"))
-      .as[StreamingOps.FunnelEvent]
-    val out = StreamingOps.funnelStream(stream)
-    val q = out.writeStream.format("memory").queryName("funnel_stream")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val gotByStage = (1 to 3).map(k =>
-        spark.table("funnel_stream").where(col("stage") === k)
-          .select("userId").as[Long].collect().toSet)
-      assert(gotByStage(0) === wantByStage(0), "stage-1 (view) users diverge")
-      assert(gotByStage(1) === wantByStage(1), "stage-2 (click) users diverge")
-      assert(gotByStage(2) === wantByStage(2), "stage-3 (purchase) users diverge")
-      assert(wantByStage(0).nonEmpty)
-    } finally q.stop()
-  }
-
-  test("funnel state persists across micro-batches; the window gate " +
-    "rejects a too-late next step") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(s: String) = Timestamp.valueOf(s)
-    def ev(u: Long, et: String, ts: String) =
-      StreamingOps.FunnelEvent(u, et, t(ts))
-    val events = MemoryStream[StreamingOps.FunnelEvent]
-    val q = StreamingOps.funnelStream(events.toDS())
-      .writeStream.format("memory").queryName("funnel_state")
-      .outputMode("append").start()
-    try {
-      events.addData(
-        ev(1, "view", "2024-01-01 08:00:00"),
-        ev(2, "view", "2024-01-01 08:00:00"))
-      q.processAllAvailable()
-      // batch 2: user 1's click is within 6h of the batch-1 view;
-      // user 2's is 1µs past the window and must NOT advance
-      events.addData(
-        ev(1, "click", "2024-01-01 13:59:59.999999"),
-        ev(2, "click", "2024-01-01 14:00:00.000001"))
-      q.processAllAvailable()
-      val stages = spark.table("funnel_state")
-        .groupBy("userId").agg(max("stage").as("s"))
-        .as[(Long, Int)].collect().toMap
-      assert(stages === Map(1L -> 2, 2L -> 1),
-        "cross-batch window gate broke: " + stages)
-    } finally q.stop()
-  }
-
-  test("streaming DSIR weights equal the batch q_text_dsir selection; " +
-    "novel-vocabulary docs score through the smoothed model, never drop") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = spark.read.parquet(s"$sf/documents.parquet")
-    // the ONE shared model definition (TextOps.dsirModel) — the same
-    // object the batch query builds internally
-    val model = graft.operators.TextOps.dsirModel(
-      corpus, col("source").isin("src1", "src2", "src3", "src4"))
-      .persist()
-    val docs = MemoryStream[(Long, String, Timestamp)]
-    val out = StreamingOps.dsirStream(
-      docs.toDF().toDF("doc_id", "text", "ts"), model)
-    val q = out.writeStream.format("memory").queryName("dsir_stream")
-      .outputMode("update").start()
-    try {
-      def t(i: Int) = new Timestamp(1704103200000L + i * 1000L)
-      val fixture = corpus.select("doc_id", "text")
-        .as[(Long, String)].collect().toSeq
-      docs.addData(fixture.zipWithIndex
-        .map { case ((id, tx), i) => (id, tx, t(i)) })
-      // entirely novel vocabulary: every token lands in SOME bucket of
-      // the complete 64-row model — one scored row out, not a drop
-      docs.addData((900001L, "qqxz wvpk", t(fixture.size)))
-      q.processAllAvailable()
-      val got = spark.table("dsir_stream")
-        .select("doc_id", "n_tok", "weight")
-        .as[(Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      // batch twin: the registered query's top-25 selection must carry
-      // EXACTLY the weights the stream computes for those docs
-      val want = graft.SparkEntry.queries("q_text_dsir")(spark, sf)
-        .select("doc_id", "n_tok", "weight")
-        .as[(Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(want.nonEmpty)
-      assert(want.keySet.subsetOf(got.keySet))
-      want.foreach { case (id, (nt, w)) =>
-        assert(got(id) === ((nt, w)), s"doc $id diverges from batch")
-      }
-      assert(got.contains(900001L))
-      assert(got(900001L)._1 === 2L)
-    } finally {
-      q.stop()
-      model.unpersist(blocking = true)
-    }
-  }
-
-  test("streaming z-score anomaly verdicts equal batch q_events_anomaly " +
-    "over the real events table; ring state survives micro-batch splits") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    // the batch query's own input: hourly rollup of the driver's
-    // events parquet through the SAME loader (schema-drift insurance)
-    val hourly = graft.Tables.load(spark, sf, "events")
-      .groupBy(date_trunc("hour", col("ts")).as("hr"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("hr")
-      .as[(Timestamp, Long)].collect().toSeq
-    val in = MemoryStream[StreamingOps.SeriesBucket]
-    val out = StreamingOps.anomalyStream(in.toDS())
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("anomaly_stream").outputMode("append").start()
-    try {
-      // two micro-batches: the ring must carry across the split for
-      // the first post-split buckets to score against pre-split state
-      val (first, second) = hourly.splitAt(hourly.size / 2)
-      in.addData(first.map { case (hr, c) =>
-        StreamingOps.SeriesBucket("events", hr, c) })
-      q.processAllAvailable()
-      in.addData(second.map { case (hr, c) =>
-        StreamingOps.SeriesBucket("events", hr, c) })
-      q.processAllAvailable()
-      val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss")
-      fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-      val got = spark.table("anomaly_stream")
-        .select("bucket", "cnt", "z", "isAnomaly")
-        .collect()
-        .map(r => fmt.format(r.getTimestamp(0)) ->
-          ((r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-            r.getBoolean(3)))).toMap
-      val want = graft.SparkEntry.queries("q_events_anomaly")(spark, sf)
-        .collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-            r.getBoolean(3)))).toMap
-      assert(want.nonEmpty)
-      // batch emits only fully-baselined buckets; each must match the
-      // stream verdict bit for bit (z rounding included)
-      assert(want.keySet.subsetOf(got.keySet))
-      want.foreach { case (b, v) =>
-        assert(got(b) === v, s"bucket $b diverges from batch")
-      }
-      // the stream additionally emitted the warm-up buckets, unscored
-      assert(got.size === hourly.size)
-      assert((got.keySet -- want.keySet).forall(b => got(b)._2.isEmpty))
-    } finally q.stop()
-  }
-
-  test("streaming weighted reservoir converges to the batch draw over " +
-    "the real part table, whatever the batching") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val part = graft.Tables.load(spark, sf, "part")
-    // the q_sample_weighted fixture: weight = price^4, key = partkey
-    val fixture = part
-      .select(col("p_partkey"), pow(col("p_retailprice"), 4.0).as("w"))
-      .as[(Long, Double)].collect().toSeq
-    val want = graft.operators.Sampling.weightedSample(
-        part.select("p_partkey", "p_retailprice"),
-        pow(col("p_retailprice"), 4.0), col("p_partkey"), n = 50)
-      .select("p_partkey").as[Long].collect().sorted.toSeq
-    val in = MemoryStream[StreamingOps.WeightedArrival]
-    val q = StreamingOps.weightedSampleStream(in.toDS(), n = 50).toDF()
-      .writeStream.format("memory").queryName("reservoir")
-      .outputMode("append").start()
-    try {
-      // adversarial batching: reversed order, uneven splits — the
-      // deterministic keys make the draw batching-independent
-      val rev = fixture.reverse
-      val (b1, rest) = rev.splitAt(7)
-      val (b2, b3) = rest.splitAt(rest.size / 3)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b.map { case (k, w) =>
-          StreamingOps.WeightedArrival(k, w) })
-        q.processAllAvailable()
-      }
-      val snaps = spark.table("reservoir")
-        .select("nSeen", "ids").as[(Long, Seq[Long])].collect()
-      assert(snaps.length === 3)
-      // the snapshot that has seen the whole corpus IS the batch draw
-      val last = snaps.find(_._1 === fixture.size.toLong)
-      assert(last.isDefined)
-      assert(last.get._2.sorted.toSeq === want)
-    } finally q.stop()
-  }
-
-  test("streaming point-in-time lookup attributes each fact to the batch " +
-    "as-of version over the real orders/lineitem tables") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    // the q_join_pit dimension: every 7th order revises 30 days later
-    val base = graft.Tables.load(spark, sf, "orders")
-      .select(col("o_orderkey").as("k"),
-        col("o_orderdate").as("valid_from"), lit(1L).as("version"))
-    val dim = base.unionByName(base.where(col("k") % 7 === 0)
-      .withColumn("valid_from", expr("valid_from + interval 30 days"))
-      .withColumn("version", lit(2L)))
-    val factsFx = graft.Tables.load(spark, sf, "lineitem")
-      .select(col("l_orderkey").as("k"), col("l_shipdate").as("ts"))
-      .withColumn("fact_id", monotonically_increasing_id())
-      .select("fact_id", "k", "ts")
-      .as[(Long, Long, Timestamp)].collect().toSeq
-    val in = MemoryStream[(Long, Long, Timestamp)]
-    val q = StreamingOps.pitLookupStream(
-        in.toDF().toDF("fact_id", "k", "ts"), dim)
-      .writeStream.format("memory").queryName("pit_stream")
-      .outputMode("append").start()
-    try {
-      in.addData(factsFx)
-      q.processAllAvailable()
-      // flush the windows: one far-future sentinel advances the
-      // watermark past every real fact
-      in.addData((-1L, -1L,
-        new Timestamp(factsFx.map(_._3.getTime).max + 86400000L * 30)))
-      q.processAllAvailable()
-      val got = spark.table("pit_stream")
-        .select("fact_id", "version")
-        .as[(Long, Long)].collect().toMap
-      // batch attribution through the shared as-of kernel
-      val facts = factsFx.toDF("fact_id", "k", "ts")
-      val want = graft.operators.AsOfJoin.asOfLatest(
-          facts, dim.select(col("k"), col("valid_from").as("ts")),
-          "k", "ts")
-        .join(dim.select(col("k"),
-          col("valid_from").as("__matched_ts"), col("version")),
-          Seq("k", "__matched_ts"))
-        .select("fact_id", "version")
-        .as[(Long, Long)].collect().toMap
-      assert(want.nonEmpty)
-      assert(got === want)
-      // both versions actually exercised
-      assert(want.values.toSet === Set(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("streaming gap fill synthesizes held buckets across micro-batches " +
-    "and matches the batch spine over the real events hourly series") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    // the batch gapfill's own input: hourly (bucket, v100) series
-    val hourly = graft.Tables.load(spark, sf, "events")
-      .groupBy(date_trunc("hour", col("ts")).as("hr"))
-      .agg(sum(expr("cast(round(value * 100) as bigint)")).as("v"))
-      .orderBy("hr")
-      .as[(Timestamp, Long)].collect().toSeq
-    val in = MemoryStream[StreamingOps.SeriesValue]
-    val q = StreamingOps.gapFillStream(in.toDS()).toDF()
-      .writeStream.format("memory").queryName("gapfill_stream")
-      .outputMode("append").start()
-    try {
-      val (first, second) = hourly.splitAt(hourly.size / 2)
-      in.addData(first.map { case (hr, v) =>
-        StreamingOps.SeriesValue("events", hr, v) })
-      q.processAllAvailable()
-      in.addData(second.map { case (hr, v) =>
-        StreamingOps.SeriesValue("events", hr, v) })
-      q.processAllAvailable()
-      val got = spark.table("gapfill_stream")
-        .select("bucket", "v", "isGap")
-        .as[(Timestamp, Long, Boolean)].collect().toSeq.sortBy(_._1.getTime)
-      // complete regular series from first to last observed hour
-      val lo = hourly.head._1.getTime
-      val hi = hourly.last._1.getTime
-      assert(got.size === ((hi - lo) / 3600000L + 1))
-      assert(got.map(_._1.getTime) ===
-        (lo to hi by 3600000L).toSeq)
-      // observed hours carry their value unflagged; gaps hold the
-      // previous observed value
-      val obs = hourly.toMap
-      got.foreach { case (b, v, isGap) =>
-        obs.get(b) match {
-          case Some(ov) => assert(v === ov && !isGap)
-          case None =>
-            val prev = hourly.takeWhile(_._1.getTime < b.getTime).last
-            assert(v === prev._2 && isGap, s"bad fill at $b")
-        }
-      }
-      assert(got.exists(_._3), "fixture has no gaps — test is vacuous")
-    } finally q.stop()
-  }
-
-  test("streaming keyword search over the static inverted index returns " +
-    "the batch top-1 verdict per query") {
-    import graft.streaming.StreamingOps
-    import graft.operators.TextIndex
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = spark.read.parquet(s"$sf/documents.parquet")
-    val idx = TextIndex.build(corpus)
-    val terms = Seq("spark", "hash", "window")
-    val queries = MemoryStream[(Long, Seq[String], Timestamp)]
-    val out = StreamingOps.searchStream(
-      queries.toDF().toDF("query_id", "terms", "ts"), idx)
-    val q = out.writeStream.format("memory").queryName("search_stream")
-      .outputMode("append").start()
-    try {
-      def t(s: String) = Timestamp.valueOf(s)
-      queries.addData((1L, terms, t("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      // advance the watermark past query 1's window so the chained
-      // append-mode aggregations emit it
-      queries.addData((2L, Seq("spark"), t("2024-01-01 13:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("search_stream")
-        .select("query_id", "n_hits", "best_doc", "best_bm25")
-        .as[(Long, Long, Long, Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      val top = TextIndex.search(idx, terms, 1)
-        .select("doc_id", "s4").as[(Long, Long)].collect().head
-      val nHits = TextIndex.score(idx, terms).count()
-      assert(got.contains(1L), s"query 1 not emitted: $got")
-      assert(got(1L) === ((nHits, top._1, top._2 / 10000.0)))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join emits exactly the batch range-join " +
-    "pairs over the real events table") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.Tables.load(spark, sf, "events")
-    def side(t: String) = ev.where(col("event_type") === t)
-      .select("user_id", "ts").as[(Long, Timestamp)].collect().toSeq
-    val (viewsFx, purchFx) = (side("view"), side("purchase"))
-    val views = MemoryStream[(Long, Timestamp)]
-    val purchases = MemoryStream[(Long, Timestamp)]
-    val out = StreamingOps.intervalJoinStream(
-      views.toDF().toDF("user_id", "ts"),
-      purchases.toDF().toDF("user_id", "ts"))
-    val q = out.writeStream.format("memory").queryName("ssj")
-      .outputMode("append").start()
-    try {
-      // two micro-batches split at the median EVENT time (a split
-      // that re-delivers old data in batch 2 would be legitimately
-      // watermark-dropped): pairs whose halves straddle the split
-      // must still join from buffered state
-      val cut = (viewsFx ++ purchFx).map(_._2.getTime).sorted
-        .apply((viewsFx.size + purchFx.size) / 2)
-      views.addData(viewsFx.filter(_._2.getTime < cut))
-      purchases.addData(purchFx.filter(_._2.getTime < cut))
-      q.processAllAvailable()
-      views.addData(viewsFx.filter(_._2.getTime >= cut))
-      purchases.addData(purchFx.filter(_._2.getTime >= cut))
-      q.processAllAvailable()
-      val got = spark.table("ssj")
-        .select("key", "left_ts", "right_ts")
-        .as[(Long, Timestamp, Timestamp)].collect().toSeq.sorted
-      val want = ev.where(col("event_type") === "view").as("v")
-        .select(col("user_id"), col("ts").as("left_ts"))
-        .join(ev.where(col("event_type") === "purchase").as("p")
-            .select(col("user_id"), col("ts").as("right_ts")),
-          Seq("user_id"))
-        .where(col("right_ts") >= col("left_ts") &&
-          col("right_ts") <= col("left_ts") + expr("interval 1 hour"))
-        .as[(Long, Timestamp, Timestamp)].collect().toSeq.sorted
-      assert(want.nonEmpty)
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming HLL registers equal the batch sketch of the real " +
-    "lineitem table, whatever the batching") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val li = graft.Tables.load(spark, sf, "lineitem")
-      .select(col("l_returnflag").as("g"), col("l_orderkey").as("k"))
-    val batchRegs = graft.operators.Sketches
-      .hllRegisters(li, col("k"), Seq("g"), p = 12)
-      .as[(String, Long, Long)].collect().sorted.toSeq
-    val batchEst = graft.operators.Sketches
-      .hllEstimate(graft.operators.Sketches
-        .hllRegisters(li, col("k"), Seq("g"), p = 12), Seq("g"), p = 12)
-      .as[(String, Long, Long, Double)].collect().sorted.toSeq
-    val fixture = li.as[(String, Long)].collect().toSeq
-    val in = MemoryStream[(String, Long)]
-    val q = StreamingOps.hllStream(
-        in.toDF().toDF("g", "k"), col("k"), Seq("g"), p = 12)
-      .writeStream.format("memory").queryName("hll_regs")
-      .outputMode("complete").start()
-    try {
-      // adversarial batching: reversed order, uneven splits — max is
-      // batching-insensitive so the final registers must be the sketch
-      val rev = fixture.reverse
-      val (b1, rest) = rev.splitAt(13)
-      val (b2, b3) = rest.splitAt(rest.size / 3)
-      Seq(b1, b2, b3).foreach { b => in.addData(b); q.processAllAvailable() }
-      val got = spark.table("hll_regs")
-        .as[(String, Long, Long)].collect().sorted.toSeq
-      assert(got === batchRegs)
-      // and the snapshot registers yield the identical estimate
-      val estGot = graft.operators.Sketches
-        .hllEstimate(spark.table("hll_regs"), Seq("g"), p = 12)
-        .as[(String, Long, Long, Double)].collect().sorted.toSeq
-      assert(estGot === batchEst)
-    } finally q.stop()
-  }
-
-  test("streaming CMS cells equal the batch sketch of the real " +
-    "lineitem part keys, and estimates never undercount") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val li = graft.Tables.load(spark, sf, "lineitem")
-      .select(col("l_partkey").as("k"))
-    val batchCells = graft.operators.Sketches
-      .cmsSketch(li, col("k"), d = 4, w = 1024)
-      .as[(Int, Long, Long)].collect().sorted.toSeq
-    val fixture = li.as[Long].collect().toSeq
-    val in = MemoryStream[Long]
-    val q = StreamingOps.cmsStream(
-        in.toDF().toDF("k"), col("k"), d = 4, w = 1024)
-      .writeStream.format("memory").queryName("cms_cells")
-      .outputMode("complete").start()
-    try {
-      val (b1, b2) = fixture.reverse.splitAt(fixture.size / 3)
-      Seq(b1, b2).foreach { b => in.addData(b); q.processAllAvailable() }
-      val got = spark.table("cms_cells")
-        .as[(Int, Long, Long)].collect().sorted.toSeq
-      assert(got === batchCells)
-      // a snapshot answers point queries with the one-sided guarantee
-      val truth = li.groupBy(col("k").cast("string").as("key"))
-        .agg(count(lit(1)).as("true_cnt"))
-      val bad = graft.operators.Sketches
-        .cmsEstimate(spark.table("cms_cells"), truth.select("key"),
-          d = 4, w = 1024)
-        .join(truth, Seq("key"))
-        .where(col("cms_est") < col("true_cnt")).count()
-      assert(bad === 0L)
-    } finally q.stop()
-  }
-
-  test("streaming containment flags the same (contained, container) " +
-    "pairs as the batch prefix-filtered join over the real documents") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = graft.Tables.load(spark, sf, "documents")
-    val want = graft.queries.TextQueries.queries
-      .find(_.name == "q_text_containment").get.run(spark, sf)
-      .select("contained", "container", "overlap")
-      .as[(Long, Long, Long)].collect().sorted.toSeq
-    assert(want.nonEmpty)
-    val (postings, arrays) = StreamingOps.containmentStaticSide(corpus)
-    postings.persist(); arrays.persist()
-    val fixture = corpus.select("doc_id", "text")
-      .as[(Long, String)].collect().toSeq
-    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = StreamingOps.containmentStream(
-        in.toDF().toDF("doc_id", "text", "ts"), postings, arrays)
-      .writeStream.format("memory").queryName("containment_stream")
-      .outputMode("append").start()
-    try {
-      val (b1, b2) = fixture.splitAt(fixture.size / 2)
-      Seq(b1, b2).foreach { b =>
-        in.addData(b.map { case (id, tx) => (id, tx, t0) })
-        q.processAllAvailable()
-      }
-      // watermark-close the window so append mode emits
-      in.addData((-1L, "", Timestamp.valueOf("2026-01-02 00:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("containment_stream")
-        .select(col("doc_id"), col("container"), col("overlap"))
-        .as[(Long, Long, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally { q.stop(); postings.unpersist(); arrays.unpersist() }
-  }
-
-  test("streaming transitions emit the batch pair multiset over the " +
-    "real events table under time-ordered batching") {
-    import graft.streaming.StreamingOps
-    implicit val sqlCtx = spark.sqlContext
-    val want = graft.queries.RelationalQueries.queries
-      .find(_.name == "q_events_transitions").get.run(spark, sf)
-      .select("event_type", "next_type", "cnt")
-      .as[(String, String, Long)].collect().sorted.toSeq
-    assert(want.nonEmpty)
-    val fixture = graft.Tables.load(spark, sf, "events")
-      .select("user_id", "ts", "event_id", "event_type")
-      .as[(Long, Timestamp, Long, String)].collect()
-      .sortBy { case (_, ts, id, _) => (ts.getTime, id) }.toSeq
-    val in = MemoryStream[StreamingOps.TransEvent]
-    val q = StreamingOps.transitionsStream(in.toDS())
-      .writeStream.format("memory").queryName("trans_stream")
-      .outputMode("append").start()
-    try {
-      // time-ordered feed, uneven batch cuts (the documented contract)
-      val (b1, rest) = fixture.splitAt(fixture.size / 3)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b.map { case (u, ts, id, t) =>
-          StreamingOps.TransEvent(u, ts, id, t) })
-        q.processAllAvailable()
-      }
-      val got = spark.table("trans_stream")
-        .groupBy("eventType", "nextType")
-        .agg(count(lit(1)).as("cnt"))
-        .as[(String, String, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming CDC merge snapshot applied to the base equals batch " +
-    "cdcMerge over the real orders table, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    // the q_merge_upsert fixture shape on typed columns: base keyed by
-    // o_orderkey with (priority, price-in-cents) payload; v1 touches
-    // %5 keys (+100_00, delete where %15), v2 re-touches %10 (+200_00)
-    val base = graft.Tables.load(spark, sf, "orders")
-      .select(col("o_orderkey").as("k"),
-        col("o_orderpriority").as("name"),
-        expr("cast(round(o_totalprice * 100) as long)").as("v"))
-    val v1 = base.where(col("k") % 5 === 0)
-      .withColumn("v", col("v") + 10000L)
-      .withColumn("op", when(col("k") % 15 === 0, "d").otherwise("u"))
-      .withColumn("seq", lit(1L))
-    val v2 = base.where(col("k") % 10 === 0)
-      .withColumn("v", col("v") + 20000L)
-      .withColumn("op", lit("u"))
-      .withColumn("seq", lit(2L))
-    val feed = v1.unionByName(v2)
-    val want = graft.operators.Merge.cdcMerge(base, feed, Seq("k"))
-      .as[(Long, String, Long)].collect().sorted.toSeq
-
-    val fixture = feed.as[(Long, String, Long, String, Long)]
-      .collect().toSeq
-    val in = MemoryStream[StreamingOps.MergeChange]
-    val q = StreamingOps.cdcMergeStream(in.toDS())
-      .writeStream.format("memory").queryName("cdc_merge")
-      .outputMode("update").start()
-    try {
-      // adversarial batching: v2 rows first for half the keys, uneven
-      // cuts — latest-wins must not depend on arrival order
-      val shuffled = fixture.sortBy { case (k, _, _, _, seq) =>
-        (k % 3, -seq, k)
-      }
-      val (b1, rest) = shuffled.splitAt(shuffled.size / 4)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b.map { case (k, name, v, op, seq) =>
-          StreamingOps.MergeChange(k, name, v, op, seq) })
-        q.processAllAvailable()
-      }
-      // final state per key = max snapshot by the shared winner rule
-      val snap = spark.table("cdc_merge")
-        .groupBy("k")
-        .agg(max(struct(col("seq"), col("op"), col("name"), col("v")))
-          .as("m"))
-        .select(col("k"), col("m.op").as("op"),
-          col("m.name").as("name"), col("m.v").as("v"))
-      val applied = base.join(snap.select("k"), Seq("k"), "left_anti")
-        .unionByName(snap.where(col("op") === "u")
-          .select("k", "name", "v"))
-        .as[(Long, String, Long)].collect().sorted.toSeq
-      assert(applied === want)
-    } finally q.stop()
-  }
-
-  test("streaming histogram reproduces the batch bins per window over " +
-    "the real orders feed, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    val o = graft.Tables.load(spark, sf, "orders")
-      .select(expr("cast(round(o_totalprice * 100) as long)").as("c"),
-        col("o_orderdate").cast("timestamp").as("ts"))
-    val (mn, mx) = o.agg(min("c"), max("c")).as[(Long, Long)].head()
-    val fixture = o.as[(Long, Timestamp)].collect().toSeq
-    val in = MemoryStream[(Long, Timestamp)]
-    val q = StreamingOps.histogramStream(
-        in.toDS().toDF("c", "ts"), mn, mx, bins = 20,
-        windowDuration = "7 days")
-      .writeStream.format("memory").queryName("hist_stream")
-      .outputMode("update").start()
-    try {
-      // time-ordered feed, uneven batch cuts (the documented contract
-      // for watermarked aggregations — a reversed feed would CORRECTLY
-      // drop its own late arrivals)
-      val ordered = fixture.sortBy(_._2.getTime)
-      val (b1, rest) = ordered.splitAt(ordered.size / 3)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b); q.processAllAvailable()
-      }
-      // last update per (window, bucket) is the finalized bin
-      val got = spark.table("hist_stream")
-        .groupBy("ws", "bucket")
-        .agg(max(struct(col("n"), col("lo"), col("hi"))).as("m"))
-        .select(col("ws"), col("bucket"), col("m.n"), col("m.lo"),
-          col("m.hi"))
-        .as[(Timestamp, Long, Long, Long, Long)]
-        .collect().sorted.toSeq
-      val want = o
-        .withColumn("ws", window(col("ts"), "7 days")("start"))
-        .withColumn("bucket", expr(
-          s"greatest(0L, least(19L, ((c - ${mn}L) * 20L) div " +
-            s"(${mx}L - ${mn}L + 1L)))"))
-        .groupBy("ws", "bucket")
-        .agg(count(lit(1)).as("n"), min("c").as("lo"), max("c").as("hi"))
-        .as[(Timestamp, Long, Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(got === want)
-      assert(got.map(_._1).distinct.size > 1) // several real windows
-    } finally q.stop()
-  }
-
-  test("streaming RFM profile converges to the batch segment cube over " +
-    "the real events table, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    val want = graft.queries.RelationalQueries.queries
-      .find(_.name == "q_events_rfm").get.run(spark, sf)
-      .select("r_hot", "f_hot", "m_hot", "n_users")
-      .as[(Int, Int, Int, Long)].collect().sorted.toSeq
-    val ev = graft.Tables.load(spark, sf, "events")
-      .select(col("user_id"), expr("unix_micros(ts)").as("us"),
-        (col("event_type") === "purchase").as("p"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .as[(Long, Long, Boolean, Long)].collect().toSeq
-    val maxUs = ev.map(_._2).max
-    val in = MemoryStream[StreamingOps.RfmEvent]
-    val q = StreamingOps.rfmStream(in.toDS())
-      .writeStream.format("memory").queryName("rfm_stream")
-      .outputMode("update").start()
-    try {
-      // adversarial: reverse time order, uneven cuts
-      val rev = ev.reverse
-      val (b1, rest) = rev.splitAt(rev.size / 5)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b.map { case (u, us, p, c) =>
-          StreamingOps.RfmEvent(u, us, p, c) })
-        q.processAllAvailable()
-      }
-      // final state per user: all fields are monotone, max-struct wins
-      val got = spark.table("rfm_stream")
-        .groupBy("userId")
-        .agg(max(struct(col("lastUs"), col("f"), col("m"))).as("s"))
-        .select(
-          ((lit(maxUs) - col("s.lastUs")) >= 0 &&
-            expr(s"($maxUs - s.lastUs) div 3600000000") <= 7)
-            .cast("int").as("r_hot"),
-          (col("s.f") >= 14L).cast("int").as("f_hot"),
-          (col("s.m") >= 60000L).cast("int").as("m_hot"))
-        .groupBy("r_hot", "f_hot", "m_hot")
-        .agg(count(lit(1)).as("n_users"))
-        .as[(Int, Int, Int, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming expectations counters equal the batch check of the " +
-    "ingested rows, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Expectations
-    val cust = graft.Tables.load(spark, sf, "customer")
-    // real orders + synthetic rows lighting up every rule family:
-    // a NULL custkey (not_null; NOT an FK violation), an orphan
-    // custkey (foreign_key), and an out-of-range price
-    val base = graft.Tables.load(spark, sf, "orders")
-      .select(col("o_custkey").as("custkey"),
-        expr("cast(round(o_totalprice * 100) as long)").as("cents"))
-      .as[(Option[Long], Long)].collect().toSeq
-    val fixture = base ++ Seq(
-      (None: Option[Long], 5L),
-      (Some(999999999L), 5L),
-      (Some(base.head._1.get), -7L))
-    val rules = Seq(
-      Expectations.NotNull("custkey"),
-      Expectations.InRange("cents", 0L, 30000000L),
-      Expectations.ForeignKey("custkey", cust, "c_custkey"))
-    val in = MemoryStream[(Option[Long], Long)]
-    val q = StreamingOps.expectationsStream(
-        in.toDS().toDF("custkey", "cents"), rules)
-      .writeStream.format("memory").queryName("expect_stream")
-      .outputMode("complete").start()
-    try {
-      // adversarial: reversed order, uneven cuts (sums are order- and
-      // batching-insensitive; counters never finalize)
-      val rev = fixture.reverse
-      val (b1, rest) = rev.splitAt(rev.size / 4)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b => in.addData(b); q.processAllAvailable() }
-      val got = spark.table("expect_stream")
-        .as[(String, String, Long, Boolean)].collect().sorted.toSeq
-      val want = Expectations.check(
-          fixture.toDF("custkey", "cents"), rules)
-        .as[(String, String, Long, Boolean)].collect().sorted.toSeq
-      assert(got === want)
-      // every family actually fired
-      assert(got.forall(!_._4) && got.map(_._3).forall(_ > 0))
-    } finally q.stop()
-    // Unique is the dedup family's keyed state, not a streaming counter
-    val err = intercept[IllegalArgumentException] {
-      StreamingOps.expectationsStream(
-        in.toDS().toDF("custkey", "cents"),
-        Seq(Expectations.Unique("custkey")))
-    }
-    assert(err.getMessage.contains("dedupStream"))
-  }
-
-  test("streaming drift bins feed the shared report kernel to the exact " +
-    "batch drift verdict, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Drift
-    val o = graft.Tables.load(spark, sf, "orders")
-      .withColumn("v", expr("cast(round(o_totalprice * 100) as long)"))
-    val ref = o.where(expr("o_orderdate < timestamp'1998-07-01'"))
-    val cur = o.where(expr("o_orderdate >= timestamp'1998-07-01'"))
-    val want = Drift.binnedDrift(ref, cur, "v", 0L, 60000000L, 20)
-      .as[(Long, Long, Double, Double, Double, Boolean)].head()
-
-    val fixture = cur.select("v").as[Long].collect().toSeq
-    val in = MemoryStream[Long]
-    val q = StreamingOps.driftBinsStream(
-        in.toDS().toDF("v"), 0L, 60000000L, 20)
-      .writeStream.format("memory").queryName("drift_stream")
-      .outputMode("complete").start()
-    try {
-      // adversarial: reversed, uneven cuts (bin counts are order- and
-      // batching-insensitive sums)
-      val rev = fixture.reverse
-      val (b1, rest) = rev.splitAt(rev.size / 4)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b => in.addData(b); q.processAllAvailable() }
-      val got = Drift.reportFromBins(
-          Drift.sliceBins(ref, "v", 0L, 60000000L, 20),
-          spark.table("drift_stream"), 20)
-        .as[(Long, Long, Double, Double, Double, Boolean)].head()
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming entropy latest snapshots equal batch q_events_entropy " +
-    "over the real events table, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    val want = graft.queries.RelationalQueries.queries
-      .find(_.name == "q_events_entropy").get.run(spark, sf)
-      .select("user_id", "n_events", "n_types", "h_x1e6")
-      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(want.nonEmpty)
-    val fixture = graft.Tables.load(spark, sf, "events")
-      .select("user_id", "event_type").as[(Long, String)].collect().toSeq
-    val in = MemoryStream[StreamingOps.EntropyEvent]
-    val q = StreamingOps.entropyStream(in.toDS())
-      .writeStream.format("memory").queryName("entropy_stream")
-      .outputMode("update").start()
-    try {
-      // adversarial batching: uneven cuts, arbitrary order (entropy is
-      // order-invariant — counts are — so any feed order must agree)
-      val shuffled = new scala.util.Random(7).shuffle(fixture)
-      val (b1, rest) = shuffled.splitAt(shuffled.size / 5)
-      val (b2, b3) = rest.splitAt(rest.size / 3)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b.map { case (u, t) =>
-          StreamingOps.EntropyEvent(u, t) })
-        q.processAllAvailable()
-      }
-      // latest snapshot per user: nEvents is the monotone version stamp
-      val got = spark.table("entropy_stream")
-        .groupBy("userId")
-        .agg(max(struct(col("nEvents"), col("nTypes"), col("hX1e6")))
-          .as("m"))
-        .select(col("userId"), col("m.nEvents"), col("m.nTypes"),
-          col("m.hX1e6"))
-        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming boilerplate scoring equals the batch per-doc stats " +
-    "against the frozen phrase set, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = graft.Tables.load(spark, sf, "documents")
-    val bp = graft.queries.TextQueries.boilerplateSet(corpus)
-      .persist()
-    val want = graft.queries.TextQueries
-      .boilerplatePerDoc(corpus, bp)
-      .select("doc_id", "source", "n_big", "n_bp", "frac_ppm")
-      .as[(Long, String, Long, Long, Long)].collect().sorted.toSeq
-    assert(want.nonEmpty)
-    assert(want.exists(_._4 > 0), "fixture should carry boilerplate hits")
-    val fixture = corpus.select("doc_id", "source", "text")
-      .as[(Long, String, String)].collect().toSeq
-    val in = MemoryStream[(Long, String, String)]
-    val q = StreamingOps.boilerplateStream(
-        in.toDF().toDF("doc_id", "source", "text"), bp)
-      .writeStream.format("memory").queryName("bp_stream")
-      .outputMode("update").start()
-    try {
-      val (b1, rest) = fixture.splitAt(fixture.size / 4)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b); q.processAllAvailable()
-      }
-      val got = spark.table("bp_stream")
-        .select("doc_id", "source", "n_big", "n_bp", "frac_ppm")
-        .as[(Long, String, Long, Long, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally {
-      q.stop(); bp.unpersist()
-    }
-  }
-
-  test("streaming boilerplate-LINE removal probes arriving docs " +
-    "against the frozen host-line table, matching batch " +
-    "removeBoilerplate; all-boilerplate docs emit no row") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.TextOps
-    // host h0: 4 docs sharing HEAD/FOOT (df 1.0 -> boilerplate) and
-    // a PROMO line in 2/4 (df 0.5 < 0.6 -> must be KEPT); host h1:
-    // only 2 docs (< minHostDocs -> left untouched entirely)
-    val corpus = Seq(
-      ("h0", 1L, "HEAD h0\nbody one\nPROMO now\nFOOT h0"),
-      ("h0", 2L, "HEAD h0\nbody two\nFOOT h0"),
-      ("h0", 3L, "HEAD h0\nbody three\nPROMO now\nFOOT h0"),
-      ("h0", 4L, "HEAD h0\nbody four\nFOOT h0"),
-      ("h1", 5L, "HEAD h1\nbody five\nFOOT h1"),
-      ("h1", 6L, "HEAD h1\nbody six\nFOOT h1"))
-      .toDF("host", "doc_id", "text")
-    val want = TextOps.removeBoilerplate(
-        corpus, "host", "doc_id", "text")
-      .select("host", "doc_id", "text")
-      .as[(String, Long, String)].collect().sorted.toSeq
-    assert(want.find(_._2 == 1L).get._3 === "body one\nPROMO now")
-    assert(want.find(_._2 == 5L).get._3 ===
-      "HEAD h1\nbody five\nFOOT h1")
-    val static = TextOps.boilerplateLines(
-      corpus, "host", "doc_id", "text").persist()
-    val in = MemoryStream[(String, Long, String, Timestamp)]
-    val q = StreamingOps.boilerlineStream(
-        in.toDF().toDF("host", "doc_id", "text", "ts"),
-        corpus, staticSide = Some(static))
-      .writeStream.format("memory").queryName("boil_stream")
-      .outputMode("update").start()
-    try {
-      val t = Timestamp.valueOf("2024-01-01 10:00:00")
-      val arrivals = corpus.select("host", "doc_id", "text")
-        .as[(String, Long, String)].collect().toSeq
-        .map(r => (r._1, r._2, r._3, t)) :+
-        (("h0", 7L, "HEAD h0\nFOOT h0", t)) // EVERY line boilerplate
-      val (b1, b2) = arrivals.splitAt(3)
-      Seq(b1, b2).foreach { b =>
-        in.addData(b: _*); q.processAllAvailable()
-      }
-      val got = spark.table("boil_stream")
-        .select("host", "doc_id", "cleaned")
-        .as[(String, Long, String)].collect().sorted.toSeq
-      assert(got === want) // doc 7 emits no row; the rest match batch
-    } finally { q.stop(); static.unpersist() }
-  }
-
-  test("streaming main-content extraction is stateless and matches " +
-    "the batch pipeline per arriving page") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.MainContent
-    val prose = "the story of the day is that the work of the team " +
-      "is done and the result of it is good for all of us and the " +
-      "plan of the week is set out in the notes of the run for the " +
-      "record and more of it besides for the file"
-    val pages = Seq(
-      (1L, s"<div><a>Home</a> <a>News</a></div><h1>T</h1>" +
-        s"<p>$prose</p><div>Copyright X</div>"),
-      (2L, "<div><a>only chrome</a></div>"),
-      (3L, s"<p>$prose</p><div>See more</div>"))
-    val want = MainContent.mainContent(
-        pages.toDF("doc_id", "html"), "doc_id", "html")
-      .as[(Long, String)].collect().sorted.toSeq
-    val in = MemoryStream[(Long, String)]
-    val q = StreamingOps.mainContentStream(
-        in.toDF().toDF("doc_id", "html"))
-      .select("doc_id", "content")
-      .writeStream.format("memory").queryName("mc_stream")
-      .outputMode("append").start()
-    try {
-      val (b1, b2) = pages.splitAt(2)
-      Seq(b1, b2).foreach { b =>
-        in.addData(b: _*); q.processAllAvailable()
-      }
-      val got = spark.table("mc_stream")
-        .as[(Long, String)].collect().sorted.toSeq
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming paragraph dedup probes the frozen corpus key " +
-    "table, matching batch dedupParagraphs on arrivals; all-known " +
-    "docs emit no row; within-doc repeats collapse to first") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.TextOps
-    val corpus = Seq(
-      (1L, "shared header\nalpha body\npromo line"),
-      (2L, "shared header\nbeta body"))
-      .toDF("doc_id", "text")
-    // arrivals: known paragraphs (case/punct variants!) must drop,
-    // fresh ones survive, a within-doc repeat keeps first position
-    val arrivals = Seq(
-      (10L, "Shared Header!\ngamma body\ngamma body\ndelta tail"),
-      (11L, "PROMO LINE\nalpha body"), // everything known -> no row
-      (12L, "epsilon solo\nPromo Line."))
-    // batch truth: corpus + arrivals through the batch operator,
-    // restricted to the arriving ids (arriving ids sort after the
-    // corpus, and no NEW paragraph is shared across arrivals)
-    val want = TextOps.dedupParagraphs(
-        corpus.union(arrivals.toDF("doc_id", "text")),
-        "doc_id", "text")
-      .where(col("doc_id") >= 10L && length(col("text")) > 0)
-      .select("doc_id", "text")
-      .as[(Long, String)].collect().sorted.toSeq
-    assert(want === Seq(10L -> "gamma body\ndelta tail",
-      12L -> "epsilon solo"))
-    val static = StreamingOps.paragraphKeyStaticSide(corpus).persist()
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = StreamingOps.paraDedupStream(
-        in.toDF().toDF("doc_id", "text", "ts"),
-        corpus, staticSide = Some(static))
-      .writeStream.format("memory").queryName("para_stream")
-      .outputMode("update").start()
-    try {
-      val t = Timestamp.valueOf("2024-01-01 10:00:00")
-      val (b1, b2) = arrivals.map(a => (a._1, a._2, t)).splitAt(2)
-      Seq(b1, b2).foreach { b =>
-        in.addData(b: _*); q.processAllAvailable()
-      }
-      val got = spark.table("para_stream")
-        .select("doc_id", "cleaned")
-        .as[(Long, String)].collect().sorted.toSeq
-      assert(got === want) // doc 11 emits no row
-      val kept = spark.table("para_stream")
-        .select("doc_id", "n_kept")
-        .as[(Long, Long)].collect().toMap
-      assert(kept === Map(10L -> 2L, 12L -> 1L))
-    } finally { q.stop(); static.unpersist() }
-  }
-
-  test("streaming running distinct-count equals the batch " +
-    "first-occurrence ranking, with late arrivals across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.expressions.Window
-    val ev = graft.Tables.load(spark, sf, "events")
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("m"), col("event_id"))
-    val w = Window.partitionBy("user_id").orderBy("first_m", "event_type")
-    val want = ev.groupBy("user_id", "event_type")
-      .agg(min("m").as("first_m"))
-      .withColumn("nth", row_number().over(w).cast("bigint"))
-      .select("user_id", "event_type", "first_m", "nth")
-      .as[(Long, String, Long, Long)].collect().sorted.toSeq
-    assert(want.nonEmpty)
-    // arrival order = event_id DESCENDING: every batch delivers
-    // events with earlier timestamps than already-processed ones, so
-    // the state must re-rank (the late-data path, no watermark cut)
-    val fixture = ev.orderBy(col("event_id").desc)
-      .select("user_id", "event_type", "m")
-      .as[(Long, String, Long)].collect().toSeq
-    val in = MemoryStream[(Long, String, Long)]
-    val q = StreamingOps.runningDistinctStream(
-        in.toDS().map(t => StreamingOps.DistinctEvent(t._1, t._2, t._3)))
-      .writeStream.format("memory").queryName("rdist_stream")
-      .outputMode("update").start()
-    try {
-      val (b1, rest) = fixture.splitAt(fixture.size / 3)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b); q.processAllAvailable()
-      }
-      // latest snapshot per user = rows carrying its max version stamp
-      val snaps = spark.table("rdist_stream")
-      val latest = snaps.groupBy(col("userId").as("u"))
-        .agg(max("nSeenEvents").as("v"))
-      val got = snaps.join(latest,
-          snaps("userId") === col("u") && snaps("nSeenEvents") === col("v"))
-        .select("userId", "eventType", "firstTsMicros", "nthDistinct")
-        .as[(Long, String, Long, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming disorder monitor equals the batch per-user lateness " +
-    "aggregate, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.expressions.Window
-    // the fixture ingests in event-time order (no natural lateness),
-    // so REVERSE the arrival id on both sides: every non-first event
-    // of a user then arrives behind that user's running max — the
-    // late path is exercised on the whole table
-    val ev = graft.Tables.load(spark, sf, "events")
-      .select(col("user_id"), (-col("event_id")).as("event_id"),
-        unix_micros(col("ts")).as("m"))
-    // batch twin of the q_events_disorder core, aggregated per USER
-    val w = Window.partitionBy("user_id").orderBy("event_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val want = ev
-      .withColumn("late_us",
-        greatest(lit(0L), max("m").over(w) - col("m")))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("nl"),
-        max("late_us").as("mx"), sum("late_us").as("sm"))
-      .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(want.nonEmpty)
-    assert(want.exists(_._3 > 0), "fixture should carry late events")
-    // arrival order = event_id, split mid-user across batches
-    val fixture = ev.orderBy("event_id")
-      .select("user_id", "event_id", "m")
-      .as[(Long, Long, Long)].collect().toSeq
-    val in = MemoryStream[(Long, Long, Long)]
-    val q = StreamingOps.disorderStream(
-        in.toDS().map(t => StreamingOps.ArrivalEvent(t._1, t._2, t._3)))
-      .writeStream.format("memory").queryName("disorder_stream")
-      .outputMode("update").start()
-    try {
-      val (b1, rest) = fixture.splitAt(fixture.size / 3)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b); q.processAllAvailable()
-      }
-      val snaps = spark.table("disorder_stream")
-      val latest = snaps.groupBy(col("userId").as("u"))
-        .agg(max("nEvents").as("v"))
-      val got = snaps.join(latest,
-          snaps("userId") === col("u") && snaps("nEvents") === col("v"))
-        .select("userId", "nEvents", "nLate", "maxLateUs", "sumLateUs")
-        .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
-      assert(got === want)
-    } finally q.stop()
-  }
-
-  test("streaming winsorized stats equal the batch clip-and-sum " +
-    "against the frozen cuts, whatever the batching") {
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.Tables.load(spark, sf, "events")
-      .select(col("event_type"),
-        expr("cast(round(value * 1000000) as bigint)").as("v6"))
-    val cuts = ev.groupBy("event_type")
-      .agg(expr("percentile_approx(v6, array(0.1, 0.9), 100000)")
-        .as("c"))
-      .select(col("event_type"), col("c")(0).as("lo"),
-        col("c")(1).as("hi"))
-      .persist()
-    val want = StreamingOps.winsorizedStream(ev, cuts)
-      .select("event_type", "n", "lo_v6", "hi_v6", "n_clip_lo",
-        "n_clip_hi", "sum_w6")
-      .as[(String, Long, Long, Long, Long, Long, Long)]
-      .collect().sorted.toSeq
-    assert(want.nonEmpty)
-    assert(want.exists(r => r._5 > 0 || r._6 > 0),
-      "fixture should clip something")
-    val fixture = ev.as[(String, Long)].collect().toSeq
-    val in = MemoryStream[(String, Long)]
-    val q = StreamingOps.winsorizedStream(
-        in.toDF().toDF("event_type", "v6"), cuts)
-      .writeStream.format("memory").queryName("wins_stream")
-      .outputMode("update").start()
-    try {
-      val (b1, rest) = fixture.splitAt(fixture.size / 3)
-      val (b2, b3) = rest.splitAt(rest.size / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b); q.processAllAvailable()
-      }
-      val snaps = spark.table("wins_stream")
-      val latest = snaps.groupBy(col("event_type").as("et"))
-        .agg(max("n").as("v"))
-      val got = snaps.join(latest, snaps("event_type") === col("et") &&
-          snaps("n") === col("v"))
-        .select("event_type", "n", "lo_v6", "hi_v6", "n_clip_lo",
-          "n_clip_hi", "sum_w6")
-        .as[(String, Long, Long, Long, Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(got === want)
-    } finally {
-      q.stop(); cuts.unpersist()
-    }
-  }
-
-  test("cross-modal streaming composition: arriving MP4s fan into an " +
-    "image leg (stss keyframes -> real decode -> thumbnail plan) and " +
-    "a text leg (tx3g captions -> qualityBucketStream), re-joined " +
-    "into one clip verdict — parity with the batch composition " +
-    "across a mid-stream split") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Multimodal, PixelDecode, VideoHeader}
-    import org.apache.spark.sql.DataFrame
-    // static text corpus -> quality cut points (the offline-refresh
-    // contract): scores spread via the length term, distinct tokens
-    val corpus = (0 until 30).map { i =>
-      (i.toLong, "en", (0 until (i + 1) * 3)
-        .map(j => s"w${i}_$j").mkString(" "))
-    }.toDF("doc_id", "lang", "text")
-    val cuts = StreamingOps
-      .qualityCutsStaticSide(corpus, "lang", "text").persist()
-    val goodCue = (0 until 90).map(j => s"tok$j").mkString(" ")
-    val badCue = "the the a a the"
-    // clip plan: 0,1,2,6 fully good; 3 bad captions; 4 undecodable
-    // keyframes; 5 truncated container (absent from BOTH outputs);
-    // 7 no text track (n_cues = 0 fails the text leg)
-    def mp4For(id: Int): Array[Byte] = {
-      val frames: Seq[Array[Byte]] = (0 until 3).map { c =>
-        if (id == 4) Array[Byte](1, 2, 3, 4) // undecodable payload
-        else PixelDecode.encodePngGray(9, 8,
-          Array.tabulate(72)(i => (id * 31 + c * 7 + i) % 256))
-      }
-      val cueTexts =
-        if (id == 7) Nil
-        else Seq.fill(2)(if (id == 3) badCue else s"clip $id $goodCue")
-      val cueSamples: Seq[Array[Byte]] = cueTexts.map { t =>
-        val b = t.getBytes("UTF-8")
-        Array[Byte](((b.length >> 8) & 0xff).toByte,
-          (b.length & 0xff).toByte) ++ b
-      }
-      val tracks = VideoHeader.TrackSamples(
-        VideoHeader.TrackSpec("vide", "avc1", 9, 8, 600, 300L),
-        frames, 100, 2, syncSamples = Seq(1, 3)) +:
-        (if (cueSamples.isEmpty) Nil else Seq(VideoHeader.TrackSamples(
-          VideoHeader.TrackSpec("text", "tx3g", 0, 0, 1000,
-            cueSamples.length * 200L), cueSamples, 200, 2)))
-      val mp4 = VideoHeader.synthesizeMp4Tracks("mp42", 600, 300L,
-        tracks)
-      if (id == 5) mp4.take(40) else mp4
-    }
-    val clips = (0 until 8).map(id =>
-      (id.toLong, mp4For(id), Timestamp.valueOf("2024-01-01 10:00:00")))
-    // the SHARED composition — the same function drives the batch
-    // truth and the stream (both legs are stateless, so it composes
-    // on either kind of frame); thumbnails plan against an 8px box
-    def compose(df: DataFrame): DataFrame = {
-      val thumbs = Multimodal.withResizePlan(
-        Multimodal.mp4KeyframeSample(df, "media")
-          .withColumn("mf", Multimodal.featuresColumn(col("frame"))),
-        "mf.width", "mf.height", maxDim = 8)
-        .select(col("clip"), col("ts"), lit("thumb").as("kind"),
-          (col("mf.decoded") && col("target_w") <= 8 &&
-            col("target_h") <= 8).as("ok"))
-      // dock = (clip, ts) rides through qualityBucketStream's id
-      // column so the windowed verdict downstream keeps its time
-      val cueDocs = Multimodal.mp4Cues(df, "media")
-        .withColumn("dock", struct(col("clip"), col("ts")))
-        .withColumn("lang", lit("en"))
-      val cues = StreamingOps.qualityBucketStream(
-        cueDocs, corpus, idCol = "dock", staticSide = Some(cuts))
-        .select(col("dock.clip").as("clip"), col("dock.ts").as("ts"),
-          lit("cue").as("kind"),
-          (col("bucket").isNotNull && col("bucket") >= 5).as("ok"))
-      thumbs.unionByName(cues)
-    }
-    def verdict(nThumbs: Long, nCues: Long, badCues: Long): Boolean =
-      nThumbs >= 1 && nCues >= 1 && badCues == 0
-    // batch truth
-    val batch = compose(clips.toDF("clip", "media", "ts"))
-      .groupBy("clip")
-      .agg(sum(when(col("kind") === "thumb" && col("ok"), 1)
-          .otherwise(0)).as("nt"),
-        sum(when(col("kind") === "cue", 1).otherwise(0)).as("nc"),
-        sum(when(col("kind") === "cue" && !col("ok"), 1)
-          .otherwise(0)).as("bc"))
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    assert(batch.keySet === Set(0L, 1L, 2L, 3L, 4L, 6L, 7L)) // 5 absent
-    val batchSurvivors = batch.collect {
-      case (id, (nt, nc, bc)) if verdict(nt, nc, bc) => id }.toSet
-    assert(batchSurvivors === Set(0L, 1L, 2L, 6L))
-    // streaming: same composition, one windowed verdict aggregation
-    val feed = MemoryStream[(Long, Array[Byte], Timestamp)]
-    val out = compose(
-      feed.toDF().toDF("clip", "media", "ts")
-        .withWatermark("ts", "2 hours"))
-      .groupBy(window(col("ts"), "1 hour"), col("clip"))
-      .agg(sum(when(col("kind") === "thumb" && col("ok"), 1)
-          .otherwise(0)).as("nt"),
-        sum(when(col("kind") === "cue", 1).otherwise(0)).as("nc"),
-        sum(when(col("kind") === "cue" && !col("ok"), 1)
-          .otherwise(0)).as("bc"))
-    val q = out.writeStream.format("memory").queryName("xmodal")
-      .outputMode("update").start()
-    try {
-      clips.grouped(5).foreach { chunk =>
-        feed.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("xmodal")
-        .groupBy("clip").agg(max("nt").as("nt"), max("nc").as("nc"),
-          max("bc").as("bc"))
-        .collect()
-        .map(r => r.getLong(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      assert(got === batch) // per-clip leg counts match exactly
-      val streamSurvivors = got.collect {
-        case (id, (nt, nc, bc)) if verdict(nt, nc, bc) => id }.toSet
-      assert(streamSurvivors === batchSurvivors)
-    } finally { q.stop(); cuts.unpersist() }
-  }
-
-  test("runningDistinctStream state survives a query restart from its " +
-    "checkpoint") {
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("rdist_ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("rdist_out").toString
-    val in = MemoryStream[(Long, String, Long)]
-    val snaps = StreamingOps.runningDistinctStream(
-      in.toDS().map(t => StreamingOps.DistinctEvent(t._1, t._2, t._3)))
-    // update-mode stateful output rides foreachBatch onto parquet —
-    // the fault-tolerant shape a real pipeline restarts on
-    def start() = snaps.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-                         StreamingOps.DistinctSnapshot],
-                       _: Long) =>
-        df.write.mode("append").parquet(out); ()
-      }
-      .option("checkpointLocation", ckpt).outputMode("update").start()
-    val q1 = start()
-    try {
-      in.addData((1L, "a", 100L), (1L, "b", 50L))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // restart: the restored state must (i) keep b's first_ts, (ii)
-    // re-rank a when its EARLIER occurrence arrives, (iii) keep the
-    // monotone event count accumulating across the restart
-    val q2 = start()
-    try {
-      in.addData((1L, "a", 10L), (1L, "c", 200L))
-      q2.processAllAvailable()
-      val rows = spark.read.parquet(out)
-      val vmax = rows.agg(max("nSeenEvents")).head.getLong(0)
-      val latest = rows.where(col("nSeenEvents") === vmax)
-        .select("userId", "eventType", "firstTsMicros", "nthDistinct")
-        .as[(Long, String, Long, Long)].collect().sorted.toSeq
-      assert(vmax === 4L, "event count must accumulate across restart")
-      assert(latest === Seq((1L, "a", 10L, 1L), (1L, "b", 50L, 2L),
-        (1L, "c", 200L, 3L)))
-    } finally q2.stop()
   }
 }
