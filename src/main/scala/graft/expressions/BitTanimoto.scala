@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
@@ -87,13 +85,4 @@ object BitTanimoto {
     }
     out
   }
-
-  /** SparkSessionExtensions hook: register `bit_tanimoto` as a SQL
-    * function (spark.sql.extensions=graft.GraftExtensions).
-    */
-  def register(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((
-      new FunctionIdentifier("bit_tanimoto"),
-      new ExpressionInfo(classOf[BitTanimoto].getName, "bit_tanimoto"),
-      (children: Seq[Expression]) => BitTanimoto(children(0), children(1))))
 }

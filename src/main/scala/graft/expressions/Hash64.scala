@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -88,44 +88,11 @@ object Hash64 {
     * is covered; standalone library users with a fresh session call
     * this (or any of those entry points) first. A name the session
     * already resolves (an earlier call, or [[graft.GraftExtensions]])
-    * is left as it is, so repeat calls are registry lookups.
+    * is left as it is, so repeat calls are registry lookups. The fused
+    * shingle kernels and `graft_sorted_overlap` ride along
+    * ([[SqlFunctions]]).
     */
-  def register(spark: SparkSession): Unit = {
-    registerOnce(spark, "graft_hash64") { exprs =>
-      require(exprs.length == 1,
-        s"graft_hash64 takes 1 argument, got ${exprs.length}")
-      Hash64(exprs.head)
-    }
-    // the fused shingle kernels ride along so every call site that
-    // registered the hash can also emit them in SQL strings
-    def lit(e: Expression, what: String): Int = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval().asInstanceOf[Number].intValue()
-    }
-    registerOnce(spark, "graft_char_fps") { exprs =>
-      require(exprs.length == 3,
-        s"graft_char_fps takes (text, w, step), got ${exprs.length}")
-      CharFps(exprs.head, lit(exprs(1), "w"), lit(exprs(2), "step"))
-    }
-    registerOnce(spark, "graft_winnow") { exprs =>
-      require(exprs.length == 3,
-        s"graft_winnow takes (text, k, t), got ${exprs.length}")
-      WinnowFps(exprs.head, lit(exprs(1), "k"), lit(exprs(2), "t"))
-    }
-    registerOnce(spark, "graft_sorted_overlap") { exprs =>
-      require(exprs.length == 2,
-        s"graft_sorted_overlap takes (a, b), got ${exprs.length}")
-      SortedOverlap(exprs.head, exprs(1))
-    }
-  }
-
-  /** Register `name` unless the session's registry already has it —
-    * the check-before-write of `VecDot.ensureRegistered`.
-    */
-  private[expressions] def registerOnce(spark: SparkSession, name: String)(
-      builder: Seq[Expression] => Expression): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    SqlFunctions.registerOnce(spark, "graft_hash64", "graft_char_fps",
+      "graft_winnow", "graft_sorted_overlap")
 }

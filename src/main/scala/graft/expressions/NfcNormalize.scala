@@ -75,9 +75,5 @@ object NfcNormalize {
     * [[Hash64.register]]).
     */
   def register(spark: SparkSession): Unit =
-    Hash64.registerOnce(spark, "graft_nfc") { exprs =>
-      require(exprs.length == 1,
-        s"graft_nfc takes 1 argument, got ${exprs.length}")
-      NfcNormalize(exprs.head)
-    }
+    SqlFunctions.registerOnce(spark, "graft_nfc")
 }

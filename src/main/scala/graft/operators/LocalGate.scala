@@ -6,18 +6,21 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 /** The one switch for every size-gated hybrid operator: the Pickaxe
-  * prune (`PickaxeEngine.pruneNetwork`), the filter cascade
-  * (`pickaxe.Cascade`), [[GraphClosure]], [[ConnectedComponents]] and
-  * [[Bpe]]. Each of them runs a driver-local twin below its own measured
-  * crossover and its distributed fixpoint above it.
+  * prune and filter cascades (`pickaxe.Membership`: the prune, the two
+  * `pickaxe.Cascade` fixpoints), `PickaxeEngine.assignIds`,
+  * [[GraphClosure]], [[ConnectedComponents]] and [[Bpe]]. Each of them
+  * runs a driver-local twin below its own crossover and its distributed
+  * fixpoint above it. The Pickaxe operators size nothing first: the
+  * bounded read of [[collectUpTo]] is their gate and their local input
+  * at once.
   *
   * `spark.graft.localPaths` (default `true`) keeps those gates as they
   * are. `false` sends every gated operator down its distributed path,
-  * an empty input included, and skips the job that sizes the input for
-  * the gate. At fixture scale only the local twins run otherwise, so the
-  * switch is how the distributed side gets checked against the oracle:
-  * `-Dspark.graft.localPaths=false` on a forked main (Spark copies
-  * `spark.*` system properties into the session conf), or
+  * an empty input included, and skips the job that reads or sizes the
+  * input for the gate. At fixture scale only the local twins run
+  * otherwise, so the switch is how the distributed side gets checked
+  * against the oracle: `-Dspark.graft.localPaths=false` on a forked main
+  * (Spark copies `spark.*` system properties into the session conf), or
   * `spark.conf.set` in a session.
   */
 object LocalGate {

@@ -24,6 +24,19 @@ import org.apache.spark.sql.functions._
   */
 object PathwaySearch {
 
+  /** The walks' two member tables: (rxn, c_id) reactant pairs and
+    * (rxn, p_id) product pairs of the predicted compounds. Each is a
+    * lazy localCheckpoint, not a persist: a persisted plan opts out of
+    * AQE re-partitioning and pins every round's joins (and therefore
+    * the checkpointed frontiers) to the static shuffle width; the first
+    * round fills each at the AQE-coalesced width.
+    */
+  private def members(state: NetworkState): (DataFrame, DataFrame) = (
+    Membership.pairs(state.reactions, "Reactants")
+      .localCheckpoint(eager = false),
+    Membership.pairs(state.reactions, "Products")
+      .withColumnRenamed("c_id", "p_id").localCheckpoint(eager = false))
+
   /** All start→target paths (reference `dfs`, all_paths=True).
     *
     * @param allowRevisits when true, mirror the reference recursion
@@ -41,19 +54,7 @@ object PathwaySearch {
       allowRevisits: Boolean = false): DataFrame = {
     val spark = state.compounds.sparkSession
     import spark.implicits._
-    val reacM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Reactants")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("c_id"))
-      // localCheckpoint, not persist: a persisted plan opts out of AQE
-      // re-partitioning and pins every round's joins (and therefore the
-      // checkpointed frontiers) to the static shuffle width — the same
-      // width tax removed from PickaxeEngine in the previous round. The
-      // eager checkpoint materializes at the AQE-coalesced width.
-      .where(col("c_id").startsWith("C")).localCheckpoint(eager = false)
-    val prodM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("p_id"))
-      .where(col("p_id").startsWith("C")).localCheckpoint(eager = false)
+    val (reacM, prodM) = members(state)
 
     var frontier = Seq((startId, Seq.empty[String], Seq(startId)))
       .toDF("c_id", "path", "seen")
@@ -104,19 +105,7 @@ object PathwaySearch {
       compoundGate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val spark = state.compounds.sparkSession
     import spark.implicits._
-    val reacM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Reactants")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("c_id"))
-      // localCheckpoint, not persist: a persisted plan opts out of AQE
-      // re-partitioning and pins every round's joins (and therefore the
-      // checkpointed frontiers) to the static shuffle width — the same
-      // width tax removed from PickaxeEngine in the previous round. The
-      // eager checkpoint materializes at the AQE-coalesced width.
-      .where(col("c_id").startsWith("C")).localCheckpoint(eager = false)
-    val prodM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("p_id"))
-      .where(col("p_id").startsWith("C")).localCheckpoint(eager = false)
+    val (reacM, prodM) = members(state)
 
     var visited = Seq(startId).toDF("c_id").localCheckpoint()
     var frontier = Seq((startId, Seq.empty[String]))
@@ -173,19 +162,7 @@ object PathwaySearch {
       compoundGate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val spark = state.compounds.sparkSession
     import spark.implicits._
-    val reacM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Reactants")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("c_id"))
-      // localCheckpoint, not persist: a persisted plan opts out of AQE
-      // re-partitioning and pins every round's joins (and therefore the
-      // checkpointed frontiers) to the static shuffle width — the same
-      // width tax removed from PickaxeEngine in the previous round. The
-      // eager checkpoint materializes at the AQE-coalesced width.
-      .where(col("c_id").startsWith("C")).localCheckpoint(eager = false)
-    val prodM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("p_id"))
-      .where(col("p_id").startsWith("C")).localCheckpoint(eager = false)
+    val (reacM, prodM) = members(state)
     val gated = compoundGate.map { gate =>
       state.compounds.where(gate).select(col("_id").as("p_id"))
         .localCheckpoint() // scored once, consumed every round

@@ -1,5 +1,7 @@
 package graft.pickaxe
 
+import scala.collection.mutable
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -173,18 +175,10 @@ final class PickaxeEngine(
           Cascade.cascadeDelete(withFlags,
             blocked.select(col("__blocked_id").as("_id")))
         else withFlags
+      // the cascade's bounded read of the blocked reaction ids is its
+      // emptiness gate too: no ids, no further job
       if (!f.deletesReactions) afterCpds
-      else {
-        // same one-shot materialization: the thermo/feasibility scoring
-        // chain (explode + regroup + per-member parse) feeds both the
-        // emptiness gate and deleteReactions. The lazy checkpoint is
-        // filled by the gate's count, one job for both
-        val badRxns = f.blockedReactions(afterCpds).select("_id").distinct()
-          .localCheckpoint(eager = false)
-        if (CheckpointRows.run(badRxns, "blocked reactions")(_.count()) == 0)
-          afterCpds
-        else Cascade.deleteReactions(afterCpds, badRxns)
-      }
+      else Cascade.deleteReactions(afterCpds, f.blockedReactions(afterCpds))
     }
 
   /** One generation: filters -> frontier -> kernel -> merge (E1/E2/E6).
@@ -332,34 +326,20 @@ final class PickaxeEngine(
 
   /** A13: derived adjacency (Reactant_in / Product_of arrays). */
   def adjacency(state: NetworkState): DataFrame = {
-    val rIn = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Reactants")).as("m"))
-      .groupBy(col("m.c_id").as("_id"))
-      .agg(array_sort(collect_set("rxn")).as("Reactant_in"))
-    val pOf = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
-      .groupBy(col("m.c_id").as("_id"))
-      .agg(array_sort(collect_set("rxn")).as("Product_of"))
+    def rxnsOf(side: String, name: String) =
+      Membership.pairs(state.reactions, side, coreactants = true)
+        .groupBy(col("c_id").as("_id"))
+        .agg(array_sort(collect_set("rxn")).as(name))
     state.compounds.select("_id")
-      .join(rIn, Seq("_id"), "left")
-      .join(pOf, Seq("_id"), "left")
+      .join(rxnsOf("Reactants", "Reactant_in"), Seq("_id"), "left")
+      .join(rxnsOf("Products", "Product_of"), Seq("_id"), "left")
       .select(col("_id"),
         coalesce(col("Reactant_in"), array()).as("Reactant_in"),
         coalesce(col("Product_of"), array()).as("Product_of"))
   }
 
   /** D4/D5: prune to targets — reverse BFS over the bipartite graph
-    * (find_minimal_set, pickaxe.py:995-1044), as iterative semi-joins.
-    *
-    * SIZE-GATED HYBRID: the multi-round distributed BFS pays dozens of
-    * Spark jobs of fixed overhead; on small networks (the common
-    * interactive case — a few generations of expansion) that overhead
-    * dominates. Up to `PickaxeEngine.LocalRxnLimit` reactions the
-    * membership pairs are collected once and the identical reverse BFS
-    * runs driver-side; past the gate the iterative semi-join path runs
-    * unchanged, so cluster-scale networks never collect.
-    * `spark.graft.localPaths=false` ([[graft.operators.LocalGate]])
-    * forces the semi-join path at any size.
+    * (find_minimal_set, pickaxe.py:995-1044); see `pruneNetwork`.
     */
   def pruneToTargets(
       state: NetworkState,
@@ -398,126 +378,78 @@ final class PickaxeEngine(
     * pickaxe.py:995-1044): keep everything on a production path to a
     * whitelist member, plus coreactants. `pruneToTargets` and the
     * between-generations prune (pickaxe.py:631-645) both land here.
-    * Same size-gated hybrid as documented above; `localSeedIds` lets a
-    * caller that already holds the seed ids skip the collect on the
-    * local path.
+    *
+    * The reverse BFS runs driver-side on the network's [[Membership]]
+    * when it fits the local limit: one bounded job reads it, and a
+    * multi-round distributed BFS would pay a few Spark jobs of fixed
+    * overhead per round. Otherwise, and with
+    * `spark.graft.localPaths=false` ([[graft.operators.LocalGate]]), it
+    * runs as iterative semi-joins, so cluster-scale networks never
+    * collect. `localSeedIds` lets a caller that already holds the seed
+    * ids skip their read on the local path.
     */
   def pruneNetwork(
       state: NetworkState,
       whitelist: DataFrame,
       localSeedIds: Option[Seq[String]] = None): NetworkState = {
-    // the gate and the local path's input in one bounded collect of the
-    // member ids: a network with more than the limit never crosses to
-    // the driver and takes the distributed path below
-    if (LocalGate.enabled(spark)) {
-      def ids(a: ArrayData): Seq[String] =
-        (0 until a.numElements()).map(a.getStruct(_, 2).getUTF8String(1)
-          .toString)
-      val members = CheckpointRows.within(state.reactions, "prune members")(
-        LocalGate.collectUpTo(PickaxeEngine.reactionRows(state.reactions)
-          .map(r => (r.getUTF8String(0).toString, ids(r.getArray(2)),
-            ids(r.getArray(3)))),
-          PickaxeEngine.LocalRxnLimit.toInt))
-      members.foreach { m =>
-        val seedIds = localSeedIds.getOrElse(
-          whitelist.select("_id").as[String].collect().toSeq)
-        return pruneToTargetsLocal(state, m, seedIds)
+    val local = for {
+      g <- Membership.read(state)
+      seeds <- localSeedIds.orElse(Membership.readIds(whitelist).map(_.toSeq))
+    } yield {
+      val keepC = mutable.HashSet[String](seeds: _*)
+      val queue = mutable.Queue[String](seeds: _*)
+      val keepR = mutable.HashSet.empty[String]
+      while (queue.nonEmpty) g.producedBy(queue.dequeue()).foreach { r =>
+        if (keepR.add(r))
+          g.reactants(r).foreach(c => if (keepC.add(c)) queue.enqueue(c))
       }
+      // every C member (both sides) of the kept reactions, the seeds
+      // and the coreactants
+      Membership.select(state,
+        keepC ++ keepR.iterator.flatMap(g.members) ++ g.coreactants, keepR,
+        keep = true)
     }
-    val seeds = whitelist
-      .select(col("_id").as("c_id")).distinct()
-    val prodM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Products")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("c_id")).localCheckpoint()
-    val reacM = state.reactions
-      .select(col("_id").as("rxn"), explode(col("Reactants")).as("m"))
-      .select(col("rxn"), col("m.c_id").as("c_id")).localCheckpoint()
-
-    // loop on the compound side only (producing reactions -> their
-    // reactant compounds per round); the kept-reaction set equals
-    // "reactions producing a kept compound", derived once at the end
-    var keepC = seeds.localCheckpoint()
-    var frontier = keepC
-    var done = false
-    while (!done) {
-      val reached = prodM.join(frontier, Seq("c_id"), "left_semi")
-        .select("rxn").distinct()
-      val newC = reacM.join(reached, Seq("rxn"), "left_semi")
+    local.getOrElse {
+      // coreactant products too: a whitelisted coreactant keeps the
+      // reactions that produce it, as on the local path
+      val prodM = Membership.pairs(state.reactions, "Products",
+        coreactants = true).localCheckpoint()
+      val reacM = Membership.pairs(state.reactions, "Reactants")
+        .localCheckpoint()
+      // loop on the compound side only (producing reactions -> their
+      // reactant compounds per round); the kept-reaction set equals
+      // "reactions producing a kept compound", derived once at the end
+      var keepC = whitelist.select(col("_id").as("c_id")).distinct()
+        .localCheckpoint()
+      var frontier = keepC
+      Membership.fixpoint("pruneNetwork") {
+        val reached = prodM.join(frontier, Seq("c_id"), "left_semi")
+          .select("rxn").distinct()
+        frontier = reacM.join(reached, Seq("rxn"), "left_semi")
+          .select("c_id").distinct()
+          .join(keepC, Seq("c_id"), "left_anti").localCheckpoint()
+        val grew = !frontier.isEmpty
+        if (grew) keepC = keepC.union(frontier).localCheckpoint()
+        grew
+      }
+      val keepR = prodM.join(keepC, Seq("c_id"), "left_semi")
+        .select("rxn").distinct().localCheckpoint()
+      // keep every C member (both sides) of kept reactions, plus seeds
+      val memberC = prodM.union(reacM)
+        .join(keepR, Seq("rxn"), "left_semi")
         .where(col("c_id").startsWith("C"))
-        .select("c_id").distinct()
-        .join(keepC, Seq("c_id"), "left_anti").localCheckpoint()
-      if (newC.isEmpty) done = true
-      else {
-        keepC = keepC.union(newC).localCheckpoint() // disjoint by anti-join
-        frontier = newC
-      }
+        .select("c_id").union(keepC.select("c_id")).distinct()
+      val prunedC = state.compounds.join(
+        memberC.withColumnRenamed("c_id", "_id"), Seq("_id"), "left_semi")
+      val keepAll = state.compounds
+        .where(col("Type") === "Coreactant").select("_id")
+        .union(prunedC.select("_id"))
+      val outC = state.compounds.join(keepAll.distinct(), Seq("_id"),
+        "left_semi")
+      val outR = state.reactions.join(keepR.withColumnRenamed("rxn", "_id"),
+        Seq("_id"), "left_semi")
+      NetworkState(outC, outR, state.generation)
     }
-    val keepR = prodM.join(keepC, Seq("c_id"), "left_semi")
-      .select("rxn").distinct().localCheckpoint()
-    // keep every C member (both sides) of kept reactions, plus seeds
-    val memberC = prodM.union(reacM)
-      .join(keepR, Seq("rxn"), "left_semi")
-      .where(col("c_id").startsWith("C"))
-      .select("c_id").union(keepC.select("c_id")).distinct()
-    val prunedC = state.compounds.join(
-      memberC.withColumnRenamed("c_id", "_id"), Seq("_id"), "left_semi")
-    val keepAll = state.compounds
-      .where(col("Type") === "Coreactant").select("_id")
-      .union(prunedC.select("_id"))
-    val outC = state.compounds.join(keepAll.distinct(), Seq("_id"), "left_semi")
-    val outR = state.reactions.join(keepR.withColumnRenamed("rxn", "_id"),
-      Seq("_id"), "left_semi")
-    NetworkState(outC, outR, state.generation)
-  }
-
-  /** Driver-side twin of the distributed reverse BFS above — identical
-    * keep-set semantics over the collected (rxn, members) rows.
-    */
-  private def pruneToTargetsLocal(
-      state: NetworkState,
-      members: Array[(String, Seq[String], Seq[String])],
-      targetIds: Seq[String]): NetworkState = {
-    import scala.collection.mutable
-    // producedBy: c_id -> reactions with it as a product
-    val producedBy = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
-    val reactantsOf = mutable.HashMap.empty[String, Seq[String]]
-    val prodIds = mutable.HashMap.empty[String, Seq[String]]
-    members.foreach { case (rxn, reac, prod) =>
-      prod.foreach(c =>
-        producedBy.getOrElseUpdate(c, mutable.ArrayBuffer.empty) += rxn)
-      reactantsOf(rxn) = reac.filter(_.startsWith("C"))
-      prodIds(rxn) = prod
-    }
-    val keepC = mutable.HashSet[String](targetIds: _*)
-    val queue = mutable.Queue[String](targetIds: _*)
-    val keepR = mutable.HashSet.empty[String]
-    while (queue.nonEmpty) {
-      val c = queue.dequeue()
-      producedBy.getOrElse(c, Nil).foreach { rxn =>
-        if (keepR.add(rxn))
-          reactantsOf(rxn).foreach { r =>
-            if (keepC.add(r)) queue.enqueue(r)
-          }
-      }
-    }
-    // keep every C member (both sides) of kept reactions, plus seeds
-    val memberC = keepC ++ keepR.iterator.flatMap(r =>
-      (reactantsOf(r) ++ prodIds(r)).filter(_.startsWith("C")))
-    // the keep sets are driver-side already: filter the rows in place by
-    // broadcast sets, instead of joining against a broadcast relation
-    // built from the same ids (one job and one hash join stage per table)
-    def kept(df: DataFrame, ids: collection.Set[String],
-        orCoreactant: Boolean): DataFrame = {
-      val b = spark.sparkContext.broadcast(ids.toSet)
-      val id = df.schema.fieldIndex("_id")
-      val tpe = if (orCoreactant) df.schema.fieldIndex("Type") else -1
-      CheckpointRows.frame(spark, CheckpointRows.rows(df).filter(r =>
-        (tpe >= 0 && !r.isNullAt(tpe) &&
-          r.getUTF8String(tpe).toString == "Coreactant") ||
-          b.value.contains(r.getUTF8String(id).toString)), df.schema, df)
-    }
-    NetworkState(kept(state.compounds, memberC, orCoreactant = true),
-      kept(state.reactions, keepR, orCoreactant = false), state.generation)
   }
 
   /** W1: dense export ids (assign_ids, pickaxe.py:1046-1102):
@@ -617,9 +549,10 @@ final class PickaxeEngine(
 
 object PickaxeEngine {
 
-  /** Reactions up to which the prune (`pruneNetwork`) and the filter
-    * cascade (`Cascade`) run their fixpoints driver-side; see
-    * `pruneToTargets`.
+  /** Rows up to which the prune and the filter cascades read the
+    * network's membership, and their ids, to the driver and run their
+    * fixpoints there ([[Membership]]), and `assignIds` numbers its keys
+    * there.
     */
   val LocalRxnLimit = 200_000L
 

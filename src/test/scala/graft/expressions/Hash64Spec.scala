@@ -93,6 +93,43 @@ class Hash64Spec extends SparkSuite {
     }
   }
 
+  test("an extension-only session resolves every name the imperative " +
+    "registers write") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // the names the three imperative routes write into a session that
+    // has none of them yet
+    val plain = spark.newSession()
+    val before = plain.sessionState.functionRegistry.listFunction().toSet
+    Hash64.register(plain)
+    NfcNormalize.register(plain)
+    VecDot.ensureRegistered(plain)
+    val written = plain.sessionState.functionRegistry.listFunction().toSet --
+      before
+    assert(written.map(_.funcName) === Set("graft_hash64", "graft_nfc",
+      "graft_char_fps", "graft_winnow", "graft_sorted_overlap", "vec_dot"))
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[2]")
+        .appName("graft-ext-names")
+        .withExtensions(ext => new graft.GraftExtensions().apply(ext))
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      written.foreach(id =>
+        assert(s2.sessionState.functionRegistry.functionExists(
+          FunctionIdentifier(id.funcName)), s"${id.funcName} is missing"))
+      // resolved by name in a query, as TextQueries calls it
+      assert(s2.sql("SELECT graft_sorted_overlap(array(1L, 2L, 3L), " +
+        "array(2L, 3L, 4L)) AS n").collect().head.getInt(0) === 2)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("null propagates; 60-bit range holds; lambda context works") {
     val out = Seq(Option("x"), None).toDF("s")
       .selectExpr("graft_hash64(s) as h").collect()

@@ -132,6 +132,31 @@ class PickaxeRunSpec extends SparkSuite {
     assert(gotP.reactions.count() === wantP.reactions.count())
   }
 
+  test("DataFrame-seed path (initialState(df) / runFrom / " +
+    "pruneToTargetsDf) is identical to the Seq path (inline kinase " +
+    "fixture)") {
+    val engine = KinaseFixture.engine(spark)
+    import spark.implicits._
+    val seedDf = PickaxeEngine.loadCompoundFile(
+      spark, tmpCsv("dfseed", Seq("FADH" -> fadh)))
+    val got = engine.runFrom(engine.initialState(seedDf), 2)
+    val want = engine.run(Seq(fadh), 2)
+    assert(got.compounds.select("_id").as[String].collect().sorted.toSeq
+      === want.compounds.select("_id").as[String].collect().sorted.toSeq)
+    assert(got.reactions.select("_id").as[String].collect().sorted.toSeq
+      === want.reactions.select("_id").as[String].collect().sorted.toSeq)
+    // distributed target prune equals the Seq overload
+    val tDf = PickaxeRun.loadTargetIds(
+      spark, tmpCsv("dftgt", Seq("T1" -> doublePhospho)))
+    val gotP = engine.pruneToTargetsDf(got, tDf)
+    val wantP = engine.pruneToTargets(want, Seq(doublePhospho))
+    assert(gotP.compounds.select("_id").as[String].collect().sorted.toSeq
+      === wantP.compounds.select("_id").as[String].collect().sorted.toSeq)
+    assert(gotP.reactions.count() === wantP.reactions.count())
+    // the target is in the network, so the prune keeps its cone
+    assert(wantP.reactions.count() >= 1)
+  }
+
   test("a MetaNetX-scale seed loads gen 0 distributed — no driver " +
     "round-trip, every partition contributes") {
     // 100k seed rows (20 distinct alkanes after dedup): the point is

@@ -96,6 +96,23 @@ class PickaxeSpec extends SparkSuite {
     assert(!pruned.compounds.where(col("_id") === tid).isEmpty)
   }
 
+  test("prune to a target keeps only its producing cone " +
+    "(inline kinase fixture)") {
+    val e = KinaseFixture.engine(spark)
+    val st = e.run(Seq(fadh), 1)
+    // pick one predicted compound as the target
+    val target = st.compounds.where(col("Type") === "Predicted")
+      .orderBy("_id").select("SMILES").first().getString(0)
+    val pruned = e.pruneToTargets(st, Seq(target))
+    assert(pruned.reactions.count() >= 1)
+    assert(pruned.compounds.where(col("Type") === "Predicted").count()
+      < st.compounds.where(col("Type") === "Predicted").count())
+    // target itself survives
+    val tid = graft.chem.Chem.compoundHash(
+      graft.chem.Chem.standardize(target).get, 'C')
+    assert(!pruned.compounds.where(col("_id") === tid).isEmpty)
+  }
+
   test("prune to the reference's target matches its oracle: " +
     "6 compounds / 4 reactions") {
     assume(fixturesPresent)
