@@ -17,7 +17,9 @@ import org.apache.spark.sql.SparkSession
   * `spark.graft.localPaths` (default `true`) keeps those gates as they
   * are. `false` sends every gated operator down its distributed path,
   * an empty input included, and skips the job that reads or sizes the
-  * input for the gate. At fixture scale only the local twins run
+  * input for the gate; the cascades still hold and count their ids in
+  * one job, which their fixpoint reads, and return their input when
+  * there are none. At fixture scale only the local twins run
   * otherwise, so the switch is how the distributed side gets checked
   * against the oracle: `-Dspark.graft.localPaths=false` on a forked main
   * (Spark copies `spark.*` system properties into the session conf), or

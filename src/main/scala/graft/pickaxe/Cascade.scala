@@ -12,11 +12,14 @@ import org.apache.spark.sql.functions._
   */
 object Cascade {
 
-  /** Cascading filter delete (base_filter.py:163-286): remove the chosen
-    * compounds, but delete a reaction only when ALL its C-products are
-    * removed; products of surviving reactions are resurrected; after
-    * reaction deletes, newly-orphaned predicted compounds cascade — loop
-    * to fixpoint. No ids: `state` as it is.
+  /** A compound filter's result (`_apply_filter_results`,
+    * base_filter.py:163-286): remove the chosen compounds, but delete a
+    * reaction only when ALL its C-products are removed; products of
+    * surviving reactions are resurrected; after reaction deletes,
+    * newly-orphaned predicted compounds cascade — loop to fixpoint. A
+    * chosen compound that survives (protected or resurrected) loses its
+    * Expand flag. The ids are read once, for both. No ids: `state` as
+    * it is.
     */
   def cascadeDelete(
       state: NetworkState,
@@ -41,7 +44,8 @@ object Cascade {
         remove = newRemove
         grew
       }
-      Membership.select(state, remove, dead, keep = false)
+      Membership.select(state, remove, dead, keep = false,
+        unflag = requested)
     } { removeIds =>
       // localCheckpoint, not persist: a persisted plan opts the query out
       // of AQE re-partitioning and pins the fixpoint rounds' joins to
@@ -52,8 +56,7 @@ object Cascade {
         .union(prodM).localCheckpoint()
       val protectedC = state.compounds.where(Membership.isProtected)
         .select("_id")
-      var remove = removeIds.select("_id").distinct()
-        .join(protectedC, Seq("_id"), "left_anti")
+      var remove = removeIds.join(protectedC, Seq("_id"), "left_anti")
         .localCheckpoint()
       var dead = memberM.select("rxn").limit(0)
       Membership.fixpoint("cascadeDelete") {
@@ -77,7 +80,11 @@ object Cascade {
         remove = newRemove
         grew
       }
-      NetworkState(state.compounds.join(remove, Seq("_id"), "left_anti"),
+      val blocked = broadcast(removeIds.select(col("_id").as("__blocked")))
+      NetworkState(state.compounds.join(remove, Seq("_id"), "left_anti")
+          .join(blocked, col("_id") === col("__blocked"), "left")
+          .withColumn("Expand", col("Expand") && col("__blocked").isNull)
+          .drop("__blocked"),
         state.reactions.join(dead.withColumnRenamed("rxn", "_id"),
           Seq("_id"), "left_anti"), state.generation)
     }
@@ -116,8 +123,7 @@ object Cascade {
         .localCheckpoint()
       val protectedC = state.compounds.where(Membership.isProtected)
         .select(col("_id").as("c_id"))
-      var dead = rxnIds.select(col("_id").as("rxn")).distinct()
-        .localCheckpoint()
+      var dead = rxnIds.select(col("_id").as("rxn"))
       var removedC = protectedC.limit(0).localCheckpoint()
       Membership.fixpoint("deleteReactions") {
         // orphan = touched compound with no surviving producer

@@ -6,17 +6,68 @@ import org.apache.spark.sql.functions._
 import graft.chem.{Formula, Smiles}
 import graft.operators.Sampling
 
-/** Per-generation frontier filters (reference `filters` package, SURVEY §2.9).
-  * Each returns the `_id`s whose Expand flag is cleared — pure
-  * DataFrame -> DataFrame combinators, applied in declaration order.
+/** Per-generation filters (reference `filters` package, SURVEY §2.9).
+  * A [[CompoundFilter]] returns the compound `_id`s it blocks, a
+  * [[ReactionFilter]] the reaction `_id`s — pure DataFrame -> DataFrame
+  * combinators, applied in declaration order.
   */
+
+/** What the similarity filters share: their targets' content ids, their
+  * frontier and, for the two Tanimoto filters, one fingerprint.
+  */
+private[pickaxe] object Similarity {
+
+  /** Content ids of the target SMILES. */
+  def targetIds(smiles: Seq[String]): Seq[String] =
+    smiles.flatMap(graft.chem.Chem.standardize(_))
+      .map(s => graft.chem.Chem.compoundHash(s, 'C'))
+
+  /** The generation's compounds to expand, coreactants and targets
+    * excepted.
+    */
+  def frontier(state: NetworkState): DataFrame =
+    state.compounds
+      .where(col("Generation") === state.generation && col("Expand") &&
+        !col("Type").isin("Coreactant", "Target Compound"))
+
+  /** The packed fingerprint of a SMILES under `method` (see
+    * [[TanimotoCutoffFilter]]), at the method's own bit space: packing
+    * morganBits > 2048 at 2048 would fold bits.
+    */
+  def fingerprint(method: String, morganRadius: Int,
+      morganBits: Int): String => Array[Byte] = {
+    val nb = if (method == "morgan") morganBits else 2048
+    smiles => graft.expressions.BitTanimoto.pack(method match {
+      case "morgan" =>
+        graft.chem.Morgan.foldedBits(Smiles.parse(smiles),
+          morganRadius, morganBits).toArray.sorted
+      case "path" => Formula.fingerprint(Smiles.parse(smiles))
+      case "rdkit" | "rdkit-exact" =>
+        graft.chem.RdkFp.bits(Smiles.parse(smiles))
+      case m if m.startsWith("rdkit-exact:") =>
+        // "rdkit-exact:pswd" (pack digit, smallFirst, drawMod, seed32
+        // as 0/1 flags) selects a hash variant for calibration runs
+        val spec = m.substring("rdkit-exact:".length)
+        require(spec.length == 4 && spec.forall(_.isDigit),
+          s"malformed rdkit-exact variant spec: '$m'")
+        graft.chem.RdkFp.bits(Smiles.parse(smiles),
+          variant = graft.chem.RdkFp.Variant(
+            pack = spec(0) - '0',
+            smallFirst = spec(1) == '1',
+            drawMod = spec(2) == '1',
+            seed32 = spec(3) == '1'))
+      case m => sys.error(s"unknown fingerprintMethod: '$m' " +
+        "(expected rdkit, rdkit-exact[:pswd], morgan, or path)")
+    }, nb)
+  }
+}
 
 /** MW window filter (filters/property.py MWFilter): block frontier
   * compounds outside [minMass, maxMass] Da.
   */
 final case class MolWeightFilter(
     minMass: Double = 0.0,
-    maxMass: Double = Double.MaxValue) extends NetworkFilter {
+    maxMass: Double = Double.MaxValue) extends CompoundFilter {
   override def name = s"MW [$minMass,$maxMass]"
   override def blocked(state: NetworkState): DataFrame =
     state.compounds
@@ -29,7 +80,7 @@ final case class MolWeightFilter(
   * per-element allowed count ranges, computed from the Formula column.
   */
 final case class AtomCompositionFilter(
-    ranges: Map[String, (Int, Int)]) extends NetworkFilter {
+    ranges: Map[String, (Int, Int)]) extends CompoundFilter {
   override def name = s"AtomComposition $ranges"
   override def blocked(state: NetworkState): DataFrame = {
     val okUdf = udf { formula: String =>
@@ -88,47 +139,20 @@ final case class TanimotoCutoffFilter(
     fingerprintMethod: String = "rdkit",
     morganRadius: Int = 2,
     morganBits: Int = 2048,
-    increasingSimilarity: Boolean = false) extends NetworkFilter {
+    increasingSimilarity: Boolean = false) extends CompoundFilter {
   override def name = s"TanimotoCutoff $thresholds"
-  override def targetIds: Seq[String] =
-    targetSmiles.flatMap(graft.chem.Chem.standardize(_))
-      .map(s => graft.chem.Chem.compoundHash(s, 'C'))
-  private def fp(smiles: String): Array[Int] =
-    fingerprintMethod match {
-      case "morgan" =>
-        graft.chem.Morgan.foldedBits(Smiles.parse(smiles),
-          morganRadius, morganBits).toArray.sorted
-      case "path" => Formula.fingerprint(Smiles.parse(smiles))
-      case "rdkit" | "rdkit-exact" =>
-        graft.chem.RdkFp.bits(Smiles.parse(smiles))
-      case m if m.startsWith("rdkit-exact:") =>
-        // "rdkit-exact:pswd" (pack digit, smallFirst, drawMod, seed32
-        // as 0/1 flags) selects a hash variant for calibration runs
-        val spec = m.substring("rdkit-exact:".length)
-        require(spec.length == 4 && spec.forall(_.isDigit),
-          s"malformed rdkit-exact variant spec: '$m'")
-        graft.chem.RdkFp.bits(Smiles.parse(smiles),
-          variant = graft.chem.RdkFp.Variant(
-            pack = spec(0) - '0',
-            smallFirst = spec(1) == '1',
-            drawMod = spec(2) == '1',
-            seed32 = spec(3) == '1'))
-      case m => sys.error(s"unknown fingerprintMethod: '$m' " +
-        "(expected rdkit, rdkit-exact[:pswd], morgan, or path)")
-    }
+  override def targetIds: Seq[String] = Similarity.targetIds(targetSmiles)
   override def blocked(state: NetworkState): DataFrame = {
     import graft.expressions.BitTanimoto
     // packed-bitset fingerprints: popcount AND/OR beats set intersection
-    val nb = if (fingerprintMethod == "morgan") morganBits else 2048
-    val mkFp = fp _
-    val targetFps = targetSmiles.map(s => BitTanimoto.pack(mkFp(s), nb))
+    val fp = Similarity.fingerprint(fingerprintMethod, morganRadius,
+      morganBits)
+    val targetFps = targetSmiles.map(fp)
     val crit = thresholds(math.min(state.generation, thresholds.length - 1))
-    val frontier = state.compounds
-      .where(col("Generation") === state.generation && col("Expand") &&
-        !col("Type").isin("Coreactant", "Target Compound"))
+    val frontier = Similarity.frontier(state)
     if (!increasingSimilarity) {
       val okUdf = udf { smiles: String =>
-        val f = BitTanimoto.pack(mkFp(smiles), nb)
+        val f = fp(smiles)
         // short-circuits at the threshold like similarity.py:761-763
         targetFps.exists(t => BitTanimoto.tanimoto(f, t) >= crit)
       }
@@ -137,7 +161,7 @@ final case class TanimotoCutoffFilter(
       // full max-similarity values: the gate compares child vs parent,
       // so the threshold short-circuit no longer applies
       val simUdf = udf { smiles: String =>
-        val f = BitTanimoto.pack(mkFp(smiles), nb)
+        val f = fp(smiles)
         if (targetFps.isEmpty) 0.0
         else targetFps.map(t => BitTanimoto.tanimoto(f, t)).max
       }
@@ -180,11 +204,9 @@ final case class TanimotoCutoffFilter(
 final case class MCSFilter(
     targetSmiles: Seq[String],
     thresholds: Seq[Double],
-    budget: Int = 20000) extends NetworkFilter {
+    budget: Int = 20000) extends CompoundFilter {
   override def name = s"MCS $thresholds"
-  override def targetIds: Seq[String] =
-    targetSmiles.flatMap(graft.chem.Chem.standardize(_))
-      .map(s => graft.chem.Chem.compoundHash(s, 'C'))
+  override def targetIds: Seq[String] = Similarity.targetIds(targetSmiles)
   override def blocked(state: NetworkState): DataFrame = {
     val targets = targetSmiles.map(Smiles.parse)
     val crit = thresholds(math.min(state.generation, thresholds.length - 1))
@@ -192,11 +214,7 @@ final case class MCSFilter(
       val m = Smiles.parse(smiles)
       targets.exists(t => graft.chem.MCS.mcsScore(m, t, budget) >= crit)
     }
-    state.compounds
-      .where(col("Generation") === state.generation && col("Expand") &&
-        !col("Type").isin("Coreactant", "Target Compound"))
-      .where(!okUdf(col("SMILES")))
-      .select("_id")
+    Similarity.frontier(state).where(!okUdf(col("SMILES"))).select("_id")
   }
 }
 
@@ -215,34 +233,19 @@ final case class TanimotoSamplingFilter(
     // GetMorganFingerprintAsBitVect default) so the two filters score a
     // given pair identically
     morganRadius: Int = 2,
-    morganBits: Int = 2048) extends NetworkFilter {
+    morganBits: Int = 2048) extends CompoundFilter {
   override def name = s"TanimotoSampling n=$sampleSize"
-  override def targetIds: Seq[String] =
-    targetSmiles.flatMap(graft.chem.Chem.standardize(_))
-      .map(s => graft.chem.Chem.compoundHash(s, 'C'))
-  private def fp(smiles: String): Array[Int] = fingerprintMethod match {
-    case "morgan" =>
-      graft.chem.Morgan.foldedBits(Smiles.parse(smiles),
-        morganRadius, morganBits).toArray.sorted
-    case "path" => Formula.fingerprint(Smiles.parse(smiles))
-    case "rdkit" => graft.chem.RdkFp.bits(Smiles.parse(smiles))
-    case m => sys.error(s"unknown fingerprintMethod: '$m' " +
-      "(expected rdkit, morgan, or path)")
-  }
+  override def targetIds: Seq[String] = Similarity.targetIds(targetSmiles)
   override def blocked(state: NetworkState): DataFrame = {
     import graft.expressions.BitTanimoto
-    // pack at the fingerprint's own bit space (like TanimotoCutoffFilter)
-    // — packing morganBits > 2048 at the 2048 default would fold bits
-    val nb = if (fingerprintMethod == "morgan") morganBits else 2048
-    val mkFp = fp _
-    val targetFps = targetSmiles.map(s => BitTanimoto.pack(mkFp(s), nb))
+    val fp = Similarity.fingerprint(fingerprintMethod, morganRadius,
+      morganBits)
+    val targetFps = targetSmiles.map(fp)
     val simUdf = udf { smiles: String =>
-      val f = BitTanimoto.pack(mkFp(smiles), nb)
+      val f = fp(smiles)
       targetFps.map(t => BitTanimoto.tanimoto(f, t)).maxOption.getOrElse(0.0)
     }
-    val frontier = state.compounds
-      .where(col("Generation") === state.generation && col("Expand") &&
-        !col("Type").isin("Coreactant", "Target Compound"))
+    val frontier = Similarity.frontier(state)
       .withColumn("maxsim", simUdf(col("SMILES")))
     val eligible = frontier.where(col("maxsim") > minSim)
     val kept = Sampling.weightedSample(
@@ -255,7 +258,7 @@ final case class TanimotoSamplingFilter(
 /** Metabolomics-guided expansion filter (filters/metabolomics.py:28-399):
   * a generation's compounds whose exact mass falls in NO enumerated peak
   * window are blocked AND removed from the network (the reference's
-  * `_apply_filter_results` cascade — `removes = true`).
+  * `_apply_filter_results` cascade, as for every compound filter).
   *
   * Semantics mirrored from the reference:
   *  - only UNKNOWN peaks (no annotated structure) enumerate mass windows
@@ -275,10 +278,9 @@ final case class MetabolomicsFilter(
     adducts: Seq[AdductRow] = MassSearch.defaultAdducts,
     tol: Double = 0.001,
     rtPredictor: Option[String => Option[Double]] = None,
-    rtThreshold: Option[Double] = None) extends NetworkFilter {
+    rtThreshold: Option[Double] = None) extends CompoundFilter {
 
   override def name = s"Metabolomics tol=$tol"
-  override def removes = true
 
   /** (lo, hi, peakId, adduct) windows — peaks x polarity-matched adducts
     * (Peak._enumerate_possible_masses).
@@ -330,7 +332,7 @@ final case class MetabolomicsFilter(
     val eligible = state.compounds
       .where(col("Generation") === state.generation &&
         !col("Type").isin("Coreactant", "Target Compound"))
-    if (ranges.size <= 64 || rtPredicate.isDefined) {
+    if (ranges.size <= 64 || (rtPredictor.isDefined && rtThreshold.isDefined)) {
       // few windows (or RT gating): one codegen'd OR-chain predicate
       val matched = ranges
         .map(r => inWindow(r._1, r._2) && rtOk(r._3))
@@ -351,12 +353,6 @@ final case class MetabolomicsFilter(
       eligible.select("_id").join(matched, Seq("_id"), "left_anti")
     }
   }
-
-  private def rtPredicate: Option[Unit] =
-    (rtPredictor, rtThreshold) match {
-      case (Some(_), Some(_)) => Some(())
-      case _ => None
-    }
 }
 
 /** Every reaction member as one row — `_id`, `side` ('r' or 'p'),
@@ -399,29 +395,23 @@ private[pickaxe] object ReactionMembers {
 /** Thermodynamic filter (filters/thermodynamics.py:17-160): reactions
   * producing a current-generation compound whose ΔGr >= `dgMax` kJ/mol
   * are DELETED (with the orphan cascade). The reference computes ΔG via
-  * eQuilibrator under (pH, I, pMg) or physiological defaults; the
-  * condition parameters are carried and the per-molecule energy model is
-  * pluggable (`Thermo.bondEnergyEstimate` deterministic stub by default —
-  * no eQuilibrator cache ships with the container).
+  * eQuilibrator under (pH, I, pMg); the condition parameters are
+  * carried and the per-molecule energy model is pluggable
+  * (`Thermo.bondEnergyEstimate` deterministic stub by default — no
+  * eQuilibrator cache ships with the container).
   */
 final case class ThermoFilter(
     dgMax: Double = 0.0,
     pH: Double = 7.0,
     ionicStrength: Double = 0.0,
     pMg: Double = 3.0,
-    physiological: Boolean = false,
     generationList: Seq[Int] = Nil,
     lastGenerationOnly: Boolean = false,
     totalGenerations: Int = Int.MaxValue,
     model: graft.chem.Molecule => Double = Thermo.bondEnergyEstimate)
-    extends NetworkFilter {
+    extends ReactionFilter {
 
   override def name = s"Thermo dgMax=$dgMax pH=$pH I=$ionicStrength pMg=$pMg"
-  override def removes = false // thermo blocks nothing compound-side
-  override def deletesReactions = true
-
-  override def blocked(state: NetworkState): DataFrame =
-    state.compounds.select("_id").limit(0)
 
   override def blockedReactions(state: NetworkState): DataFrame = {
     val g = state.generation
@@ -466,9 +456,8 @@ object ThermoFilter {
       totalGenerations: Int = Int.MaxValue): ThermoFilter = {
     val f = graft.chem.Thermodynamics
       .transformedFormation(pH, ionicStrength, pMg)
-    ThermoFilter(dgMax, pH, ionicStrength, pMg,
-      physiological = false, generationList, lastGenerationOnly,
-      totalGenerations, model = m => -f(m))
+    ThermoFilter(dgMax, pH, ionicStrength, pMg, generationList,
+      lastGenerationOnly, totalGenerations, model = m => -f(m))
   }
 }
 
@@ -489,17 +478,11 @@ final case class FeasibilityFilter(
     scorer: (Seq[String], Seq[String]) => Double =
       FeasibilityFilter.deterministicStub,
     threshold: Double = 0.32,
-    useUnpredicted: Boolean = false,
     generationList: Seq[Int] = Nil,
     lastGenerationOnly: Boolean = false,
-    totalGenerations: Int = Int.MaxValue) extends NetworkFilter {
+    totalGenerations: Int = Int.MaxValue) extends ReactionFilter {
 
   override def name = s"Feasibility threshold=$threshold"
-  override def removes = false
-  override def deletesReactions = true
-
-  override def blocked(state: NetworkState): DataFrame =
-    state.compounds.select("_id").limit(0)
 
   override def blockedReactions(state: NetworkState): DataFrame = {
     val g = state.generation

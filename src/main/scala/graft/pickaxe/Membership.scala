@@ -1,8 +1,11 @@
 package graft.pickaxe
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameBridge
 
 import graft.operators.{CheckpointRows, LocalGate}
 
@@ -13,10 +16,10 @@ import graft.operators.{CheckpointRows, LocalGate}
   *
   * Each fixpoint has a driver-local side and a distributed side. The
   * local side runs on a [[Graph]] from [[read]], one bounded job, and
-  * writes its result with [[select]], which filters the rows through
-  * broadcast id sets without a join. The distributed side joins the
-  * (rxn, c_id) pairs of [[pairs]]. A network above
-  * `PickaxeEngine.LocalRxnLimit` reactions, or any network with
+  * writes its result with [[select]], which filters the rows (and
+  * clears Expand flags) through broadcast id sets without a join. The
+  * distributed side joins the (rxn, c_id) pairs of [[pairs]]. A network
+  * above `PickaxeEngine.LocalRxnLimit` reactions, or any network with
   * `spark.graft.localPaths=false` ([[graft.operators.LocalGate]]), takes
   * the distributed side; both sides stop by [[fixpoint]].
   */
@@ -85,9 +88,12 @@ private[pickaxe] object Membership {
       }.map(new Graph(_))
     }
 
-  /** The cascades' gate: reads the `_id`s of `ids`, then the membership.
-    * No ids: `state` as it is, the same DataFrames. Both on the driver:
-    * `local`. Otherwise `distributed`, over the ids.
+  /** The cascades' gate: reads the `_id`s of `ids` once. No ids:
+    * `state` as it is, the same DataFrames. The ids and the membership
+    * on the driver: `local`. Otherwise `distributed`, over the distinct
+    * ids, held: from the driver's set, or, above the local limit and
+    * with the local paths off, from one job that checkpoints and counts
+    * them.
     */
   def cascade(state: NetworkState, ids: DataFrame)(
       local: (Graph, Set[String]) => NetworkState)(
@@ -97,25 +103,47 @@ private[pickaxe] object Membership {
       case Some(s) =>
         read(state).fold(distributed(ids.sparkSession
           .createDataset(s.toSeq)(Encoders.STRING).toDF("_id")))(local(_, s))
-      case None => distributed(ids)
+      case None =>
+        // deduplicated in the checkpoint's own job: a DataFrame distinct
+        // would run its shuffle as a job of its own under AQE
+        val d = ids.select("_id")
+        val held = CheckpointRows.checkpoint(ids.sparkSession,
+          CheckpointRows.rows(d).map(_.copy()).distinct(), d.schema,
+          "cascade ids")
+        // the checkpoint's row count is in its statistics: no job
+        if (FrameBridge.stats(held).rowCount.contains(BigInt(0))) state
+        else distributed(held)
     }
 
   /** `state` with its compounds and reactions kept (`keep`) or dropped
-    * by `_id`: the rows pass a broadcast set, with no join job and no
-    * hash-join stage.
+    * by `_id`, and Expand cleared on the kept compounds in `unflag`:
+    * one pass over the rows through broadcast sets, with no join job
+    * and no hash-join stage.
     */
   def select(state: NetworkState, compounds: collection.Set[String],
-      reactions: collection.Set[String], keep: Boolean): NetworkState = {
+      reactions: collection.Set[String], keep: Boolean,
+      unflag: collection.Set[String] = Set.empty): NetworkState = {
     val spark = state.compounds.sparkSession
-    def rows(df: DataFrame, ids: collection.Set[String]): DataFrame = {
+    def rows(df: DataFrame, ids: collection.Set[String]): RDD[InternalRow] = {
       val b = spark.sparkContext.broadcast(ids.toSet)
       val id = df.schema.fieldIndex("_id")
-      CheckpointRows.frame(spark, CheckpointRows.rows(df).filter(r =>
-        b.value.contains(r.getUTF8String(id).toString) == keep),
-        df.schema, df)
+      CheckpointRows.rows(df).filter(r =>
+        b.value.contains(r.getUTF8String(id).toString) == keep)
     }
-    NetworkState(rows(state.compounds, compounds),
-      rows(state.reactions, reactions), state.generation)
+    val cs = state.compounds.schema
+    val cpds =
+      if (unflag.isEmpty) rows(state.compounds, compounds)
+      else {
+        val u = spark.sparkContext.broadcast(unflag.toSet)
+        val (id, expand) = (cs.fieldIndex("_id"), cs.fieldIndex("Expand"))
+        rows(state.compounds, compounds).map { r =>
+          if (!u.value.contains(r.getUTF8String(id).toString)) r
+          else { val c = r.copy(); c.setBoolean(expand, false); c }
+        }
+      }
+    NetworkState(CheckpointRows.frame(spark, cpds, cs, state.compounds),
+      CheckpointRows.frame(spark, rows(state.reactions, reactions),
+        state.reactions.schema, state.reactions), state.generation)
   }
 
   /** Rounds a fixpoint may run. A round that changes something adds

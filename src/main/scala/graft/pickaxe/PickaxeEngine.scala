@@ -20,36 +20,15 @@ final case class NetworkState(
     reactions: DataFrame,
     generation: Int)
 
-/** A per-generation frontier filter (reference Filter ABC,
-  * filters/base_filter.py:17-86): returns the `_id`s whose Expand flag
-  * must be cleared before the generation expands.
+/** A per-generation filter (reference Filter ABC,
+  * filters/base_filter.py:17-86). Every filter's result goes through
+  * one step, `_apply_filter_results` (base_filter.py:163-286): a
+  * [[CompoundFilter]]'s blocked compounds lose their Expand flag and are
+  * removed with the cascade, a [[ReactionFilter]]'s reactions are
+  * deleted with the orphan cascade ([[Cascade]]).
   */
-trait NetworkFilter {
+sealed trait NetworkFilter {
   def name: String
-  def blocked(state: NetworkState): DataFrame // single `_id` column
-  /** When true (the default — the reference's `_apply_filter_results`
-    * runs after EVERY filter, base_filter.py:163-286), blocked compounds
-    * are REMOVED from the network with the cascade semantics (a compound
-    * survives while a surviving reaction references it; Starting
-    * Compounds and Coreactants are never removed — a documented deviation:
-    * the reference can delete a generation-0 start that no reaction
-    * protects). Override to false for flag-only filtering.
-    */
-  def removes: Boolean = true
-
-  /** Reaction `_id`s to DELETE outright (the thermodynamics/feasibility
-    * filters return reaction sets — thermodynamics.py:159,
-    * feasibility.py:102); deletion cascades to orphaned compounds
-    * (base_filter.py:216-238). Default: none. Override
-    * `deletesReactions` to true alongside this — the engine skips the
-    * whole reaction-deletion pass (one Spark action per filter per
-    * generation) for filters that never return one.
-    */
-  def blockedReactions(state: NetworkState): DataFrame =
-    state.reactions.select("_id").limit(0)
-
-  /** Static hint: does this filter ever return blocked reactions? */
-  def deletesReactions: Boolean = false
 
   /** Content ids of the filter's target compounds, if it has any —
     * the prune-between-generations whitelist keeps compounds identical
@@ -57,6 +36,26 @@ trait NetworkFilter {
     * (pickaxe.py:630-637: `f"T{cpd_id[1:]}" in self.targets`).
     */
   def targetIds: Seq[String] = Nil
+}
+
+/** Blocks compounds: the property, similarity and metabolomics filters.
+  * The blocked compounds are removed with the cascade semantics (a
+  * compound survives while a surviving reaction references it; Starting
+  * Compounds and Coreactants are never removed — a documented deviation:
+  * the reference can delete a generation-0 start that no reaction
+  * protects), and a blocked compound that survives is not expanded.
+  */
+trait CompoundFilter extends NetworkFilter {
+  def blocked(state: NetworkState): DataFrame // single `_id` column
+}
+
+/** Blocks reactions: the thermodynamics and feasibility filters
+  * (thermodynamics.py:159, feasibility.py:102). The reactions are
+  * deleted, and the deletion cascades to orphaned compounds
+  * (base_filter.py:216-238).
+  */
+trait ReactionFilter extends NetworkFilter {
+  def blockedReactions(state: NetworkState): DataFrame // single `_id` column
 }
 
 /** Spark-native Pickaxe: iterative rule-driven network expansion
@@ -151,34 +150,11 @@ final class PickaxeEngine(
   def applyFilters(
       state: NetworkState,
       filters: Seq[NetworkFilter]): NetworkState =
-    // filters run in declaration order (pickaxe.py:628-629); a filter
-    // with `removes` additionally cascade-deletes its blocked set
-    filters.foldLeft(state) { (st, f) =>
-      // materialize the (small) blocked id-set ONCE when it has TWO
-      // consumers (Expand-flag join + removal cascade) — without the
-      // checkpoint the scoring chain re-runs per consumer. A
-      // non-removing filter has a single consumer, so the checkpoint
-      // would only add a sequential driver job (guide §7.3: these
-      // fixture-scale runs are job-latency-bound, ~40-100 ms each)
-      val blockedPlan = f.blocked(st)
-        .select(col("_id").as("__blocked_id")).distinct()
-      val blocked =
-        if (f.removes) blockedPlan.localCheckpoint() else blockedPlan
-      val cpds = st.compounds.join(broadcast(blocked),
-          st.compounds("_id") === col("__blocked_id"), "left")
-        .withColumn("Expand",
-          col("Expand") && col("__blocked_id").isNull)
-        .drop("__blocked_id")
-      val withFlags = st.copy(compounds = cpds)
-      val afterCpds =
-        if (f.removes)
-          Cascade.cascadeDelete(withFlags,
-            blocked.select(col("__blocked_id").as("_id")))
-        else withFlags
-      // the cascade's bounded read of the blocked reaction ids is its
-      // emptiness gate too: no ids, no further job
-      if (!f.deletesReactions) afterCpds
-      else Cascade.deleteReactions(afterCpds, f.blockedReactions(afterCpds))
+    // filters run in declaration order (pickaxe.py:628-629)
+    filters.foldLeft(state) {
+      case (st, f: CompoundFilter) => Cascade.cascadeDelete(st, f.blocked(st))
+      case (st, f: ReactionFilter) =>
+        Cascade.deleteReactions(st, f.blockedReactions(st))
     }
 
   /** One generation: filters -> frontier -> kernel -> merge (E1/E2/E6).

@@ -82,6 +82,26 @@ class CascadeAndIOSpec extends SparkSuite {
       (Seq("CS"), Seq.empty[String]))
   }
 
+  test("applyFilters: a blocked compound that is resurrected keeps no " +
+    "Expand flag, on both paths") {
+    val blockP1 = new CompoundFilter {
+      def name = "block CP1"
+      def blocked(st: NetworkState) = Seq("CP1").toDF("_id")
+    }
+    val engine = KinaseFixture.engine(spark)
+    def flags(st: NetworkState) =
+      (st.compounds.select("_id", "Expand").as[(String, Boolean)].collect()
+        .sorted.toSeq,
+        st.reactions.select("_id").as[String].collect().sorted.toSeq)
+    val loc = flags(engine.applyFilters(state(), Seq(blockP1)))
+    val dist = flags(withConf(LocalGate.key, "false")(
+      engine.applyFilters(state(), Seq(blockP1))))
+    assert(dist === loc)
+    // R1 survives through CP2, so CP1 is resurrected, unexpandable
+    assert(loc === (Seq("CP1" -> false, "CP2" -> true, "CP3" -> true,
+      "CP4" -> true, "CS" -> true), Seq("R1", "R2", "R3")))
+  }
+
   test("cascade delete touches ONLY requested compounds plus true orphans") {
     // a compound referenced by no reaction must survive unless requested
     val extra = state().copy(compounds = state().compounds.unionByName(

@@ -17,10 +17,15 @@ object KinaseFixture {
     "[#1;D1R0:11][#8;H1D2R0:10][#6:9]>>" +
     "[*:1]-[*:2]-[*:10]-[*:9].[*:8]-[*:7]-[*:6]-[*:5]-[*:4]-[*:3]-[*:11]"
 
-  lazy val core: Seq[CoreactantRow] = PickaxeEngine.parseCoreactants(Seq(
-    s"ATP\tATP\t$atp", s"ADP\tADP\t$adp"))
+  /** The coreactant and rule TSV lines, as the reference's files hold
+    * them.
+    */
+  val coreactantLines = Seq(s"ATP\tATP\t$atp", s"ADP\tADP\t$adp")
+  val ruleLines = Seq(s"2.7.1.a\tATP;Any\t$rule\tAny;ADP\t-")
+
+  lazy val core: Seq[CoreactantRow] =
+    PickaxeEngine.parseCoreactants(coreactantLines)
 
   def engine(spark: SparkSession): PickaxeEngine = new PickaxeEngine(spark,
-    PickaxeEngine.parseRules(Seq(s"2.7.1.a\tATP;Any\t$rule\tAny;ADP\t-"),
-      core), core, explicitH = true)
+    PickaxeEngine.parseRules(ruleLines, core), core, explicitH = true)
 }

@@ -75,6 +75,58 @@ class PickaxeRunSpec extends SparkSuite {
     assert(csvLines(s"$out/reactions") === nR + 1)
   }
 
+  test("config run equals the hand-wired engine on the same TSVs " +
+    "and writes the TSV sinks (inline kinase fixture)") {
+    def tsv(name: String, lines: Seq[String]): String = {
+      val p = Files.createTempFile(name, ".tsv")
+      Files.writeString(p, lines.mkString("", "\n", "\n"))
+      p.toString
+    }
+    val out = Files.createTempDirectory("pkrun").toString
+    // every compound filter runs at each generation and once more after
+    // the last: the window passes everything, the phosphorus cap blocks
+    // generation 2 (four phosphates) at the final pass
+    val filters = Seq(MolWeightFilter(maxMass = 1e4),
+      AtomCompositionFilter(Map("P" -> (0, 3))))
+    val cfg = PickaxeRunConfig(
+      rules = ExplicitTsv(
+        tsv("rules", "Name\tReactants\tSMARTS\tProducts" +:
+          KinaseFixture.ruleLines),
+        tsv("coreactants", "#ID\tName\tSMILES" +:
+          KinaseFixture.coreactantLines)),
+      inputCpds = tmpCsv("starts", Seq("FADH" -> fadh)),
+      generations = 2,
+      explicitH = true,
+      filters = filters,
+      filterAfterFinalGen = true,
+      writeTsvDir = Some(out))
+    val st = PickaxeRun.execute(spark, cfg)
+
+    val (rules, core) = PickaxeRun.loadRules(spark, cfg.rules)
+    assert(rules.length === 1 && core.length === 2)
+    val want = KinaseFixture.engine(spark).run(Seq(fadh), generations = 2,
+      filters, filterAfterFinalGen = true)
+    import spark.implicits._
+    def flags(s: NetworkState) = s.compounds.select("_id", "Expand")
+      .as[(String, Boolean)].collect().sorted.toSeq
+    def rxns(s: NetworkState) =
+      s.reactions.select("_id").as[String].collect().sorted.toSeq
+    assert(flags(st) === flags(want))
+    assert(rxns(st) === rxns(want))
+    // the final pass removed generation 2 from the 31/49 network
+    val gens = st.compounds.select("Generation").as[Int].collect()
+    assert(gens.max === 1 && gens.length < 31)
+    assert(rxns(st).nonEmpty && rxns(st).length < 49)
+    def csvLines(dir: String): Long = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".csv"))
+        .map(p => Files.readAllLines(p).size().toLong).sum
+    }
+    assert(csvLines(s"$out/compounds") === flags(st).length + 1L)
+    assert(csvLines(s"$out/reactions") === rxns(st).length + 1L)
+  }
+
   test("config run with prune_to_targets reproduces the minimal " +
     "6-compound network") {
     assume(present)
